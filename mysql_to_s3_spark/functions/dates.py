@@ -53,11 +53,6 @@ def add_months(d: dt.datetime, n: int) -> dt.datetime:
     return d.replace(year=year, month=month, day=day)
 
 
-def floor_month(d: dt.datetime, n_months: int = 1) -> dt.datetime:
-    month0 = ((d.month - 1) // n_months) * n_months
-    return d.replace(month=month0 + 1, day=1, hour=0, minute=0, second=0, microsecond=0)
-
-
 def parse_date_literal(text) -> float:
     """Parse a JX date literal to unix seconds (UTC)."""
     if isinstance(text, (int, float)):

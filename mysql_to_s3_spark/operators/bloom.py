@@ -252,41 +252,3 @@ def read_bloom_sidecar(index_path: str, spark) -> dict:
         # pre-stamp sidecars have no n_docs column: None = unknown
         "n_docs": d.get("n_docs"),
     }
-
-
-def bloom_screen(
-    new_df: DataFrame,
-    index_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    flag_col: str = "might_dup",
-) -> DataFrame:
-    """Screen a new batch against an index's bloom sidecar: adds
-    ``flag_col`` (False = definitely not in the index — skip the exact
-    screen for these; True = run `dedup_against_index` on this sliver).
-    The fingerprint is the SAME normalized-text fp the index stores, so
-    the no-false-negative guarantee carries over exactly.
-
-    Staleness guard (same contract as `exact_screen_against_index`):
-    when the index docs table has MORE rows than the sidecar's n_docs
-    stamp — an append without a sidecar update — or the sidecar
-    carries no stamp at all, the bloom no longer covers the corpus and
-    a False could be a false negative for the appended fingerprints.
-    Every row then flags True (= "run the exact screen"), which keeps
-    callers who skip the exact screen on False rows correct, at the
-    cost of routing nothing."""
-    from mysql_to_s3_spark.operators.text import fingerprint
-
-    spark = new_df.sparkSession
-    side = read_bloom_sidecar(index_path, spark)
-    if (
-        side.get("n_docs") is None
-        or spark.read.parquet(index_path + "/docs").count() > side["n_docs"]
-    ):
-        return new_df.withColumn(flag_col, F.lit(True))
-    return new_df.withColumn(
-        flag_col,
-        bloom_might_contain(
-            fingerprint(F.col(text_col)), side["bitmap"], side["m_bits"], side["k"]
-        ),
-    )

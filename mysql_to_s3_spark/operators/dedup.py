@@ -283,14 +283,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature(sh: Column, n_hashes: int = MINHASH_N) -> Column:
-    """MinHash signature: per seed i, min over shingles of xxhash64(s, i).
-    Pure projection — computed in the same scan as the shingle set."""
-    return F.array(
-        *[F.array_min(F.transform(sh, lambda s: F.xxhash64(s, F.lit(i)))) for i in range(n_hashes)]
-    )
-
-
 # universal-hash family over a 2^32 universe: h_i(x) = (a_i*x + b_i) mod P.
 # P prime > 2^32; a_i < 2^31 keeps a*x < 2^63 (no ANSI long overflow).
 _MINHASH_P = 4294967311
@@ -552,50 +544,6 @@ def embedding_dup_pairs(
     )
 
 
-def winnow_pairs(
-    df: DataFrame,
-    min_shared: int = 8,
-    k: int = 5,
-    window: int = 4,
-    max_df: int | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Near-dup candidate pairs sharing >= ``min_shared`` winnowing
-    fingerprints (MOSS-style local similarity).
-
-    Scale story: the winnow sketch is ~1/window the size of the shingle
-    set, so the explode+self-join shuffles a fraction of the ngram-Jaccard
-    volume; the join key is a single bigint hash. One shuffle on the
-    fingerprint, one partial-aggregated count per pair. ``max_df`` is the
-    skew valve: corpus-hot fingerprints (boilerplate substrings shared by
-    >max_df docs) are freq^2 join bombs carrying no discriminative signal
-    — dropping them is DETERMINISTIC, so an oracle applying the same rule
-    still matches exactly."""
-    from mysql_to_s3_spark.operators.text import winnow_fingerprint
-
-    fps = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(winnow_fingerprint(F.col(text_col), k, window)).alias("fp"),
-    )
-    if max_df is not None:
-        from pyspark.sql import Window
-
-        fps = (
-            fps.withColumn("__df__", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-            .filter(F.col("__df__") <= max_df)
-            .drop("__df__")
-        )
-    x = fps.alias("x")
-    y = fps.alias("y")
-    return (
-        x.join(y, (F.col("x.fp") == F.col("y.fp")) & (F.col("x.id") < F.col("y.id")))
-        .groupBy(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .filter(F.col("shared_fp") >= min_shared)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Sub-document dedup: cross-doc span duplication + line-level boilerplate
 # ---------------------------------------------------------------------------
@@ -607,30 +555,52 @@ def token_frame(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """The shared tokenization upstream of the span operators: one row
-    per doc with BOTH token streams they consume — ``rt`` (raw-case, the
-    rebuild stream of ``strip_duplicated_spans``) and ``lt`` (tokens of
-    the lowercased text, the key stream of ``duplicated_span_fraction``
-    and line derivations). Pool it with ``cache_scoped`` when one corpus
-    feeds several span consumers (the ``pairs=`` hook convention of
+    per doc with its raw-case token stream ``rt`` — the stream span
+    window positions index and ``strip_duplicated_spans`` rebuilds from.
+    Pool it with ``cache_scoped`` when one corpus feeds several span
+    consumers (the ``pairs=`` hook convention of
     pipeline.split_leakage) — each operator's ``toks=`` parameter then
-    reuses this single scan+tokenize instead of re-deriving it. Both
-    arrays ride one exchange-free projection; semantics of every
-    consumer are exactly the no-pool path's."""
-    tok_re = F.lit(r"\w+|[^\w\s]")
+    reuses this single scan+tokenize instead of re-deriving it;
+    semantics of every consumer are exactly the no-pool path's."""
     return df.select(
         F.col(id_col).alias("id"),
-        F.regexp_extract_all(F.col(text_col), tok_re, 0).alias("rt"),
-        F.regexp_extract_all(F.lower(F.col(text_col)), tok_re, 0).alias("lt"),
+        F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0).alias("rt"),
     )
 
 
 def _require_toks(toks: DataFrame, op: str) -> None:
-    missing = {"id", "rt", "lt"} - set(toks.columns)
+    missing = {"id", "rt"} - set(toks.columns)
     if missing:
         raise ValueError(
             f"{op}: toks= must be a token_frame(...) output with columns "
-            f"(id, rt, lt); missing {sorted(missing)}"
+            f"(id, rt); missing {sorted(missing)}"
         )
+
+
+def _windows(toks: DataFrame, k: int) -> DataFrame:
+    """(id, start, key) k-token windows of an (id, rt) token frame: the
+    ONE span-key derivation every span operator uses. The key is
+    md5(lower(array_join(window, SPAN_SEP))) over the RAW tokens, so
+    ``start`` indexes the raw stream the rewrite removes tokens from.
+    Tokenizing lower(text) instead would misalign on case mappings that
+    change token boundaries ('İ' U+0130 lowers to i + U+0307, the Kelvin
+    sign U+212A to an ASCII k)."""
+    n = F.size(F.col("rt")) - F.lit(k - 1)
+    return toks.select(
+        "id",
+        F.explode(
+            F.when(n >= 1, F.sequence(F.lit(1), F.greatest(n, F.lit(1)))).otherwise(
+                F.array().cast("array<int>")
+            )
+        ).alias("start"),
+        F.col("rt"),
+    ).select(
+        "id",
+        "start",
+        F.md5(
+            F.lower(F.array_join(F.slice(F.col("rt"), F.col("start"), k), SPAN_SEP))
+        ).alias("key"),
+    )
 
 
 def span_windows(
@@ -641,12 +611,10 @@ def span_windows(
 ) -> DataFrame:
     """The REDUCED (id, start, key) k-token window-key frame shared by
     the span-operator family (r11, the r10 verdict's item 3): one row
-    per k-token window with its 1-based token start position and the
-    md5-of-joined-LOWERCASED-window key — exactly the key both
-    ``duplicated_span_fraction`` and ``strip_duplicated_spans`` compile
-    (\\w token boundaries are case-insensitive, so tokenize(lower(text))
-    aligns position-for-position with lower() applied to the raw token
-    stream, and lower() distributes over the SPAN_SEP join). ONE
+    per k-token window with its 1-based start position in the raw token
+    stream and the md5-of-lowercased-joined-window key — exactly the
+    windows both ``duplicated_span_fraction`` and
+    ``strip_duplicated_spans`` derive when not given this frame. ONE
     tokenize pass; the token array is bound as a column so the window
     transform slices an attribute, never re-runs the regex. Docs with
     fewer than k tokens contribute no rows.
@@ -657,28 +625,7 @@ def span_windows(
     frame LOSES to recompute, but this frame is three fixed-width-ish
     columns (bigint, int, 32-char key), the reduced projection that
     the legs actually shuffle."""
-    lted = df.select(
-        F.col(id_col).alias("id"),
-        F.regexp_extract_all(
-            F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0
-        ).alias("lt"),
-    )
-    n = F.size(F.col("lt")) - F.lit(k - 1)
-    return lted.select(
-        "id",
-        F.explode(
-            F.when(n >= 1, F.sequence(F.lit(1), F.greatest(n, F.lit(1)))).otherwise(
-                F.array().cast("array<int>")
-            )
-        ).alias("start"),
-        F.col("lt"),
-    ).select(
-        "id",
-        "start",
-        F.md5(F.array_join(F.slice(F.col("lt"), F.col("start"), k), SPAN_SEP)).alias(
-            "key"
-        ),
-    )
+    return _windows(token_frame(df, id_col, text_col), k)
 
 
 def _require_wins(wins: DataFrame, op: str) -> None:
@@ -692,27 +639,27 @@ def _require_wins(wins: DataFrame, op: str) -> None:
 
 def token_span_keys(col: Column, k: int = 5) -> Column:
     """array<string> of md5 keys, one per k-token window (stride 1) of the
-    lowercased BPE-ish token stream of ``col``.
+    BPE-ish token stream of ``col`` — the ``span_windows`` keys as one
+    array column.
 
-    The key is ``md5(token_i || US || ... || token_{i+k-1})`` — md5 because
-    it is (a) portable (identical in Spark and DuckDB, so the oracle can
-    replicate the key exactly) and (b) a FIXED 32-byte shuffle key, vs a
-    raw k-token span string that averages ~8k bytes of shuffle per window
-    at k=50. Docs shorter than k tokens yield an empty array.
+    The key is ``md5(lower(token_i || US || ... || token_{i+k-1}))`` — md5
+    because it is (a) portable (identical in Spark and DuckDB, so the
+    oracle can replicate the key exactly) and (b) a FIXED 32-byte shuffle
+    key, vs a raw k-token span string that averages ~8k bytes of shuffle
+    per window at k=50. Docs shorter than k tokens yield an empty array.
 
     PLAN TRAP (r11): the token array here is INLINE in the transform
     lambda, so the tokenize regex re-runs once per window position
     (O(len^2) per doc). Fine for tests/small frames; production paths
-    (duplicated_span_fraction) materialize the token array as a column
-    first and build the same keys from ``F.col(...)``.
+    go through ``span_windows``, which binds the token array as a column.
     """
-    t = F.regexp_extract_all(F.lower(col), F.lit(r"\w+|[^\w\s]"), 0)
+    t = F.regexp_extract_all(col, F.lit(r"\w+|[^\w\s]"), 0)
     n = F.size(t) - F.lit(k - 1)
     return F.when(
         n >= 1,
         F.transform(
             F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-            lambda i: F.md5(F.array_join(F.slice(t, i, k), SPAN_SEP)),
+            lambda i: F.md5(F.lower(F.array_join(F.slice(t, i, k), SPAN_SEP))),
         ),
     ).otherwise(F.array().cast("array<string>"))
 
@@ -747,8 +694,7 @@ def duplicated_span_fraction(
 
     ``toks=`` (r9): pass a pooled ``token_frame(...)`` to reuse one
     scan+tokenize across the span-operator family; the span keys are
-    then derived from its ``lt`` stream — the same md5-of-joined-window
-    construction ``token_span_keys`` compiles, so output is identical.
+    then derived from its ``rt`` stream, so output is identical.
 
     ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
     the tokenize+window+md5 derivation entirely — the span stream is
@@ -758,41 +704,14 @@ def duplicated_span_fraction(
     """
     if toks is not None:
         _require_toks(toks, "duplicated_span_fraction")
-        ids = toks.select("id")
     else:
-        ids = df.select(F.col(id_col).alias("id"))
+        toks = token_frame(df, id_col, text_col)
     if wins is not None:
         _require_wins(wins, "duplicated_span_fraction")
-        spans = wins.select("id", F.col("key").alias("s"))
     else:
-        if toks is not None:
-            lted = toks.select("id", "lt")
-        else:
-            # materialize the lowercased token array as a COLUMN before
-            # the window transform (r11): token_span_keys' lambda slices
-            # the token array once per window position, and an INLINE
-            # regexp_extract_all subtree re-runs the whole tokenize regex
-            # at every lambda evaluation (HOF bodies re-evaluate their
-            # non-lambda subtrees per element — invisible to plan-text
-            # counting, it is ONE occurrence evaluated O(windows) times).
-            # A bound column turns that into an O(k) array slice per
-            # window: same md5 keys, same output, O(len^2) -> O(len*k)
-            # per doc.
-            lted = df.select(
-                F.col(id_col).alias("id"),
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(r"\w+|[^\w\s]"), 0
-                ).alias("lt"),
-            )
-        n = F.size(F.col("lt")) - F.lit(k - 1)
-        keys = F.when(
-            n >= 1,
-            F.transform(
-                F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                lambda i: F.md5(F.array_join(F.slice(F.col("lt"), i, k), SPAN_SEP)),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        spans = lted.select("id", F.explode(keys).alias("s"))
+        wins = _windows(toks, k)
+    ids = toks.select("id")
+    spans = wins.select("id", F.col("key").alias("s"))
     per_span_doc = spans.groupBy("s", "id").agg(F.count(F.lit(1)).alias("w"))
     nd = F.count(F.lit(1)).over(Window.partitionBy("s"))
     flagged = per_span_doc.withColumn("__nd__", nd)
@@ -928,43 +847,19 @@ def strip_duplicated_spans(
     exactly the frame built here).
 
     ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
-    the window-key derivation — its md5-of-joined-LOWERCASED-window
-    keys are identical to the ones built here (lower() distributes
-    over the SPAN_SEP join; \\w token boundaries are case-insensitive,
-    so the streams align position-for-position), and one cached
-    reduced frame feeds both this rewrite and
-    ``duplicated_span_fraction``.
+    the window-key derivation — its windows are the ones built here
+    (same raw token positions, same keys), and one cached reduced frame
+    feeds both this rewrite and ``duplicated_span_fraction``.
     """
     if toks is not None:
         _require_toks(toks, "strip_duplicated_spans")
         rt_src = toks.select("id", "rt")
     else:
-        rt_src = df.select(
-            F.col(id_col).alias("id"),
-            F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0).alias("rt"),
-        )
+        rt_src = token_frame(df, id_col, text_col)
     if wins is not None:
         _require_wins(wins, "strip_duplicated_spans")
     else:
-        # \w token boundaries are case-insensitive, so the lowercased
-        # key stream aligns position-for-position with the raw tokens
-        n_wins = F.size(F.col("rt")) - F.lit(k - 1)
-        wins = rt_src.select(
-            "id",
-            F.explode(
-                F.when(
-                    n_wins >= 1,
-                    F.sequence(F.lit(1), F.greatest(n_wins, F.lit(1))),
-                ).otherwise(F.array().cast("array<int>"))
-            ).alias("start"),
-            F.col("rt"),
-        ).select(
-            "id",
-            "start",
-            F.md5(
-                F.lower(F.array_join(F.slice(F.col("rt"), F.col("start"), k), SPAN_SEP))
-            ).alias("key"),
-        )
+        wins = _windows(rt_src, k)
     # per-key stats as WINDOW functions over ONE key exchange instead of
     # a groupBy + join back: the join form evaluates the whole `wins`
     # subtree (tokenize + window explode + md5) twice per action, and

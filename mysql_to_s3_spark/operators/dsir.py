@@ -1,6 +1,6 @@
 """DSIR-style data selection — importance weighting over hashed n-gram
 features (Xie et al., "Data Selection for Language Models via Importance
-Resampling", NeurIPS 2023) as a Spark-first operator trio:
+Resampling", NeurIPS 2023) as Spark-first operators:
 
   hashed_ngram_counts  fit one hashed-feature bag model (unigrams +
                        bigrams -> md5 bucket in [0, n_buckets)) over a
@@ -11,6 +11,8 @@ Resampling", NeurIPS 2023) as a Spark-first operator trio:
                        under a TARGET model vs a SOURCE model (both
                        add-alpha over the fixed bucket domain). Docs
                        resembling the target score high.
+  dsir_scorer          the same weight as a per-row column expression,
+                       for streaming frames.
   dsir_topk            deterministic Gumbel top-k selection over the
                        weights — the paper's resampling step with
                        hash-derived (content-stable, engine-portable)
@@ -21,14 +23,14 @@ Scale design (100 TB):
 - The fit is bucket-hashed BEFORE aggregation, so each model is at most
   ``n_buckets`` rows (default 4096) — always broadcastable; feature
   cardinality (unbounded web n-grams) never reaches a shuffle key.
-- ``dsir_logratio(mode='join')`` explodes the feature stream and
-  broadcast-joins BOTH models, then one hash re-agg per doc: one
-  shuffle over the n-gram stream, all JVM/codegen; smoothing totals
-  ride broadcast single-row frames (lazy plan, no job at build).
-- ``dsir_logratio(mode='arrow')`` collects the two bucket tables (at
-  most n_buckets rows each — bounded by construction) into numpy
-  arrays and scores inside a zero-shuffle Arrow ``pandas_udf``: per-doc
-  hashing + a vectorized gather, no explode, no shuffle. The dense
+- ``dsir_logratio`` explodes the feature stream and broadcast-joins
+  BOTH models, then one hash re-agg per doc: one shuffle over the
+  n-gram stream, all JVM/codegen; smoothing totals ride broadcast
+  single-row frames (lazy plan, no job at build).
+- ``dsir_scorer`` collects the two bucket tables (at most n_buckets
+  rows each — bounded by construction) into numpy arrays and scores
+  inside a zero-shuffle Arrow ``pandas_udf``: per-doc hashing + a
+  vectorized gather, no explode, no shuffle. The dense
   per-batch math is numpy per the dense-kernel discipline (SCALE.md
   "Quantizer scoring").
 - ``dsir_topk`` compiles to TakeOrderedAndProject (no global sort) —
@@ -112,7 +114,6 @@ def dsir_logratio(
     alpha: float = 1.0,
     id_col: str = "doc_id",
     text_col: str = "text",
-    mode: str = "join",
 ) -> DataFrame:
     """(id, dsir_logratio): per-doc summed log2 likelihood ratio of the
     hashed feature stream under target vs source add-alpha models:
@@ -124,13 +125,6 @@ def dsir_logratio(
     is undefined); consumers left-join and decide. ``target_counts``/
     ``source_counts`` are ``hashed_ngram_counts`` outputs fit with the
     SAME n_buckets."""
-    if mode not in ("join", "arrow"):
-        raise DsirError(f"mode must be 'join' or 'arrow', got {mode!r}")
-    if mode == "arrow":
-        return _dsir_logratio_arrow(
-            docs, target_counts, source_counts,
-            n_buckets=n_buckets, alpha=alpha, id_col=id_col, text_col=text_col,
-        )
     # empty counts frame: sum(n) is NULL — coalesce to 0 so the add-alpha
     # formula stays defined (uniform model), matching dsir_logratio_sql
     t_stats = target_counts.agg(
@@ -236,20 +230,6 @@ def dsir_scorer(
     return _score
 
 
-def _dsir_logratio_arrow(
-    docs, target_counts, source_counts, *, n_buckets, alpha, id_col, text_col
-):
-    """Zero-shuffle scoring path — ``dsir_scorer`` applied per row."""
-    score = dsir_scorer(
-        target_counts, source_counts, n_buckets=n_buckets, alpha=alpha
-    )
-    # mode parity with 'join': docs with no features carry no row (the
-    # groupBy there never sees them); consumers left-join either way
-    return docs.select(
-        F.col(id_col), score(F.col(text_col)).alias("dsir_logratio")
-    ).filter(F.col("dsir_logratio").isNotNull())
-
-
 def dsir_topk(
     weighted: DataFrame,
     k: int,
@@ -298,7 +278,7 @@ def dsir_logratio_sql(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> str:
-    """DuckDB SQL reproducing ``dsir_logratio(mode='join')`` with target
+    """DuckDB SQL reproducing ``dsir_logratio`` with target
     = rows of ``table`` matching ``target_where`` and source = all rows
     — the oracle for the driver's ``dsir`` leg. Output: (id,
     dsir_logratio), weights unrounded (round at the consumer)."""

@@ -21,20 +21,19 @@ Scale design (100 TB):
   count. ``vocab_size`` caps the model deterministically (count desc,
   token asc) so the scoring side stays memory-bounded no matter the
   corpus; out-of-vocabulary tokens get the add-alpha floor.
-- ``unigram_logprob(mode="join")`` explodes tokens and BROADCAST-joins
-  the counts, then one hash re-agg per doc: one shuffle over the token
-  stream, all JVM/codegen. The smoothing denominator rides a
-  broadcast single-row stats frame (crossJoin) so building the plan
-  triggers NO job — the module stays lazy end to end.
-- ``unigram_logprob(mode="arrow")`` is the big-corpus path: the counts
+- ``unigram_logprob`` / ``bigram_logprob`` explode tokens and
+  BROADCAST-join the model, then one hash re-agg per doc: one shuffle
+  over the token stream, all JVM/codegen. The smoothing denominator
+  rides a broadcast single-row stats frame (crossJoin) so building the
+  plan triggers NO job — the module stays lazy end to end.
+- ``unigram_scorer`` is the zero-shuffle per-row form: the counts
   collapse to one broadcast dict (bounded by ``vocab_size``) and
-  scoring is a zero-shuffle Arrow ``pandas_udf`` over the text column
-  — per-token lookups never touch a shuffle, the per-executor cost is
-  the dict (once) plus the batch. The per-doc mean is a numpy
-  reduction per the dense-kernel discipline (SCALE.md "Quantizer
-  scoring"). This mode collects the counts (one job) at plan-build.
+  scoring is an Arrow ``pandas_udf`` over the text column — per-token
+  lookups never touch a shuffle, and the plain column expression gates
+  a streaming frame too. It collects the counts (one job) at
+  plan-build, behind the ``LM_COLLECT_CAP_CONF`` valve.
 
-Both modes compute the identical add-alpha model: with V = vocab rows
+Both forms compute the identical add-alpha model: with V = vocab rows
 and T = total token occurrences in ``counts``,
 
     logp(w) = log2((n_w + alpha) / (T + alpha * (V + 1)))   in-vocab
@@ -43,7 +42,7 @@ and T = total token occurrences in ``counts``,
 and a doc's score is the MEAN logp over its tokens (null for docs with
 no tokens — callers decide whether token-free docs pass a gate).
 Tokenization is the module-wide ``TOKEN_RE`` applied to lowercased
-text; the Arrow path pins ``re.ASCII`` so Python's ``\\w`` agrees with
+text; the scorer pins ``re.ASCII`` so Python's ``\\w`` agrees with
 the JVM's and RE2's ASCII word classes.
 """
 
@@ -59,33 +58,13 @@ class LmError(ValueError):
     pass
 
 
-# Driver-OOM valve for the Arrow modes: the broadcast-dict paths COLLECT
+# Driver-OOM valve for the Arrow scorer: the broadcast-dict path COLLECTS
 # the model at plan-build, and an unbounded self-fit on a web-scale
 # corpus is an unbounded driver transfer. Same shape as decontam.py's
 # BENCH_BROADCAST_CAP_CONF — measure cheaply, refuse above a conf cap
 # instead of trusting a docstring.
 LM_COLLECT_CAP_CONF = "mysql_to_s3_spark.lm.collectCap"
 DEFAULT_LM_COLLECT_CAP = 2_000_000
-
-
-def _collect_capped(df: DataFrame, what: str, hint: str) -> list:
-    """Collect a model frame with the OOM valve armed: fetch at most
-    cap+1 rows (ONE job — LIMIT short-circuits, no separate count, and
-    the driver transfer is bounded by the cap even when the model is
-    huge) and refuse oversized models with the fix spelled out."""
-    try:
-        raw = df.sparkSession.conf.get(LM_COLLECT_CAP_CONF, None)
-    except Exception:
-        raw = None
-    cap = int(raw) if raw is not None else DEFAULT_LM_COLLECT_CAP
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        raise LmError(
-            f"{what} exceeds {cap} rows; collecting it risks a driver OOM "
-            f"— {hint}, use mode='join' (never collects), or raise "
-            f"{LM_COLLECT_CAP_CONF}"
-        )
-    return rows
 
 
 def _doc_tokens(text: Column) -> Column:
@@ -127,7 +106,6 @@ def unigram_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 1.0,
-    mode: str = "join",
     out_col: str = "lm_logprob",
 ) -> DataFrame:
     """(id_col, out_col): mean per-token log2-probability per document
@@ -135,40 +113,31 @@ def unigram_logprob(
     ``docs`` itself — the self-scoring configuration the driver row
     verifies). Token-free docs score null.
 
-    ``mode="join"``: exact JVM path (explode -> broadcast join ->
-    per-doc agg), fully lazy. ``mode="arrow"``: zero-shuffle broadcast-
-    dict path for web-scale corpora; collects ``counts`` at build time
-    behind the ``LM_COLLECT_CAP_CONF`` valve (an uncapped model raises
-    instead of OOMing the driver — bound it with
-    ``unigram_counts(vocab_size=...)``)."""
+    Exact JVM path (explode -> broadcast join -> per-doc agg), fully
+    lazy; ``unigram_scorer`` is the same model as a per-row column."""
     if alpha <= 0:
         raise LmError("alpha must be positive (it is the OOV probability floor)")
     if counts is None:
         counts = unigram_counts(docs, text_col)
-    if mode == "join":
-        stats = counts.agg(
-            F.sum("n").cast("double").alias("__tot__"),
-            F.count(F.lit(1)).cast("double").alias("__v__"),
+    stats = counts.agg(
+        F.sum("n").cast("double").alias("__tot__"),
+        F.count(F.lit(1)).cast("double").alias("__v__"),
+    )
+    toks = docs.select(
+        F.col(id_col), F.explode(_doc_tokens(F.col(text_col))).alias("token")
+    )
+    denom = F.col("__tot__") + F.lit(alpha) * (F.col("__v__") + 1)
+    scored = (
+        toks.join(F.broadcast(counts), "token", "left")
+        .crossJoin(F.broadcast(stats))
+        .groupBy(id_col)
+        .agg(
+            F.avg(
+                F.log2((F.coalesce(F.col("n"), F.lit(0)) + F.lit(alpha)) / denom)
+            ).alias(out_col)
         )
-        toks = docs.select(
-            F.col(id_col), F.explode(_doc_tokens(F.col(text_col))).alias("token")
-        )
-        denom = F.col("__tot__") + F.lit(alpha) * (F.col("__v__") + 1)
-        scored = (
-            toks.join(F.broadcast(counts), "token", "left")
-            .crossJoin(F.broadcast(stats))
-            .groupBy(id_col)
-            .agg(
-                F.avg(
-                    F.log2((F.coalesce(F.col("n"), F.lit(0)) + F.lit(alpha)) / denom)
-                ).alias(out_col)
-            )
-        )
-        return docs.select(id_col).join(scored, id_col, "left")
-    if mode == "arrow":
-        score = unigram_scorer(counts, alpha=alpha, spark=docs.sparkSession)
-        return docs.select(F.col(id_col), score(F.col(text_col)).alias(out_col))
-    raise LmError(f"unknown mode {mode!r}; expected 'join' or 'arrow'")
+    )
+    return docs.select(id_col).join(scored, id_col, "left")
 
 
 def perplexity_buckets(
@@ -311,14 +280,17 @@ def unigram_scorer(counts, *, alpha: float = 1.0, spark=None):
         raise LmError("alpha must be positive (it is the OOV probability floor)")
     if isinstance(counts, DataFrame):
         spark = spark or counts.sparkSession
-        rows = [
-            (r.token, r.n)
-            for r in _collect_capped(
-                counts,
-                "unigram model",
-                "cap it with unigram_counts(vocab_size=...)",
+        # the valve: fetch at most cap+1 rows (ONE job — LIMIT
+        # short-circuits, and the driver transfer is bounded by the cap
+        # even when the model is huge)
+        cap = int(spark.conf.get(LM_COLLECT_CAP_CONF, str(DEFAULT_LM_COLLECT_CAP)))
+        rows = [(r.token, r.n) for r in counts.limit(cap + 1).collect()]
+        if len(rows) > cap:
+            raise LmError(
+                f"unigram model exceeds {cap} rows; collecting it risks a driver "
+                f"OOM — cap it with unigram_counts(vocab_size=...), score with "
+                f"unigram_logprob (never collects), or raise {LM_COLLECT_CAP_CONF}"
             )
-        ]
     else:
         rows = [(t, int(n)) for t, n in counts]
         if spark is None:
@@ -330,7 +302,7 @@ def unigram_scorer(counts, *, alpha: float = 1.0, spark=None):
     oov = math.log2(alpha / denom)
     bc = spark.sparkContext.broadcast((lut, oov))
     # re.ASCII: Python's unicode \w would tokenize non-ASCII text
-    # differently from the JVM/RE2 ASCII word class the join mode
+    # differently from the JVM/RE2 ASCII word class unigram_logprob
     # and the DuckDB oracle use
     tok_re = re.compile(TOKEN_RE, re.ASCII)
 
@@ -385,7 +357,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 1.0,
-    mode: str = "join",
     out_col: str = "lm2_logprob",
 ) -> DataFrame:
     """(id_col, out_col): mean per-token CONDITIONAL log2-probability
@@ -400,96 +371,40 @@ def bigram_logprob(
     log2(1 / (V + 1)). Token-free docs score null. A doc's first token
     is conditioned on the per-doc ``BOS`` context.
 
-    ``mode="join"``: lazy JVM path — explode pairs, join the pair
-    counts and broadcast-join the per-context totals, one per-doc
-    re-agg shuffle. The context-total and vocab frames are
-    vocabulary-bounded and safely broadcast-hinted; the PAIR table is
-    not (it grows toward V² with the corpus), so it carries no
-    broadcast hint — AQE broadcasts it at runtime while it is small
-    and degrades to a shuffle join at web scale instead of an OOM,
-    the same valve shape as ``decontam.contamination_pairs``.
-    ``mode="arrow"``:
-    zero-shuffle broadcast-dict path; collects ``bi`` at build time
-    behind the ``LM_COLLECT_CAP_CONF`` valve (an uncapped model raises
-    instead of OOMing the driver), so bound the model first at web scale
-    (e.g. filter ``bi`` to pairs with n >= k — the standard
-    count-pruning that keeps KenLM models small)."""
+    Lazy JVM path — explode pairs, join the pair counts and
+    broadcast-join the per-context totals, one per-doc re-agg shuffle.
+    The context-total and vocab frames are vocabulary-bounded and
+    safely broadcast-hinted; the PAIR table is not (it grows toward V²
+    with the corpus), so it carries no broadcast hint — AQE broadcasts
+    it at runtime while it is small and degrades to a shuffle join at
+    web scale instead of an OOM, the same valve shape as
+    ``decontam.contamination_pairs``."""
     if alpha <= 0:
         raise LmError("alpha must be positive (it is the unseen-pair floor)")
     if bi is None:
         bi = bigram_counts(docs, text_col)
-    if mode == "join":
-        ctx = bi.groupBy("prev").agg(F.sum("n").alias("__cn__"))
-        stats = bi.agg(F.count_distinct("token").cast("double").alias("__v__"))
-        pairs = docs.select(
-            F.col(id_col), F.explode(_doc_pairs(F.col(text_col))).alias("p")
-        ).select(
-            F.col(id_col),
-            F.col("p.prev").alias("prev"),
-            F.col("p.token").alias("token"),
+    ctx = bi.groupBy("prev").agg(F.sum("n").alias("__cn__"))
+    stats = bi.agg(F.count_distinct("token").cast("double").alias("__v__"))
+    pairs = docs.select(
+        F.col(id_col), F.explode(_doc_pairs(F.col(text_col))).alias("p")
+    ).select(
+        F.col(id_col),
+        F.col("p.prev").alias("prev"),
+        F.col("p.token").alias("token"),
+    )
+    denom = (
+        F.coalesce(F.col("__cn__"), F.lit(0)).cast("double")
+        + F.lit(alpha) * (F.col("__v__") + 1)
+    )
+    scored = (
+        pairs.join(bi, ["prev", "token"], "left")
+        .join(F.broadcast(ctx), "prev", "left")
+        .crossJoin(F.broadcast(stats))
+        .groupBy(id_col)
+        .agg(
+            F.avg(
+                F.log2((F.coalesce(F.col("n"), F.lit(0)) + F.lit(alpha)) / denom)
+            ).alias(out_col)
         )
-        denom = (
-            F.coalesce(F.col("__cn__"), F.lit(0)).cast("double")
-            + F.lit(alpha) * (F.col("__v__") + 1)
-        )
-        scored = (
-            pairs.join(bi, ["prev", "token"], "left")
-            .join(F.broadcast(ctx), "prev", "left")
-            .crossJoin(F.broadcast(stats))
-            .groupBy(id_col)
-            .agg(
-                F.avg(
-                    F.log2((F.coalesce(F.col("n"), F.lit(0)) + F.lit(alpha)) / denom)
-                ).alias(out_col)
-            )
-        )
-        return docs.select(id_col).join(scored, id_col, "left")
-    if mode == "arrow":
-        import math
-        import re
-
-        global pd
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        rows = _collect_capped(
-            bi,
-            "bigram model",
-            "prune it first (e.g. filter the pair table to n >= k — the "
-            "standard count-pruning that keeps KenLM models small)",
-        )
-        v = float(len({r.token for r in rows}))
-        ctx_tot: dict[str, float] = {}
-        for r in rows:
-            ctx_tot[r.prev] = ctx_tot.get(r.prev, 0.0) + r.n
-        denom = {p: c + alpha * (v + 1) for p, c in ctx_tot.items()}
-        lp = {(r.prev, r.token): math.log2((r.n + alpha) / denom[r.prev]) for r in rows}
-        floor = {p: math.log2(alpha / d) for p, d in denom.items()}
-        unseen_ctx = math.log2(1.0 / (v + 1))
-        bc = docs.sparkSession.sparkContext.broadcast((lp, floor, unseen_ctx))
-        tok_re = re.compile(TOKEN_RE, re.ASCII)
-
-        @pandas_udf("double")
-        def _score2(s: pd.Series) -> pd.Series:
-            lp_, floor_, unseen_ = bc.value
-
-            def one(txt):
-                if txt is None:
-                    return None
-                tl = tok_re.findall(txt.lower())
-                if not tl:
-                    return None
-                tot = 0.0
-                prev = BOS
-                for t in tl:
-                    val = lp_.get((prev, t))
-                    if val is None:
-                        val = floor_.get(prev, unseen_)
-                    tot += val
-                    prev = t
-                return tot / len(tl)
-
-            return s.map(one)
-
-        return docs.select(F.col(id_col), _score2(F.col(text_col)).alias(out_col))
-    raise LmError(f"unknown mode {mode!r}; expected 'join' or 'arrow'")
+    )
+    return docs.select(id_col).join(scored, id_col, "left")

@@ -179,8 +179,8 @@ def _nearest_cell_udf(centroids: list[list[float]]):
     aggregate HOFs are interpreted per row, and a flat scalar
     multiply-add chain blows the JVM 64 KB method limit so Janino FAILS
     and the stage falls back to interpreted anyway. The vectorized Arrow
-    path is the honest scale design — the _sign_signature_udf /
-    blocked-GEMM precedent. np.argmin returns the FIRST minimum, the
+    path is the honest scale design — the _sign_signature_udf
+    precedent. np.argmin returns the FIRST minimum, the
     array_position(array_min) tie semantics the previous Column form
     had."""
     import numpy as np
@@ -858,117 +858,6 @@ def embedding_dup_pairs_lsh(
         .select("a", "b", F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
-
-
-def embedding_dup_pairs_blocked(
-    df: DataFrame,
-    threshold: float = 0.45,
-    rows_per_block: int = 2048,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """EXACT all-pairs cosine >= threshold via block-partitioned GEMM —
-    the DENSE-REGIME scale path.
-
-    Regime guide (see embedding_dup_pairs_lsh): at high thresholds
-    (cos >= ~0.8) sign-LSH shrinks candidates ~2^p-fold and wins. At LOW
-    thresholds (near-orthogonal, e.g. 0.45) the candidate set of ANY
-    hashing scheme is Θ(n²) — the pairs themselves are dense — so the
-    winning move is to make the quadratic work CHEAP, not to avoid it:
-    pack each block of vectors into one contiguous float64 matrix, emit
-    every block pair (i <= j), and compute each pair's cosine submatrix
-    as ONE vectorized numpy GEMM inside mapInPandas. BLAS does in ~ns per
-    pair what row-at-a-time Column algebra does in ~µs.
-
-    Shuffle story: one groupBy(block) shuffle of the vectors (block =
-    hash(id) mod B, balanced), then a broadcast-able B-row packed-block
-    table joined into B(B+1)/2 block-pair rows — work parallelism is the
-    block-pair count, independent of per-bucket skew. Output rows are
-    only the above-threshold pairs. Matches the exact all-pairs oracle
-    bit-for-bit at round-6 (double GEMM + the same rounding)."""
-    import math as _math
-
-    import pandas as pd  # noqa: F401
-
-    n = df.count()
-    n_blocks = max(1, _math.ceil(n / rows_per_block))
-    rows = df.select(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-
-    pack_schema = "blk int, ids binary, mat binary, nrows int, dim int"
-
-    def pack(pdf):
-        import numpy as np
-        import pandas as pd
-
-        m = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        ids = pdf["id"].to_numpy().astype(np.int64)
-        return pd.DataFrame(
-            {
-                "blk": [int(pdf["blk"].iloc[0])],
-                "ids": [ids.tobytes()],
-                "mat": [m.tobytes()],
-                "nrows": [m.shape[0]],
-                "dim": [m.shape[1]],
-            }
-        )
-
-    packed = rows.groupBy("blk").applyInPandas(pack, pack_schema)
-    a = packed.select(
-        F.col("blk").alias("blk_a"), F.col("ids").alias("ids_a"),
-        F.col("mat").alias("mat_a"), F.col("nrows").alias("n_a"), F.col("dim").alias("d_a"),
-    )
-    b = packed.select(
-        F.col("blk").alias("blk_b"), F.col("ids").alias("ids_b"),
-        F.col("mat").alias("mat_b"), F.col("nrows").alias("n_b"), F.col("dim").alias("d_b"),
-    )
-    block_pairs = a.join(b, F.col("blk_a") <= F.col("blk_b"))
-    # spread the B(B+1)/2 GEMMs across the cluster — each row is one task
-    # unit of ~rows_per_block² flops, so parallelism is pair count
-    block_pairs = block_pairs.repartition(
-        max(df.sparkSession.sparkContext.defaultParallelism, n_blocks)
-    )
-
-    out_schema = "a long, b long, cos double"
-    t = float(threshold)
-
-    def gemm(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            outs = []
-            for r in pdf.to_dict(orient="records"):
-                ma = np.frombuffer(r["mat_a"], dtype=np.float64).reshape(r["n_a"], r["d_a"])
-                mb = np.frombuffer(r["mat_b"], dtype=np.float64).reshape(r["n_b"], r["d_b"])
-                ia = np.frombuffer(r["ids_a"], dtype=np.int64)
-                ib = np.frombuffer(r["ids_b"], dtype=np.int64)
-                na = np.sqrt((ma * ma).sum(axis=1))
-                nb = np.sqrt((mb * mb).sum(axis=1))
-                cos = np.round((ma @ mb.T) / np.outer(na, nb), 6)
-                if r["blk_a"] == r["blk_b"]:
-                    # within a block: strict upper triangle by id
-                    keep = (cos >= t) & (ia[:, None] < ib[None, :])
-                else:
-                    # across blocks: every pair occurs exactly once in the
-                    # blk_a <= blk_b join, whatever the id order — keep all
-                    # and canonicalize to (min, max)
-                    keep = cos >= t
-                xi, yi = np.nonzero(keep)
-                if len(xi):
-                    lo = np.minimum(ia[xi], ib[yi])
-                    hi = np.maximum(ia[xi], ib[yi])
-                    outs.append(pd.DataFrame({"a": lo, "b": hi, "cos": cos[xi, yi]}))
-            yield (
-                pd.concat(outs)
-                if outs
-                else pd.DataFrame({"a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64"), "cos": pd.Series(dtype="float64")})
-            )
-
-    return block_pairs.mapInPandas(gemm, out_schema)
 
 
 # -- semantic dedup (SemDeDup) -------------------------------------------

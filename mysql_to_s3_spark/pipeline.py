@@ -745,7 +745,7 @@ def prepare_corpus(
 
     if cfg.min_lm_logprob is not None or cfg.lm_keep_buckets is not None:
         # after the language gate (CCNet fits per language), before the
-        # dedup shuffles; join mode keeps the no-job laziness contract
+        # dedup shuffles; the join path keeps the no-job laziness contract
         # whether the model is self-fit or supplied
         from mysql_to_s3_spark.operators.lm import (
             perplexity_buckets,
@@ -753,7 +753,7 @@ def prepare_corpus(
         )
 
         score = unigram_logprob(
-            out, lm_counts, id_col=cfg.id_col, text_col=cfg.text_col, mode="join"
+            out, lm_counts, id_col=cfg.id_col, text_col=cfg.text_col
         )
         keep = score
         if cfg.min_lm_logprob is not None:
@@ -784,7 +784,7 @@ def prepare_corpus(
     if cfg.dsir_min_logratio is not None:
         # after the cheap gates and the LM gate, before every dedup
         # shuffle — the weight itself costs one shuffle over the n-gram
-        # stream (join mode), so everything downstream sees fewer rows.
+        # stream, so everything downstream sees fewer rows.
         # Self-fitting the source model is a LAZY frame (no job at
         # build); the target model must be supplied.
         from mysql_to_s3_spark.operators.dsir import (

@@ -1226,16 +1226,6 @@ def _sql_stop_hits_list(ws: str, vocab: tuple[str, ...]) -> str:
     )
 
 
-def _sql_top_bigram(col: str) -> str:
-    """Occurrence count of the most frequent word bigram (DuckDB list
-    algebra mirroring operators.text.repetition_stats)."""
-    w = _sql_words(col)
-    bg = (f"list_transform(range(1, greatest(len({w}) - 1, 0) + 1), "
-          f"i -> {w}[i] || ' ' || {w}[i + 1])")
-    return (f"list_max(list_transform(list_distinct({bg}), "
-            f"d -> len(list_filter({bg}, x -> x = d))))")
-
-
 def _sql_dup_part(parts: str, text: str) -> tuple[str, str]:
     """DuckDB replicas of gopher_repetition's dup line/para signals over
     a (pre-bound) non-empty parts list: (dup fraction, dup char
@@ -2416,7 +2406,7 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deterministic train/val/test hash-split — shuffle-free per-doc
     # Column algebra over the same scan — and, since r6, the CCNet-style
     # unigram-LM perplexity leg (operators/lm.py, self-fit add-alpha
-    # model, exact JVM join mode; the zero-shuffle Arrow broadcast mode
+    # model, exact JVM join path; the zero-shuffle Arrow unigram_scorer
     # is unit-verified equal in tests/test_lm.py)
     from mysql_to_s3_spark.functions.cachepool import cache_scoped
 
@@ -2426,10 +2416,10 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputes once per consumer. Safe to pool: an aggregated frame,
     # never a bare table scan (the CacheManager substitution hazard).
     lm = cache_scoped(
-        unigram_logprob(docs, id_col="doc_id", text_col="text", mode="join"),
+        unigram_logprob(docs, id_col="doc_id", text_col="text"),
         "text_quality:lm",
     )
-    lm2 = bigram_logprob(docs, id_col="doc_id", text_col="text", mode="join")
+    lm2 = bigram_logprob(docs, id_col="doc_id", text_col="text")
     # cls_label (r7): the fastText-shaped classifier gate under the hard
     # oracle via a LEARNABLE-RULE contract — train in-row on a label the
     # oracle can derive (text contains the token 'dup'; no other vocab

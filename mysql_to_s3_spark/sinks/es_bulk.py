@@ -1,4 +1,4 @@
-"""Elasticsearch `_bulk` wire format + alias/rollover planning
+"""Elasticsearch `_bulk` wire format
 (reference pyLibrary/env/elasticsearch.py).
 
 The reference's `Index.extend` (elasticsearch.py:281-321) posts NDJSON
@@ -10,69 +10,14 @@ output part file is one ready-to-POST bulk request body (the file
 committer replaces the reference's driver-side ``"\\n".join`` +
 requests.post loop; posting is a transport concern left to the caller —
 no HTTP client lives in this sandbox).
-
-Rollover naming follows the reference's ``<alias>YYYYMMDD_HHMMSS``
-convention (elasticsearch.py:171-179 ``delete_all_but_self`` and
-:206-220 ``get_index`` both match ``re.escape(alias) + "\\d{8}_\\d{6}"``).
-The alias-resolution and pruning decisions are replicated as pure
-functions over an alias listing, so they are unit-testable without a
-cluster and portable to any ES client.
 """
 
 from __future__ import annotations
 
-import datetime as _dt
 import json
-import re
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
-
-
-class BulkSinkError(ValueError):
-    pass
-
-
-ROLLOVER_SUFFIX_RE = r"\d{8}_\d{6}"
-
-
-def rollover_index_name(alias: str, at: _dt.datetime) -> str:
-    """``<alias>YYYYMMDD_HHMMSS`` (elasticsearch.py:177 naming)."""
-    return alias + at.strftime("%Y%m%d_%H%M%S")
-
-
-def index_for_alias(aliases: list[dict], alias: str) -> str | None:
-    """The single physical index behind ``alias`` — a row matches when its
-    alias equals, its index equals, or its index is a rollover of the
-    alias (elasticsearch.py:206-220 ``get_index``). None when absent;
-    error when ambiguous (the reference Log.error's)."""
-    matches = {
-        a["index"]
-        for a in aliases
-        if a.get("alias") == alias
-        or a["index"] == alias
-        or (re.match(re.escape(alias) + ROLLOVER_SUFFIX_RE, a["index"]) and a["index"] != alias)
-    }
-    if not matches:
-        return None
-    if len(matches) > 1:
-        raise BulkSinkError(f"only one index with given alias={alias!r} expected, got {sorted(matches)}")
-    return matches.pop()
-
-
-def indexes_to_prune(aliases: list[dict], alias: str, keep_index: str) -> list[str]:
-    """Rollover indexes of ``alias`` to delete, keeping ``keep_index``
-    (elasticsearch.py:165-179 ``delete_all_but_self``). The alias-named
-    index itself is never deleted."""
-    if alias == keep_index:
-        return []
-    return sorted(
-        {
-            a["index"]
-            for a in aliases
-            if re.match(re.escape(alias) + ROLLOVER_SUFFIX_RE, a["index"]) and a["index"] != keep_index
-        }
-    )
 
 
 def write_bulk_lines(

@@ -14,15 +14,18 @@ Spark-native mapping:
                                    ORDER BY id LIMIT n" polling
   explicit id batches           -> `predicates` ranges (one partition per
                                    batch), for resuming mid-table
-  information_schema FK scan    -> DISCOVER_RELATIONS_SQL via a 1-row
-                                   JDBC query; feeds snowflake.Relation
+  information_schema scan       -> ``discover_schema``: DISCOVER_COLUMNS_SQL
+                                   and DISCOVER_RELATIONS_SQL as JDBC
+                                   queries, turned into the snowflake
+                                   TableMeta / Relation lists that
+                                   build_plan takes
 
-No MySQL server exists in this container: the MySQL-specific discovery
-SQL is exercised by unit tests on the generated options/SQL/predicates
-(tests/test_jdbc.py), while the live path — ``read_table`` partitioned
-scans, ``predicates`` batches, and the full read→build_plan→doc_frame
-round-trip — runs end-to-end against an embedded Apache Derby database
-(shipped with Spark) in tests/test_jdbc_e2e.py, no mocks.
+No MySQL server is needed for the tests: discovery runs on recorded
+information_schema rows (tests/test_jdbc.py), while the live read path —
+``read_table`` partitioned scans, ``predicates`` batches, and the full
+read→build_plan→doc_frame round-trip — runs end-to-end against an
+embedded Apache Derby database (shipped with Spark) in
+tests/test_jdbc_e2e.py, no mocks.
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from mysql_to_s3_spark.sources.snowflake import Relation
+from mysql_to_s3_spark.sources.snowflake import Relation, TableMeta
 
 
 class JdbcError(ValueError):
@@ -138,8 +141,8 @@ def read_table(
     return spark.read.format("jdbc").options(**opts).load()
 
 
-# FK scan (snowflake_schema.py:70-108): one information_schema query, the
-# result feeds snowflake.Relation verbatim.
+# schema scan (snowflake_schema.py:70-108): two information_schema
+# queries, read positionally by tables_from_rows / relations_from_rows.
 DISCOVER_RELATIONS_SQL = """\
 SELECT constraint_name,
        table_name,
@@ -163,29 +166,48 @@ def discover_relations_sql(cfg: JdbcConfig) -> str:
     return DISCOVER_RELATIONS_SQL.format(schema=cfg.schema)
 
 
-def discover_columns_sql(cfg: JdbcConfig) -> str:
-    return DISCOVER_COLUMNS_SQL.format(schema=cfg.schema)
+def tables_from_rows(rows: list[tuple]) -> list[TableMeta]:
+    """(table, column, ordinal, column_key) rows -> TableMeta list in
+    the ORDER BY of DISCOVER_COLUMNS_SQL; ``column_key = 'PRI'`` columns
+    become the table's id columns."""
+    tables: dict[str, TableMeta] = {}
+    for table, column, _pos, column_key in rows:
+        t = tables.setdefault(table, TableMeta(table, [], []))
+        t.columns.append(column)
+        if column_key == "PRI":
+            t.id_columns.append(column)
+    return list(tables.values())
 
 
 def relations_from_rows(rows: list[tuple]) -> list[Relation]:
     """(constraint, table, column, ref_table, ref_column, ordinal) rows ->
-    Relation list; composite FKs merge by constraint name in ordinal
-    order (the ORDER BY in DISCOVER_RELATIONS_SQL)."""
-    by_constraint: dict[tuple[str, str], Relation] = {}
+    Relation list named ``table.constraint`` (constraint names are only
+    unique per table on some engines, and the name is build_plan's BFS
+    key); composite FKs merge in ordinal order (the ORDER BY in
+    DISCOVER_RELATIONS_SQL)."""
+    by_name: dict[str, Relation] = {}
     for constraint, table, column, ref_table, ref_column, _pos in rows:
-        k = (constraint, table)
-        rel = by_constraint.get(k)
+        name = f"{table}.{constraint}"
+        rel = by_name.get(name)
         if rel is None:
-            by_constraint[k] = Relation(constraint, table, [column], ref_table, [ref_column])
+            by_name[name] = Relation(name, table, [column], ref_table, [ref_column])
         else:
             if rel.referenced_table != ref_table:
                 raise JdbcError(f"constraint {constraint!r} references two tables")
             rel.columns.append(column)
             rel.referenced_columns.append(ref_column)
-    return list(by_constraint.values())
+    return list(by_name.values())
 
 
-def discover_relations(spark: SparkSession, cfg: JdbcConfig) -> list[Relation]:
-    """Live FK scan over JDBC."""
-    df = read_table(spark, cfg, f"({discover_relations_sql(cfg)}) AS fks")
-    return relations_from_rows([tuple(r) for r in df.collect()])
+def discover_schema(spark: SparkSession, cfg: JdbcConfig) -> tuple[list[TableMeta], list[Relation]]:
+    """Live information_schema scan over JDBC (reference
+    snowflake_schema.py:70-211 _scan_database): the ``(tables,
+    relations)`` pair ``snowflake.build_plan`` takes."""
+
+    def rows(sql: str) -> list[tuple]:
+        return [tuple(r) for r in read_table(spark, cfg, f"({sql}) AS t").collect()]
+
+    return (
+        tables_from_rows(rows(DISCOVER_COLUMNS_SQL.format(schema=cfg.schema))),
+        relations_from_rows(rows(discover_relations_sql(cfg))),
+    )

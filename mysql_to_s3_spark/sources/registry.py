@@ -68,10 +68,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df.repartition(par)
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    out = {}
-    for t in TABLES:
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
-            out[t] = load_table(spark, sf_dir, t)
-    return out

@@ -5,7 +5,8 @@ snowflake_schema.py).
 Pipeline:
 
   1. metadata: table/column/relation records — from ``information_schema``
-     over JDBC (``scan_jdbc``) or given directly (tests / any catalog).
+     over JDBC (``jdbc.discover_schema``) or given directly (tests / any
+     catalog).
   2. ``build_plan``: the reference's ``follow_paths`` BFS
      (snowflake_schema.py:288-513) re-expressed as pure driver-side
      planning: many-to-one relations become inner-object DimNodes,
@@ -37,7 +38,7 @@ from __future__ import annotations
 import itertools
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -133,42 +134,6 @@ class FactPlan:
 
 # ---------------------------------------------------------------------------
 # metadata acquisition
-
-
-def scan_jdbc(spark: SparkSession, url: str, properties: dict, database: str) -> tuple[list[TableMeta], list[Relation]]:
-    """FK-graph discovery from information_schema over JDBC
-    (reference snowflake_schema.py:70-211 _scan_database)."""
-
-    def q(sql: str) -> DataFrame:
-        return spark.read.jdbc(url, f"({sql}) t", properties=properties)
-
-    kcu = q(
-        f"""SELECT constraint_name, table_name, column_name, ordinal_position,
-                   referenced_table_name, referenced_column_name
-            FROM information_schema.key_column_usage
-            WHERE table_schema = '{database}' AND referenced_table_name IS NOT NULL"""
-    ).collect()
-    cols = q(
-        f"""SELECT table_name, column_name, ordinal_position, column_key
-            FROM information_schema.columns WHERE table_schema = '{database}'"""
-    ).collect()
-
-    tables: dict[str, TableMeta] = {}
-    for r in sorted(cols, key=lambda r: (r["table_name"], r["ordinal_position"])):
-        t = tables.setdefault(r["table_name"], TableMeta(r["table_name"], [], []))
-        t.columns.append(r["column_name"])
-        if r["column_key"] == "PRI":
-            t.id_columns.append(r["column_name"])
-
-    rels: dict[str, Relation] = {}
-    for r in sorted(kcu, key=lambda r: (r["constraint_name"], r["ordinal_position"])):
-        key = f"{r['table_name']}.{r['constraint_name']}"
-        rel = rels.setdefault(
-            key, Relation(key, r["table_name"], [], r["referenced_table_name"], [])
-        )
-        rel.columns.append(r["column_name"])
-        rel.referenced_columns.append(r["referenced_column_name"])
-    return list(tables.values()), list(rels.values())
 
 
 def parse_add_relations(specs: list[str]) -> list[Relation]:

@@ -15,11 +15,20 @@ from mysql_to_s3_spark.operators.bloom import (
     bloom_build,
     bloom_might_contain,
     bloom_position_columns,
-    bloom_screen,
     bloom_union,
     read_bloom_sidecar,
     write_bloom_sidecar,
 )
+
+
+def _flags(df, path):
+    """{doc_id: might-be-in-index} for ``df`` against the index's bloom
+    sidecar, over the same normalized-text fingerprint the index stores."""
+    from mysql_to_s3_spark.operators.text import fingerprint
+
+    side = read_bloom_sidecar(path, df.sparkSession)
+    flag = bloom_might_contain(fingerprint(F.col("text")), side["bitmap"], side["m_bits"], side["k"])
+    return {r["doc_id"]: r["f"] for r in df.select("doc_id", flag.alias("f")).collect()}
 
 
 def test_position_spec_column_matches_python(spark):
@@ -99,7 +108,7 @@ def test_index_sidecar_roundtrip_and_screen(spark, tmp_path):
         + [(100 + i, f"a genuinely new doc {i} body") for i in range(30)],
         "doc_id long, text string",
     )
-    flags = {r["doc_id"]: r["might_dup"] for r in bloom_screen(new, path).collect()}
+    flags = _flags(new, path)
     for i in range(10):
         assert flags[i], "re-ingested doc must flag possibly-seen"
     # the no-false-negative direction: every False really is absent;
@@ -113,8 +122,7 @@ def test_index_sidecar_roundtrip_and_screen(spark, tmp_path):
     write_dedup_index(batch, path, mode="append")
     bm2 = write_bloom_sidecar(path, spark, m_bits=4096, k=4, mode="extend")
     assert bloom_union(bm, bm2) == bm2  # monotone growth
-    flags2 = {r["doc_id"]: r["might_dup"] for r in bloom_screen(batch, path).collect()}
-    assert flags2[200] is True
+    assert _flags(batch, path)[200] is True
     with pytest.raises(BloomError, match="extend requested"):
         write_bloom_sidecar(path, spark, m_bits=8192, k=4, mode="extend")
 
@@ -191,25 +199,24 @@ def test_extend_under_covering_batch_falls_back_to_rebuild(spark, tmp_path):
     want = bloom_build(spark.read.parquet(path + "/docs"), "fp", 2048, 3)
     assert got == want  # covers BOTH appends, not just the passed batch
     assert read_bloom_sidecar(path, spark)["n_docs"] == 12
-    flags = {
-        r["doc_id"]: r["might_dup"]
-        for r in bloom_screen(
-            spark.createDataFrame(
-                [(200, "first appended doc"), (201, "second appended doc")],
-                "doc_id long, text string",
-            ),
-            path,
-        ).collect()
-    }
+    flags = _flags(
+        spark.createDataFrame(
+            [(200, "first appended doc"), (201, "second appended doc")],
+            "doc_id long, text string",
+        ),
+        path,
+    )
     assert flags[200] is True and flags[201] is True
 
 
-def test_bloom_screen_stale_sidecar_flags_everything_true(spark, tmp_path):
-    """bloom_screen on a STALE sidecar (index appended, sidecar not
-    updated) must not emit False for the appended fingerprints — it
-    flags every row True so exact-screen-skipping callers stay
-    correct."""
-    from mysql_to_s3_spark.operators.dedup_index import write_dedup_index
+def test_stale_sidecar_stamp_and_refresh(spark, tmp_path):
+    """A STALE sidecar (index appended, sidecar not updated) shows in its
+    n_docs stamp, the exact screen stays correct on it, and a refresh
+    folds the appended fingerprint in."""
+    from mysql_to_s3_spark.operators.dedup_index import (
+        exact_screen_against_index,
+        write_dedup_index,
+    )
 
     path = str(tmp_path / "bs_stale")
     write_dedup_index(
@@ -227,12 +234,14 @@ def test_bloom_screen_stale_sidecar_flags_everything_true(spark, tmp_path):
         [(200, "late appended doc"), (201, "some brand new body")],
         "doc_id long, text string",
     )
-    flags = {r["doc_id"]: r["might_dup"] for r in bloom_screen(new, path).collect()}
-    assert flags == {200: True, 201: True}
-    # refresh -> routing returns: the appended fp still flags, the new one may not
+    assert read_bloom_sidecar(path, spark)["n_docs"] == 10
+    assert spark.read.parquet(path + "/docs").count() == 11
+    kept = {r["doc_id"] for r in exact_screen_against_index(new, path).collect()}
+    assert kept == {201}
+    # refresh -> the stamp covers the index and the appended fp flags
     write_bloom_sidecar(path, spark, m_bits=2048, k=3)
-    flags2 = {r["doc_id"]: r["might_dup"] for r in bloom_screen(new, path).collect()}
-    assert flags2[200] is True
+    assert read_bloom_sidecar(path, spark)["n_docs"] == 11
+    assert _flags(new, path)[200] is True
 
 
 def test_exact_screen_against_index_bloom_routed(spark, tmp_path):

@@ -219,3 +219,19 @@ def test_fit_partitions_conf_pin_and_floor(spark):
     # never gets more partitions than the cluster has slots
     par = spark.sparkContext.defaultParallelism
     assert fit_partitions(df, floor=1, bytes_per_partition=1) <= par
+
+
+def test_fit_partitions_rejects_bad_conf(spark):
+    """A non-integer or negative pin raises an error naming the conf key
+    (not a bare int() ValueError, not a silent fall back to derivation)."""
+    from mysql_to_s3_spark.operators.classifier import ClassifierError, fit_partitions
+
+    df = spark.range(10).selectExpr("cast(id as string) as text")
+    key = "mysql_to_s3_spark.classifier.fitPartitions"
+    for bad in ("four", "-2"):
+        spark.conf.set(key, bad)
+        try:
+            with pytest.raises(ClassifierError, match=f"{key}.*{bad}"):
+                fit_partitions(df)
+        finally:
+            spark.conf.unset(key)

@@ -9,9 +9,6 @@ import sys
 
 import pytest
 
-# r11: deselected from the default pass (the driver re-verifies all 50 rows itself (CORRECTNESS gate)); run with -m ""
-pytestmark = pytest.mark.slow
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
@@ -40,6 +37,9 @@ def _eq(a, b, tol=1e-9):
     return a == b
 
 
+# the 50-row oracle replica is slow: deselected from the default pass, run
+# it with -m "". test_entry_smoke below stays in the default pass.
+@pytest.mark.slow
 @pytest.mark.parametrize("name", list(entry_mod.queries()))
 def test_query_matches_oracle(spark, duck, name):
     fn = entry_mod.queries()[name]
@@ -57,5 +57,6 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_entry_smoke(spark):
+    """entry() runs the flagship query, which must return rows."""
     df = entry_mod.entry(spark)
-    assert df.count() >= 0
+    assert df.count() > 0

@@ -1,6 +1,6 @@
 """DSIR importance weighting (operators/dsir.py) — pure-Python replica
-of the hashed-ngram log-likelihood-ratio weight, join-vs-arrow mode
-agreement, Gumbel top-k determinism/temperature/salt semantics, fit
+of the hashed-ngram log-likelihood-ratio weight, join-path vs Arrow
+scorer agreement, Gumbel top-k determinism/temperature/salt semantics, fit
 bounds, and guard errors."""
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from mysql_to_s3_spark.operators.dsir import (
     DsirError,
     dsir_logratio,
+    dsir_scorer,
     dsir_topk,
     hashed_ngram_counts,
 )
@@ -94,6 +95,8 @@ def test_logratio_matches_pure_python_replica(spark, corpus):
 
 
 def test_arrow_mode_agrees_with_join(spark, corpus):
+    """dsir_scorer (the Arrow per-row form) gives every doc with tokens
+    the dsir_logratio weight, and null where dsir_logratio has no row."""
     rows, df = corpus
     tgt = hashed_ngram_counts(df.filter(F.col("lang") == "en"), n_buckets=M)
     src = hashed_ngram_counts(df, n_buckets=M)
@@ -101,23 +104,22 @@ def test_arrow_mode_agrees_with_join(spark, corpus):
         r["doc_id"]: r["dsir_logratio"]
         for r in dsir_logratio(df, tgt, src, n_buckets=M).collect()
     }
+    score = dsir_scorer(tgt, src, n_buckets=M)
     a = {
-        r["doc_id"]: r["dsir_logratio"]
-        for r in dsir_logratio(df, tgt, src, n_buckets=M, mode="arrow").collect()
+        r["doc_id"]: r["w"]
+        for r in df.select("doc_id", score(F.col("text")).alias("w")).collect()
     }
-    assert set(j) == set(a)
+    assert {k for k, v in a.items() if v is not None} == set(j) == {1, 2, 3, 4, 5}
     for k, v in j.items():
-        if v is None:
-            assert a[k] is None
-        else:
-            assert a[k] == pytest.approx(v, abs=1e-6)
+        assert a[k] == pytest.approx(v, abs=1e-6)
 
 
 def test_arrow_plan_has_no_exchange(spark, corpus):
     _, df = corpus
     tgt = hashed_ngram_counts(df.filter(F.col("lang") == "en"), n_buckets=M)
     src = hashed_ngram_counts(df, n_buckets=M)
-    scored = dsir_logratio(df, tgt, src, n_buckets=M, mode="arrow")
+    score = dsir_scorer(tgt, src, n_buckets=M)
+    scored = df.select("doc_id", score(F.col("text")).alias("dsir_logratio"))
     plan = scored._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
 
@@ -171,8 +173,6 @@ def test_guards(spark, corpus):
     cnt = hashed_ngram_counts(df, n_buckets=M)
     with pytest.raises(DsirError, match="n_buckets"):
         hashed_ngram_counts(df, n_buckets=1)
-    with pytest.raises(DsirError, match="mode"):
-        dsir_logratio(df, cnt, cnt, n_buckets=M, mode="nosuch")
     w = dsir_logratio(df, cnt, cnt, n_buckets=M)
     with pytest.raises(DsirError, match="k"):
         dsir_topk(w, 0)
@@ -183,7 +183,7 @@ def test_guards(spark, corpus):
 def test_empty_counts_frame_matches_sql_oracle_semantics(spark, corpus):
     """r9 (ADVICE): an EMPTY counts frame must yield the uniform
     add-alpha model (totals coalesce to 0), not NULL weights — the SQL
-    oracle (dsir_logratio_sql) coalesces its totals, and the join mode
+    oracle (dsir_logratio_sql) coalesces its totals, and dsir_logratio
     must agree. With target == source == empty, every ratio term is 0."""
     rows, df = corpus
     empty = hashed_ngram_counts(

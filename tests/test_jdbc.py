@@ -70,7 +70,7 @@ def test_relations_from_rows_merges_composite_fks():
     ]
     rels = relations_from_rows(rows)
     assert len(rels) == 2
-    comp = next(r for r in rels if r.name == "fk_b")
+    comp = next(r for r in rels if r.name == "detail.fk_b")
     assert comp.columns == ["d_k1", "d_k2"]
     assert comp.referenced_columns == ["p_k1", "p_k2"]
 
@@ -137,14 +137,88 @@ def test_discovery_composite_fk_merges_by_constraint():
     assert rel.columns == ["pa", "pb"] and rel.referenced_columns == ["a", "b"]
 
 
-def test_discovery_drives_snowflake_end_to_end(spark):
-    """The discovered relations drive build_plan/doc_frame to the SAME
-    documents as the hand-written fixture relations — the full MySQL
-    discovery path minus only the socket."""
-    from mysql_to_s3_spark.sinks.json_sink import collect_docs
+def test_discovery_same_constraint_name_on_two_tables():
+    """Engines that scope constraint names per table may reuse one name:
+    the relations stay apart under their ``table.constraint`` names, and
+    a constraint that points at two tables is refused."""
     from mysql_to_s3_spark.sources.jdbc import relations_from_rows
+
+    rows = [
+        ("fk_parent", "a", "p", "parent", "id", 1),
+        ("fk_parent", "b", "p", "parent", "id", 1),
+    ]
+    assert [r.name for r in relations_from_rows(rows)] == ["a.fk_parent", "b.fk_parent"]
+    with pytest.raises(JdbcError, match="two tables"):
+        relations_from_rows(
+            [("fk_x", "a", "p", "parent", "id", 1), ("fk_x", "a", "q", "other", "id", 2)]
+        )
+
+
+# information_schema.columns rows for the same schema, in the ORDER BY of
+# DISCOVER_COLUMNS_SQL (table_name, ordinal_position)
+_RECORDED_COLUMNS = [
+    ("fact_table", "id", 1, "PRI"),
+    ("fact_table", "name", 2, ""),
+    ("fact_table", "about", 3, "MUL"),
+    ("inner1", "id", 1, "PRI"),
+    ("inner1", "value", 2, ""),
+    ("inner1", "time", 3, "MUL"),
+    ("inner2", "id", 1, "PRI"),
+    ("inner2", "value", 2, ""),
+    ("nested1", "id", 1, "PRI"),
+    ("nested1", "ref", 2, "MUL"),
+    ("nested1", "description", 3, ""),
+    ("nested1", "about", 4, "MUL"),
+    ("nested2", "id", 1, "PRI"),
+    ("nested2", "ref", 2, "MUL"),
+    ("nested2", "minutia", 3, ""),
+    ("nested2", "about", 4, "MUL"),
+]
+
+
+def test_discovery_recorded_columns_match_reference_schema():
+    """tables_from_rows over the recorded columns rows reproduces the
+    hand-written fixture tables: columns in ordinal order, PRI-keyed
+    columns as ids (composite keys keep their ordinal order)."""
+    from mysql_to_s3_spark.sources.jdbc import tables_from_rows
+    from tests.fixtures_snowflake import TABLES_META
+
+    got = {t.name: (t.columns, t.id_columns) for t in tables_from_rows(_RECORDED_COLUMNS)}
+    assert got == {t.name: (t.columns, t.id_columns) for t in TABLES_META}
+    (li,) = tables_from_rows(
+        [
+            ("lineitem", "l_orderkey", 1, "PRI"),
+            ("lineitem", "l_qty", 2, ""),
+            ("lineitem", "l_linenumber", 3, "PRI"),
+        ]
+    )
+    assert li.id_columns == ["l_orderkey", "l_linenumber"]
+
+
+def test_discovery_drives_snowflake_end_to_end(spark, monkeypatch):
+    """discover_schema over the recorded information_schema rows drives
+    build_plan/doc_frame to the SAME documents as the hand-written
+    fixture tables and relations — the full MySQL discovery path minus
+    only the socket (read_table answers from the recordings)."""
+    from mysql_to_s3_spark.sinks.json_sink import collect_docs
+    from mysql_to_s3_spark.sources import jdbc
     from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, build_plan, doc_frame
     from tests.fixtures_snowflake import RELATIONS, TABLES_META, build_tables
+
+    asked = []
+
+    def recorded(_spark, cfg, table):
+        asked.append(table)
+        if "information_schema.key_column_usage" in table:
+            return _spark.createDataFrame(
+                _RECORDED_KEY_COLUMN_USAGE,
+                "c string, t string, col string, rt string, rc string, pos int",
+            )
+        return _spark.createDataFrame(_RECORDED_COLUMNS, "t string, col string, pos int, k string")
+
+    monkeypatch.setattr(jdbc, "read_table", recorded)
+    meta, rels = jdbc.discover_schema(spark, CFG)
+    assert len(asked) == 2 and all("table_schema = 'shop'" in q for q in asked)
 
     tables = build_tables(spark)
     cfg = SnowflakeConfig(
@@ -152,7 +226,7 @@ def test_discovery_drives_snowflake_end_to_end(spark):
         null_values=["-", "unknown", ""],
         reference_only=["inner1", "inner2"],
     )
-    discovered = build_plan(TABLES_META, relations_from_rows(_RECORDED_KEY_COLUMN_USAGE), cfg)
+    discovered = build_plan(meta, rels, cfg)
     handwritten = build_plan(TABLES_META, RELATIONS, cfg)
     ids = [10, 11, 12, 13, 15]
     got = collect_docs(doc_frame(tables, discovered, cfg, ids=ids), "fact_table")

@@ -166,26 +166,6 @@ def test_winnow_shared_substring_shares_fingerprint(spark):
     assert empty.select(winnow_fingerprint(F.col("text"), k, w).alias("f")).first()["f"] == []
 
 
-def test_winnow_pairs_finds_shared_passage(spark):
-    from mysql_to_s3_spark.operators.dedup import winnow_pairs
-
-    passage = "the quick brown fox jumps over the lazy dog repeatedly"
-    docs = spark.createDataFrame(
-        [
-            (1, f"alpha {passage} omega"),
-            (2, f"prelude {passage} coda coda"),
-            (3, "entirely unrelated wording about database engines and parquet files"),
-        ],
-        "doc_id long, text string",
-    )
-    pairs = {(r["a"], r["b"]) for r in winnow_pairs(docs, min_shared=5).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-    # the max_df skew valve drops corpus-hot fingerprints deterministically
-    assert winnow_pairs(docs, min_shared=5, max_df=1).count() == 0
-
-
 @pytest.mark.slow  # r11: >19 s in the full-suite run; default pass deselects
 def test_embedding_dup_lsh_matches_all_pairs(spark, sf_dir):
     from mysql_to_s3_spark.operators.dedup import embedding_dup_pairs
@@ -249,22 +229,6 @@ def test_decode_stubs_raise_without_libs():
         multimodal.decode_image(b"xx")
     with pytest.raises(NotImplementedError):
         multimodal.resize_image(b"xx", 2, 2)
-
-
-def test_embedding_blocked_gemm_matches_all_pairs(spark, sf_dir):
-    """Blocked-GEMM all-pairs (the dense/low-threshold scale path) equals
-    the Column-algebra all-pairs exactly, across block boundaries."""
-    from mysql_to_s3_spark.operators.dedup import embedding_dup_pairs
-    from mysql_to_s3_spark.operators.similarity import embedding_dup_pairs_blocked
-    from mysql_to_s3_spark.sources.registry import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    want = {(r["a"], r["b"], r["cos"]) for r in embedding_dup_pairs(emb, threshold=0.45).collect()}
-    got = {
-        (r["a"], r["b"], r["cos"])
-        for r in embedding_dup_pairs_blocked(emb, threshold=0.45, rows_per_block=300).collect()
-    }
-    assert got == want and len(got) > 0
 
 
 def test_ngram_jaccard_exact_threshold_boundary_pair_kept(spark):

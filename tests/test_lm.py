@@ -1,5 +1,6 @@
 """Unigram-LM perplexity scoring (operators/lm.py) — hand-computed
-model values, join-vs-arrow mode agreement, OOV floor, vocab cap."""
+model values, unigram_logprob vs unigram_scorer agreement, OOV floor,
+vocab cap."""
 
 from __future__ import annotations
 
@@ -12,7 +13,14 @@ from mysql_to_s3_spark.operators.lm import (
     LmError,
     unigram_counts,
     unigram_logprob,
+    unigram_scorer,
 )
+
+
+def _scored(docs, counts=None):
+    """{doc_id: score} from unigram_scorer — the per-row Arrow form."""
+    sc = unigram_scorer(unigram_counts(docs) if counts is None else counts)
+    return {r.doc_id: r.s for r in docs.select("doc_id", sc(F.col("text")).alias("s")).collect()}
 
 
 @pytest.fixture(scope="module")
@@ -34,26 +42,24 @@ def test_hand_computed_model(spark, tiny):
         3: None,
         4: None,
     }
-    for mode in ("join", "arrow"):
-        got = {
-            r.doc_id: r.lm_logprob
-            for r in unigram_logprob(tiny, mode=mode).collect()
-        }
+    joined = {r.doc_id: r.lm_logprob for r in unigram_logprob(tiny).collect()}
+    for form, got in (("logprob", joined), ("scorer", _scored(tiny))):
         assert set(got) == set(want)
         for k, v in want.items():
             if v is None:
-                assert got[k] is None, (mode, k)
+                assert got[k] is None, (form, k)
             else:
-                assert got[k] == pytest.approx(v, abs=1e-12), (mode, k)
+                assert got[k] == pytest.approx(v, abs=1e-12), (form, k)
 
 
 def test_modes_agree_on_corpus(spark, sf_dir):
+    """unigram_scorer and unigram_logprob score the same model."""
     from mysql_to_s3_spark.sources.registry import load_table
 
     docs = (load_table(spark, sf_dir, "documents")
             .orderBy("doc_id").limit(300).select("doc_id", "text").cache())
-    j = {r.doc_id: r.lm_logprob for r in unigram_logprob(docs, mode="join").collect()}
-    a = {r.doc_id: r.lm_logprob for r in unigram_logprob(docs, mode="arrow").collect()}
+    j = {r.doc_id: r.lm_logprob for r in unigram_logprob(docs).collect()}
+    a = _scored(docs)
     assert set(j) == set(a) and j
     for k in j:
         if j[k] is None:
@@ -67,9 +73,9 @@ def test_oov_floor_and_cross_corpus(spark):
     cnt = unigram_counts(ref)  # a:3 b:1 -> T=4 V=2 denom = 4 + 3 = 7
     target = spark.createDataFrame([(9, "z z")], "doc_id: long, text: string")
     floor = math.log2(1 / 7)
-    for mode in ("join", "arrow"):
-        got = unigram_logprob(target, cnt, mode=mode).collect()[0].lm_logprob
-        assert got == pytest.approx(floor, abs=1e-12), mode
+    got = unigram_logprob(target, cnt).collect()[0].lm_logprob
+    assert got == pytest.approx(floor, abs=1e-12)
+    assert _scored(target, cnt)[9] == pytest.approx(floor, abs=1e-12)
 
 
 def test_vocab_cap_deterministic(spark):
@@ -88,7 +94,7 @@ def test_bad_args(spark, tiny):
     with pytest.raises(LmError):
         unigram_logprob(tiny, alpha=0.0)
     with pytest.raises(LmError):
-        unigram_logprob(tiny, mode="nope")
+        unigram_scorer([("a", 1)], alpha=0.0, spark=spark)
 
 
 # ---------------------------------------------------------------- bigram
@@ -107,9 +113,8 @@ def test_bigram_hand_computed(spark):
         + math.log2(2 / 4)      # b a
         + math.log2(3 / 5)      # a b
     ) / 4
-    for mode in ("join", "arrow"):
-        got = bigram_logprob(docs, mode=mode).collect()[0].lm2_logprob
-        assert got == pytest.approx(want, abs=1e-12), mode
+    got = bigram_logprob(docs).collect()[0].lm2_logprob
+    assert got == pytest.approx(want, abs=1e-12)
 
 
 def test_bigram_unseen_pair_and_context(spark):
@@ -125,11 +130,10 @@ def test_bigram_unseen_pair_and_context(spark):
     t2 = spark.createDataFrame([(8, "z z")], "doc_id: long, text: string")
     w1 = (math.log2(2 / 4) + math.log2(1 / 4)) / 2
     w2 = (math.log2(1 / 4) + math.log2(1 / 3)) / 2
-    for mode in ("join", "arrow"):
-        g1 = bigram_logprob(t1, bi, mode=mode).collect()[0].lm2_logprob
-        g2 = bigram_logprob(t2, bi, mode=mode).collect()[0].lm2_logprob
-        assert g1 == pytest.approx(w1, abs=1e-12), mode
-        assert g2 == pytest.approx(w2, abs=1e-12), mode
+    g1 = bigram_logprob(t1, bi).collect()[0].lm2_logprob
+    g2 = bigram_logprob(t2, bi).collect()[0].lm2_logprob
+    assert g1 == pytest.approx(w1, abs=1e-12)
+    assert g2 == pytest.approx(w2, abs=1e-12)
 
 
 def test_bigram_matches_duckdb_oracle(spark, sf_dir):
@@ -144,7 +148,7 @@ def test_bigram_matches_duckdb_oracle(spark, sf_dir):
             .orderBy("doc_id").limit(200).select("doc_id", "text").cache())
     got = {
         r.doc_id: r.lm2_logprob
-        for r in bigram_logprob(docs, mode="join").collect()
+        for r in bigram_logprob(docs).collect()
     }
     con = duckdb.connect()
     con.register("docs_arrow", docs.toPandas())
@@ -176,7 +180,7 @@ def test_bigram_matches_duckdb_oracle(spark, sf_dir):
 
 
 def test_lm_join_mode_plan_is_broadcast(spark, sf_dir):
-    """The join-mode scoring plan must broadcast the model frames —
+    """The scoring plan must broadcast the model frames —
     the token stream itself must never shuffle for the joins (only the
     per-doc re-agg exchanges)."""
     import re as _re
@@ -194,44 +198,24 @@ def test_lm_join_mode_plan_is_broadcast(spark, sf_dir):
 
 
 def test_arrow_collect_valve_unigram(spark, tiny):
-    """The Arrow mode's model collect is conf-capped: an oversized
+    """unigram_scorer's model collect is conf-capped: an oversized
     self-fit model RAISES (the 'bound it first' contract is enforced,
     not trusted); a vocab_size-capped model under the cap still builds;
-    join mode never collects and is unaffected by the cap."""
-    from mysql_to_s3_spark.operators.lm import LM_COLLECT_CAP_CONF, unigram_scorer
+    unigram_logprob never collects and is unaffected by the cap."""
+    from mysql_to_s3_spark.operators.lm import LM_COLLECT_CAP_CONF
 
     spark.conf.set(LM_COLLECT_CAP_CONF, "2")
     try:
         # tiny's vocabulary is 4 tokens (a b c !) > cap 2
         with pytest.raises(LmError, match="exceeds 2 rows"):
-            unigram_logprob(tiny, mode="arrow")
-        capped = unigram_counts(tiny, vocab_size=2)
-        got = {r.doc_id: r.lm_logprob
-               for r in unigram_logprob(tiny, counts=capped, mode="arrow").collect()}
+            unigram_scorer(unigram_counts(tiny))
+        got = _scored(tiny, unigram_counts(tiny, vocab_size=2))
         assert set(got) == {1, 2, 3, 4}
-        # join mode builds lazily against the same oversized model
-        unigram_logprob(tiny, mode="join")
+        # the join path builds lazily against the same oversized model
+        unigram_logprob(tiny)
         # the plain-list path is the caller's own materialization — no valve
         sc = unigram_scorer([("a", 2), ("b", 1), ("c", 1), ("!", 1)], spark=spark)
         assert sc is not None
-    finally:
-        spark.conf.unset(LM_COLLECT_CAP_CONF)
-
-
-def test_arrow_collect_valve_bigram(spark, tiny):
-    from mysql_to_s3_spark.operators.lm import LM_COLLECT_CAP_CONF, bigram_logprob
-
-    spark.conf.set(LM_COLLECT_CAP_CONF, "3")
-    try:
-        # tiny's pair table is 5 rows: (BOS,a)(a,a)(a,b)(BOS,c)(c,!)
-        with pytest.raises(LmError, match="exceeds 3 rows"):
-            bigram_logprob(tiny, mode="arrow")
-        # a count-pruned model under the cap builds and scores
-        from mysql_to_s3_spark.operators.lm import bigram_counts
-
-        pruned = bigram_counts(tiny).filter(F.col("n") >= 2)
-        out = bigram_logprob(tiny, bi=pruned, mode="arrow").collect()
-        assert len(out) == 4
     finally:
         spark.conf.unset(LM_COLLECT_CAP_CONF)
 
@@ -279,7 +263,7 @@ def test_perplexity_buckets_bracketed_equals_exact(spark, sf_dir):
     from mysql_to_s3_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    scores = unigram_logprob(docs, id_col="doc_id", text_col="text", mode="join")
+    scores = unigram_logprob(docs, id_col="doc_id", text_col="text")
     exact = {
         r["doc_id"]: r["ppl_bucket"]
         for r in perplexity_buckets(scores).select("doc_id", "ppl_bucket").collect()
@@ -317,7 +301,7 @@ def test_perplexity_buckets_per_group_matches_per_language_runs(spark, sf_dir):
     from mysql_to_s3_spark.sources.registry import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-    scores = unigram_logprob(docs, id_col="doc_id", text_col="text", mode="join").join(
+    scores = unigram_logprob(docs, id_col="doc_id", text_col="text").join(
         docs.select("doc_id", "lang"), "doc_id"
     )
     got = {

@@ -430,7 +430,7 @@ def test_lm_gate_batch_and_stream_agree(spark, tmp_path):
     cnt = unigram_counts(ref)
     scores = {
         r.doc_id: r.lm_logprob
-        for r in unigram_logprob(docs, cnt, mode="join").collect()
+        for r in unigram_logprob(docs, cnt).collect()
     }
     # threshold between the typical docs' scores and the gibberish doc's
     cut = (max(scores[9], -1e9) + min(scores[i + 1] for i in range(3))) / 2

@@ -328,12 +328,14 @@ def test_span_windows_pooling_matches_unpooled(spark):
     """r11: the wins= hook — duplicated_span_fraction and
     strip_duplicated_spans fed one shared span_windows frame produce
     EXACTLY the no-pool outputs (mixed case, punctuation, sub-k docs,
-    a 3-holder span family, a fully-covered non-keeper), and a
-    malformed wins frame is refused with a clear error."""
+    a 3-holder span family, a fully-covered non-keeper, case mappings
+    that change token boundaries), and a malformed wins frame is refused
+    with a clear error."""
     from mysql_to_s3_spark.operators.dedup import (
         duplicated_span_fraction,
         span_windows,
         strip_duplicated_spans,
+        token_frame,
     )
 
     shared = "Alpha beta GAMMA delta, epsilon"
@@ -346,6 +348,11 @@ def test_span_windows_pooling_matches_unpooled(spark):
             (5, "tiny"),
             (6, shared),          # keeper candidate of the bare span
             (7, shared.lower()),  # fully covered non-keeper -> ''
+            # lower() re-tokenizes these: 'İ' (U+0130) becomes i + U+0307
+            # (one token more), the Kelvin sign (U+212A) an ASCII k that
+            # joins the next word (one token fewer)
+            (8, f"a \u0130stanbul {shared} g h"),
+            (9, f"\u212aelvin {shared} z"),
         ],
         "doc_id bigint, text string",
     )
@@ -354,15 +361,24 @@ def test_span_windows_pooling_matches_unpooled(spark):
     def rows(df):
         return sorted(tuple(r) for r in df.collect())
 
-    assert rows(duplicated_span_fraction(docs, k=5, wins=wins)) == rows(
-        duplicated_span_fraction(docs, k=5)
-    )
+    frac = rows(duplicated_span_fraction(docs, k=5))
+    assert rows(duplicated_span_fraction(docs, k=5, wins=wins)) == frac
+    assert rows(duplicated_span_fraction(docs, k=5, toks=token_frame(docs))) == frac
     assert rows(strip_duplicated_spans(docs, k=5, wins=wins)) == rows(
         strip_duplicated_spans(docs, k=5)
     )
     # the fully-covered non-keeper really exercises the empty-rebuild path
     sp = {r["doc_id"]: r for r in strip_duplicated_spans(docs, k=5, wins=wins).collect()}
     assert sp[7]["clean_text"] == "" and sp[7]["n_removed"] == sp[7]["n_tokens"] > 0
+    # windows index the raw token stream: exactly the 6 shared tokens go
+    assert (sp[8]["clean_text"], sp[8]["n_tokens"], sp[8]["n_removed"]) == (
+        "a \u0130 stanbul g h", 11, 6,
+    )
+    assert (sp[9]["clean_text"], sp[9]["n_tokens"], sp[9]["n_removed"]) == (
+        "\u212a elvin z", 9, 6,
+    )
+    fr = {r[0]: r[1:3] for r in frac}
+    assert fr[8] == (7, 2) and fr[9] == (5, 2)
     bad = docs.select(F.col("doc_id").alias("id"))
     with pytest.raises(ValueError, match="span_windows"):
         duplicated_span_fraction(docs, k=5, wins=bad)

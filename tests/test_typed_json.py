@@ -100,51 +100,7 @@ def test_write_typed_json_lines_distributed(spark, tmp_path):
     assert all(EXISTS_TYPE in line and NUMBER_TYPE in line["k"] for line in lines)
 
 
-# -- ES _bulk wire format + alias/rollover planning (sinks/es_bulk.py) --
-
-
-def test_rollover_name_matches_reference_pattern():
-    import datetime as dt
-    import re
-
-    from mysql_to_s3_spark.sinks.es_bulk import ROLLOVER_SUFFIX_RE, rollover_index_name
-
-    name = rollover_index_name("repo", dt.datetime(2026, 8, 14, 1, 2, 3))
-    assert name == "repo20260814_010203"
-    # the exact regex the reference uses to recognize rollovers
-    assert re.match(re.escape("repo") + ROLLOVER_SUFFIX_RE, name)
-
-
-def test_index_for_alias_resolution_and_ambiguity():
-    import pytest
-
-    from mysql_to_s3_spark.sinks.es_bulk import BulkSinkError, index_for_alias
-
-    aliases = [
-        {"index": "repo20260101_000000", "alias": "repo"},
-        {"index": "other20260101_000000", "alias": "other"},
-    ]
-    assert index_for_alias(aliases, "repo") == "repo20260101_000000"
-    assert index_for_alias(aliases, "nosuch") is None
-    # un-aliased rollover still resolves by the name pattern
-    assert index_for_alias([{"index": "repo20260101_000000", "alias": None}], "repo") == "repo20260101_000000"
-    with pytest.raises(BulkSinkError):
-        index_for_alias(
-            aliases + [{"index": "repo20270101_000000", "alias": "repo"}], "repo"
-        )
-
-
-def test_indexes_to_prune_keeps_live_index():
-    from mysql_to_s3_spark.sinks.es_bulk import indexes_to_prune
-
-    aliases = [
-        {"index": "repo20250101_000000", "alias": None},
-        {"index": "repo20260101_000000", "alias": "repo"},
-        {"index": "repoX", "alias": None},  # not a rollover of 'repo'
-        {"index": "other20250101_000000", "alias": "other"},
-    ]
-    assert indexes_to_prune(aliases, "repo", "repo20260101_000000") == ["repo20250101_000000"]
-    assert indexes_to_prune(aliases, "repo", "repo") == []
+# -- ES _bulk wire format (sinks/es_bulk.py) --
 
 
 def test_write_bulk_lines_roundtrip(spark, tmp_path):

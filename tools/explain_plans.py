@@ -1,13 +1,13 @@
 """Capture .explain("formatted") for headline catalog rows.
 
 Usage:
-    python tools/explain_plans.py <suffix> [name ...]
+    python tools/explain_plans.py <out_dir> <suffix> [name ...]
 
-Writes plans/r10/<name>_<suffix>.txt for each requested row (default:
-every bench HEADLINE row). The optimization judge reads these files to
-check plan claims (Exchange counts, join strategies, PushedFilters,
-BatchEvalPython nodes) against the code — capture them BEFORE and AFTER
-each change (suffix 'before' / 'after').
+Writes <out_dir>/<name>_<suffix>.txt for each requested row (default:
+every bench HEADLINE row), e.g. ``plans/r12 before``. The files back
+plan claims (Exchange counts, join strategies, PushedFilters,
+BatchEvalPython nodes) — capture them BEFORE and AFTER each change
+(suffix 'before' / 'after').
 
 Notes:
 - Builds each row once and prints the FORMATTED plan of the returned
@@ -27,15 +27,16 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import bench
     from mysql_to_s3_spark import queries as catalog
     from mysql_to_s3_spark.session import get_spark
 
-    names = sys.argv[2:] or bench.HEADLINE
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r10")
+    names = sys.argv[3:] or bench.HEADLINE
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("explain_plans")
