@@ -98,11 +98,13 @@ def collect_docs(df: DataFrame, fact_name: str, etl: dict | None = None) -> list
     set -1 to disable) — pointing it at a full table is a driver OOM at
     scale. Production writes go through ``write_json_lines``, which
     streams the identical scrubbed JSON through the file committer."""
+    raw = df.sparkSession.conf.get(COLLECT_DOCS_MAX_ROWS_CONF, str(COLLECT_DOCS_MAX_ROWS_DEFAULT))
     try:
-        limit = int(df.sparkSession.conf.get(
-            COLLECT_DOCS_MAX_ROWS_CONF, str(COLLECT_DOCS_MAX_ROWS_DEFAULT)))
-    except Exception:
-        limit = COLLECT_DOCS_MAX_ROWS_DEFAULT
+        limit = int(raw)
+    except ValueError:
+        raise SinkError(
+            f"{COLLECT_DOCS_MAX_ROWS_CONF} must be an integer (-1 = unbounded), got {raw!r}"
+        ) from None
     if limit >= 0 and df.limit(limit + 1).count() > limit:
         raise SinkError(
             f"collect_docs is the bounded driver-side path and the input "

@@ -2,23 +2,38 @@
 JSON batches (reference mysql_to_s3/extract.py:40 Extract).
 
 The reference's thread/queue machinery (extract.py:86-118) dissolves into
-Spark's scheduler: the driver loop only decides BATCH BOUNDARIES (counter
-chain on the strictly-increasing extract field), and each batch is one
-declarative doc_frame -> sink write. Keyset pagination
-(extract.py:156-183) becomes a pushed-down range predicate on the sorted
-extract field; checkpoint/resume keeps the reference's
-[start_point, first_value] contract (extract.py:94-110,254).
+Spark's scheduler: the driver loop only decides BATCH BOUNDARIES, and each
+batch is one declarative doc_frame -> sink write.
+
+Keyset batches (reference extract.py:156-183): ``Extract.batches`` runs the
+counter-chain keying (``batch_key_columns``, one window over the fact
+table) ONCE per run and collects, per batch key, the first and last
+``(field, *id_columns)`` position and the batch's min id.
+``Extract.ids_for_batch`` turns one batch into a literal lexicographic
+range filter on the fact, so a batch reads no window: the separate
+``field >= lo AND field <= hi`` conjunct pushes into Parquet/JDBC scans,
+the id tiebreak keeps the range exact when equal field values straddle a
+batch boundary, and when the field is the children's join key Catalyst
+infers the same bound on each child scan through the left-outer join. The
+id columns must be a key (non-null, unique) for the order to be total.
+
+Checkpoint/resume keeps the reference's [start_point, first_value]
+contract (extract.py:94-110,254); ``first_value`` comes from the collected
+bounds, so a checkpoint runs no Spark job. The checkpoint file is replaced
+atomically.
 """
 
 from __future__ import annotations
 
 import json
+import operator
 import os
 from dataclasses import dataclass
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mysql_to_s3_spark.sinks.json_sink import etl_envelope, write_json_lines
 from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, doc_frame
@@ -31,7 +46,7 @@ class ExtractError(ValueError):
 
 @dataclass
 class ExtractConfig:
-    field: str  # strictly-increasing extract column (id or timestamp)
+    field: str  # increasing extract column (id or timestamp); ties keyed by the id columns
     type: str = "number"  # "number" | "time"
     start: Any = 0
     batch: Any = 100  # int, or [duration, size] counter chain
@@ -58,15 +73,68 @@ def validate_key_format(key_format: str, batch_key: tuple) -> None:
 def read_checkpoint(path: str) -> tuple | None:
     if not os.path.exists(path):
         return None
-    with open(path) as f:
-        data = json.load(f)
+    try:
+        with open(path) as f:
+            data = json.load(f)
+    except ValueError as e:  # JSONDecodeError, UnicodeDecodeError
+        raise ExtractError(f"checkpoint {path} is not valid JSON: {e}") from None
+    if not (isinstance(data, dict) and isinstance(data.get("start_point"), list) and "first_value" in data):
+        raise ExtractError(f"checkpoint {path} is not a {{start_point: [...], first_value}} object: {data!r}")
     return tuple(data["start_point"]), data["first_value"]
 
 
 def write_checkpoint(path: str, start_point: tuple, first_value: Any) -> None:
+    """Write the checkpoint under a temp name in the same directory, then
+    rename it over ``path``: a crash mid-write leaves the previous
+    checkpoint whole."""
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with open(path, "w") as f:
-        json.dump({"start_point": list(start_point), "first_value": first_value}, f)
+    tmp = f"{path}.{os.getpid()}.tmp"
+    try:
+        with open(tmp, "w") as f:
+            json.dump({"start_point": list(start_point), "first_value": first_value}, f)
+        os.replace(tmp, path)
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
+
+
+@dataclass(frozen=True)
+class Batch:
+    """One keyset batch: its counter-chain key, the first and last
+    ``(field, *id_columns)`` position it holds, and its min
+    ``id_columns[0]`` (the checkpoint's ``first_value``)."""
+
+    key: tuple
+    lo: tuple
+    hi: tuple
+    first: Any
+
+
+def _orderable(col: Column, dtype: T.DataType) -> Column:
+    """A position value that survives the trip to the driver exactly:
+    timestamps travel as epoch microseconds (no Python-timezone
+    round trip)."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.unix_micros(col.cast("timestamp"))
+    return col
+
+
+def _literal(value: Any, dtype: T.DataType) -> Column:
+    """The literal of a collected ``_orderable`` value in the column's own
+    type; constant-folded, so a comparison with it stays pushable."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.timestamp_micros(F.lit(value)).cast(dtype)
+    return F.lit(value).cast(dtype)
+
+
+def _lexicographic(cols: list[Column], vals: list[Column], strict, last) -> Column:
+    """``(c0, c1, ...) op (v0, v1, ...)`` as ``c0 strict v0 OR (c0 = v0 AND
+    (c1 strict v1 OR ...))``, the innermost comparison being ``last``."""
+    cond = last(cols[-1], vals[-1])
+    for c, v in zip(reversed(cols[:-1]), reversed(vals[:-1])):
+        cond = strict(c, v) | ((c == v) & cond)
+    return cond
 
 
 class Extract:
@@ -87,22 +155,16 @@ class Extract:
         self.snowflake = snowflake
         self.extract = extract
 
-    def batches(self) -> list[tuple]:
-        """Distinct batch keys present in the fact table, in order —
-        computed distributed via the counter-chain column analog."""
-        fact = self.tables[self.plan.table]
-        keyed = batch_key_columns(
-            fact.filter(F.col(self.extract.field) >= F.lit(self.extract.start)),
-            self.extract.field,
-            self.extract.start,
-            self.extract.batch,
-            tiebreak_cols=self.plan.id_columns,
-        )
-        key_cols = ["__batch0__", "__batch1__"]
-        rows = keyed.select(*key_cols).distinct().orderBy(*key_cols).collect()
-        return [tuple(r) for r in rows]
+    def _positions(self) -> list[tuple[str, T.DataType]]:
+        """The keyset order, with each column's type: the extract field,
+        then the id columns."""
+        types = {f.name: f.dataType for f in self.tables[self.plan.table].schema.fields}
+        names = [self.extract.field] + [c for c in self.plan.id_columns if c != self.extract.field]
+        return [(c, types[c]) for c in names]
 
-    def ids_for_batch(self, batch_key: tuple) -> DataFrame:
+    def batches(self) -> list[Batch]:
+        """Every batch of the fact table, in key order: one counter-chain
+        keying and one aggregation per run."""
         fact = self.tables[self.plan.table]
         keyed = batch_key_columns(
             fact.filter(F.col(self.extract.field) >= F.lit(self.extract.start)),
@@ -111,8 +173,36 @@ class Extract:
             self.extract.batch,
             tiebreak_cols=self.plan.id_columns,
         )
-        cond = (F.col("__batch0__") == batch_key[0]) & (F.col("__batch1__") == batch_key[1])
-        return keyed.filter(cond).select(self.plan.id_columns[0])
+        point = F.struct(*[_orderable(F.col(c), t).alias(c) for c, t in self._positions()])
+        key_cols = ["__batch0__", "__batch1__"]
+        rows = (
+            keyed.groupBy(*key_cols)
+            .agg(
+                F.min(point).alias("lo"),
+                F.max(point).alias("hi"),
+                F.min(self.plan.id_columns[0]).alias("first"),
+            )
+            .orderBy(*key_cols)
+            .collect()
+        )
+        return [Batch((r[0], r[1]), tuple(r["lo"]), tuple(r["hi"]), r["first"]) for r in rows]
+
+    def ids_for_batch(self, batch: Batch) -> DataFrame:
+        """The fact rows of ``batch``: a literal lexicographic range on
+        ``(field, *id_columns)``, with the field's own range as a separate
+        (pushable) conjunct."""
+        positions = self._positions()
+        cols = [F.col(c) for c, _ in positions]
+        lo = [_literal(v, t) for (_, t), v in zip(positions, batch.lo)]
+        hi = [_literal(v, t) for (_, t), v in zip(positions, batch.hi)]
+        cond = (cols[0] >= lo[0]) & (cols[0] <= hi[0])
+        if len(cols) > 1:
+            cond = (
+                cond
+                & _lexicographic(cols, lo, operator.gt, operator.ge)
+                & _lexicographic(cols, hi, operator.lt, operator.le)
+            )
+        return self.tables[self.plan.table].filter(cond)
 
     def run(
         self,
@@ -129,13 +219,14 @@ class Extract:
                 done_after = cp[0]
 
         written = []
-        for batch_key in self.batches():
-            if done_after is not None and batch_key <= done_after:
+        for batch in self.batches():
+            if done_after is not None and batch.key <= done_after:
                 continue
-            validate_key_format(self.extract.key_format, batch_key)
-            key = key_string(batch_key)
-            ids_df = self.ids_for_batch(batch_key)
-            docs = doc_frame(self.tables, self.plan, self.snowflake, ids_df=ids_df)
+            validate_key_format(self.extract.key_format, batch.key)
+            key = key_string(batch.key)
+            tables = dict(self.tables)
+            tables[self.plan.table] = self.ids_for_batch(batch)
+            docs = doc_frame(tables, self.plan, self.snowflake)
             path = os.path.join(self.extract.destination, key)
             etl = etl_envelope(
                 etl_id=key,
@@ -144,8 +235,7 @@ class Extract:
             write_json_lines(docs, path, self.plan.table, etl=etl)
             written.append(path)
             if self.extract.last:
-                first = ids_df.agg(F.min(self.plan.id_columns[0])).collect()[0][0]
-                write_checkpoint(self.extract.last, batch_key, first)
+                write_checkpoint(self.extract.last, batch.key, batch.first)
             if notify:
                 from mysql_to_s3_spark.sinks.notify import notify_payload
 

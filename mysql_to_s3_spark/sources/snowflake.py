@@ -363,25 +363,29 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     )
 
 
+def _conf_int(df: DataFrame, key: str) -> int | None:
+    """Integer conf ``key``, None when unset; any other value raises
+    naming the key."""
+    raw = df.sparkSession.conf.get(key, None)
+    if raw is None:
+        return None
+    try:
+        return int(raw)
+    except ValueError:
+        raise SnowflakeError(f"{key} must be an integer, got {raw!r}") from None
+
+
 def _resolved_child_cap(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
     if cfg is not None and cfg.child_cap is not None:
         return int(cfg.child_cap)
-    try:
-        raw = df.sparkSession.conf.get(CHILD_CAP_CONF, None)
-    except Exception:
-        raw = None
-    return int(raw) if raw is not None else None
+    return _conf_int(df, CHILD_CAP_CONF)
 
 
 def _resolved_child_salt(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
     if cfg is not None and cfg.child_salt is not None:
         n = int(cfg.child_salt)
     else:
-        try:
-            raw = df.sparkSession.conf.get(CHILD_SALT_CONF, None)
-        except Exception:
-            raw = None
-        n = int(raw) if raw is not None else 0
+        n = _conf_int(df, CHILD_SALT_CONF) or 0
     return n if n > 1 else None
 
 
@@ -575,19 +579,16 @@ def doc_frame(
     plan: FactPlan,
     cfg: SnowflakeConfig,
     ids: list | None = None,
-    ids_df: DataFrame | None = None,
 ) -> DataFrame:
     """One row per fact row: (__id__, <fact_table> struct) with dims inner
-    and children nested arrays. ``ids`` (small list -> pushed-down isin) or
-    ``ids_df`` (big batch -> left-semi join, extract.py:193-198) select the
-    batch."""
+    and children nested arrays. ``ids`` (small list -> pushed-down isin)
+    selects those fact rows; a batch of a large extract instead passes a
+    range-filtered fact frame in ``tables`` (``Extract.ids_for_batch``)."""
     norm = {name: _normalize_table(df, cfg) for name, df in tables.items()}
     fact = norm[plan.table]
     id_col = plan.id_columns[0]
     if ids is not None:
         fact = fact.filter(F.col(id_col).isin(list(ids)))
-    if ids_df is not None:
-        fact = fact.join(F.broadcast(ids_df), fact[id_col] == ids_df[ids_df.columns[0]], "left_semi")
     norm[plan.table] = fact
     df, fields = _element_fields(norm, plan, cfg)
     return df.select(

@@ -1,12 +1,28 @@
 """End-to-end Extract orchestrator: batch-key assignment, JSON-lines
 writes, checkpoint/resume, notify hook."""
 
+import datetime as dt
+import functools
 import glob
 import json
 import os
+import re
 
-from mysql_to_s3_spark.sources.extract import Extract, ExtractConfig, read_checkpoint
-from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, build_plan
+import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from mysql_to_s3_spark.sources import extract
+from mysql_to_s3_spark.sources.extract import (
+    Extract,
+    ExtractConfig,
+    ExtractError,
+    read_checkpoint,
+    write_checkpoint,
+)
+from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, build_plan
+from mysql_to_s3_spark.streaming.counters import batch_key_columns
 from tests.fixtures_snowflake import RELATIONS, TABLES_META, build_tables
 
 
@@ -64,6 +80,102 @@ def test_extract_resume_skips_done_batches(spark, tmp_path):
     # a fresh run with the checkpoint present writes nothing new
     again = ex.run()
     assert again == []
+
+
+def test_checkpoint_write_is_atomic(tmp_path, monkeypatch):
+    """A write that dies half way leaves the previous checkpoint whole and
+    no temp file behind."""
+    path = str(tmp_path / "cp" / "extract.last")
+    write_checkpoint(path, (0, 1), 1000)
+
+    def torn_dump(obj, f):
+        f.write('{"start_point": [0, ')
+        raise OSError("No space left on device")
+
+    monkeypatch.setattr(extract.json, "dump", torn_dump)
+    with pytest.raises(OSError):
+        write_checkpoint(path, (0, 2), 2000)
+    monkeypatch.undo()
+    assert read_checkpoint(path) == ((0, 1), 1000)
+    assert os.listdir(tmp_path / "cp") == ["extract.last"]
+    write_checkpoint(path, (0, 2), 2000)
+    assert read_checkpoint(path) == ((0, 2), 2000)
+
+
+@pytest.mark.parametrize(
+    "content",
+    [
+        "",
+        '{"start_point": [0, ',
+        "[0, 1]",
+        '{"start_point": [0, 1]}',
+        '{"start_point": "0.1", "first_value": 5}',
+        b"\xff\xfe",
+    ],
+)
+def test_read_checkpoint_rejects_malformed_file(tmp_path, content):
+    path = tmp_path / "extract.last"
+    if isinstance(content, bytes):
+        path.write_bytes(content)
+    else:
+        path.write_text(content)
+    with pytest.raises(ExtractError, match=re.escape(str(path))):
+        read_checkpoint(str(path))
+
+
+# -- keyset batches: the literal range of ids_for_batch(b) holds exactly the
+# rows batch_key_columns assigns to b --
+
+_T0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
+
+
+@pytest.mark.parametrize("shape", ["duplicate_field", "day_timestamp", "composite_ids", "start_above_min"])
+@given(data=st.data())
+@settings(max_examples=5, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+def test_keyset_batch_membership(spark, shape, data):
+    """Few distinct field values, so equal values straddle batch
+    boundaries in every shape; the timestamp shape spaces its values 11 h
+    + 123457 us apart, so a bound that lost precision would drop rows."""
+    n = data.draw(st.integers(1, 24), label="rows")
+    values = data.draw(st.lists(st.integers(0, 5), min_size=n, max_size=n), label="field")
+    ids = data.draw(st.permutations(range(n)), label="ids")
+    size = data.draw(st.integers(1, 4), label="batch size")
+    start, spec = 0, size
+    if shape == "day_timestamp":
+        values = [_T0 + dt.timedelta(hours=11 * v, microseconds=123457 * v) for v in values]
+        start, spec = _T0, ["day", size]
+        ftype = data.draw(st.sampled_from(["timestamp", "timestamp_ntz"]), label="field type")
+        schema, id_columns = f"f {ftype}, id int", ["id"]
+        rows = list(zip(values, ids))
+    elif shape == "composite_ids":
+        schema, id_columns = "f int, a int, b int", ["a", "b"]
+        rows = [(v, *divmod(i, 3)) for v, i in zip(values, ids)]
+    else:
+        if shape == "start_above_min":
+            start = data.draw(st.integers(min(values) + 1, 6), label="start")
+        schema, id_columns = "f int, id int", ["id"]
+        rows = list(zip(values, ids))
+    fact = spark.createDataFrame(rows, schema)
+
+    keyed = batch_key_columns(fact.filter(F.col("f") >= F.lit(start)), "f", start, spec, id_columns)
+    want: dict[tuple, list] = {}
+    for r in keyed.collect():
+        want.setdefault((r["__batch0__"], r["__batch1__"]), []).append(tuple(r[c] for c in fact.columns))
+
+    plan = FactPlan(table="fact", id_columns=id_columns, out_columns=[])
+    ex = Extract({"fact": fact}, plan, SnowflakeConfig(fact_table="fact"), ExtractConfig(
+        field="f", start=start, batch=spec
+    ))
+    batches = ex.batches()
+    assert [b.key for b in batches] == sorted(want)
+    got: dict[tuple, list] = {}
+    if batches:
+        tagged = [ex.ids_for_batch(b).withColumn("__b__", F.lit(i)) for i, b in enumerate(batches)]
+        for r in functools.reduce(lambda x, y: x.unionByName(y), tagged).collect():
+            got.setdefault(batches[r["__b__"]].key, []).append(tuple(r[c] for c in fact.columns))
+    assert {k: sorted(v) for k, v in got.items()} == {k: sorted(v) for k, v in want.items()}
+    for b in batches:
+        assert b.first == min(row[fact.columns.index(id_columns[0])] for row in want[b.key])
 
 
 # -- multi-partition sink round-trip: key_format batch naming, gzip, scrub

@@ -3,6 +3,8 @@ reference (/root/reference/tests/test_extract.py:46-148 configs,
 :184-356 expected docs). Six cases: simple, complex, inline, lean,
 lean_inline, lean_inline_all — byte-equivalent nested JSON after scrub."""
 
+import re
+
 import pytest
 
 from mysql_to_s3_spark.sinks.json_sink import collect_docs
@@ -313,3 +315,22 @@ def test_child_salt_via_conf(spark):
         assert r[1]["n"] == 100_000 and r[2]["n"] == 5
     finally:
         spark.conf.unset(CHILD_SALT_CONF)
+
+
+@pytest.mark.parametrize("conf", ["CHILD_CAP_CONF", "CHILD_SALT_CONF"])
+@pytest.mark.parametrize("raw", ["ten", "2.5", ""])
+def test_child_conf_not_an_integer_names_the_key(spark, conf, raw):
+    """A malformed child cap / salt conf fails loudly, naming its key,
+    instead of silently running uncapped or unsalted."""
+    from mysql_to_s3_spark.sources import snowflake
+
+    key = getattr(snowflake, conf)
+    tables, meta, rels = _cap_fixture(spark)
+    cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
+    plan = build_plan(meta, rels, cfg)
+    spark.conf.set(key, raw)
+    try:
+        with pytest.raises(snowflake.SnowflakeError, match=re.escape(key)):
+            doc_frame(tables, plan, cfg)
+    finally:
+        spark.conf.unset(key)

@@ -148,3 +148,57 @@ def test_temporal_events_legs_share_one_cached_scan(spark, sf_dir):
     df = catalog.build("temporal_events")(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("InMemoryTableScan") >= 5, plan[:2000]
+
+
+def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path):
+    """One keyset batch of the orders extract (customer -> nation -> region
+    dims, lineitem children carrying part and supplier) reads its batch as
+    a literal range: no Window and no SinglePartition exchange re-key the
+    fact table, and the batch's l_orderkey bound reaches the lineitem
+    scan, so the child aggregation covers the batch, not the table."""
+    from mysql_to_s3_spark.sources.extract import Extract, ExtractConfig
+    from mysql_to_s3_spark.sources.registry import load_table
+    from mysql_to_s3_spark.sources.snowflake import (
+        Relation,
+        SnowflakeConfig,
+        TableMeta,
+        build_plan,
+        doc_frame,
+    )
+
+    ids = {
+        "orders": ["o_orderkey"],
+        "customer": ["c_custkey"],
+        "nation": ["n_nationkey"],
+        "region": ["r_regionkey"],
+        "lineitem": ["l_orderkey", "l_linenumber"],
+        "part": ["p_partkey"],
+        "supplier": ["s_suppkey"],
+    }
+    rels = [
+        Relation("orders_customer", "orders", ["o_custkey"], "customer", ["c_custkey"]),
+        Relation("customer_nation", "customer", ["c_nationkey"], "nation", ["n_nationkey"]),
+        Relation("nation_region", "nation", ["n_regionkey"], "region", ["r_regionkey"]),
+        Relation("lineitem_orders", "lineitem", ["l_orderkey"], "orders", ["o_orderkey"]),
+        Relation("lineitem_part", "lineitem", ["l_partkey"], "part", ["p_partkey"]),
+        Relation("lineitem_supplier", "lineitem", ["l_suppkey"], "supplier", ["s_suppkey"]),
+    ]
+    tables = {t: load_table(spark, sf_dir, t) for t in ids}
+    cfg = SnowflakeConfig(fact_table="orders")
+    plan = build_plan([TableMeta(t, tables[t].columns, c) for t, c in ids.items()], rels, cfg)
+    ex = Extract(tables, plan, cfg, ExtractConfig(
+        field="o_orderkey", start=0, batch=1000, destination=str(tmp_path)
+    ))
+    batches = ex.batches()
+    batch = batches[len(batches) // 2]
+    batch_tables = dict(tables, orders=ex.ids_for_batch(batch))
+    text = plan_of(doc_frame(batch_tables, plan, cfg))
+
+    assert not re.search(r"\bWindow\b", text), text
+    assert "SinglePartition" not in text, text
+    (lo,), (hi,) = batch.lo, batch.hi
+    scans = [b for b in text.split("\n\n") if "Scan parquet" in b and "lineitem.parquet" in b]
+    assert len(scans) == 1, text
+    pushed = re.search(r"PushedFilters: \[(.*)\]", scans[0]).group(1)
+    assert f"GreaterThanOrEqual(l_orderkey,{lo})" in pushed, pushed
+    assert f"LessThanOrEqual(l_orderkey,{hi})" in pushed, pushed
