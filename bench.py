@@ -1,6 +1,8 @@
-"""Benchmark harness: runs the headline query set at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value" (total sec), "unit", "queries" {name: sec}, "sf"}.
+"""Benchmark harness: runs the catalog's headline rows
+(``queries.headline()``) at $SPARK_GRAFT_SF_DIR (default: the sf0.1 test
+tables) on local[$SPARK_GRAFT_CPUS]. Prints an earlier JSON line with
+engine-side counts and the catalog's ``row_tags``, then ONE final line:
+{"metric", "value" (total sec), "unit", "queries" {name: sec}, "sf", ...}.
 """
 
 from __future__ import annotations
@@ -10,128 +12,6 @@ import os
 import re
 import sys
 import time
-
-# Round-4 note: the catalog was consolidated to exactly 50 entries with
-# tagged multi-leg rows; several former standalone bench names now run as
-# legs of their host row (groupby_two_keys -> groupby_expr_bucket,
-# agg_scalar_moments + agg_union_set -> agg_scalar_stats,
-# edges_two_dims_dense -> edges_default_domain, edges_time_month_dense ->
-# edges_time_week_dense, edges_multivalue_words -> edges_set_domain_dense,
-# setop_computed_revenue -> setop_arithmetic, counters_batch_keys_month ->
-# counters_batch_keys). Cross-round totals compare on the host rows.
-HEADLINE = [
-    "groupby_tpch_q1",
-    "groupby_expr_bucket",
-    # carries the exact sort-based percentile + count-distinct expand +
-    # union-set — the heavy exact-aggregate codegen paths
-    "agg_scalar_stats",
-    # scale path of the row above: KLL-sketch percentile + HLL cardinality
-    # instead of exact sort-based percentile + count-distinct expand — the
-    # 100 TB recommendation for unbounded-cardinality aggregates
-    "agg_scalar_moments_approx",
-    "edges_set_domain_dense",
-    "edges_default_domain",
-    "edges_time_week_dense",
-    "edges_range_histogram",
-    "window_running_sum",
-    "window_lead_lag",
-    "window_percentile_partition",
-    "setop_arithmetic",
-    "nested_table_from",
-    "snowflake_denormalize",
-    "counters_batch_keys",
-    "edges_general_set_where",
-    "text_stats",
-    "text_quality",  # + lang_guess leg (former text_langid row)
-    "text_winnow_fingerprint",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_cluster_components",
-    "similarity_ann_lsh",  # legs: exact topk / bucket probe / multiprobe
-    # quantized ANN: IVF probe + PQ ADC shortlist legs (KMeans/codebook
-    # fits are session-cached, so min-of-2 measures the search plans)
-    "similarity_ivf",
-    "text_decontaminate",
-    "multimodal_features",
-    "text_chunk_pack",
-    # r6: the end-to-end prepare_corpus composition (quality -> language
-    # -> exact dedup -> ngram near-dup clusters -> decontam -> split) —
-    # NEW row vs the r5 29-row set; cross-round totals exclude it
-    "pipeline_prepare",
-    "typed_json_roundtrip",
-    # beyond-reference temporal analytics: asof (backward/forward/
-    # nearest/tolerance) + interval join, sessionization, greedy +
-    # time-boxed funnel — 8 batch legs over ONE pooled events scan,
-    # plus (r9) 7 streaming-twin verify legs drained in-row
-    "temporal_events",
-]
-
-
-# Rows whose wall time absorbs work beyond one headline operator —
-# the key the BENCH-vs-BASELINE ratio must be read through. "ops" legs
-# are ADDITIONAL first-class operators co-hosted in the row (the catalog
-# is capped at 50 driver entries, so operators share rows); "verify"
-# legs exist only to bind the oracle gate (train-summary assertions,
-# in-row lifecycle receipts, eager-contract booleans). A BASELINE.md row
-# prices ONE operator; these rows price many.
-ROW_TAGS = {
-    "text_chunk_pack": {
-        "ops": ["chunk", "pack", "shuffle", "bpe", "repeat", "dcap"],
-        # r10: sshard = stream_write_training_shards drained in-row
-        "verify": ["bpe_first", "bpe_second", "shard", "sshard"],
-    },
-    "temporal_events": {
-        "ops": ["asof", "asoff", "asofn", "asoft", "range", "sess", "funnel", "fwin"],
-        "verify": ["sasof", "sfun", "ssess", "sfwdt", "snear", "sfwin", "srange"],
-    },
-    "text_quality": {
-        "ops": ["quality", "lang_guess", "split", "lm_logprob", "lm2_logprob",
-                "cls_label", "dsir", "dsir_top25", "ppl_bucket"],
-        "verify": [],
-    },
-    "snowflake_denormalize": {
-        "ops": ["doc", "semi", "hidx", "uniqf"],
-        "verify": ["ext", "ref", "resume", "notify", "uniq_ok", "uniq_dup"],
-    },
-    "dedup_minhash_lsh": {"ops": ["pair", "leak"], "verify": ["sflag"]},
-    # r9 session 2: url = canonical_url per-doc, urlk = url_dedup groups
-    # r10: surl = stream_url_dedup drained in-row (verify-only)
-    "dedup_exact": {"ops": ["batch", "url", "urlk"], "verify": ["stream", "surl"]},
-    "text_decontaminate": {"ops": ["pair"], "verify": ["sdec"]},
-    "counters_batch_keys": {"ops": ["day", "month", "stream"], "verify": []},
-    "text_winnow_fingerprint": {
-        "ops": ["fingerprint", "span", "boilerplate", "span_strip"],
-        "verify": [],
-    },
-    "similarity_ann_lsh": {"ops": ["probe0", "probe1"], "verify": ["exact"]},
-    # r9: the four real-decode legs (BMP/WAV/Y4M/resize through
-    # operators/codecs.py) + the crawl-ingest legs (warc = distributed
-    # WARC read-back, html = html_to_text, nfc = unicode normalize)
-    # co-host with the byte-feature headline
-    # r10: png = the stdlib-zlib PNG codec (all five scanline filters)
-    "multimodal_features": {
-        "ops": ["img", "png", "wav", "y4m", "rsz", "warc", "html", "nfc"],
-        "verify": [],
-    },
-    "similarity_ivf": {"ops": ["ivf", "pq", "ivfpq", "knn"], "verify": ["exact"]},
-    "typed_json_roundtrip": {
-        "ops": ["typed", "jsonl", "esbulk_a", "esbulk_d"],
-        "verify": [],
-    },
-    "pipeline_prepare": {
-        "ops": ["quality", "language", "exact_dedup", "near_dup", "decontam", "split"],
-        # r10: sprep = the full prepare_corpus_stream composition
-        # drained in-row (verify-only)
-        "verify": ["sprep"],
-    },
-    "window_running_sum": {
-        "ops": ["running_qty", "seq", "trail3", "a_qty"],
-        "verify": [],
-    },
-    "window_lead_lag": {"ops": ["prev_value", "k_val"], "verify": ["gseq"]},
-    # r10: having = the conf-gated post-aggregate filter extension
-    "groupby_expr_bucket": {"ops": ["bucket", "nullkey", "having"], "verify": []},
-}
 
 
 def main() -> None:
@@ -190,9 +70,10 @@ def main() -> None:
     # text_decontaminate / dedup_cluster_components / temporal_events to
     # read HIGHER than BENCH_r10 (which priced warm pools); the r10
     # numbers are kept in BENCH_r10.json and OPTIMIZATION_r11.md.
+    headline = catalog.headline()
     times: dict[str, float] = {}
     engine_counts: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in headline:
         best = None
         for _ in range(2):
             catalog.release_plan_memos(spark)
@@ -216,14 +97,14 @@ def main() -> None:
     # compact headline object is the last thing printed. The headline line
     # still carries BOTH measurements per row — `engine_sec[i]` is the
     # engine-side count() seconds for the i-th key of `queries` (JSON
-    # object order == HEADLINE order) — as a compact aligned array so the
+    # object order == headline order) — as a compact aligned array so the
     # parsed artifact alone supports the wall-vs-engine ratio table.
     print(
         json.dumps(
             {
                 "metric": "engine_count_sec",
                 "queries": engine_counts,
-                "row_tags": ROW_TAGS,
+                "row_tags": catalog.row_tags(),
                 "protocol": (
                     "per query: min-of-2 full collect() (headline line) + "
                     "one engine-side count() (driver-transfer-free); since "
@@ -248,7 +129,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": times,
-                "engine_sec": [round(engine_counts[n], 3) for n in HEADLINE],
+                "engine_sec": [round(engine_counts[n], 3) for n in headline],
                 "load1": [load1_start, load1_end],
                 # True = started above the quiet threshold even after the
                 # wait loop; compare such totals against SCALE.md's solo

@@ -624,44 +624,27 @@ def span_windows(
     reversal (SCALE.md) showed caching the raw array<string> token
     frame LOSES to recompute, but this frame is three fixed-width-ish
     columns (bigint, int, 32-char key), the reduced projection that
-    the legs actually shuffle."""
-    return _windows(token_frame(df, id_col, text_col), k)
+    the legs actually shuffle.
+
+    The window width is stamped into the ``key`` column's metadata
+    (``span_k``), so a consumer given a frame built with another ``k``
+    refuses it instead of reading wrong spans."""
+    return _windows(token_frame(df, id_col, text_col), k).withMetadata("key", {"span_k": k})
 
 
-def _require_wins(wins: DataFrame, op: str) -> None:
+def _require_wins(wins: DataFrame, op: str, k: int) -> None:
     missing = {"id", "start", "key"} - set(wins.columns)
     if missing:
         raise ValueError(
             f"{op}: wins= must be a span_windows(...) output with columns "
             f"(id, start, key); missing {sorted(missing)}"
         )
-
-
-def token_span_keys(col: Column, k: int = 5) -> Column:
-    """array<string> of md5 keys, one per k-token window (stride 1) of the
-    BPE-ish token stream of ``col`` — the ``span_windows`` keys as one
-    array column.
-
-    The key is ``md5(lower(token_i || US || ... || token_{i+k-1}))`` — md5
-    because it is (a) portable (identical in Spark and DuckDB, so the
-    oracle can replicate the key exactly) and (b) a FIXED 32-byte shuffle
-    key, vs a raw k-token span string that averages ~8k bytes of shuffle
-    per window at k=50. Docs shorter than k tokens yield an empty array.
-
-    PLAN TRAP (r11): the token array here is INLINE in the transform
-    lambda, so the tokenize regex re-runs once per window position
-    (O(len^2) per doc). Fine for tests/small frames; production paths
-    go through ``span_windows``, which binds the token array as a column.
-    """
-    t = F.regexp_extract_all(col, F.lit(r"\w+|[^\w\s]"), 0)
-    n = F.size(t) - F.lit(k - 1)
-    return F.when(
-        n >= 1,
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-            lambda i: F.md5(F.lower(F.array_join(F.slice(t, i, k), SPAN_SEP))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    stamped = wins.schema["key"].metadata.get("span_k")
+    if stamped != k:
+        raise ValueError(
+            f"{op}: wins= holds span_windows k={stamped} windows "
+            f"(None = no span_windows stamp), but {op} runs with k={k}"
+        )
 
 
 def duplicated_span_fraction(
@@ -707,7 +690,7 @@ def duplicated_span_fraction(
     else:
         toks = token_frame(df, id_col, text_col)
     if wins is not None:
-        _require_wins(wins, "duplicated_span_fraction")
+        _require_wins(wins, "duplicated_span_fraction", k)
     else:
         wins = _windows(toks, k)
     ids = toks.select("id")
@@ -857,7 +840,7 @@ def strip_duplicated_spans(
     else:
         rt_src = token_frame(df, id_col, text_col)
     if wins is not None:
-        _require_wins(wins, "strip_duplicated_spans")
+        _require_wins(wins, "strip_duplicated_spans", k)
     else:
         wins = _windows(rt_src, k)
     # per-key stats as WINDOW functions over ONE key exchange instead of

@@ -2,11 +2,28 @@
 (JX query, DuckDB oracle SQL) pair over the driver testdata tables.
 
 This is the single source for the driver contract (``__spark_entry__.py``)
-and the benchmark (``bench.py``). Each entry is either
+and the benchmark (``bench.py``). Each row is registered with ``_q`` and
+its builder is either
 
   - a JX query dict (run through ``mysql_to_s3_spark.run``), or
   - a callable ``(spark, sf_dir) -> DataFrame`` for shapes that need setup
-    (e.g. nested-table containers built from two parquet tables).
+    (e.g. nested-table containers built from two parquet tables), or
+  - a callable ``(spark, sf_dir) -> {leg: DataFrame}`` for a multi-leg row.
+    ``_union_legs`` adds the ``leg`` literal to each frame and folds the
+    frames with ``unionByName(allowMissingColumns=True)``, so a leg emits
+    only the columns it has: absent columns come back as typed nulls. A
+    frame that already carries several legs in its own ``leg`` column (one
+    Arrow parse, one receipt ``createDataFrame``) is keyed by the tuple of
+    its legs; a list value is several frames of one leg.
+
+``_q`` also declares each row's legs: ``ops`` (the co-hosted operators)
+and ``verify`` (legs that exist only to bind the oracle gate: streaming
+drains, in-row lifecycle receipts, train summaries), and whether the
+bench times it (``headline``). A leg dict must name exactly the declared
+legs, or the build raises before any Spark job. Rows whose legs are
+columns, or whose tag column is not ``leg``, only declare the tags.
+``names()``, ``headline()`` and ``row_tags()`` derive the entry point's
+row order, the bench's row set and its row tags from these declarations.
 
 Column aliases match between the Spark result and the oracle SQL — the
 driver's comparator sorts columns by name before hashing values.
@@ -18,7 +35,8 @@ DuckDB pick the same rows.
 
 from __future__ import annotations
 
-from typing import Any, Callable
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -60,13 +78,62 @@ def _nested_from(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# catalog: name -> (builder, oracle_sql | None)
-
-CATALOG: dict[str, tuple[Any, str | None]] = {}
+# catalog: name -> Row
 
 
-def _q(name: str, jx_or_fn, oracle: str | None) -> None:
-    CATALOG[name] = (jx_or_fn if callable(jx_or_fn) else _jx(jx_or_fn), oracle)
+@dataclass(frozen=True)
+class Row:
+    build: Callable[[SparkSession, str], DataFrame]
+    oracle: str | None
+    ops: tuple[str, ...] = ()
+    verify: tuple[str, ...] = ()
+    headline: bool = False
+
+    @property
+    def legs(self) -> tuple[str, ...]:
+        return self.ops + self.verify
+
+
+CATALOG: dict[str, Row] = {}
+
+
+def _q(
+    name: str,
+    jx_or_fn,
+    oracle: str | None,
+    *,
+    ops: tuple[str, ...] = (),
+    verify: tuple[str, ...] = (),
+    headline: bool = False,
+) -> None:
+    fn = jx_or_fn if callable(jx_or_fn) else _jx(jx_or_fn)
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        out = fn(spark, sf_dir)
+        return _union_legs(name, out) if isinstance(out, dict) else out
+
+    CATALOG[name] = Row(build, oracle, ops, verify, headline)
+
+
+def _union_legs(row: str, frames: dict) -> DataFrame:
+    """Assemble a multi-leg row from ``{leg: frame}`` (see the module
+    docstring). Columns follow the first frame's order, then each later
+    frame's new columns. Raises ValueError naming the row when the
+    frames' legs differ from the row's declared ``ops + verify``."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    got = sorted(leg for key in frames for leg in (key if isinstance(key, tuple) else (key,)))
+    want = sorted(CATALOG[row].legs)
+    if got != want:
+        raise ValueError(f"catalog row {row!r}: builder legs {got} != declared legs {want}")
+    parts = [
+        df if isinstance(key, tuple) else df.select(F.lit(key).alias("leg"), "*")
+        for key, v in frames.items()
+        for df in (v if isinstance(v, list) else [v])
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
 
 
 
@@ -366,6 +433,7 @@ _q(
               CASE WHEN l_returnflag = 'A' THEN l_quantity + l_tax ELSE -1 END AS strict_sum
        FROM lineitem WHERE l_orderkey < 500
        ORDER BY l_orderkey, l_linenumber LIMIT 10000""",
+    headline=True,
 )
 
 # Merged unix/from_unix/offset coverage in ONE driver row (orders) — see
@@ -454,6 +522,7 @@ _q(
               count(l_quantity) > 0 AS any_qty,
               array_to_string(list_sort(list(DISTINCT l_returnflag)), '|') AS flags
        FROM lineitem""",
+    headline=True,
 )
 
 # Scale path of the moments half of agg_scalar_stats: percentile via KLL
@@ -515,6 +584,7 @@ _q(
               count(l_quantity) > 0 AS any_qty,
               TRUE AS p90_ok, TRUE AS card_ok
        FROM lineitem""",
+    headline=True,
 )
 
 
@@ -544,6 +614,7 @@ _q(
               round(avg(l_discount), 6) AS avg_disc, count(*) AS count_order
        FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
        GROUP BY l_returnflag, l_linestatus""",
+    headline=True,
 )
 
 # hosts the former groupby_two_keys aggregates (grouped avg/max) — the
@@ -551,7 +622,7 @@ _q(
 # since r6, the former groupby_null_key_kept row as the `nullkey` leg
 # (JX keeps the null group: null groupby coordinates are real rows),
 # freeing its driver slot for pipeline_prepare.
-def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> dict:
     from pyspark.sql import functions as F
 
     bucket = _rounded({
@@ -563,7 +634,6 @@ def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             {"name": "max_price", "value": "o_totalprice", "aggregate": "max"},
         ],
     }, ["avg_price"])(spark, sf_dir).select(
-        F.lit("bucket").alias("leg"),
         F.col("bucket").cast("double").alias("key"),
         F.col("n").cast("bigint").alias("n"),
         "avg_price",
@@ -574,11 +644,8 @@ def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "groupby": [{"name": "flag_a", "value": _NULLY}],
         "select": [{"name": "n", "value": ".", "aggregate": "count"}],
     })(spark, sf_dir).select(
-        F.lit("nullkey").alias("leg"),
         F.col("flag_a").cast("double").alias("key"),
         F.col("n").cast("bigint").alias("n"),
-        F.lit(None).cast("double").alias("avg_price"),
-        F.lit(None).cast("double").alias("max_price"),
     )
     # having leg (r10): the conf-gated post-aggregate filter — same
     # bucket groupby gated on an AGGREGATE column (avg_price > 200000
@@ -603,7 +670,6 @@ def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
             "having": {"gt": ["avg_price", 200000]},
         }, ["avg_price"])(spark, sf_dir).select(
-            F.lit("having").alias("leg"),
             F.col("bucket").cast("double").alias("key"),
             F.col("n").cast("bigint").alias("n"),
             "avg_price",
@@ -614,7 +680,7 @@ def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.unset(ALLOW_HAVING_CONF)
         else:
             spark.conf.set(ALLOW_HAVING_CONF, old)
-    return bucket.unionByName(nullkey).unionByName(having)
+    return {"bucket": bucket, "nullkey": nullkey, "having": having}
 
 
 _q(
@@ -633,19 +699,19 @@ _q(
        SELECT 'having', CAST(floor(o_totalprice / 50000) * 50000 AS DOUBLE),
               count(*), round(avg(o_totalprice), 6), max(o_totalprice)
        FROM orders GROUP BY 2 HAVING avg(o_totalprice) > 200000""",
+    ops=("bucket", "nullkey", "having"),
+    headline=True,
 )
 
 # -- edges + domains (§2.1, §2.7): DENSE output --
 
-def _edges_set_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _edges_set_variants_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged multi-leg set-domain driver row (the edges_range_histogram
     pattern): `dense` = declared 6-part set incl. an empty part,
     `nullbucket` = 2-part set with allowNulls=True collecting out-of-set
     rows, `words` = multivalue edge (split -> a row contributes to EVERY
     matching coordinate). One row hash-verifies all three set-edge
     semantics."""
-    from pyspark.sql import functions as F
-
     from mysql_to_s3_spark.operators.executor import run
 
     dense = run(
@@ -666,7 +732,7 @@ def _edges_set_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("dense").alias("leg"), "part", "n")
+    ).select("part", "n")
     nullb = run(
         {
             "from": "customer",
@@ -682,7 +748,7 @@ def _edges_set_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("nullbucket").alias("leg"), "part", "n")
+    ).select("part", "n")
     words = run(
         {
             "from": "documents",
@@ -692,8 +758,8 @@ def _edges_set_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("words").alias("leg"), "part", "n")
-    return dense.unionByName(nullb).unionByName(words)
+    ).select("part", "n")
+    return {"dense": dense, "nullbucket": nullb, "words": words}
 
 
 _q(
@@ -717,6 +783,8 @@ _q(
        FROM nparts LEFT JOIN nagg ON nparts.part IS NOT DISTINCT FROM nagg.part
        UNION ALL
        SELECT 'words' AS leg, part, CAST(n AS BIGINT) AS n FROM wagg""",
+    ops=("dense", "nullbucket", "words"),
+    headline=True,
 )
 
 def _trimmed_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -828,15 +896,14 @@ _q(
               round(quantile_cont(l_quantity, 0.5) OVER (PARTITION BY l_orderkey), 6) AS p50
        FROM lineitem WHERE l_orderkey < 500
        ORDER BY l_orderkey, l_linenumber, l_quantity LIMIT 10000""",
+    headline=True,
 )
 
-def _edges_time_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _edges_time_variants_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged time-domain driver row: `week` = fixed 7-day buckets
     anchored at the domain min (dense: every week appears even when
     empty), `month` = CALENDAR-month buckets (variable width — a month is
     not n seconds). Both legs emit (leg, bucket, n)."""
-    from pyspark.sql import functions as F
-
     from mysql_to_s3_spark.operators.executor import run
 
     week = run(
@@ -854,7 +921,7 @@ def _edges_time_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("week").alias("leg"), "bucket", "n")
+    ).select("bucket", "n")
     month = run(
         {
             "from": "orders",
@@ -870,8 +937,8 @@ def _edges_time_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("month").alias("leg"), "bucket", "n")
-    return week.unionByName(month)
+    ).select("bucket", "n")
+    return {"week": week, "month": month}
 
 
 _q(
@@ -901,6 +968,8 @@ _q(
        UNION ALL
        SELECT 'month' AS leg, months.bucket AS bucket, CAST(coalesce(magg.n, 0) AS BIGINT) AS n
        FROM months LEFT JOIN magg USING (bucket)""",
+    ops=("week", "month"),
+    headline=True,
 )
 
 _q(
@@ -933,15 +1002,14 @@ _q(
             parts(tier) AS (VALUES ('big'), ('mid'), ('small'), (NULL))
        SELECT parts.tier AS tier, CAST(coalesce(agg.n, 0) AS BIGINT) AS n
        FROM parts LEFT JOIN agg ON parts.tier IS NOT DISTINCT FROM agg.tier""",
+    headline=True,
 )
 
-def _edges_default_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _edges_default_variants_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged default-domain driver row: `onedim` = discovered (capped +
     sorted) part set on one edge, `twodim` = dense CROSS PRODUCT of two
     discovered part sets (empty cells NULL). Legs emit
     (leg, flag, status, total); the one-dim leg has status NULL."""
-    from pyspark.sql import functions as F
-
     from mysql_to_s3_spark.operators.executor import run
 
     one = run(
@@ -953,7 +1021,7 @@ def _edges_default_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("onedim").alias("leg"), "flag", F.lit(None).cast("string").alias("status"), "total")
+    ).select("flag", "total")
     two = run(
         {
             "from": "lineitem",
@@ -966,8 +1034,9 @@ def _edges_default_variants_spark(spark: SparkSession, sf_dir: str) -> DataFrame
         },
         spark=spark,
         sf_dir=sf_dir,
-    ).select(F.lit("twodim").alias("leg"), "flag", "status", "total")
-    return one.unionByName(two)
+    ).select("flag", "status", "total")
+    # twodim first: it has every column, so it fixes the column order
+    return {"twodim": two, "onedim": one}
 
 
 _q(
@@ -984,6 +1053,8 @@ _q(
        UNION ALL
        SELECT 'twodim' AS leg, f.flag AS flag, s.status AS status, agg2.total AS total
        FROM f CROSS JOIN s LEFT JOIN agg2 USING (flag, status)""",
+    ops=("onedim", "twodim"),
+    headline=True,
 )
 
 def _range_duration_hist_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,6 +1151,8 @@ _q(
           AND floor(b.bucket / 15) <= least(floor((l.l_quantity + 15) / 15 - 0.000000000001), 3)
          WHERE l.l_quantity + 15 > 0 AND l.l_quantity < 60
          GROUP BY 1) shits USING (bucket)""",
+    ops=("range", "duration", "span"),
+    headline=True,
 )
 
 # -- window clauses (§2.5) --
@@ -1144,6 +1217,8 @@ _q(
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS a_qty
        FROM lineitem WHERE l_orderkey < 2000
        ORDER BY l_orderkey, l_linenumber LIMIT 10000""",
+    ops=("running_qty", "seq", "trail3", "a_qty"),
+    headline=True,
 )
 
 # hosts the `between` prefix/suffix extraction (former setop_between_extract)
@@ -1182,6 +1257,9 @@ _q(
               CASE WHEN regexp_matches(props, '\\{"k": (.*?)\\}')
                    THEN regexp_extract(props, '\\{"k": (.*?)\\}', 1) END AS k_val
        FROM events ORDER BY event_id LIMIT 10000""",
+    ops=("prev_value", "k_val"),
+    verify=("gseq",),
+    headline=True,
 )
 
 # -- nested-table addressing (from: "fact.items"; §2.1 from + §2.3 joins) --
@@ -1191,6 +1269,7 @@ _q(
     _nested_from,
     """SELECT sum(l_quantity) AS total FROM lineitem
        WHERE l_orderkey IN (SELECT o_orderkey FROM orders WHERE o_totalprice > 100000)""",
+    headline=True,
 )
 
 
@@ -1648,7 +1727,7 @@ def _text_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged 2-leg exact-dedup row (r9):
 
     - `batch`: operators/dedup.exact_dedup — one row per distinct
@@ -1711,9 +1790,7 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", fingerprint(F.col("text")).alias("fp")),
         "dedup_exact:fp",
     )
-    batch = exact_dedup(fpf, fp_col="fp").select(
-        F.lit("batch").alias("leg"), "fp", "keeper", "n_dupes"
-    )
+    batch = exact_dedup(fpf, fp_col="fp").select("fp", "keeper", "n_dupes")
 
     def _run_stream_dedup():
         import uuid as _uuid
@@ -1789,14 +1866,9 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.concat(scheme, www, host, port, path, query, frag).alias("url")
     )
     url_leg = messy.select(
-        F.lit("url").alias("leg"),
-        canonical_url(F.col("url")).alias("fp"),
-        F.col("doc_id").alias("keeper"),
-        F.lit(None).cast("bigint").alias("n_dupes"),
+        canonical_url(F.col("url")).alias("fp"), F.col("doc_id").alias("keeper")
     )
-    urlk_leg = url_dedup(messy).select(
-        F.lit("urlk").alias("leg"), F.col("url").alias("fp"), "keeper", "n_dupes"
-    )
+    urlk_leg = url_dedup(messy).select(F.col("url").alias("fp"), "keeper", "n_dupes")
     # r9s3 `urlf` leg: the RefinedWeb URL blocklist predicate under the
     # hard gate — fp = url_host (lowercase, port/www stripped), n_dupes
     # encodes TWO blocklist probes: +1 when the exact host is listed
@@ -1806,7 +1878,6 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.operators.text import url_blocked, url_host
 
     urlf_leg = messy.select(
-        F.lit("urlf").alias("leg"),
         url_host(F.col("url")).alias("fp"),
         F.col("doc_id").alias("keeper"),
         (
@@ -1834,7 +1905,6 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fp read from the pooled frame (computed once per session), so the
     # 3 bloom probes hash a materialized 16-char column, never the doc
     bloom_leg = fpf.select(
-        F.lit("bloomf").alias("leg"),
         "fp",
         d.alias("keeper"),
         bloom_might_contain(F.col("fp"), bm, 1024, 3).cast("bigint").alias("n_dupes"),
@@ -1847,12 +1917,6 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("fp")
         .groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_dupes"))
-        .select(
-            F.lit("stream").alias("leg"),
-            "fp",
-            F.lit(None).cast("bigint").alias("keeper"),
-            "n_dupes",
-        )
     )
 
     # r10 `surl` leg: stream_url_dedup (the streaming identity-dedup
@@ -1919,24 +1983,21 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         surl_surv.filter(has_url)
         .groupBy(canonical_url(F.col("url")).alias("fp"))
         .agg(F.count(F.lit(1)).alias("n_dupes"))
-        .select(
-            F.lit("surl").alias("leg"),
-            "fp",
-            F.lit(None).cast("bigint").alias("keeper"),
-            "n_dupes",
-        )
     )
     surl_n = surl_surv.filter(~has_url).select(
-        F.lit("surl").alias("leg"),
         F.lit("").alias("fp"),
         F.col("doc_id").alias("keeper"),
         F.lit(1).cast("bigint").alias("n_dupes"),
     )
-    return (
-        batch.unionByName(stream).unionByName(url_leg).unionByName(urlk_leg)
-        .unionByName(urlf_leg).unionByName(bloom_leg)
-        .unionByName(surl_u).unionByName(surl_n)
-    )
+    return {
+        "batch": batch,
+        "stream": stream,
+        "url": url_leg,
+        "urlk": urlk_leg,
+        "urlf": urlf_leg,
+        "bloomf": bloom_leg,
+        "surl": [surl_u, surl_n],
+    }
 
 
 def _dedup_ngram_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1946,7 +2007,7 @@ def _dedup_ngram_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(load_table(spark, sf_dir, "documents"), threshold=0.9)
 
 
-def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> dict:
     """3-leg row: `pair` = the banded MinHash-LSH pair scan
     (candidates exact-verified, >= 0.9 Jaccard) vs the all-pairs exact
     oracle; `leak` = `split_leakage` over the same corpus carrying the
@@ -1975,7 +2036,6 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.functions.cachepool import cache_scoped
 
     docs = load_table(spark, sf_dir, "documents")
-    ns = F.lit(None).cast("string")
 
     def _run_stream_near():
         import atexit as _atexit
@@ -2055,31 +2115,20 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     flagged = _fit_drained(spark, sf_dir, "neardup_stream", _run_stream_near)
-    sflag = spark.createDataFrame([(i,) for i in flagged], "a bigint").select(
-        F.lit("sflag").alias("leg"),
-        "a",
-        F.lit(None).cast("bigint").alias("b"),
-        F.lit(None).cast("double").alias("jaccard"),
-        ns.alias("split_a"),
-        ns.alias("split_b"),
-    )
+    sflag = spark.createDataFrame([(i,) for i in flagged], "a bigint")
     # ONE pooled pair scan feeds both legs (split_leakage's pairs=
     # hook): the branches' exchange subtrees differ (project vs label
     # join), so Spark's ReusedExchange cannot deduplicate them —
     # cache_scoped can, and the pairs frame is a derived join output,
     # never a bare table scan (the CacheManager pushdown hazard)
     p = cache_scoped(minhash_lsh_pairs(docs, threshold=0.9), "dedup_minhash_lsh")
-    pairs = p.select(
-        F.lit("pair").alias("leg"), "a", "b", "jaccard",
-        ns.alias("split_a"), ns.alias("split_b"),
-    )
     labeled = docs.withColumn(
         "split", hash_split(F.col("doc_id"), _SPLIT_FRACTIONS)
     )
     leak = split_leakage(labeled, threshold=0.9, pairs=p).select(
-        F.lit("leak").alias("leg"), "a", "b", "jaccard", "split_a", "split_b"
+        "a", "b", "jaccard", "split_a", "split_b"
     )
-    return pairs.unionByName(leak).unionByName(sflag)
+    return {"pair": p.select("a", "b", "jaccard"), "leak": leak, "sflag": sflag}
 
 
 def _dedup_simhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2092,7 +2141,7 @@ def _dedup_simhash_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEM_PLANES_SEED = 562  # hyperplanes(dim=64, n=3) — 8 deterministic cells
 
 
-def _dedup_embedding_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _dedup_embedding_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged two-leg embedding-dedup row. `pair` leg: the banded-LSH
     scale path (ONE band-key self-join, candidates-only verify); oracle =
     exact all-pairs SQL — (p=4, T=28) seeded planes deterministically
@@ -2114,21 +2163,18 @@ def _dedup_embedding_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.sources.registry import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = embedding_dup_pairs_lsh(emb, threshold=0.45).select(
-        F.lit("pair").alias("leg"), "a", "b", "cos"
-    )
+    pairs = embedding_dup_pairs_lsh(emb, threshold=0.45).select("a", "b", "cos")
     planes = hyperplanes(dim=64, n=3, seed=_SEM_PLANES_SEED)
     cell = None
     for i, p in enumerate(planes):
         bit = F.when(_dot_lit(F.col("embedding"), p) > 0, F.lit(2 ** (2 - i))).otherwise(F.lit(0))
         cell = bit if cell is None else cell + bit
     dropped = semantic_dedup(emb, threshold=0.45, cell_expr=cell).select(
-        F.lit("sem").alias("leg"),
         F.col("id").alias("a"),
         F.col("cell").cast("long").alias("b"),
         F.col("centroid_sim").alias("cos"),
     )
-    return pairs.unionByName(dropped)
+    return {"pair": pairs, "sem": dropped}
 
 
 def _sem_dedup_sql() -> str:
@@ -2168,7 +2214,7 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
     return [float(x) for x in emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]]
 
 
-def _similarity_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _similarity_ann_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged three-leg similarity row: brute-force exact top-k (former
     similarity_topk row — the recall baseline, TakeOrderedAndProject with
     0 exchanges) + exact-bucket probe + hamming-1 multi-probe (the recall
@@ -2180,15 +2226,14 @@ def _similarity_ann_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    ex = topk_cosine(emb.filter(F.col("vec_id") != 0), qv, k=10).select(
-        F.lit("exact").alias("leg"), "vec_id", "cos"
-    )
-    p0 = ann_topk(emb, qv, k=10).select(F.lit("probe0").alias("leg"), "vec_id", "cos")
-    p1 = ann_topk(emb, qv, k=10, multiprobe=1).select(F.lit("probe1").alias("leg"), "vec_id", "cos")
-    return ex.unionByName(p0).unionByName(p1)
+    return {
+        "exact": topk_cosine(emb.filter(F.col("vec_id") != 0), qv, k=10).select("vec_id", "cos"),
+        "probe0": ann_topk(emb, qv, k=10).select("vec_id", "cos"),
+        "probe1": ann_topk(emb, qv, k=10, multiprobe=1).select("vec_id", "cos"),
+    }
 
 
-def _multimodal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _multimodal_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged multimodal row (r9: + four REAL-decode legs through the
     pure-numpy/stdlib codecs of operators/codecs.py):
 
@@ -2224,9 +2269,7 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.sources.registry import load_table, spread
 
     docs = load_table(spark, sf_dir, "documents")
-    base = binary_features(media_table(spread(docs))).select(
-        F.lit("bytes").alias("leg"), "doc_id", "n_bytes", "digest"
-    )
+    base = binary_features(media_table(spread(docs))).select("doc_id", "n_bytes", "digest")
 
     leg_schema = T.StructType(
         [
@@ -2342,7 +2385,6 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     wdf = read_warc(spark, warc_dir)
     warc_leg = wdf.select(
-        F.lit("warc").alias("leg"),
         F.regexp_extract("url", r"/d/(\d+)", 1).cast("long").alias("doc_id"),
         F.length("body").cast("long").alias("n_bytes"),
         F.md5(
@@ -2367,7 +2409,6 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ext = html_to_text(html)
     html_leg = sixty.select(
-        F.lit("html").alias("leg"),
         "doc_id",
         F.length(ext).cast("long").alias("n_bytes"),
         F.md5(ext).alias("digest"),
@@ -2379,18 +2420,18 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     norm = normalize_text(decomp)
     nfc_leg = sixty.select(
-        F.lit("nfc").alias("leg"),
         "doc_id",
         F.length(norm).cast("long").alias("n_bytes"),
         F.md5(norm).alias("digest"),
     )
 
-    return (
-        base.unionByName(media)
-        .unionByName(warc_leg)
-        .unionByName(html_leg)
-        .unionByName(nfc_leg)
-    )
+    return {
+        "bytes": base,
+        ("img", "png", "wav", "y4m", "rsz"): media,
+        "warc": warc_leg,
+        "html": html_leg,
+        "nfc": nfc_leg,
+    }
 
 
 def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2620,9 +2661,18 @@ def _text_quality_row_sql() -> str:
                 FROM lm WHERE lp IS NOT NULL) bnd"""
 
 
-_q("text_stats", _text_stats_spark, _text_stats_sql())
+_q("text_stats", _text_stats_spark, _text_stats_sql(), headline=True)
 # + lang_guess leg + unigram- and bigram-LM perplexity legs (r6)
-_q("text_quality", _text_quality_spark, _text_quality_row_sql())
+_q(
+    "text_quality",
+    _text_quality_spark,
+    _text_quality_row_sql(),
+    ops=(
+        "quality", "lang_guess", "split", "lm_logprob", "lm2_logprob", "cls_label",
+        "dsir", "dsir_top25", "ppl_bucket",
+    ),
+    headline=True,
+)
 
 
 def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2787,6 +2837,8 @@ _q(
               CAST(coalesce(sc.nrem, 0) AS BIGINT) AS sp_removed
        FROM w JOIN sr USING (doc_id) JOIN br USING (doc_id)
        LEFT JOIN sc USING (doc_id)""",
+    ops=("fingerprint", "span", "boilerplate", "span_strip"),
+    headline=True,
 )
 _q(
     "dedup_exact",
@@ -2851,6 +2903,9 @@ _q(
         SELECT 'surl' AS leg, '' AS fp, doc_id AS keeper,
                CAST(1 AS BIGINT) AS n_dupes
         FROM documents WHERE doc_id >= 240 AND doc_id < 260""",
+    ops=("batch", "url", "urlk", "urlf", "bloomf"),
+    verify=("stream", "surl"),
+    headline=True,
 )
 _q("dedup_ngram_jaccard", _dedup_ngram_spark, _SQL_JACCARD_PAIRS)
 # minhash verifies candidates with exact Jaccard, so it matches the exact
@@ -2882,7 +2937,14 @@ def _dedup_minhash_oracle() -> str:
             WHERE a < 500 AND b < 500) d"""
 
 
-_q("dedup_minhash_lsh", _dedup_minhash_spark, _dedup_minhash_oracle())
+_q(
+    "dedup_minhash_lsh",
+    _dedup_minhash_spark,
+    _dedup_minhash_oracle(),
+    ops=("pair", "leak"),
+    verify=("sflag",),
+    headline=True,
+)
 
 
 def _dedup_cc_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2920,7 +2982,7 @@ _SQL_CC_COMPONENTS = f"""
     JOIN (SELECT component, count(*) AS n_members FROM comp GROUP BY component) n
       USING (component)"""
 
-_q("dedup_cluster_components", _dedup_cc_spark, _SQL_CC_COMPONENTS)
+_q("dedup_cluster_components", _dedup_cc_spark, _SQL_CC_COMPONENTS, headline=True)
 def _simhash_sql() -> str:
     """DuckDB replica of operators.dedup.simhash_pairs: the token hash is
     the PORTABLE int(md5(w)[:15], 16) (see dedup.token_hash), so the
@@ -2971,16 +3033,24 @@ _q(
         UNION ALL
         SELECT 'sem' AS leg, vec_id AS a, cell::BIGINT AS b, csim AS cos
         FROM sem_drops""",
+    ops=("pair", "sem"),
 )
 _SQL_EXACT_TOPK = f"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
         SELECT e.vec_id, round({_sql_cosine('e.embedding', 'q.qe')}, 6) AS cos
         FROM embeddings e, q WHERE e.vec_id != 0
         ORDER BY cos DESC, e.vec_id LIMIT 10"""
 
-_q("similarity_ann_lsh", _similarity_ann_spark, _ann_sql())
+_q(
+    "similarity_ann_lsh",
+    _similarity_ann_spark,
+    _ann_sql(),
+    ops=("probe0", "probe1"),
+    verify=("exact",),
+    headline=True,
+)
 
 
-def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _decontam_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged 2-leg decontamination row:
 
     - `pair`: cross-corpus decontamination (operators/decontam.py):
@@ -3011,14 +3081,13 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # k=13 (~2-3 words): published decontam recipes use LONG n-grams so
     # shingles are rare — that is what keeps the shared-shingle join
     # sparse (df_bench per shingle ~1) AND what makes a hit meaningful
-    nb = F.lit(None).cast("bigint")
     # broadcast=True: the bench frame IS a fixed-size eval suite (the
     # operator's documented fast path) — skips the per-build guard job.
     # Pooled: the row's three bench actions each re-ran the containment
     # join (~6 s at sf0.1) for an output of a few dozen pairs.
     pairs = cache_scoped(
         contamination_pairs(docs, bench, threshold=0.5, k=13, broadcast=True).select(
-            F.lit("pair").alias("leg"), "train_id", "bench_id", "overlap", "overlap_frac"
+            "train_id", "bench_id", "overlap", "overlap_frac"
         ),
         "decontam.pairs",
     )
@@ -3057,14 +3126,8 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     kept = _fit_drained(spark, sf_dir, "decontam_stream", _run_stream_decontam)
-    sdec = spark.createDataFrame([(i,) for i in kept], "train_id bigint").select(
-        F.lit("sdec").alias("leg"),
-        "train_id",
-        nb.alias("bench_id"),
-        nb.alias("overlap"),
-        F.lit(None).cast("double").alias("overlap_frac"),
-    )
-    return pairs.unionByName(sdec)
+    sdec = spark.createDataFrame([(i,) for i in kept], "train_id bigint")
+    return {"pair": pairs, "sdec": sdec}
 
 
 _SQL_SHINGLES_13 = _sql_shingles(13)
@@ -3084,7 +3147,14 @@ _SQL_DECONTAM = f"""
     SELECT 'sdec', doc_id, NULL::BIGINT, NULL::BIGINT, NULL::DOUBLE
     FROM documents WHERE doc_id NOT IN (SELECT train_id FROM p)"""
 
-_q("text_decontaminate", _decontam_spark, _SQL_DECONTAM)
+_q(
+    "text_decontaminate",
+    _decontam_spark,
+    _SQL_DECONTAM,
+    ops=("pair",),
+    verify=("sdec",),
+    headline=True,
+)
 
 
 # driver-side fit artifacts (KMeans centroids / PQ codebooks) cached per
@@ -3216,7 +3286,7 @@ def _write_stream_chunks(pdf, pusher, prefix: str, n_chunks: int = 3) -> str:
     return src
 
 
-def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged 3-leg quantized-ANN driver row, every leg checked against
     the EXACT top-k SQL oracle:
 
@@ -3266,13 +3336,8 @@ def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = _fit_cached(
         spark, sf_dir, "pq8x16", lambda: pq_fit(emb, m=8, k=16, max_iter=10)
     )
-    nullq = F.lit(None).cast("bigint").alias("qid")
-    ivf = ivf_topk(base, qv, centroids, k=10, nprobe=12).select(
-        F.lit("ivf").alias("leg"), "vec_id", "cos", nullq
-    )
-    pq = pq_topk(base, qv, books, k=10, shortlist=200).select(
-        F.lit("pq").alias("leg"), "vec_id", "cos", nullq
-    )
+    ivf = ivf_topk(base, qv, centroids, k=10, nprobe=12).select("vec_id", "cos")
+    pq = pq_topk(base, qv, books, k=10, shortlist=200).select("vec_id", "cos")
     # persisted leg: write the index once per (session, sf) — the
     # _FIT_CACHE contract the KMeans/codebook fits already follow — and
     # run the search round-trip every invocation, so the bench's
@@ -3294,7 +3359,7 @@ def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = _fit_cached(spark, sf_dir, "ivfpq_idx", _write)
     ivfpq = ivfpq_search_index(
         spark, idx, qv, k=10, nprobe=12, shortlist=200
-    ).select(F.lit("ivfpq").alias("leg"), "vec_id", "cos", nullq)
+    ).select("vec_id", "cos")
     # `knn` leg (r8): the multi-query EXACT top-k join
     # (similarity.knn_join) — 20 query vectors against the rest of the
     # table, k=5, ranked on the rounded cosine so selection is
@@ -3305,7 +3370,7 @@ def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") < 20),
         emb.filter(F.col("vec_id") >= 20),
         k=5,
-    ).select(F.lit("knn").alias("leg"), "vec_id", "cos", F.col("q_id").alias("qid"))
+    ).select("vec_id", "cos", F.col("q_id").alias("qid"))
     # `ivfb` leg (r9s3): the BATCHED persisted-IVF search
     # (similarity.ivf_search_index_batch) — the same 20 queries against
     # the persisted index, probing ALL 16 cells so the result equals the
@@ -3321,8 +3386,8 @@ def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ivfb = ivf_search_index_batch(
         spark, idx, emb.filter(F.col("vec_id") < 20), k=5, nprobe=16
-    ).select(F.lit("ivfb").alias("leg"), "vec_id", "cos", F.col("q_id").alias("qid"))
-    return ivf.unionByName(pq).unionByName(ivfpq).unionByName(knn).unionByName(ivfb)
+    ).select("vec_id", "cos", F.col("q_id").alias("qid"))
+    return {"ivf": ivf, "pq": pq, "ivfpq": ivfpq, "knn": knn, "ivfb": ivfb}
 
 
 _q(
@@ -3356,6 +3421,8 @@ _q(
             PARTITION BY q.vec_id
             ORDER BY round({_sql_cosine('e.embedding', 'q.embedding')}, 6) DESC,
                      e.vec_id) <= 5)""",
+    ops=("ivf", "pq", "ivfpq", "knn", "ivfb"),
+    headline=True,
 )
 _q(
     "multimodal_features",
@@ -3428,6 +3495,8 @@ _q(
               md5(nfc_normalize(repeat('e' || chr(769), CAST(doc_id % 5 + 1 AS INT))
                   || chr(8491))) AS digest
        FROM documents WHERE doc_id < 60""",
+    ops=("bytes", "img", "png", "wav", "y4m", "rsz", "warc", "html", "nfc"),
+    headline=True,
 )
 
 
@@ -3437,7 +3506,7 @@ _q(
 # one-to-many children, then flattened back to scalars the oracle can check.
 
 
-def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged multi-leg snowflake row (r6: + the §3.1 extract lifecycle
     under the hard gate — previously unit/golden-only):
 
@@ -3541,7 +3610,6 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     schema = T.StructType(
         [
-            T.StructField("leg", T.StringType()),
             T.StructField("okey", T.LongType()),
             T.StructField("cname", T.StringType()),
             T.StructField("n_items", T.LongType()),
@@ -3554,14 +3622,12 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = doc_frame(tables, plan, cfg, ids=list(range(100)))
     items = F.col("orders.lineitem")
     doc_leg = docs.select(
-        F.lit("doc").alias("leg"),
         F.col("__id__").cast("bigint").alias("okey"),
         F.col("orders.o_custkey.c_name").alias("cname"),
         F.when(items.isNull(), F.lit(0)).otherwise(F.size(items)).cast("bigint").alias("n_items"),
         F.round(
             F.aggregate(items, F.lit(0.0), lambda acc, it: acc + it["l_quantity"]), 6
         ).alias("total_qty"),
-        F.lit(None).cast("string").alias("etl_key"),
     )
 
     # the lifecycle runs once per (session, sf) — the _FIT_CACHE contract
@@ -3613,7 +3679,6 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cust = d.get("o_custkey")
                 rows.append(
                     {
-                        "leg": "ext",
                         "okey": d["o_orderkey"],
                         "cname": cust.get("c_name") if isinstance(cust, dict) else None,
                         "n_items": n_it,
@@ -3630,12 +3695,9 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     rdocs = doc_frame(tables, plan_ref, cfg_ref, ids=list(range(100)))
     ref_width = len(rdocs.schema["orders"].dataType["o_custkey"].dataType.fields)
     ref_leg = rdocs.select(
-        F.lit("ref").alias("leg"),
         F.col("__id__").cast("bigint").alias("okey"),
         F.col("orders.o_custkey.c_name").alias("cname"),
         F.lit(ref_width).cast("bigint").alias("n_items"),
-        F.lit(None).cast("double").alias("total_qty"),
-        F.lit(None).cast("string").alias("etl_key"),
     )
 
     from mysql_to_s3_spark.operators.index import (
@@ -3648,18 +3710,12 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `semi`: the id-batch LeftSemi over the pooled orders scan
     batch_ids = [k for k in range(100) if k % 3 == 0]
     semi_leg = semi_join_ids(tables["orders"], batch_ids, "o_orderkey").select(
-        F.lit("semi").alias("leg"),
         F.col("o_orderkey").cast("bigint").alias("okey"),
-        F.lit(None).cast("string").alias("cname"),
-        F.lit(None).cast("bigint").alias("n_items"),
-        F.lit(None).cast("double").alias("total_qty"),
-        F.lit(None).cast("string").alias("etl_key"),
     )
 
     # `hidx` + `uniqf` share one projected child frame off the pooled scan
     li = tables["lineitem"].select("l_orderkey", "l_linenumber", "l_quantity")
     hidx_leg = hash_index(li, ["l_orderkey"]).select(
-        F.lit("hidx").alias("leg"),
         F.col("l_orderkey").cast("bigint").alias("okey"),
         # members are sort_array'd on (l_linenumber, l_quantity) structs,
         # so the projected linenumber list is already in key order
@@ -3668,16 +3724,11 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             ",",
         ).alias("cname"),
         F.col("n_members").cast("bigint").alias("n_items"),
-        F.lit(None).cast("double").alias("total_qty"),
-        F.lit(None).cast("string").alias("etl_key"),
     )
     uniqf_leg = unique_index(li, ["l_orderkey"], fail_on_dup=False).select(
-        F.lit("uniqf").alias("leg"),
         F.col("l_orderkey").cast("bigint").alias("okey"),
-        F.lit(None).cast("string").alias("cname"),
         F.col("l_linenumber").cast("bigint").alias("n_items"),
         F.round(F.col("l_quantity"), 6).cast("double").alias("total_qty"),
-        F.lit(None).cast("string").alias("etl_key"),
     )
 
     def _uniq_gate():
@@ -3695,22 +3746,22 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     summary = spark.createDataFrame(
         [
-            ("resume", None, None, n_resumed, None, None),
-            ("notify", None, None, n_notify, None, None),
-            ("uniq_ok", None, None, n_uniq_ok, None, None),
-            ("uniq_dup", None, None, uniq_raised, None, None),
+            ("resume", n_resumed),
+            ("notify", n_notify),
+            ("uniq_ok", n_uniq_ok),
+            ("uniq_dup", uniq_raised),
         ],
-        schema,
+        "leg string, n_items bigint",
     )
-    return (
-        doc_leg.unionByName(ext)
-        .unionByName(ref_leg)
-        .unionByName(semi_leg)
-        .unionByName(hidx_leg)
-        .unionByName(uniqf_leg)
-        .unionByName(summary)
-        .orderBy("leg", "okey")
-    )
+    return {
+        "doc": doc_leg,
+        "ext": ext,
+        "ref": ref_leg,
+        "semi": semi_leg,
+        "hidx": hidx_leg,
+        "uniqf": uniqf_leg,
+        ("resume", "notify", "uniq_ok", "uniq_dup"): summary,
+    }
 
 
 _q(
@@ -3762,6 +3813,9 @@ _q(
        UNION ALL
        SELECT 'uniq_dup', NULL, NULL, 1, NULL, NULL
        ORDER BY leg, okey""",
+    ops=("doc", "semi", "hidx", "uniqf"),
+    verify=("ext", "ref", "resume", "notify", "uniq_ok", "uniq_dup"),
+    headline=True,
 )
 
 
@@ -3940,7 +3994,7 @@ _BPE_FIXED_MERGES = (
 _BPE_N_MERGES = 64  # well under the corpus' 93-merge pair space at every sf
 
 
-def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged training-data-shaping driver row (operators/packing.py +
     sampling.py + bpe.py): `chunk` = sliding 64-token windows with
     8-token overlap (per-chunk md5 content witness), `pack` =
@@ -3999,15 +4053,12 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.replace(F.concat_ws("", F.col("__tt__")), F.lit(END_OF_WORD), F.lit(" "))
     )
     bpe = enc.select(
-        F.lit("bpe").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key1"),
-        F.lit(None).cast("bigint").alias("key2"),
         F.size("__tf__").cast("bigint").alias("n_tokens"),
         F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_RE), 0))
         .cast("bigint")
         .alias("n_items"),
         F.md5(decoded).alias("content_hash"),
-        F.lit(None).cast("double").alias("fill_frac"),
     )
     # shard-receipt leg (r7): the full write -> manifest -> verify ->
     # read-back lifecycle IN-ROW (the typed_json_roundtrip temp-dir
@@ -4038,7 +4089,6 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     sdir, ok = _fit_cached(spark, sf_dir, "shard_receipt", _shard_lifecycle)
     shard = _shard_stats_frame(spark, sdir).select(
-        F.lit("shard").alias("leg"),
         F.col("bucket").cast("bigint").alias("key1"),
         F.col("n_seqs").cast("bigint").alias("key2"),
         F.col("tokens_total").cast("bigint").alias("n_tokens"),
@@ -4103,9 +4153,6 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         sshard_rows,
         "key1 bigint, key2 bigint, n_tokens bigint, n_items bigint, "
         "content_hash string, fill_frac double",
-    ).select(
-        F.lit("sshard").alias("leg"),
-        "key1", "key2", "n_tokens", "n_items", "content_hash", "fill_frac",
     )
     a0, b0 = model.merges[0]
     a1, b1 = model.merges[1]
@@ -4113,41 +4160,25 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         [("bpe_first", len(model.merges), f"{a0} {b0}", float(model.coverage)),
          ("bpe_second", None, f"{a1} {b1}", None)],
         "leg string, n_tokens bigint, content_hash string, fill_frac double",
-    ).select(
-        "leg",
-        F.lit(None).cast("bigint").alias("key1"),
-        F.lit(None).cast("bigint").alias("key2"),
-        "n_tokens",
-        F.lit(None).cast("bigint").alias("n_items"),
-        "content_hash",
-        "fill_frac",
     )
     chunk = chunk_documents(docs, max_tokens=64, overlap=8).select(
-        F.lit("chunk").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key1"),
         F.col("chunk_idx").alias("key2"),
         "n_tokens",
         F.lit(1).cast("bigint").alias("n_items"),
         "content_hash",
-        F.lit(None).cast("double").alias("fill_frac"),
     )
     pack = pack_stats(docs, budget=2048, n_buckets=16).select(
-        F.lit("pack").alias("leg"),
         F.col("bucket").cast("bigint").alias("key1"),
         F.col("seq_no").alias("key2"),
         F.col("tokens_total").alias("n_tokens"),
         F.col("n_docs").alias("n_items"),
-        F.lit(None).cast("string").alias("content_hash"),
         "fill_frac",
     )
     shuf = epoch_shuffle(docs, epoch=3, n_shards=8).select(
-        F.lit("shuffle").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key1"),
         F.col("pos").cast("bigint").alias("key2"),
-        F.lit(None).cast("bigint").alias("n_tokens"),
         F.col("shard").cast("bigint").alias("n_items"),
-        F.lit(None).cast("string").alias("content_hash"),
-        F.lit(None).cast("double").alias("fill_frac"),
     )
     # repeat leg (r7): the UP-sampling mixture at 2.45 epochs — two
     # full copies of every doc plus a deterministic per-(id, copy)
@@ -4156,13 +4187,8 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.operators.sampling import repeat_epochs
 
     rep = repeat_epochs(docs, 2.45).select(
-        F.lit("repeat").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key1"),
         F.col("epoch_copy").cast("bigint").alias("key2"),
-        F.lit(None).cast("bigint").alias("n_tokens"),
-        F.lit(None).cast("bigint").alias("n_items"),
-        F.lit(None).cast("string").alias("content_hash"),
-        F.lit(None).cast("double").alias("fill_frac"),
     )
     # dcap (r9 session 2): the per-domain/source cap
     # (sampling.sample_per_key — "at most N docs per domain", the
@@ -4173,24 +4199,20 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.operators.sampling import sample_per_key
 
     dcap = sample_per_key(docs, ["source"], n=5).select(
-        F.lit("dcap").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key1"),
-        F.lit(None).cast("bigint").alias("key2"),
-        F.lit(None).cast("bigint").alias("n_tokens"),
-        F.lit(None).cast("bigint").alias("n_items"),
         F.col("source").alias("content_hash"),
-        F.lit(None).cast("double").alias("fill_frac"),
     )
-    return (
-        chunk.unionByName(pack)
-        .unionByName(shuf)
-        .unionByName(rep)
-        .unionByName(bpe)
-        .unionByName(first)
-        .unionByName(shard)
-        .unionByName(sshard)
-        .unionByName(dcap)
-    )
+    return {
+        "chunk": chunk,
+        "pack": pack,
+        "shuffle": shuf,
+        "repeat": rep,
+        "bpe": bpe,
+        ("bpe_first", "bpe_second"): first,
+        "shard": shard,
+        "sshard": sshard,
+        "dcap": dcap,
+    }
 
 
 def _bpe_oracle_sql() -> str:
@@ -4337,7 +4359,14 @@ def _chunk_pack_oracle() -> str:
       FROM ({dcap})"""
 
 
-_q("text_chunk_pack", _chunk_pack_spark, _chunk_pack_oracle())
+_q(
+    "text_chunk_pack",
+    _chunk_pack_spark,
+    _chunk_pack_oracle(),
+    ops=("chunk", "pack", "shuffle", "bpe", "repeat", "dcap"),
+    verify=("bpe_first", "bpe_second", "shard", "sshard"),
+    headline=True,
+)
 
 
 # -- flagship corpus-pipeline composition (pipeline.prepare_corpus) --
@@ -4352,7 +4381,7 @@ _PIPE_CFG = dict(
 )
 
 
-def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
     """End-to-end `prepare_corpus` (pipeline.py) as a 2-leg driver row —
     the flagship composition under the hard oracle:
 
@@ -4422,21 +4451,16 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         if name in ("near_dedup", "decontam"):
             cache_scoped(sdf, f"pipeline_prepare:{name}")
     kept = prep.docs.select(
-        F.lit("kept").alias("leg"),
         F.col("doc_id").cast("bigint").alias("key"),
         F.col("split").alias("tag"),
         F.lit(1).cast("bigint").alias("n"),
     )
-    out = kept
-    for i, (name, sdf) in enumerate(prep.stages):
-        out = out.unionByName(
-            sdf.agg(F.count(F.lit(1)).cast("bigint").alias("n")).select(
-                F.lit("funnel").alias("leg"),
-                F.lit(i).cast("bigint").alias("key"),
-                F.lit(name).alias("tag"),
-                "n",
-            )
+    funnel = [
+        sdf.agg(F.count(F.lit(1)).cast("bigint").alias("n")).select(
+            F.lit(i).cast("bigint").alias("key"), F.lit(name).alias("tag"), "n"
         )
+        for i, (name, sdf) in enumerate(prep.stages)
+    ]
 
     def _run_stream_prep():
         import uuid as _uuid
@@ -4493,14 +4517,8 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy(_fp(F.col("text")).alias("tag"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .select(
-            F.lit("sprep").alias("leg"),
-            F.lit(None).cast("bigint").alias("key"),
-            "tag",
-            "n",
-        )
     )
-    return out.unionByName(sprep)
+    return {"kept": kept, "funnel": funnel, "sprep": sprep}
 
 
 def _pipeline_prepare_oracle() -> str:
@@ -4564,7 +4582,14 @@ def _pipeline_prepare_oracle() -> str:
     FROM sded WHERE doc_id NOT IN (SELECT doc_id FROM scontam)"""
 
 
-_q("pipeline_prepare", _pipeline_prepare_spark, _pipeline_prepare_oracle())
+_q(
+    "pipeline_prepare",
+    _pipeline_prepare_spark,
+    _pipeline_prepare_oracle(),
+    ops=("kept", "funnel"),
+    verify=("sprep",),
+    headline=True,
+)
 
 # -- update / delete / ingest --
 
@@ -4801,10 +4826,11 @@ _q(
        SELECT 'cube2d' AS leg, dense.k1 AS k1, dense.k2 AS k2,
               CAST(coalesce(agg.n, 0) AS BIGINT) AS n
        FROM dense LEFT JOIN agg USING (k1, k2)""",
+    ops=("table", "cube1d", "cube2d"),
 )
 
 
-def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Incremental-batch counter chain (reference counter.py:20,36,59) as
     distributed columns, two tagged legs: `day` = day tumbling bucket x
     500-row sub-batch over events (tiebroken by event_id so the row order
@@ -4831,7 +4857,6 @@ def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = batch_key_columns(
         events, "ts", start="2024-01-01", batch_spec=["day", 500], tiebreak_cols=["event_id"]
     ).select(
-        F.lit("day").alias("leg"),
         F.col("event_id").alias("id"),
         F.col("__batch0__").alias("batch0"),
         F.col("__batch1__").alias("batch1"),
@@ -4841,7 +4866,6 @@ def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     month = batch_key_columns(
         orders, "o_orderdate", start="1995-01-01", batch_spec=["month", 400], tiebreak_cols=["o_orderkey"]
     ).select(
-        F.lit("month").alias("leg"),
         F.col("o_orderkey").alias("id"),
         F.col("__batch0__").alias("batch0"),
         F.col("__batch1__").alias("batch1"),
@@ -4910,11 +4934,8 @@ def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         return [(int(r["b0"]), int(r["ft"]), int(r["n"])) for r in rows]
 
     srows = _fit_drained(spark, sf_dir, "stream_counts", _run_stream_counts)
-    stream_leg = spark.createDataFrame(
-        [("stream", None, b0, ft, n) for b0, ft, n in srows],
-        "leg string, id bigint, batch0 bigint, batch1 bigint, batch2 bigint",
-    )
-    return day.unionByName(month).unionByName(stream_leg)
+    stream_leg = spark.createDataFrame(srows, "batch0 bigint, batch1 bigint, batch2 bigint")
+    return {"day": day, "month": month, "stream": stream_leg}
 
 
 _q(
@@ -4955,6 +4976,8 @@ _q(
            CAST(floor(epoch(min(ts))) AS BIGINT) AS batch1,
            CAST(count(*) AS BIGINT) AS batch2
     FROM b GROUP BY b0""",
+    ops=("day", "month", "stream"),
+    headline=True,
 )
 
 
@@ -5039,90 +5062,7 @@ _q(
 )
 
 
-# ---------------------------------------------------------------------------
-# Driver ordering. The driver hard-verifies (rows + schema + value-hash vs
-# the DuckDB oracle) only the FIRST 50 catalog entries. As of round 5 the
-# catalog IS exactly 50 entries — every formerly-out-of-window variant was
-# either a strict subset of a merged row (deleted) or folded in as a
-# tagged leg (edges_set_domain_dense, edges_time_week_dense,
-# edges_default_domain, window_running_sum, format_table_roundtrip,
-# counters_batch_keys each carry 2-4 legs) — so EVERY registered semantic
-# gets a hard driver row, including the r4 temporal family (the cube row
-# was merged into format_table_roundtrip in r5 to free its slot).
-# DRIVER_ORDER lists all 50 in family order; the local gate
-# (tests/test_driver_contract.py) runs the identical oracle compare over
-# the same set.
-
-DRIVER_ORDER: list[str] = [
-    # flagship + core setops
-    "groupby_tpch_q1",
-    "setop_filter_sort_limit",
-    "setop_sort_mixed_types",
-    "setop_string_ops",          # + regex (select + filter ctx), basic.* prims, get
-    "setop_conditionals",
-    "setop_in_range",
-    "setop_arithmetic",          # + mul/revenue, null semantics, coalesce, n-ary
-    "setop_dates_unix",          # + from_unix, offset positional
-    "setop_casts",
-    "setop_first_last_multivalue",
-    "setop_leaves_select",
-    "setop_from_subquery",
-    # scalar + grouped aggregates
-    "agg_scalar_stats",          # + moments, exact percentile, union set
-    "agg_scalar_moments_approx", # KLL/HLL scale path — rows-only (no oracle)
-    "agg_trimmed_stats",
-    "agg_group_union",           # + count_distinct, median/percentile/std, per-select default
-    "agg_one_single_valued",     # + first/last/list
-    # groupby
-    "groupby_expr_bucket",       # + grouped avg/max, null-key-kept leg
-    # edges / domains
-    "edges_set_domain_dense",    # legs: dense / nullbucket / multivalue words
-    "edges_default_domain",      # legs: discovered 1-D / dense 2-D cross
-    "edges_time_week_dense",     # legs: week / calendar month
-    "edges_general_set_where",
-    "edges_range_histogram",     # legs: numeric range / duration / range{min,max} span
-    # windows
-    "window_percentile_partition",
-    "window_running_sum",        # + rownum seq, trailing frame, where prefilter
-    "window_lead_lag",           # + `between` prefix/suffix extract
-    "window_trimmed_stats",
-    # nested / snowflake
-    "nested_table_from",
-    "snowflake_denormalize",
-    # LLM-pipeline: text analysis
-    "text_stats",                # + normalized-text fingerprint
-    "text_quality",              # + language-ID leg (lang_guess)
-    "text_winnow_fingerprint",
-    "text_decontaminate",        # cross-corpus n-gram decontamination
-    "text_chunk_pack",           # legs: chunking / packing / epoch shuffle
-    "pipeline_prepare",          # end-to-end prepare_corpus: kept+split / funnel
-    # LLM-pipeline: dedup
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_cluster_components",  # pairs -> clusters (beyond-reference)
-    "dedup_simhash",
-    "dedup_embedding_cosine",
-    # LLM-pipeline: similarity search
-    "similarity_ann_lsh",        # legs: exact topk / bucket / multiprobe
-    "similarity_ivf",            # legs: IVF probe / PQ ADC shortlist
-    "multimodal_features",
-    # container lifecycle
-    "update_delete_container",
-    "ingest_type_widening",
-    # result shaping
-    "format_table_roundtrip",    # legs: table / sorted 1-D cube / 2-D matrix
-    # incremental batch counters
-    "counters_batch_keys",       # legs: day x 500 / calendar month x 400
-    # ES typed-JSON wire format round-trip
-    "typed_json_roundtrip",
-    # temporal analytics (beyond-reference): asof / interval / session /
-    # greedy funnel / time-boxed funnel legs
-    "temporal_events",
-]
-
-
-def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged 2-leg sink round-trip row — both legs write through a
     distributed mapInPandas sink to a temp dir IN-ROW, read the lines
     back, and emit scalars under the driver's value compare:
@@ -5163,21 +5103,7 @@ def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ax.register(_sh.rmtree, d, ignore_errors=True)
         return d
 
-    import pyspark.sql.types as T
-
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100)
-    schema = T.StructType(
-        [
-            T.StructField("leg", T.StringType()),
-            T.StructField("ok", T.LongType()),
-            T.StructField("status", T.StringType()),
-            T.StructField("price", T.DoubleType()),
-            T.StructField("xs", T.StringType()),
-            T.StructField("shape", T.StringType()),
-            T.StructField("xl", T.LongType()),
-            T.StructField("etl_id", T.LongType()),
-        ]
-    )
 
     # --- typed leg -------------------------------------------------------
     df = orders.select(
@@ -5197,18 +5123,15 @@ def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
             docs = [untyped(_json.loads(v)) for v in pdf["value"]]
             yield pd.DataFrame(
                 {
-                    "leg": ["typed"] * len(docs),
                     "ok": [d["ok"] for d in docs],
                     "status": [d["status"] for d in docs],
                     "price": [d["price"] for d in docs],
-                    "xs": [None] * len(docs),
-                    "shape": [None] * len(docs),
-                    "xl": [None] * len(docs),
-                    "etl_id": [None] * len(docs),
                 }
             )
 
-    typed = spark.read.text(out).mapInPandas(parse_typed, schema)
+    typed = spark.read.text(out).mapInPandas(
+        parse_typed, "ok bigint, status string, price double"
+    )
 
     # --- jsonl leg: scrub + collapse + minimize + etl envelope -----------
     jdf = orders.select(
@@ -5241,10 +5164,7 @@ def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                 t, t2, xi = d.get("tags"), d.get("tags2"), d.get("xi")
                 rows.append(
                     {
-                        "leg": "jsonl",
                         "ok": d["ok"],
-                        "status": None,
-                        "price": None,
                         "xs": d.get("cmt"),
                         "shape": (
                             ("str" if isinstance(t, str) else type(t).__name__)
@@ -5260,9 +5180,11 @@ def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "etl_id": w["etl"]["id"],
                     }
                 )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield pd.DataFrame(rows, columns=["ok", "xs", "shape", "xl", "etl_id"])
 
-    jsonl = spark.read.text(jout).mapInPandas(parse_jsonl, schema)
+    jsonl = spark.read.text(jout).mapInPandas(
+        parse_jsonl, "ok bigint, xs string, shape string, xl bigint, etl_id bigint"
+    )
 
     # --- esbulk legs: action/doc NDJSON pairs ----------------------------
     from mysql_to_s3_spark.sinks.es_bulk import write_bulk_lines
@@ -5299,10 +5221,12 @@ def _typed_json_roundtrip_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
                             "price": u["price"],
                         }
                     )
-            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+            yield pd.DataFrame(rows, columns=["leg", "ok", "status", "price"])
 
-    esbulk = spark.read.text(bout).mapInPandas(parse_bulk, schema)
-    return typed.unionByName(jsonl).unionByName(esbulk).orderBy("leg", "ok")
+    esbulk = spark.read.text(bout).mapInPandas(
+        parse_bulk, "leg string, ok bigint, status string, price double"
+    )
+    return {"typed": typed, "jsonl": jsonl, ("esbulk_a", "esbulk_d"): esbulk}
 
 
 _q(
@@ -5326,10 +5250,12 @@ _q(
               NULL, NULL, NULL, NULL
        FROM orders WHERE o_orderkey < 100
        ORDER BY leg, ok""",
+    ops=("typed", "jsonl", "esbulk_a", "esbulk_d"),
+    headline=True,
 )
 
 
-def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> dict:
     """Tagged 5-leg temporal-analytics row over the events table —
     beyond-reference operators (operators/joins.py, sessions.py), a
     HARD driver row since r5 (slot freed by the format_table/cube merge):
@@ -5452,7 +5378,6 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("a"),
         F.col("user_id").alias("b"),
         F.col("ts").alias("t1"),
-        F.lit(None).cast("timestamp_ntz").alias("t2"),
         F.col("sv").cast("double").alias("x"),
     )
     # pooled (r10): sess feeds THREE consumers (the sess leg, the
@@ -5474,15 +5399,11 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         value_cols=["sq"],
         granularity_secs=1800,
     ).select(
-        F.lit("range").alias("leg"),
         F.col("event_id").alias("a"),
         F.col("sq").alias("b"),
         F.col("ts").alias("t1"),
-        F.lit(None).cast("timestamp_ntz").alias("t2"),
-        F.lit(None).cast("double").alias("x"),
     )
     sessrow = sess.select(
-        F.lit("sess").alias("leg"),
         F.col("user_id").alias("a"),
         F.col("session_seq").alias("b"),
         F.col("session_start").alias("t1"),
@@ -5494,9 +5415,7 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         by=["user_id"],
         steps=[F.col("event_type") == t for t in ("signup", "click", "purchase")],
     ).select(
-        F.lit("funnel").alias("leg"),
         F.col("user_id").alias("a"),
-        F.lit(None).cast("bigint").alias("b"),
         F.col("step_1_ts").alias("t1"),
         F.col("step_3_ts").alias("t2"),
         F.col("converted").cast("double").alias("x"),
@@ -5507,11 +5426,8 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         steps=[F.col("event_type") == t for t in ("signup", "click", "purchase")],
         within="3 days",
     ).select(
-        F.lit("fwin").alias("leg"),
         F.col("user_id").alias("a"),
-        F.lit(None).cast("bigint").alias("b"),
         F.col("start_ts").alias("t1"),
-        F.lit(None).cast("timestamp_ntz").alias("t2"),
         F.col("converted").cast("double").alias("x"),
     )
     def _run_stream_temporal():
@@ -5755,18 +5671,7 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     srows, frows, ssrows, fwrows, nrrows, fwinrows, rngrows = _fit_drained(
         spark, sf_dir, "temporal_stream", _run_stream_temporal
     )
-    leg_schema = (
-        "leg string, a bigint, b bigint, t1 timestamp_ntz, t2 timestamp_ntz, x double"
-    )
-    sasof = spark.createDataFrame(
-        [("sasof", eid, uid, t1, t2, x) for eid, uid, t1, t2, x in srows], leg_schema
-    )
-    sfwdt = spark.createDataFrame(
-        [("sfwdt", eid, uid, t1, t2, x) for eid, uid, t1, t2, x in fwrows], leg_schema
-    )
-    snear = spark.createDataFrame(
-        [("snear", eid, uid, t1, t2, x) for eid, uid, t1, t2, x in nrrows], leg_schema
-    )
+    leg_schema = "a bigint, b bigint, t1 timestamp_ntz, t2 timestamp_ntz, x double"
 
     import datetime as _dt
 
@@ -5778,32 +5683,28 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         td = d - _EPOCH0
         return float((td.days * 86400 + td.seconds) * 10**6 + td.microseconds)
 
-    sfun = spark.createDataFrame(
-        [("sfun", uid, None, s1, s3, _us(s2)) for uid, s1, s2, s3 in frows], leg_schema
-    )
-    ssess = spark.createDataFrame(
-        [("ssess", uid, seq, s0, s1, float(n)) for uid, seq, s0, s1, n in ssrows],
-        leg_schema,
-    )
-    sfwin = spark.createDataFrame(
-        [("sfwin", uid, None, s0, None, 1.0) for uid, s0 in fwinrows], leg_schema
-    )
-    srange = spark.createDataFrame(
-        [("srange", eid, sq, t1, None, None) for eid, sq, t1 in rngrows], leg_schema
-    )
-    return (
-        asof4.unionByName(rng)
-        .unionByName(sessrow)
-        .unionByName(fn)
-        .unionByName(fw)
-        .unionByName(sasof)
-        .unionByName(sfun)
-        .unionByName(ssess)
-        .unionByName(sfwdt)
-        .unionByName(snear)
-        .unionByName(sfwin)
-        .unionByName(srange)
-    )
+    # sess first: it has every column, so it fixes the column order
+    return {
+        "sess": sessrow,
+        ("asof", "asoff", "asofn", "asoft"): asof4,
+        "range": rng,
+        "funnel": fn,
+        "fwin": fw,
+        "sasof": spark.createDataFrame(srows, leg_schema),
+        "sfun": spark.createDataFrame(
+            [(uid, s1, s3, _us(s2)) for uid, s1, s2, s3 in frows],
+            "a bigint, t1 timestamp_ntz, t2 timestamp_ntz, x double",
+        ),
+        "ssess": spark.createDataFrame(
+            [(uid, seq, s0, s1, float(n)) for uid, seq, s0, s1, n in ssrows], leg_schema
+        ),
+        "sfwdt": spark.createDataFrame(fwrows, leg_schema),
+        "snear": spark.createDataFrame(nrrows, leg_schema),
+        "sfwin": spark.createDataFrame(
+            [(uid, s0, 1.0) for uid, s0 in fwinrows], "a bigint, t1 timestamp_ntz, x double"
+        ),
+        "srange": spark.createDataFrame(rngrows, "a bigint, b bigint, t1 timestamp_ntz"),
+    }
 
 
 _SQL_SESS_CTE = """
@@ -5936,21 +5837,37 @@ _q(
     SELECT 'srange', e.event_id, s.sq, e.ts, NULL, NULL
     FROM events e JOIN sess s
       ON e.user_id = s.user_id AND e.ts >= s.s0 AND e.ts <= s.s1""",
+    ops=("asof", "asoff", "asofn", "asoft", "range", "sess", "funnel", "fwin"),
+    verify=("sasof", "sfun", "ssess", "sfwdt", "snear", "sfwin", "srange"),
+    headline=True,
 )
 
 
 def names() -> list[str]:
-    ordered = [n for n in DRIVER_ORDER if n in CATALOG]
-    assert len(ordered) == len(DRIVER_ORDER), (
-        "DRIVER_ORDER names missing from CATALOG: "
-        f"{sorted(set(DRIVER_ORDER) - set(CATALOG))}"
-    )
-    return ordered + [n for n in CATALOG if n not in set(DRIVER_ORDER)]
+    """Every row in registration order. ``__spark_entry__.queries()``
+    exposes them; the first 50 are verified, and the catalog holds 50."""
+    return list(CATALOG)
+
+
+def headline() -> list[str]:
+    """The rows ``bench.py`` times."""
+    return [n for n, r in CATALOG.items() if r.headline]
+
+
+def row_tags() -> dict[str, dict[str, list[str]]]:
+    """``{row: {"ops": [...], "verify": [...]}}`` for every row that
+    declares legs: a row whose time covers several co-hosted operators
+    prices more than one BASELINE operator."""
+    return {
+        n: {"ops": list(r.ops), "verify": list(r.verify)}
+        for n, r in CATALOG.items()
+        if r.legs
+    }
 
 
 def build(name: str) -> Callable[[SparkSession, str], DataFrame]:
-    return CATALOG[name][0]
+    return CATALOG[name].build
 
 
 def oracle(name: str) -> str | None:
-    return CATALOG[name][1]
+    return CATALOG[name].oracle

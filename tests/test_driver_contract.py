@@ -12,6 +12,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
+from mysql_to_s3_spark import queries as catalog
 from tests.conftest import SF_DIR, _norm
 
 
@@ -46,6 +47,10 @@ def test_query_matches_oracle(spark, duck, name):
     sql = entry_mod.oracle_sql().get(name)
     df = fn(spark, SF_DIR)
     got, got_cols = _rows(df)
+    if "leg" in got_cols:
+        i = got_cols.index("leg")
+        undeclared = {r[i] for r in got} - set(catalog.CATALOG[name].legs)
+        assert not undeclared, f"{name}: undeclared legs {sorted(undeclared)}"
     if sql is None:
         assert len(got) >= 0  # rows-only check (driver's weak mode)
         return
@@ -60,3 +65,23 @@ def test_entry_smoke(spark):
     """entry() runs the flagship query, which must return rows."""
     df = entry_mod.entry(spark)
     assert df.count() > 0
+
+
+def test_catalog_declares_its_legs():
+    """Spark-free: the catalog holds the 50 verified rows, the bench's
+    headline set and every leg are declared on it, and a leg dict that
+    differs from a row's declared legs is refused by name."""
+    assert len(catalog.names()) == 50
+    headline = catalog.headline()
+    assert len(headline) == 30 and set(headline) <= set(catalog.names())
+    for name, row in catalog.CATALOG.items():
+        assert len(set(row.legs)) == len(row.legs), f"{name}: a leg is declared twice"
+        assert not row.verify or row.ops, f"{name}: verify legs without ops"
+    assert set(catalog.row_tags()) == {n for n, r in catalog.CATALOG.items() if r.legs}
+    with pytest.raises(ValueError, match="similarity_ivf.*exact"):
+        catalog._union_legs(
+            "similarity_ivf",
+            {leg: None for leg in ("ivf", "pq", "ivfpq", "knn", "ivfb", "exact")},
+        )
+    with pytest.raises(ValueError, match="dedup_exact"):
+        catalog._union_legs("dedup_exact", {"batch": None, ("stream", "surl"): None})

@@ -13,8 +13,9 @@ from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.dedup import (
     duplicated_span_fraction,
+    span_windows,
     strip_boilerplate_lines,
-    token_span_keys,
+    strip_duplicated_spans,
 )
 
 
@@ -24,24 +25,28 @@ def _docs(spark, rows):
 
 def test_span_keys_count_and_short_doc(spark):
     df = _docs(spark, [(1, "a b c d e f"), (2, "a b c"), (3, "x")])
-    out = {
-        r["doc_id"]: r["n"]
-        for r in df.select(
-            "doc_id", F.size(token_span_keys(F.col("text"), k=5)).alias("n")
-        ).collect()
-    }
-    # 6 tokens -> 2 windows of 5; 3 tokens -> 0; 1 token -> 0
-    assert out == {1: 2, 2: 0, 3: 0}
+    wins = sorted((r["id"], r["start"]) for r in span_windows(df, k=5).collect())
+    # 6 tokens -> 2 windows of 5; docs shorter than k contribute no rows
+    assert wins == [(1, 1), (1, 2)]
 
 
 def test_span_keys_case_insensitive(spark):
     df = _docs(spark, [(1, "Foo Bar Baz"), (2, "foo bar baz")])
-    a, b = (
-        df.orderBy("doc_id")
-        .select(token_span_keys(F.col("text"), k=3).alias("k"))
-        .collect()
-    )
-    assert a["k"] == b["k"] and len(a["k"]) == 1
+    a, b = sorted(span_windows(df, k=3).collect())
+    assert (a["id"], b["id"]) == (1, 2) and a["key"] == b["key"]
+
+
+def test_span_consumers_refuse_wins_of_another_width(spark):
+    """A wins= frame built with a different k, or one span_windows never
+    stamped, is refused by name instead of giving wrong spans."""
+    df = _docs(spark, [(1, "a b c d e f g"), (2, "z a b c d e f")])
+    wins3 = span_windows(df, k=3)
+    for op in (duplicated_span_fraction, strip_duplicated_spans):
+        with pytest.raises(ValueError, match=r"k=3.*k=5"):
+            op(df, k=5, wins=wins3)
+        with pytest.raises(ValueError, match=r"k=None.*k=3"):
+            op(df, k=3, wins=wins3.withColumn("key", F.concat(F.col("key"))))
+    assert duplicated_span_fraction(df, k=3, wins=wins3).count() == 2
 
 
 def test_duplicated_span_fraction_hand_corpus(spark):

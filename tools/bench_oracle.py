@@ -1,4 +1,4 @@
-"""Re-time the DuckDB oracle SQL for the bench HEADLINE queries — the
+"""Re-time the DuckDB oracle SQL for the catalog's headline rows — the
 denominator of the bench-vs-baseline ratio (BASELINE.md: 'within 2x at
 the same sf'; the reference publishes no numbers, so the DuckDB oracle
 at the same scale factor is the operative single-node baseline).
@@ -42,7 +42,6 @@ SKIP = {
 def main() -> None:
     import duckdb
 
-    from bench import HEADLINE
     from mysql_to_s3_spark import queries as catalog
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
@@ -55,7 +54,7 @@ def main() -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     times: dict[str, float] = {}
-    for name in HEADLINE:
+    for name in catalog.headline():
         if name in SKIP:
             print(f"skip  {name}: {SKIP[name]}", file=sys.stderr)
             continue

@@ -4,7 +4,7 @@ Usage:
     python tools/explain_plans.py <out_dir> <suffix> [name ...]
 
 Writes <out_dir>/<name>_<suffix>.txt for each requested row (default:
-every bench HEADLINE row), e.g. ``plans/r12 before``. The files back
+every catalog headline row), e.g. ``plans/r12 before``. The files back
 plan claims (Exchange counts, join strategies, PushedFilters,
 BatchEvalPython nodes) — capture them BEFORE and AFTER each change
 (suffix 'before' / 'after').
@@ -32,11 +32,10 @@ def main() -> None:
     out_dir, suffix = sys.argv[1], sys.argv[2]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    import bench
     from mysql_to_s3_spark import queries as catalog
     from mysql_to_s3_spark.session import get_spark
 
-    names = sys.argv[3:] or bench.HEADLINE
+    names = sys.argv[3:] or catalog.headline()
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("explain_plans")
