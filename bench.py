@@ -61,8 +61,8 @@ def main() -> None:
     # the collect number is transfer-bound and the count number is the
     # engine's actual cost.
     # r11 measurement-honesty fix (r10 verdict item 1): before EVERY
-    # timed action, drop the cross-action warm state (pooled
-    # cache_scoped frames + the prep_plan composition memo) so min-of-2
+    # timed action, drop the cross-action warm state (the catalog rows'
+    # own .cache() frames + the prep_plan composition memo) so min-of-2
     # prices each operator's per-execution cost, not a warm cache read.
     # Genuine one-time fits (classifier, IVF/PQ, BPE, bloom, lifecycle
     # receipts, streaming-drain receipts) stay session-cached — the
@@ -108,7 +108,7 @@ def main() -> None:
                 "protocol": (
                     "per query: min-of-2 full collect() (headline line) + "
                     "one engine-side count() (driver-transfer-free); since "
-                    "r11, pooled caches + plan memos are cleared before "
+                    "r11, cached frames + plan memos are cleared before "
                     "every timed action (release_plan_memos), so each "
                     "number is the operator's COLD per-execution cost — "
                     "only one-time model/index fits and streaming-drain "

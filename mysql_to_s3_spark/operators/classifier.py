@@ -39,6 +39,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
+from mysql_to_s3_spark.session import conf_int
+
 TOKEN_PATTERN = r"\w+|[^\w\s]"  # mirrors operators/text.TOKEN_RE
 
 
@@ -135,13 +137,9 @@ def fit_partitions(
 
     spark = df.sparkSession
     key = "mysql_to_s3_spark.classifier.fitPartitions"
-    raw = spark.conf.get(key, "0")
-    try:
-        pinned = int(raw)
-    except ValueError:
-        pinned = -1
+    pinned = conf_int(spark, key, 0, ClassifierError)
     if pinned < 0:
-        raise ClassifierError(f"{key} must be a non-negative integer (0 = derive), got {raw!r}")
+        raise ClassifierError(f"{key} must be a non-negative integer (0 = derive), got {pinned!r}")
     if pinned > 0:
         return pinned
     try:

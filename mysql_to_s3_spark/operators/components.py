@@ -26,9 +26,10 @@ one count and — at or below a conf-capped edge budget — solved exactly
 on the driver by union-find (two long columns over Arrow; zero shuffle
 rounds). Above the cap, each round is two shuffle joins + one
 partial-agg min on the node key — no collect, no driver-side graph. The edge frame is
-symmetrized once, hash-partitioned on the join key, and cached; labels
-are `localCheckpoint`ed each round to truncate the otherwise-exponential
-iterative lineage (Spark's standard idiom for iterative algorithms —
+symmetrized once, hash-partitioned on the join key, and
+`localCheckpoint`ed (freed with the frame, never left in the session's
+cache); labels are `localCheckpoint`ed each round to truncate the
+otherwise-exponential iterative lineage (Spark's standard idiom for iterative algorithms —
 GraphFrames does the same internally). Convergence costs nothing extra:
 labels only ever decrease, so the label-sum is a monotone checksum, and
 the one sum-action per round doubles as the checkpoint materializer —
@@ -47,6 +48,8 @@ from __future__ import annotations
 import logging
 
 from pyspark.sql import DataFrame, functions as F
+
+from mysql_to_s3_spark.session import conf_int
 
 log = logging.getLogger(__name__)
 
@@ -133,11 +136,7 @@ def connected_components(
     # than the graph itself: collect the two long columns and solve
     # exactly on the driver, one job total.
     n_edges = edges.count()
-    try:
-        raw = pairs.sparkSession.conf.get(SMALL_GRAPH_EDGES_CONF, None)
-    except Exception:
-        raw = None
-    cap = int(raw) if raw is not None else DEFAULT_SMALL_GRAPH_EDGES
+    cap = conf_int(pairs.sparkSession, SMALL_GRAPH_EDGES_CONF, DEFAULT_SMALL_GRAPH_EDGES, ComponentsError)
     if n_edges <= cap:
         import pandas as pd
 

@@ -32,6 +32,7 @@ import logging
 from pyspark.sql import DataFrame, functions as F
 
 from mysql_to_s3_spark.operators.dedup import SHINGLE_K, shingles
+from mysql_to_s3_spark.session import conf_int
 
 log = logging.getLogger(__name__)
 
@@ -103,12 +104,8 @@ def contamination_pairs(
     bsh = bsets.select("bench_id", F.size("s").alias("n_bench"), F.explode("s").alias("shingle"))
     if broadcast is None:
         if broadcast_max_shingles is None:
-            try:
-                raw = train.sparkSession.conf.get(BENCH_BROADCAST_CAP_CONF, None)
-            except Exception:
-                raw = None
-            broadcast_max_shingles = (
-                int(raw) if raw is not None else DEFAULT_BENCH_BROADCAST_CAP
+            broadcast_max_shingles = conf_int(
+                train.sparkSession, BENCH_BROADCAST_CAP_CONF, DEFAULT_BENCH_BROADCAST_CAP
             )
         # upper bound on the exploded shingle count WITHOUT shingling
         # twice: shingles() emits character k-grams, at most

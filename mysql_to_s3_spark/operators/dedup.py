@@ -36,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from mysql_to_s3_spark.functions.cachepool import cache_scoped
 from mysql_to_s3_spark.operators.text import fingerprint, words
 
 SHINGLE_K = 5  # character-shingle width
@@ -208,19 +207,18 @@ def ngram_jaccard_pairs(
         .withColumn("__hb__", _base_hashes(F.col("sh")))
         .repartition(par, "id")
     )
-    sets = cache_scoped(sets, "dedup.ngram.sets")
+    # every consumer of sets reads the one repartition exchange (Spark
+    # reuses identical exchanges within a plan); the prefix self-join's
+    # two sides are one subtree too, so neither frame is cached
     ex = sets.select("id", F.size("sh").alias("n"), F.explode("sh").alias("shingle"))
     dfreq = ex.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
     w = Window.partitionBy("id").orderBy("df", "shingle")
     prefix_len = F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1
-    # cached: the self-join below consumes prefix on BOTH sides — without
-    # it the df-count groupBy, join, and ranking window all run twice
-    prefix = cache_scoped(
+    prefix = (
         ex.join(dfreq, "shingle")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= prefix_len)
-        .select("id", "shingle", "rn", "n"),
-        "dedup.ngram.prefix",
+        .select("id", "shingle", "rn", "n")
     )
     # PPJoin refinements on the candidate join — both EXACT:
     #   length filter: J>=t forces t*|B| <= |A| (and symmetrically);
@@ -272,15 +270,7 @@ def ngram_jaccard_pairs(
         .filter(F.round(h_j, 6) >= F.lit(t) - F.lit(0.01))
         .select("a", "b")
     )
-    # pooled: the pair set is tiny relative to the corpus (it is the
-    # output of the >=t filter) but expensive to produce; consumers
-    # reference it more than once per plan (connected_components
-    # symmetrizes it via a two-branch union) and the bench/driver
-    # protocol re-builds it per action
-    return cache_scoped(
-        _verify_jaccard(likely, sets.select("id", "sh"), threshold),
-        "dedup.ngram.pairs",
-    )
+    return _verify_jaccard(likely, sets.select("id", "sh"), threshold)
 
 
 # universal-hash family over a 2^32 universe: h_i(x) = (a_i*x + b_i) mod P.
@@ -367,11 +357,11 @@ def minhash_lsh_pairs(
     """
     # spread the (CPU-heavy) minhash projection across cores — a small
     # corpus arrives as one parquet split, which would serialize all
-    # hash evaluations onto one task — and CACHE id/shingles/signature so
-    # every downstream consumer reads materialized columns. The repartition
-    # Exchange is ALSO the barrier that keeps Catalyst's projection
-    # collapse from re-expanding the per-shingle base hash into each of
-    # the n_hashes permutation expressions.
+    # hash evaluations onto one task — and CHECKPOINT id/shingles/signature
+    # so every downstream consumer reads materialized columns. The
+    # repartition Exchange is ALSO the barrier that keeps Catalyst's
+    # projection collapse from re-expanding the per-shingle base hash
+    # into each of the n_hashes permutation expressions.
     par = df.sparkSession.sparkContext.defaultParallelism
     sig = F.array(*_minhash_columns(F.col("__hb__"), n_hashes))
     sets = (
@@ -380,8 +370,10 @@ def minhash_lsh_pairs(
         .repartition(par, "id")
         .select("id", "sh", sig.alias("sig"))
     )
-    sets = cache_scoped(sets, "dedup.minhash.sets")
-    # band keys read the CACHED signature (element_at on a materialized
+    # a local checkpoint, not a cache: Spark frees it with the frame, so
+    # nothing outlives the caller's action
+    sets = sets.localCheckpoint(eager=False)
+    # band keys read the CHECKPOINTED signature (element_at on a materialized
     # column — safe to reference n_hashes times, unlike the raw minhash
     # expressions, which projection collapse would duplicate per band)
     band_rows = lsh_band_rows(sets, n_hashes, bands)
@@ -473,7 +465,9 @@ def simhash_pairs(
     relaxes the filter, so pigeonhole recall is unaffected."""
     n_chunks = max_hamming + 1
     width = 64 // n_chunks
-    sh = cache_scoped(simhash(df, id_col, text_col), "dedup.simhash")
+    # both sides of the chunk self-join are one subtree, so the simhash
+    # aggregate's exchange is reused, not recomputed
+    sh = simhash(df, id_col, text_col)
     chunks = sh.select(
         "id",
         "simhash",
@@ -557,11 +551,11 @@ def token_frame(
     """The shared tokenization upstream of the span operators: one row
     per doc with its raw-case token stream ``rt`` — the stream span
     window positions index and ``strip_duplicated_spans`` rebuilds from.
-    Pool it with ``cache_scoped`` when one corpus feeds several span
-    consumers (the ``pairs=`` hook convention of
-    pipeline.split_leakage) — each operator's ``toks=`` parameter then
-    reuses this single scan+tokenize instead of re-deriving it;
-    semantics of every consumer are exactly the no-pool path's."""
+    When one corpus feeds several span consumers, the caller may cache
+    it (the ``pairs=`` hook convention of pipeline.split_leakage) — each
+    operator's ``toks=`` parameter then reuses this single
+    scan+tokenize instead of re-deriving it; semantics of every consumer
+    are exactly the uncached path's."""
     return df.select(
         F.col(id_col).alias("id"),
         F.regexp_extract_all(F.col(text_col), F.lit(r"\w+|[^\w\s]"), 0).alias("rt"),
@@ -619,7 +613,7 @@ def span_windows(
     transform slices an attribute, never re-runs the regex. Docs with
     fewer than k tokens contribute no rows.
 
-    Pool with ``cache_scoped`` when several span operators consume one
+    The caller may cache it when several span operators consume one
     corpus and pass it via their ``wins=`` parameter — the r9 pooling
     reversal (SCALE.md) showed caching the raw array<string> token
     frame LOSES to recompute, but this frame is three fixed-width-ish
@@ -675,11 +669,11 @@ def duplicated_span_fraction(
       3. the per-doc roll-up is a count-sum re-agg on the doc id.
     No join carries document text; nothing is all-pairs.
 
-    ``toks=`` (r9): pass a pooled ``token_frame(...)`` to reuse one
+    ``toks=`` (r9): pass a cached ``token_frame(...)`` to reuse one
     scan+tokenize across the span-operator family; the span keys are
     then derived from its ``rt`` stream, so output is identical.
 
-    ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
+    ``wins=`` (r11): pass a cached ``span_windows(...)`` frame to skip
     the tokenize+window+md5 derivation entirely — the span stream is
     then exactly its (id, key) projection (identical keys by
     construction), and one cached reduced frame feeds both this measure
@@ -825,11 +819,11 @@ def strip_duplicated_spans(
          times), left-joined with the rebuilt texts.
     Nothing is all-pairs; duplicated-span text never shuffles at all.
 
-    ``toks=`` (r9): pass a pooled ``token_frame(...)`` to reuse one
+    ``toks=`` (r9): pass a cached ``token_frame(...)`` to reuse one
     scan+tokenize across the span-operator family (its ``rt`` stream is
     exactly the frame built here).
 
-    ``wins=`` (r11): pass a pooled ``span_windows(...)`` frame to skip
+    ``wins=`` (r11): pass a cached ``span_windows(...)`` frame to skip
     the window-key derivation — its windows are the ones built here
     (same raw token positions, same keys), and one cached reduced frame
     feeds both this rewrite and ``duplicated_span_fraction``.
@@ -862,10 +856,11 @@ def strip_duplicated_spans(
             ).alias("pos"),
         )
     )
-    # pooled: consumed by BOTH the (id,pos) anti-join and the affected-id
-    # distinct below — two narrow int columns, tiny relative to the
-    # token stream it would otherwise re-derive per consumer
-    covered = cache_scoped(covered, "dedup.span.covered")
+    # consumed by BOTH the (id,pos) anti-join and the affected-id distinct
+    # below — two narrow int columns, tiny relative to the token stream
+    # each branch would otherwise re-derive. A local checkpoint, freed
+    # with the frame, so nothing outlives the caller's action
+    covered = covered.localCheckpoint(eager=False)
     affected = covered.select("id").distinct()
     # rebuild stream: tokenize AFFECTED docs only. With raw input the
     # semi-join runs on (id, text) BEFORE the tokenize projection, so

@@ -147,13 +147,13 @@ def exact_screen_against_index(
     so the screen silently falls back to the plain anti-join — correct
     either way, just without the routing. A missing sidecar (checked
     by error CLASS, not message substring) falls back the same way.
-    The flagged frame is scope-cached: both route branches consume it,
-    and an uncached union would re-run the whole upstream lineage
+    The flagged frame is checkpointed (``localCheckpoint(eager=False)``,
+    freed with the frame): both route branches consume it, and an
+    uncheckpointed union would re-run the whole upstream lineage
     (fingerprints + the Arrow bloom kernel included) once per branch.
     """
     from pyspark.errors import AnalysisException
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
     from mysql_to_s3_spark.operators.bloom import (
         BloomError,
         bloom_might_contain,
@@ -183,9 +183,7 @@ def exact_screen_against_index(
         flag = bloom_might_contain(
             F.col("__fp__"), side["bitmap"], side["m_bits"], side["k"]
         )
-        flagged = cache_scoped(
-            with_fp.withColumn("__maybe__", flag), "dedup_index.bloom_flag"
-        )
+        flagged = with_fp.withColumn("__maybe__", flag).localCheckpoint(eager=False)
         definite_new = flagged.filter(~F.col("__maybe__")).drop("__maybe__")
         maybe = flagged.filter(F.col("__maybe__")).drop("__maybe__")
         screened = maybe.join(
@@ -212,19 +210,16 @@ def dedup_index_pairs(
     fingerprint — a deliberate superset of the raw-shingle operator
     (normalized-exact copies are duplicates even when case/whitespace
     shifts their raw shingles). Only the new batch is shingled."""
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
     spark = new_df.sparkSession
     meta = spark.read.parquet(path + "/meta").first()
     n_hashes, bands = int(meta.n_hashes), int(meta.bands)
     idx_docs = spark.read.parquet(path + "/docs")
     idx_bands = spark.read.parquet(path + "/bands")
 
-    # scoped cache (LRU per family, evicted frames unpersisted) — a bare
-    # .persist() would pin the batch's shingle sets until session end
-    new_docs = cache_scoped(
-        _doc_rows(new_df, id_col, text_col, n_hashes, int(meta.shingle_k)),
-        "dedup_index.new_docs",
+    # checkpointed, not cached: the band rows and both staged joins read
+    # the signature, and Spark frees the checkpoint with the frame
+    new_docs = _doc_rows(new_df, id_col, text_col, n_hashes, int(meta.shingle_k)).localCheckpoint(
+        eager=False
     )
     cand = (
         lsh_band_rows(new_docs, n_hashes, bands)

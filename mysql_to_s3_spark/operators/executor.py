@@ -40,7 +40,6 @@ from mysql_to_s3_spark.functions.compiler import (
     Schema,
     compile_expression,
 )
-from mysql_to_s3_spark.functions.cachepool import cache_scoped
 from mysql_to_s3_spark.operators.windows import apply_window
 from mysql_to_s3_spark.plans.domains import compile_domain, range_edge_buckets
 from mysql_to_s3_spark.plans.normalize import EdgeClause, QueryOp, SelectClause
@@ -370,12 +369,15 @@ def _edges_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
     sel_aggs = [s for s in q.select if s.aggregate != "none"]
     aggs = [_agg_column(df2, s, schema, approx=q.approx) for s in sel_aggs]
     sparse = df2.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-
-    # sparse is consumed once per default-domain discovery and once by the
-    # densify join — cache so the scan+shuffle+agg runs exactly once;
-    # scoped so the NEXT edges query releases this one (bounded memory
-    # across a long catalog run)
-    sparse = cache_scoped(sparse, "edges.sparse")
+    doms = [
+        compile_domain(e.domain if e.range is None else {**e.domain, "type": e.domain.get("type", "range")})
+        for e in q.edges
+    ]
+    if any(dom.part_python_values() is None for dom in doms):
+        # a default domain's discovery collect reads sparse, and so does
+        # the densify join: checkpoint so the scan+shuffle+agg runs once.
+        # Spark frees the checkpoint with the frame; nothing outlives it.
+        sparse = sparse.localCheckpoint(eager=False)
 
     # Dense cube frame: the cross product of per-edge part lists, built
     # DRIVER-side in one partition. Every domain is bounded (declared parts
@@ -384,8 +386,7 @@ def _edges_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
     # createDataFrame frames would multiply partition counts (32 x 32 ...)
     # into hundreds of near-empty tasks of pure scheduling overhead.
     part_lists: list[list] = []
-    for e, key in zip(q.edges, keys):
-        dom = compile_domain(e.domain if e.range is None else {**e.domain, "type": e.domain.get("type", "range")})
+    for e, key, dom in zip(q.edges, keys, doms):
         vals = dom.part_python_values()
         if vals is None:
             # default domain: parts discovered from the data

@@ -52,6 +52,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mysql_to_s3_spark.operators.text import TOKEN_RE, tokens
+from mysql_to_s3_spark.session import conf_int
 
 
 class LmError(ValueError):
@@ -283,7 +284,7 @@ def unigram_scorer(counts, *, alpha: float = 1.0, spark=None):
         # the valve: fetch at most cap+1 rows (ONE job — LIMIT
         # short-circuits, and the driver transfer is bounded by the cap
         # even when the model is huge)
-        cap = int(spark.conf.get(LM_COLLECT_CAP_CONF, str(DEFAULT_LM_COLLECT_CAP)))
+        cap = conf_int(spark, LM_COLLECT_CAP_CONF, DEFAULT_LM_COLLECT_CAP, LmError)
         rows = [(r.token, r.n) for r in counts.limit(cap + 1).collect()]
         if len(rows) > cap:
             raise LmError(

@@ -305,17 +305,15 @@ def exact_percentile_grouped(
         F.max(F.when(F.col("__v__") < F.col("__lo__"), F.col("__v__"))).alias("__vb__"),
         F.min(F.when(F.col("__v__") > F.col("__hi__"), F.col("__v__"))).alias("__va__"),
     )
-    # PERSIST the decision frame (one row per group, tiny): the good /
+    # CHECKPOINT the decision frame (one row per group, tiny): the good /
     # flagged / fallback branches and the validation action all read
     # g2, and the KLL sketch underneath is NOT deterministic across
-    # re-evaluations (merge order follows shuffle-fetch order) — an
-    # uncached g2 could flip a borderline group between ok and ~ok
-    # between jobs, emitting it twice or losing it. MEMORY_AND_DISK so
-    # eviction spills instead of recomputing; the validation count()
-    # below materializes it.
-    from pyspark import StorageLevel
-
-    g2 = g2_plan.persist(StorageLevel.MEMORY_AND_DISK)
+    # re-evaluations (merge order follows shuffle-fetch order) — a
+    # recomputed g2 could flip a borderline group between ok and ~ok
+    # between jobs, emitting it twice or losing it. The validation
+    # count() below materializes it; unlike persist(), the local
+    # checkpoint is freed with the frame instead of pinning the session.
+    g2 = g2_plan.localCheckpoint(eager=False)
     lt, nin = F.col("__lt__"), F.col("__in__")
     point_mass = F.col("__lo__") == F.col("__hi__")
 

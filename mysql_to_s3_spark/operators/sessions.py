@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from mysql_to_s3_spark.session import conf_int
+
 # conf-key fallback for funnel_within(max_events_per_key=...) — the same
 # skew-valve contract as the snowflake child cap (snowflake.py:
 # CHILD_CAP_CONF). None/unset = unbounded (exact over every key).
@@ -160,11 +162,7 @@ def funnel_within(
     k = len(steps)
     mask = F.array(*[F.coalesce(p.cast("boolean"), F.lit(False)) for p in steps])
     if max_events_per_key is None:
-        try:
-            raw = df.sparkSession.conf.get(FUNNEL_EVENT_CAP_CONF, None)
-        except Exception:
-            raw = None
-        max_events_per_key = int(raw) if raw is not None else None
+        max_events_per_key = conf_int(df.sparkSession, FUNNEL_EVENT_CAP_CONF)
     dropped = None
     if max_events_per_key is not None:
         # Skew valve (the snowflake child-cap contract): a bot/service key

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.dedup import cosine
+from mysql_to_s3_spark.session import conf_int
 
 EMBED_DIM = 64
 N_HYPERPLANES = 8
@@ -419,11 +420,7 @@ def ivf_search_index_batch(
         raise KnnError(f"nprobe must be >= 1, got {nprobe}")
     _require_integral_id(queries, q_id_col, "query")
     if query_cap is None:
-        try:
-            raw = queries.sparkSession.conf.get(KNN_QUERY_CAP_CONF, None)
-        except Exception:
-            raw = None
-        query_cap = int(raw) if raw is not None else DEFAULT_KNN_QUERY_CAP
+        query_cap = conf_int(queries.sparkSession, KNN_QUERY_CAP_CONF, DEFAULT_KNN_QUERY_CAP, KnnError)
     qrows = queries.select(
         F.col(q_id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")
     ).limit(query_cap + 1).collect()
@@ -1051,11 +1048,7 @@ def knn_join(
     _require_integral_id(queries, q_id_col, "query")
     _require_integral_id(corpus, id_col, "corpus")
     if query_cap is None:
-        try:
-            raw = queries.sparkSession.conf.get(KNN_QUERY_CAP_CONF, None)
-        except Exception:
-            raw = None
-        query_cap = int(raw) if raw is not None else DEFAULT_KNN_QUERY_CAP
+        query_cap = conf_int(queries.sparkSession, KNN_QUERY_CAP_CONF, DEFAULT_KNN_QUERY_CAP, KnnError)
     hard_cap = query_cap * max_query_blocks
     qrows = queries.select(
         F.col(q_id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")

@@ -825,17 +825,15 @@ def prepare_corpus(
         stages.append(("exact_dedup", out))
 
     if cfg.near_dup is not None:
-        from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
         # r10 optimization (guide §5): the survivors frame at this
         # boundary is consumed at least three times — both sides of the
         # near-dup pair self-join, the keeper anti-join, and every
         # downstream stage — and the pair join's consumer
-        # (connected_components) runs eager driver-side rounds, so each
-        # re-read would re-run the whole gate chain above. Pool it once;
-        # Spark's MEMORY_AND_DISK default degrades to disk at scale, and
-        # an evicted block silently recomputes from lineage.
-        out = cache_scoped(out, "prepare_corpus:near_input")
+        # (connected_components) runs eager driver-side jobs, so each
+        # re-read would re-run the whole gate chain above. Checkpoint it
+        # once; Spark frees the checkpoint with the frame, so nothing
+        # outlives the caller's action.
+        out = out.localCheckpoint(eager=False)
         pairs = _near_dup_pairs(out, cfg)
         out = dedup_by_components(out, pairs, id_col=cfg.id_col)
         stages.append(("near_dedup", out))

@@ -1237,7 +1237,7 @@ _q(
             # r8: the EDGE-LESS global window (reference global-sort
             # semantics, SURVEY §2.5 row 48) under the hard gate — the
             # bounded-row guard (windows._guard_global_window) admits the
-            # frame after its memoized limit-count, then the single-task
+            # frame after its limit-count, then the single-task
             # global rownum runs; event_id is unique, so the order is
             # total and the result engine-independent at any sf
             {"name": "gseq", "sort": ["event_id"]},
@@ -1777,19 +1777,14 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
     from mysql_to_s3_spark.sources.registry import load_table, spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
-    # r10: pool ONE (doc_id, fp) frame across the row's legs — the
+    # r10: cache ONE (doc_id, fp) frame across the row's legs — the
     # normalize+md5 fingerprint is an O(doc length) regex pass over the
     # full corpus, and the batch, stream, and bloomf legs each consumed
     # it independently (3 full-corpus evaluations per action; measured
-    # 35-47 executor-CPU-seconds warm at sf0.1). cache_scoped on a
-    # reduced projection (never the bare scan — the CacheManager
-    # substitution hazard) computes it once per session.
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
-    fpf = cache_scoped(
-        docs.select("doc_id", fingerprint(F.col("text")).alias("fp")),
-        "dedup_exact:fp",
-    )
+    # 35-47 executor-CPU-seconds warm at sf0.1). Caching a reduced
+    # projection (never the bare scan — the CacheManager substitution
+    # hazard) computes it once per action.
+    fpf = docs.select("doc_id", fingerprint(F.col("text")).alias("fp")).cache()
     batch = exact_dedup(fpf, fp_col="fp").select("fp", "keeper", "n_dupes")
 
     def _run_stream_dedup():
@@ -1902,7 +1897,7 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
         "bloomf",
         lambda: bloom_build(fpf.filter(d % 3 == 0).select("fp"), "fp", 1024, 3),
     )
-    # fp read from the pooled frame (computed once per session), so the
+    # fp read from the cached frame (computed once per action), so the
     # 3 bloom probes hash a materialized 16-char column, never the doc
     bloom_leg = fpf.select(
         "fp",
@@ -2033,8 +2028,6 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> dict:
     from mysql_to_s3_spark.pipeline import split_leakage
     from mysql_to_s3_spark.sources.registry import load_table
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
     docs = load_table(spark, sf_dir, "documents")
 
     def _run_stream_near():
@@ -2116,12 +2109,12 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> dict:
 
     flagged = _fit_drained(spark, sf_dir, "neardup_stream", _run_stream_near)
     sflag = spark.createDataFrame([(i,) for i in flagged], "a bigint")
-    # ONE pooled pair scan feeds both legs (split_leakage's pairs=
+    # ONE cached pair scan feeds both legs (split_leakage's pairs=
     # hook): the branches' exchange subtrees differ (project vs label
     # join), so Spark's ReusedExchange cannot deduplicate them —
-    # cache_scoped can, and the pairs frame is a derived join output,
+    # a cache can, and the pairs frame is a derived join output,
     # never a bare table scan (the CacheManager pushdown hazard)
-    p = cache_scoped(minhash_lsh_pairs(docs, threshold=0.9), "dedup_minhash_lsh")
+    p = minhash_lsh_pairs(docs, threshold=0.9).cache()
     labeled = docs.withColumn(
         "split", hash_split(F.col("doc_id"), _SPLIT_FRACTIONS)
     )
@@ -2449,17 +2442,13 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unigram-LM perplexity leg (operators/lm.py, self-fit add-alpha
     # model, exact JVM join path; the zero-shuffle Arrow unigram_scorer
     # is unit-verified equal in tests/test_lm.py)
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
 
-    # pooled: the lm score frame feeds THREE consumers in this row (the
+    # cached: the lm score frame feeds THREE consumers in this row (the
     # lm_logprob join, the ppl_bucket boundary agg, and the ppl_bucket
-    # assignment join) — without the pool the explode+join+agg scoring
-    # recomputes once per consumer. Safe to pool: an aggregated frame,
+    # assignment join) — without the cache the explode+join+agg scoring
+    # recomputes once per consumer. Safe to cache: an aggregated frame,
     # never a bare table scan (the CacheManager substitution hazard).
-    lm = cache_scoped(
-        unigram_logprob(docs, id_col="doc_id", text_col="text"),
-        "text_quality:lm",
-    )
+    lm = unigram_logprob(docs, id_col="doc_id", text_col="text").cache()
     lm2 = bigram_logprob(docs, id_col="doc_id", text_col="text")
     # cls_label (r7): the fastText-shaped classifier gate under the hard
     # oracle via a LEARNABLE-RULE contract — train in-row on a label the
@@ -2511,16 +2500,13 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arithmetic, so the summed weight sits under the value-hash gate.
     from mysql_to_s3_spark.operators.dsir import dsir_logratio, dsir_topk, hashed_ngram_counts
 
-    # pooled (r9): the weight frame feeds TWO consumers — the dsir column
+    # cached (r9): the weight frame feeds TWO consumers — the dsir column
     # join and the dsir_top25 Gumbel selection
-    dsir = cache_scoped(
-        dsir_logratio(
-            docs.select("doc_id", "text"),
-            hashed_ngram_counts(docs.filter(F.col("lang") == "en")),
-            hashed_ngram_counts(docs),
-        ),
-        "text_quality:dsir",
-    )
+    dsir = dsir_logratio(
+        docs.select("doc_id", "text"),
+        hashed_ngram_counts(docs.filter(F.col("lang") == "en")),
+        hashed_ngram_counts(docs),
+    ).cache()
     # dsir_top25 (r9): the paper's Gumbel-top-k resample under the hard
     # gate. The sort key is built from the 6dp-ROUNDED weight (the dsir
     # leg proves round(w,6) is bit-equal cross-engine) plus the
@@ -2704,19 +2690,18 @@ def _text_winnow_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fp_sum"),
     )
     # r11 (verdict item 3): the REDUCED (id, start, key) window frame is
-    # pooled ONCE and feeds BOTH token-level legs (spanf + sp) — one
+    # cached ONCE and feeds BOTH token-level legs (spanf + sp) — one
     # tokenize+window+md5 pass instead of two, and ~20 bytes + one
     # 32-char key per window in the cache. This is NOT the r9 reversal's
     # loser: that A/B cached the raw array<string> token frame (columnar
     # (de)serialization of two token arrays exceeded the regex
     # recompute, SCALE.md "Winnow row pooling reversal"); span_windows
     # is the reduced projection the legs actually shuffle. The bench
-    # releases the pool before every timed action, so each action pays
+    # clears the cache before every timed action, so each action pays
     # the build exactly once.
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped as _cs
     from mysql_to_s3_spark.operators.dedup import span_windows
 
-    wins = _cs(span_windows(docs, k=5), "winnow.wins")
+    wins = span_windows(docs, k=5).cache()
     # leg: cross-doc duplicated-span fraction (Lee et al. exact-substring
     # signal, k=5 token windows, md5 span keys)
     spanf = duplicated_span_fraction(docs, k=5, min_docs=2, wins=wins)
@@ -3067,7 +3052,6 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> dict:
     """
     from pyspark.sql import functions as F
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
     from mysql_to_s3_spark.operators.decontam import contamination_pairs
     from mysql_to_s3_spark.sources.registry import load_table
 
@@ -3083,13 +3067,12 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> dict:
     # sparse (df_bench per shingle ~1) AND what makes a hit meaningful
     # broadcast=True: the bench frame IS a fixed-size eval suite (the
     # operator's documented fast path) — skips the per-build guard job.
-    # Pooled: the row's three bench actions each re-ran the containment
+    # Cached: the row's three bench actions each re-ran the containment
     # join (~6 s at sf0.1) for an output of a few dozen pairs.
-    pairs = cache_scoped(
-        contamination_pairs(docs, bench, threshold=0.5, k=13, broadcast=True).select(
-            "train_id", "bench_id", "overlap", "overlap_frac"
-        ),
-        "decontam.pairs",
+    pairs = (
+        contamination_pairs(docs, bench, threshold=0.5, k=13, broadcast=True)
+        .select("train_id", "bench_id", "overlap", "overlap_frac")
+        .cache()
     )
 
     def _run_stream_decontam():
@@ -3159,14 +3142,15 @@ _q(
 
 # driver-side fit artifacts (KMeans centroids / PQ codebooks) cached per
 # (kind, session, sf_dir) so the bench min-of-2 and repeated driver checks
-# pay the distributed fit once — the cachepool contract for plain Python
-# lists instead of DataFrames
+# pay the distributed fit once
 _FIT_CACHE: dict[tuple, object] = {}
 
 
-def _fit_cached(spark: SparkSession, sf_dir: str, kind: str, fit):
-    from mysql_to_s3_spark.functions.cachepool import _session_key
+def _session_key(spark: SparkSession) -> str:
+    return str(spark._jsparkSession.sessionUUID())
 
+
+def _fit_cached(spark: SparkSession, sf_dir: str, kind: str, fit):
     key = (kind, _session_key(spark), sf_dir)
     if key not in _FIT_CACHE:
         _FIT_CACHE[key] = fit()
@@ -3237,16 +3221,13 @@ _PLAN_MEMO_KINDS = frozenset({"prep_plan"})
 def release_plan_memos(spark: SparkSession) -> None:
     """Reset cross-action warm state that would let a repeat bench
     iteration skip a headline operator's own compute (r10 verdict: the
-    bench's min-of-2 must price the PLAN, not a warm cache): drop every
-    pooled ``cache_scoped`` frame and the _FIT_CACHE plan memos
-    (_PLAN_MEMO_KINDS). Within-plan pooling is untouched in effect — a
-    frame consumed several times inside ONE execution is re-cached by
-    that execution itself — only reuse ACROSS driver actions is
-    forfeited. Correctness-unaffected: released frames recompute from
-    lineage."""
-    from mysql_to_s3_spark.functions import cachepool
-
-    cachepool.release_all()
+    bench's min-of-2 must price the PLAN, not a warm cache): clear the
+    session's CacheManager (the catalog rows' own ``.cache()`` frames)
+    and drop the _FIT_CACHE plan memos (_PLAN_MEMO_KINDS). A frame
+    consumed several times inside ONE execution is re-cached by that
+    execution itself — only reuse ACROSS driver actions is forfeited.
+    Correctness-unaffected: released frames recompute from lineage."""
+    spark.catalog.clearCache()
     for key in [k for k in _FIT_CACHE if k[0] in _PLAN_MEMO_KINDS]:
         _FIT_CACHE.pop(key, None)
 
@@ -3572,29 +3553,21 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
         doc_frame,
     )
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
-    # ONE pooled scan of each FACT-SIDE input across the doc/ext/ref legs
-    # (every leg works on order keys < 100, so the pooled frames carry
+    # ONE cached scan of each FACT-SIDE input across the doc/ext/ref legs
+    # (every leg works on order keys < 100, so the cached frames carry
     # that filter — keep it in sync with the ids=range(100) below).
-    # Pooling the PRE-FILTERED frame, not the bare scan, is load-bearing:
+    # Caching the PRE-FILTERED frame, not the bare scan, is load-bearing:
     # Spark's CacheManager substitutes a cached plan into ANY query whose
     # subtree matches it, so caching a bare full-table scan here would
     # silently replace other queries' parquet scans session-wide and
     # destroy their filter/column pushdown (observed: the pushdown plan
     # assertions in tests/test_plans.py fail when this row runs first).
-    # customer stays unpooled — its keys are unbounded and it is a small
+    # customer stays uncached — its keys are unbounded and it is a small
     # broadcast dim anyway.
     tables = {
-        "orders": cache_scoped(
-            load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100),
-            "snowflake_denormalize:orders",
-        ),
+        "orders": load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") < 100).cache(),
         "customer": load_table(spark, sf_dir, "customer"),
-        "lineitem": cache_scoped(
-            load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100),
-            "snowflake_denormalize:lineitem",
-        ),
+        "lineitem": load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 100).cache(),
     }
     meta = [
         TableMeta("orders", tables["orders"].columns, ["o_orderkey"]),
@@ -3707,13 +3680,13 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
         unique_index,
     )
 
-    # `semi`: the id-batch LeftSemi over the pooled orders scan
+    # `semi`: the id-batch LeftSemi over the cached orders scan
     batch_ids = [k for k in range(100) if k % 3 == 0]
     semi_leg = semi_join_ids(tables["orders"], batch_ids, "o_orderkey").select(
         F.col("o_orderkey").cast("bigint").alias("okey"),
     )
 
-    # `hidx` + `uniqf` share one projected child frame off the pooled scan
+    # `hidx` + `uniqf` share one projected child frame off the cached scan
     li = tables["lineitem"].select("l_orderkey", "l_linenumber", "l_quantity")
     hidx_leg = hash_index(li, ["l_orderkey"]).select(
         F.col("l_orderkey").cast("bigint").alias("okey"),
@@ -4424,8 +4397,6 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
     from mysql_to_s3_spark.pipeline import CorpusConfig, prepare_corpus
     from mysql_to_s3_spark.sources.registry import load_table, spread
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
     docs = spread(load_table(spark, sf_dir, "documents"))
     bench = docs.filter((F.col("doc_id") % 7 == 0) & (F.col("doc_id") < 3500))
     cfg = CorpusConfig(splits=_SPLIT_FRACTIONS, **_PIPE_CFG)
@@ -4441,7 +4412,7 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
         spark, sf_dir, "prep_plan",
         lambda: prepare_corpus(docs, cfg, bench=bench),
     )
-    # pool the two expensive boundaries: without this, the near-dup
+    # cache the two expensive boundaries: without this, the near-dup
     # pair join + components run once per leg that contains them (kept +
     # 3 funnel counts) and decontam 3x. Spark's CacheManager substitutes
     # the cached plan as a SUBTREE of every downstream leg, so caching
@@ -4449,7 +4420,7 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
     # The cached frames are doc-survivor sets (corpus-linear, tiny).
     for name, sdf in prep.stages:
         if name in ("near_dedup", "decontam"):
-            cache_scoped(sdf, f"pipeline_prepare:{name}")
+            sdf.cache()
     kept = prep.docs.select(
         F.col("doc_id").cast("bigint").alias("key"),
         F.col("split").alias("tag"),
@@ -5335,17 +5306,16 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> dict:
     The drain is _fit_cached per (session, sf): bench iterations after
     the first price the batch plan, the counters-leg convention.
 
-    All batch legs read ONE pooled scan of the events table
-    (cachepool.cache_scoped) instead of five parquet scans.
+    All batch legs read ONE cached scan of the events table instead of
+    five parquet scans.
     """
     from pyspark.sql import functions as F
 
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
     from mysql_to_s3_spark.operators.joins import interval_join
     from mysql_to_s3_spark.operators.sessions import funnel, funnel_within, session_stats
     from mysql_to_s3_spark.sources.registry import load_table
 
-    ev = cache_scoped(load_table(spark, sf_dir, "events"), "temporal_events")
+    ev = load_table(spark, sf_dir, "events").cache()
     probe = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     quote = ev.filter(F.col("event_type") == "signup").select(
         "user_id", "ts", F.col("value").alias("sv")
@@ -5358,35 +5328,29 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> dict:
     # separate asof_join calls is pinned by tests/test_joins.py.
     from mysql_to_s3_spark.operators.joins import asof_join_multi
 
-    asof4 = cache_scoped(
-        asof_join_multi(
-            probe,
-            quote,
-            by=["user_id"],
-            value_cols=["sv"],
-            quote_tiebreak="sv",
-            specs=[
-                ("asof", "backward", None),
-                ("asoff", "forward", None),
-                ("asofn", "nearest", None),
-                ("asoft", "backward", "2 days"),
-            ],
-        ),
-        "temporal_events:asof4",
-    ).select(
+    asof4 = asof_join_multi(
+        probe,
+        quote,
+        by=["user_id"],
+        value_cols=["sv"],
+        quote_tiebreak="sv",
+        specs=[
+            ("asof", "backward", None),
+            ("asoff", "forward", None),
+            ("asofn", "nearest", None),
+            ("asoft", "backward", "2 days"),
+        ],
+    ).cache().select(
         F.col("leg"),
         F.col("event_id").alias("a"),
         F.col("user_id").alias("b"),
         F.col("ts").alias("t1"),
         F.col("sv").cast("double").alias("x"),
     )
-    # pooled (r10): sess feeds THREE consumers (the sess leg, the
+    # cached (r10): sess feeds THREE consumers (the sess leg, the
     # interval-join probe resolution, and the srange stream staging) —
     # one window pass instead of three
-    sess = cache_scoped(
-        session_stats(ev, by=["user_id"], gap="30 minutes"),
-        "temporal_events:sess",
-    )
+    sess = session_stats(ev, by=["user_id"], gap="30 minutes").cache()
     rng = interval_join(
         ev.select("event_id", "user_id", "ts"),
         sess.select(

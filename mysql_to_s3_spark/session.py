@@ -43,3 +43,18 @@ def get_spark(app_name: str = "mysql_to_s3_spark", cpus: int | None = None) -> S
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def conf_int(
+    spark: SparkSession, key: str, default: int | None = None, error: type[Exception] = ValueError
+) -> int | None:
+    """Integer session conf ``key``, ``default`` when unset. Any other
+    value raises ``error`` (the caller module's error class) naming the
+    key, instead of a bare ``int()`` error or a silent fallback."""
+    raw = spark.conf.get(key, None)
+    if raw is None:
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        raise error(f"{key} must be an integer, got {raw!r}") from None

@@ -21,6 +21,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row
 
+from mysql_to_s3_spark.session import conf_int
+
 
 def scrub(value: Any) -> Any:
     """Drop null, empty string, empty dict/list; collapse 1-element lists
@@ -98,13 +100,7 @@ def collect_docs(df: DataFrame, fact_name: str, etl: dict | None = None) -> list
     set -1 to disable) — pointing it at a full table is a driver OOM at
     scale. Production writes go through ``write_json_lines``, which
     streams the identical scrubbed JSON through the file committer."""
-    raw = df.sparkSession.conf.get(COLLECT_DOCS_MAX_ROWS_CONF, str(COLLECT_DOCS_MAX_ROWS_DEFAULT))
-    try:
-        limit = int(raw)
-    except ValueError:
-        raise SinkError(
-            f"{COLLECT_DOCS_MAX_ROWS_CONF} must be an integer (-1 = unbounded), got {raw!r}"
-        ) from None
+    limit = conf_int(df.sparkSession, COLLECT_DOCS_MAX_ROWS_CONF, COLLECT_DOCS_MAX_ROWS_DEFAULT, SinkError)
     if limit >= 0 and df.limit(limit + 1).count() > limit:
         raise SinkError(
             f"collect_docs is the bounded driver-side path and the input "

@@ -42,6 +42,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mysql_to_s3_spark.session import conf_int
+
 
 class SnowflakeError(ValueError):
     pass
@@ -363,29 +365,17 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     )
 
 
-def _conf_int(df: DataFrame, key: str) -> int | None:
-    """Integer conf ``key``, None when unset; any other value raises
-    naming the key."""
-    raw = df.sparkSession.conf.get(key, None)
-    if raw is None:
-        return None
-    try:
-        return int(raw)
-    except ValueError:
-        raise SnowflakeError(f"{key} must be an integer, got {raw!r}") from None
-
-
 def _resolved_child_cap(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
     if cfg is not None and cfg.child_cap is not None:
         return int(cfg.child_cap)
-    return _conf_int(df, CHILD_CAP_CONF)
+    return conf_int(df.sparkSession, CHILD_CAP_CONF, error=SnowflakeError)
 
 
 def _resolved_child_salt(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
     if cfg is not None and cfg.child_salt is not None:
         n = int(cfg.child_salt)
     else:
-        n = _conf_int(df, CHILD_SALT_CONF) or 0
+        n = conf_int(df.sparkSession, CHILD_SALT_CONF, 0, SnowflakeError)
     return n if n > 1 else None
 
 

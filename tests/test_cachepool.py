@@ -1,11 +1,16 @@
-"""cachepool contract: plan-fingerprint keying lets interleaved
-pipelines of one family stay warm (round-3 verdict item: the old
-single-slot-per-family pool thrashed on interleaving)."""
+"""Library operators keep no cache between actions: after an operator
+call, and after collecting its result, the session's CacheManager holds
+nothing the operator registered, and an identical second call returns
+the same rows. Caching is the caller's explicit choice (the catalog
+rows' ``.cache()`` frames), and ``release_plan_memos`` clears exactly
+that plus the plan memos."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from mysql_to_s3_spark.functions import cachepool
-from mysql_to_s3_spark.functions.cachepool import cache_scoped, release_all
+
+def _cache_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def _corpus(spark, tag, n):
@@ -14,77 +19,23 @@ def _corpus(spark, tag, n):
     )
 
 
-def test_interleaved_same_family_both_stay_cached(spark):
-    release_all()
-    a = _corpus(spark, "a", 10)
-    b = _corpus(spark, "b", 20)
-    ca = cache_scoped(a, "fam")
-    cb = cache_scoped(b, "fam")
-    # re-submitting either plan hits ITS warm cache — not a thrash of one slot
-    assert cache_scoped(_corpus(spark, "a", 10), "fam") is ca
-    assert cache_scoped(_corpus(spark, "b", 20), "fam") is cb
-    assert ca.is_cached and cb.is_cached
-    release_all()
-
-
-def test_capacity_evicts_oldest(spark):
-    release_all()
-    frames = [cache_scoped(_corpus(spark, f"t{i}", 5 + i), "fam") for i in range(cachepool.FAMILY_CAPACITY + 1)]
-    # the oldest plan fell out of the LRU; a re-submit re-caches a NEW frame
-    again = cache_scoped(_corpus(spark, "t0", 5), "fam")
-    assert again is not frames[0]
-    # the newest survivors are still hits
-    assert cache_scoped(_corpus(spark, f"t{cachepool.FAMILY_CAPACITY}", 5 + cachepool.FAMILY_CAPACITY), "fam") is frames[-1]
-    release_all()
-
-
-def test_release_all_unpersists(spark):
-    release_all()
-    c = cache_scoped(_corpus(spark, "x", 7), "fam2")
-    assert c.is_cached
-    release_all()
-    assert not c.is_cached
-    assert cachepool._POOL == {}
-
-
-def test_external_clearcache_rehydrates_pool_hit(spark):
-    """spark.catalog.clearCache() wipes the JVM registration under a
-    pooled frame; the next cache_scoped for the same plan must detect
-    the stale hit and re-cache instead of serving a frame that silently
-    recomputes on every use (the test_plans ordering bug, generalized)."""
-    from pyspark.sql import functions as F
-
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped
-
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    a = cache_scoped(df, "clearcache_probe")
-    a.count()
-    assert a.storageLevel.useMemory or a.storageLevel.useDisk
-    spark.catalog.clearCache()
-    assert not (a.storageLevel.useMemory or a.storageLevel.useDisk)
-    b = cache_scoped(spark.range(100).withColumn("v", F.col("id") * 2), "clearcache_probe")
-    assert b.storageLevel.useMemory or b.storageLevel.useDisk
-
-
 def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
-    """The r11 bench-honesty hook: release_plan_memos must drop every
-    pooled frame AND the plan-memo _FIT_CACHE kinds (prep_plan), while
-    leaving genuine model/index fits and drain receipts warm."""
+    """The bench-honesty hook: release_plan_memos must leave the
+    CacheManager empty (the catalog rows' own cached frames) AND drop the
+    plan-memo _FIT_CACHE kinds (prep_plan), while leaving genuine
+    model/index fits and drain receipts warm."""
     from mysql_to_s3_spark import queries as cat
-    from mysql_to_s3_spark.functions import cachepool
-    from mysql_to_s3_spark.functions.cachepool import cache_scoped, release_all
 
-    release_all()
-    c = cache_scoped(_corpus(spark, "pm", 9), "fam_pm")
-    assert c.is_cached
-    skey = cachepool._session_key(spark)
+    c = _corpus(spark, "pm", 9).cache()
+    c.count()
+    assert c.is_cached and not _cache_empty(spark)
+    skey = cat._session_key(spark)
     cat._FIT_CACHE[("prep_plan", skey, "/fake/sf")] = "memoised composition"
     cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] = "a model fit"
     cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] = [1, 2, 3]
     try:
         cat.release_plan_memos(spark)
-        assert not c.is_cached
-        assert cachepool._POOL == {}
+        assert _cache_empty(spark)
         assert ("prep_plan", skey, "/fake/sf") not in cat._FIT_CACHE
         assert cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] == "a model fit"
         assert cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] == [1, 2, 3]
@@ -92,3 +43,99 @@ def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
         cat._FIT_CACHE.pop(("clsgate", skey, "/fake/sf"), None)
         cat._FIT_CACHE.pop(("prep_stream", skey, "/fake/sf"), None)
         cat._FIT_CACHE.pop(("prep_plan", skey, "/fake/sf"), None)
+
+
+def _edges(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.executor import run
+
+    return run(
+        {
+            "from": "orders",
+            "edges": ["o_orderstatus", "o_orderpriority"],
+            "select": [{"name": "n", "value": ".", "aggregate": "count"}],
+        },
+        spark=spark,
+        sf_dir=sf_dir,
+    )
+
+
+def _prepare(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.pipeline import CorpusConfig, prepare_corpus
+
+    return prepare_corpus(docs, CorpusConfig(near_dup="ngram", near_threshold=0.9)).docs
+
+
+def _minhash(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.dedup import minhash_lsh_pairs
+
+    return minhash_lsh_pairs(docs, threshold=0.9)
+
+
+def _simhash(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.dedup import simhash_pairs
+
+    return simhash_pairs(docs, max_hamming=3)
+
+
+def _spans(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.dedup import strip_duplicated_spans
+
+    return strip_duplicated_spans(docs, k=5)
+
+
+def _exact_screen(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.dedup_index import exact_screen_against_index
+
+    return exact_screen_against_index(docs, index, use_bloom=True)
+
+
+def _index_screen(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.dedup_index import dedup_against_index
+
+    return dedup_against_index(docs, index, threshold=0.9)
+
+
+def _percentile(spark, sf_dir, docs, index):
+    from mysql_to_s3_spark.operators.quantiles import exact_percentile_grouped
+    from mysql_to_s3_spark.sources.registry import load_table
+
+    return exact_percentile_grouped(
+        load_table(spark, sf_dir, "lineitem"), ["l_returnflag"], "l_quantity", 0.9
+    )
+
+
+@pytest.fixture(scope="module")
+def screen_inputs(spark, sf_dir, tmp_path_factory):
+    """The sf documents, and a dedup index with a fresh bloom sidecar
+    built from their first half (so the bloom path routes both ways)."""
+    from mysql_to_s3_spark.operators.bloom import write_bloom_sidecar
+    from mysql_to_s3_spark.operators.dedup_index import write_dedup_index
+    from mysql_to_s3_spark.sources.registry import load_table
+
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    n = docs.count()
+    index = str(tmp_path_factory.mktemp("nocache") / "idx")
+    write_dedup_index(docs.filter(F.col("doc_id") < n // 2), index)
+    write_bloom_sidecar(index, spark)
+    spark.catalog.clearCache()
+    return docs, index
+
+
+@pytest.mark.parametrize(
+    "call",
+    [_edges, _prepare, _minhash, _simhash, _spans, _exact_screen, _index_screen, _percentile],
+    ids=lambda f: f.__name__.lstrip("_"),
+)
+def test_operator_leaves_no_cached_frame(spark, sf_dir, screen_inputs, call):
+    """A library operator registers nothing with Spark's CacheManager
+    that outlives its own call, so a query's plan and cost do not depend
+    on what ran before it in the session."""
+    docs, index = screen_inputs
+    spark.catalog.clearCache()
+    df = call(spark, sf_dir, docs, index)
+    assert _cache_empty(spark), "the call left a cached frame"
+    first = sorted(map(tuple, df.collect()), key=repr)
+    assert _cache_empty(spark), "the collect left a cached frame"
+    again = sorted(map(tuple, call(spark, sf_dir, docs, index).collect()), key=repr)
+    assert again == first
+    assert _cache_empty(spark)

@@ -906,18 +906,12 @@ def test_asof_join_multi_plan_has_single_exchange(spark, sf_dir):
     legs (the separate plans paid one Exchange each)."""
     from mysql_to_s3_spark.operators.joins import asof_join_multi
 
-    # the temporal row POOLS its fused as-of frame (cache_scoped); when
-    # the full suite has built that row first, the CacheManager
-    # substitutes an InMemoryTableScan into this identical plan and the
-    # stored plan text doubles the Exchange count — release the as-of
-    # (and its events-scan input) pools so this plan is uncached,
-    # WITHOUT clearCache()'s session-wide wipe of every other family's
-    # warm pool (r10 advice; cache_scoped re-caches stale hits, so even
-    # a wipe is correctness-safe — this is just the targeted form)
-    from mysql_to_s3_spark.functions.cachepool import release
-
-    release("temporal_events:asof4")
-    release("temporal_events")
+    # the temporal row caches its fused as-of frame; when the full suite
+    # has built that row first, the CacheManager substitutes an
+    # InMemoryTableScan into this identical plan and the stored plan text
+    # doubles the Exchange count — clear the catalog's cached frames so
+    # this plan is uncached
+    spark.catalog.clearCache()
 
     ev = load_table(spark, sf_dir, "events")
     probe = ev.filter(F.col("event_type") == "purchase").select(
