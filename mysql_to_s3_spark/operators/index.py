@@ -12,8 +12,7 @@ validate key uniqueness. The Spark forms keep the DATA distributed:
                  (fail_on_dup=True analog) using a distributed count —
                  no data ever reaches the driver.
   semi_join_ids  the id-batch semi-join (extract.py:193-198): restrict a
-                 fact to a batch of ids with a broadcast LeftSemi — the
-                 join the snowflake doc_frame uses per batch.
+                 fact to a batch of ids with a broadcast LeftSemi.
 
 100 TB: one hash shuffle to build either index (partial-aggregatable);
 lookups broadcast only the PROBE side (assumed to be a bounded id batch),

@@ -3,19 +3,22 @@ JSON batches (reference mysql_to_s3/extract.py:40 Extract).
 
 The reference's thread/queue machinery (extract.py:86-118) dissolves into
 Spark's scheduler: the driver loop only decides BATCH BOUNDARIES, and each
-batch is one declarative doc_frame -> sink write.
+batch is one range filter on a declarative document frame -> sink write.
 
 Keyset batches (reference extract.py:156-183): ``Extract.batches`` runs the
 counter-chain keying (``batch_key_columns``, one window over the fact
 table) ONCE per run and collects, per batch key, the first and last
 ``(field, *id_columns)`` position and the batch's min id.
+``Extract.documents`` builds the document frame of the whole fact ONCE per
+run; it carries those positions raw (``doc_frame(positions=...)``).
 ``Extract.ids_for_batch`` turns one batch into a literal lexicographic
-range filter on the fact, so a batch reads no window: the separate
-``field >= lo AND field <= hi`` conjunct pushes into Parquet/JDBC scans,
-the id tiebreak keeps the range exact when equal field values straddle a
-batch boundary, and when the field is the children's join key Catalyst
-infers the same bound on each child scan through the left-outer join. The
-id columns must be a key (non-null, unique) for the order to be total.
+range filter on the position columns, so a batch reads no window and
+builds no join: the separate ``field >= lo AND field <= hi`` conjunct
+pushes through the left-outer joins into Parquet/JDBC scans, the id
+tiebreak keeps the range exact when equal field values straddle a batch
+boundary, and when the field is the children's join key Catalyst infers
+the same bound on each child scan. The id columns must be a key
+(non-null, unique) for the order to be total.
 
 Checkpoint/resume keeps the reference's [start_point, first_value]
 contract (extract.py:94-110,254); ``first_value`` comes from the collected
@@ -26,6 +29,7 @@ atomically.
 from __future__ import annotations
 
 import json
+import logging
 import operator
 import os
 from dataclasses import dataclass
@@ -36,8 +40,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_to_s3_spark.sinks.json_sink import etl_envelope, write_json_lines
-from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, doc_frame
+from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, doc_frame, position_column
 from mysql_to_s3_spark.streaming.counters import batch_key_columns
+
+log = logging.getLogger(__name__)
 
 
 class ExtractError(ValueError):
@@ -187,12 +193,20 @@ class Extract:
         )
         return [Batch((r[0], r[1]), tuple(r["lo"]), tuple(r["hi"]), r["first"]) for r in rows]
 
-    def ids_for_batch(self, batch: Batch) -> DataFrame:
-        """The fact rows of ``batch``: a literal lexicographic range on
-        ``(field, *id_columns)``, with the field's own range as a separate
-        (pushable) conjunct."""
+    def documents(self) -> DataFrame:
+        """The document frame of the whole fact, carrying the raw
+        ``(field, *id_columns)`` positions in ``doc_frame``'s position
+        columns; ``run`` builds it once and writes each batch as an
+        ``ids_for_batch`` filter on it."""
+        names = [c for c, _ in self._positions()]
+        return doc_frame(self.tables, self.plan, self.snowflake, positions=names)
+
+    def ids_for_batch(self, batch: Batch, docs: DataFrame) -> DataFrame:
+        """The rows of ``docs`` (a ``documents`` frame) in ``batch``: a
+        literal lexicographic range on the position columns, with the
+        field's own range as a separate (pushable) conjunct."""
         positions = self._positions()
-        cols = [F.col(c) for c, _ in positions]
+        cols = [F.col(position_column(i)) for i in range(len(positions))]
         lo = [_literal(v, t) for (_, t), v in zip(positions, batch.lo)]
         hi = [_literal(v, t) for (_, t), v in zip(positions, batch.hi)]
         cond = (cols[0] >= lo[0]) & (cols[0] <= hi[0])
@@ -202,7 +216,7 @@ class Extract:
                 & _lexicographic(cols, lo, operator.gt, operator.ge)
                 & _lexicographic(cols, hi, operator.lt, operator.le)
             )
-        return self.tables[self.plan.table].filter(cond)
+        return docs.filter(cond)
 
     def run(
         self,
@@ -218,21 +232,29 @@ class Extract:
             if cp:
                 done_after = cp[0]
 
+        todo = [b for b in self.batches() if done_after is None or b.key > done_after]
+        if not todo:
+            return []
+        docs = self.documents()
+        pos_cols = [position_column(i) for i in range(len(self._positions()))]
         written = []
-        for batch in self.batches():
-            if done_after is not None and batch.key <= done_after:
-                continue
+        for batch in todo:
             validate_key_format(self.extract.key_format, batch.key)
             key = key_string(batch.key)
-            tables = dict(self.tables)
-            tables[self.plan.table] = self.ids_for_batch(batch)
-            docs = doc_frame(tables, self.plan, self.snowflake)
             path = os.path.join(self.extract.destination, key)
+            log.info(
+                "extract batch %s -> %s",
+                key,
+                path,
+                extra={"batch_key": key, "lo": list(batch.lo), "hi": list(batch.hi), "path": path},
+            )
             etl = etl_envelope(
                 etl_id=key,
                 source={"name": self.extract.source_name or self.plan.table},
             )
-            write_json_lines(docs, path, self.plan.table, etl=etl)
+            write_json_lines(
+                self.ids_for_batch(batch, docs).drop(*pos_cols), path, self.plan.table, etl=etl
+            )
             written.append(path)
             if self.extract.last:
                 write_checkpoint(self.extract.last, batch.key, batch.first)

@@ -36,6 +36,7 @@ reference's unbounded contract.
 from __future__ import annotations
 
 import itertools
+from collections.abc import Sequence
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame
@@ -317,9 +318,17 @@ def build_plan(
 _uid = itertools.count()
 
 
-def _normalize_table(df: DataFrame, cfg: SnowflakeConfig) -> DataFrame:
+def position_column(i: int) -> str:
+    """The reserved top-level column in which ``doc_frame(positions=...)``
+    carries its ``i``-th position column."""
+    return f"__pos{i}__"
+
+
+def _normalize_table(df: DataFrame, cfg: SnowflakeConfig, raw: Sequence[str] = ()) -> DataFrame:
     """Sentinel null mapping (extract.py:266 null_values) + dates -> unix
-    seconds (mo_times convention: dates are numbers at the JX boundary)."""
+    seconds (mo_times convention: dates are numbers at the JX boundary).
+    Each ``raw`` column is also carried unnormalized as its
+    ``position_column``, so a filter on it keeps the column's own type."""
     out = []
     for f in df.schema.fields:
         c = F.col(f.name)
@@ -328,6 +337,7 @@ def _normalize_table(df: DataFrame, cfg: SnowflakeConfig) -> DataFrame:
         elif isinstance(f.dataType, (T.DateType, T.TimestampType, T.TimestampNTZType)):
             c = c.cast("timestamp").cast("double")
         out.append(c.alias(f.name))
+    out += [F.col(c).alias(position_column(i)) for i, c in enumerate(raw)]
     return df.select(*out)
 
 
@@ -569,12 +579,19 @@ def doc_frame(
     plan: FactPlan,
     cfg: SnowflakeConfig,
     ids: list | None = None,
+    positions: Sequence[str] = (),
 ) -> DataFrame:
     """One row per fact row: (__id__, <fact_table> struct) with dims inner
     and children nested arrays. ``ids`` (small list -> pushed-down isin)
-    selects those fact rows; a batch of a large extract instead passes a
-    range-filtered fact frame in ``tables`` (``Extract.ids_for_batch``)."""
-    norm = {name: _normalize_table(df, cfg) for name, df in tables.items()}
+    selects those fact rows. Each fact column named in ``positions`` is
+    also carried raw as the top-level ``position_column(i)``: a keyset
+    extract builds this frame once and selects each batch with a range
+    filter on those columns, which Catalyst pushes through the joins to
+    the fact scan (``Extract.ids_for_batch``)."""
+    norm = {
+        name: _normalize_table(df, cfg, positions if name == plan.table else ())
+        for name, df in tables.items()
+    }
     fact = norm[plan.table]
     id_col = plan.id_columns[0]
     if ids is not None:
@@ -584,4 +601,5 @@ def doc_frame(
     return df.select(
         F.col(id_col).alias("__id__"),
         F.struct(*[c.alias(n) for n, c in fields]).alias(plan.table),
+        *[position_column(i) for i in range(len(positions))],
     )

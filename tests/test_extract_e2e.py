@@ -5,6 +5,7 @@ import datetime as dt
 import functools
 import glob
 import json
+import logging
 import os
 import re
 
@@ -21,7 +22,7 @@ from mysql_to_s3_spark.sources.extract import (
     read_checkpoint,
     write_checkpoint,
 )
-from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, build_plan
+from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, build_plan, position_column
 from mysql_to_s3_spark.streaming.counters import batch_key_columns
 from tests.fixtures_snowflake import RELATIONS, TABLES_META, build_tables
 
@@ -82,6 +83,34 @@ def test_extract_resume_skips_done_batches(spark, tmp_path):
     assert again == []
 
 
+def test_extract_run_builds_the_document_frame_once(spark, tmp_path, monkeypatch):
+    """A 3-batch run plans the snowflake join once; each batch is a range
+    filter on that one frame."""
+    calls = []
+    real = extract.doc_frame
+
+    def counting(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(extract, "doc_frame", counting)
+    assert len(_setup(spark, tmp_path).run()) == 3
+    assert len(calls) == 1
+
+
+def test_extract_run_logs_each_batch(spark, tmp_path, caplog):
+    """One structured record per batch: its key, bounds and output path,
+    all driver-side values of the collected batches."""
+    ex = _setup(spark, tmp_path)
+    with caplog.at_level(logging.INFO, logger="mysql_to_s3_spark.sources.extract"):
+        written = ex.run()
+    records = [r for r in caplog.records if r.name == "mysql_to_s3_spark.sources.extract"]
+    assert [(r.batch_key, r.path) for r in records] == [(os.path.basename(p), p) for p in written]
+    batches = ex.batches()
+    assert [(r.lo, r.hi) for r in records] == [(list(b.lo), list(b.hi)) for b in batches]
+    assert records[0].lo == [10] and records[-1].hi == [22]
+
+
 def test_checkpoint_write_is_atomic(tmp_path, monkeypatch):
     """A write that dies half way leaves the previous checkpoint whole and
     no temp file behind."""
@@ -123,8 +152,8 @@ def test_read_checkpoint_rejects_malformed_file(tmp_path, content):
         read_checkpoint(str(path))
 
 
-# -- keyset batches: the literal range of ids_for_batch(b) holds exactly the
-# rows batch_key_columns assigns to b --
+# -- keyset batches: the literal range of ids_for_batch(b, documents())
+# holds exactly the rows batch_key_columns assigns to b --
 
 _T0 = dt.datetime(2024, 3, 1, tzinfo=dt.timezone.utc)
 
@@ -170,9 +199,12 @@ def test_keyset_batch_membership(spark, shape, data):
     assert [b.key for b in batches] == sorted(want)
     got: dict[tuple, list] = {}
     if batches:
-        tagged = [ex.ids_for_batch(b).withColumn("__b__", F.lit(i)) for i, b in enumerate(batches)]
+        docs = ex.documents()
+        tagged = [ex.ids_for_batch(b, docs).withColumn("__b__", F.lit(i)) for i, b in enumerate(batches)]
+        # every shape's fact columns are its (f, *id_columns) positions
+        cols = [position_column(j) for j in range(len(fact.columns))]
         for r in functools.reduce(lambda x, y: x.unionByName(y), tagged).collect():
-            got.setdefault(batches[r["__b__"]].key, []).append(tuple(r[c] for c in fact.columns))
+            got.setdefault(batches[r["__b__"]].key, []).append(tuple(r[c] for c in cols))
     assert {k: sorted(v) for k, v in got.items()} == {k: sorted(v) for k, v in want.items()}
     for b in batches:
         assert b.first == min(row[fact.columns.index(id_columns[0])] for row in want[b.key])

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.executor import run
+from mysql_to_s3_spark.sources.snowflake import CHILD_CAP_CONF, CHILD_SALT_CONF
 
 
 def plan_of(df) -> str:
@@ -151,31 +152,30 @@ def test_temporal_events_legs_share_one_cached_scan(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 5, plan[:2000]
 
 
-def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path):
-    """One keyset batch of the orders extract (customer -> nation -> region
-    dims, lineitem children carrying part and supplier) reads its batch as
-    a literal range: no Window and no SinglePartition exchange re-key the
-    fact table, and the batch's l_orderkey bound reaches the lineitem
-    scan, so the child aggregation covers the batch, not the table."""
-    from mysql_to_s3_spark.sources.extract import Extract, ExtractConfig
+_EXTRACT_IDS = {
+    "orders": ["o_orderkey"],
+    "customer": ["c_custkey"],
+    "nation": ["n_nationkey"],
+    "region": ["r_regionkey"],
+    "lineitem": ["l_orderkey", "l_linenumber"],
+    "part": ["p_partkey"],
+    "supplier": ["s_suppkey"],
+}
+
+
+def _written_batch(spark, sf_dir, tmp_path, monkeypatch, field, start):
+    """The frame ``Extract.run`` hands the sink for the middle keyset batch
+    of the sf orders extract (customer -> nation -> region dims, lineitem
+    children carrying part and supplier), and that batch."""
+    from mysql_to_s3_spark.sources import extract
     from mysql_to_s3_spark.sources.registry import load_table
     from mysql_to_s3_spark.sources.snowflake import (
         Relation,
         SnowflakeConfig,
         TableMeta,
         build_plan,
-        doc_frame,
     )
 
-    ids = {
-        "orders": ["o_orderkey"],
-        "customer": ["c_custkey"],
-        "nation": ["n_nationkey"],
-        "region": ["r_regionkey"],
-        "lineitem": ["l_orderkey", "l_linenumber"],
-        "part": ["p_partkey"],
-        "supplier": ["s_suppkey"],
-    }
     rels = [
         Relation("orders_customer", "orders", ["o_custkey"], "customer", ["c_custkey"]),
         Relation("customer_nation", "customer", ["c_nationkey"], "nation", ["n_nationkey"]),
@@ -184,22 +184,74 @@ def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path):
         Relation("lineitem_part", "lineitem", ["l_partkey"], "part", ["p_partkey"]),
         Relation("lineitem_supplier", "lineitem", ["l_suppkey"], "supplier", ["s_suppkey"]),
     ]
-    tables = {t: load_table(spark, sf_dir, t) for t in ids}
+    tables = {t: load_table(spark, sf_dir, t) for t in _EXTRACT_IDS}
     cfg = SnowflakeConfig(fact_table="orders")
-    plan = build_plan([TableMeta(t, tables[t].columns, c) for t, c in ids.items()], rels, cfg)
-    ex = Extract(tables, plan, cfg, ExtractConfig(
-        field="o_orderkey", start=0, batch=1000, destination=str(tmp_path)
+    plan = build_plan([TableMeta(t, tables[t].columns, c) for t, c in _EXTRACT_IDS.items()], rels, cfg)
+    ex = extract.Extract(tables, plan, cfg, extract.ExtractConfig(
+        field=field, start=start, batch=1000, destination=str(tmp_path)
     ))
     batches = ex.batches()
-    batch = batches[len(batches) // 2]
-    batch_tables = dict(tables, orders=ex.ids_for_batch(batch))
-    text = plan_of(doc_frame(batch_tables, plan, cfg))
+    written = []
+    monkeypatch.setattr(ex, "batches", lambda: batches)
+    monkeypatch.setattr(extract, "write_json_lines", lambda df, *a, **k: written.append(df))
+    ex.run()
+    assert len(written) == len(batches) > 1
+    return written[len(batches) // 2], batches[len(batches) // 2]
 
-    assert not re.search(r"\bWindow\b", text), text
+
+def _pushed(text: str, table: str) -> str:
+    scans = [b for b in text.split("\n\n") if "Scan parquet" in b and f"{table}.parquet" in b]
+    assert len(scans) == 1, text
+    return re.search(r"PushedFilters: \[(.*)\]", scans[0]).group(1)
+
+
+@pytest.mark.parametrize(
+    "child_conf", [None, CHILD_CAP_CONF, CHILD_SALT_CONF], ids=["plain", "childCap", "childSalt"]
+)
+def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path, monkeypatch, child_conf):
+    """The frame ``Extract.run`` writes for one keyset batch reads its
+    batch as a literal range: no Window and no SinglePartition exchange
+    re-key the fact table, and the batch's bound reaches the orders scan
+    and, through the left joins and the child collect (plain, capped or
+    salted), the lineitem scan, so the child aggregation covers the
+    batch, not the table."""
+    if child_conf:
+        spark.conf.set(child_conf, "4")
+    try:
+        docs, batch = _written_batch(spark, sf_dir, tmp_path, monkeypatch, "o_orderkey", 0)
+    finally:
+        if child_conf:
+            spark.conf.unset(child_conf)
+    text = plan_of(docs)
+
+    if child_conf == CHILD_CAP_CONF:
+        # the cap's per-order row numbering over lineitem is the only window
+        keys = re.findall(r"windowspecdefinition\(([^,]+),", text)
+        assert keys and all(k.startswith("l_orderkey#") for k in keys), text
+    else:
+        assert not re.search(r"\bWindow\b", text), text
     assert "SinglePartition" not in text, text
     (lo,), (hi,) = batch.lo, batch.hi
-    scans = [b for b in text.split("\n\n") if "Scan parquet" in b and "lineitem.parquet" in b]
-    assert len(scans) == 1, text
-    pushed = re.search(r"PushedFilters: \[(.*)\]", scans[0]).group(1)
-    assert f"GreaterThanOrEqual(l_orderkey,{lo})" in pushed, pushed
-    assert f"LessThanOrEqual(l_orderkey,{hi})" in pushed, pushed
+    for table, col in (("orders", "o_orderkey"), ("lineitem", "l_orderkey")):
+        pushed = _pushed(text, table)
+        assert f"GreaterThanOrEqual({col},{lo})" in pushed, pushed
+        assert f"LessThanOrEqual({col},{hi})" in pushed, pushed
+
+
+def test_extract_timestamp_batch_pushes_raw_bound(spark, sf_dir, tmp_path, monkeypatch):
+    """A timestamp extract field keeps its own type in the document
+    frame's position columns (the documents themselves carry it as unix
+    seconds), so the batch's timestamp bound pushes into the orders
+    scan."""
+    import datetime as dt
+
+    start = dt.datetime(1992, 1, 1, tzinfo=dt.timezone.utc)
+    docs, batch = _written_batch(spark, sf_dir, tmp_path, monkeypatch, "o_orderdate", start)
+    pushed = _pushed(plan_of(docs), "orders")
+    # the bounds travel as epoch microseconds; the scan shows them to the minute
+    lo, hi = (
+        (dt.datetime(1970, 1, 1) + dt.timedelta(microseconds=b[0])).strftime("%Y-%m-%dT%H:%M")
+        for b in (batch.lo, batch.hi)
+    )
+    assert f"GreaterThanOrEqual(o_orderdate,{lo}" in pushed, pushed
+    assert f"LessThanOrEqual(o_orderdate,{hi}" in pushed, pushed
