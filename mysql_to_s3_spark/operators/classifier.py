@@ -39,8 +39,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from mysql_to_s3_spark.session import conf_int
-
 TOKEN_PATTERN = r"\w+|[^\w\s]"  # mirrors operators/text.TOKEN_RE
 
 
@@ -121,12 +119,10 @@ def fit_partitions(
     fit's ``max_iter`` iterations pays one gradient job over the frame,
     so dozens of near-empty partitions are pure scheduler overhead
     (r10: 50 iterations x 32 micro-partitions measured 29.8 s vs 13.5 s
-    after narrowing). Conf ``mysql_to_s3_spark.classifier.fitPartitions``
-    pins the value (a positive integer; 0, the default, means derive,
-    and anything else raises ``ClassifierError``); otherwise it is
-    derived from the optimizer's size estimate of the (label, text)
-    projection — one partition per ``bytes_per_partition``, floored at
-    ``floor`` and capped at ``defaultParallelism`` (gradient jobs cannot use more slots than
+    after narrowing). The count is derived from the optimizer's size
+    estimate of the (label, text) projection — one partition per
+    ``bytes_per_partition``, floored at ``floor`` and capped at
+    ``defaultParallelism`` (gradient jobs cannot use more slots than
     the cluster has cores; beyond that every extra partition is pure
     per-iteration overhead) — so a corpus-scale fit keeps cluster-wide
     parallelism while a local fit is not scheduler-bound. The cap also
@@ -136,12 +132,6 @@ def fit_partitions(
     import math
 
     spark = df.sparkSession
-    key = "mysql_to_s3_spark.classifier.fitPartitions"
-    pinned = conf_int(spark, key, 0, ClassifierError)
-    if pinned < 0:
-        raise ClassifierError(f"{key} must be a non-negative integer (0 = derive), got {pinned!r}")
-    if pinned > 0:
-        return pinned
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:

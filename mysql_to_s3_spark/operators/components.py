@@ -22,7 +22,7 @@ O(log n) rounds overall.
 
 100 TB story: the pair graph is the OUTPUT of a >=t similarity filter,
 orders of magnitude smaller than its corpus, so it is first sized with
-one count and — at or below a conf-capped edge budget — solved exactly
+one count and — at or below a fixed edge budget — solved exactly
 on the driver by union-find (two long columns over Arrow; zero shuffle
 rounds). Above the cap, each round is two shuffle joins + one
 partial-agg min on the node key — no collect, no driver-side graph. The edge frame is
@@ -49,20 +49,17 @@ import logging
 
 from pyspark.sql import DataFrame, functions as F
 
-from mysql_to_s3_spark.session import conf_int
-
 log = logging.getLogger(__name__)
 
 # Edge-count valve for the driver fast path: a symmetrized pair graph at
 # or below this many edges is solved by an exact union-find on the
-# driver (two long columns via Arrow — ~16 MB at the default cap)
+# driver (two long columns via Arrow — ~16 MB at the cap)
 # instead of the iterative shuffle rounds. Near-dup pair graphs are tiny
 # relative to their corpus (pairs are the *output* of a >=t similarity
 # filter), so in practice even 100 TB corpora produce graphs the valve
 # catches; the distributed pointer-jumping path stays the fallback and
-# is what the property tests pin (conf 0 forces it).
-SMALL_GRAPH_EDGES_CONF = "mysql_to_s3_spark.components.smallGraphEdges"
-DEFAULT_SMALL_GRAPH_EDGES = 1_000_000
+# is what the property tests pin (patching this to 0 forces it).
+SMALL_GRAPH_EDGES = 1_000_000
 
 
 class ComponentsError(ValueError):
@@ -136,8 +133,7 @@ def connected_components(
     # than the graph itself: collect the two long columns and solve
     # exactly on the driver, one job total.
     n_edges = edges.count()
-    cap = conf_int(pairs.sparkSession, SMALL_GRAPH_EDGES_CONF, DEFAULT_SMALL_GRAPH_EDGES, ComponentsError)
-    if n_edges <= cap:
+    if n_edges <= SMALL_GRAPH_EDGES:
         import pandas as pd
 
         # Arrow transfer both ways: two long columns in, two out.

@@ -32,18 +32,16 @@ import logging
 from pyspark.sql import DataFrame, functions as F
 
 from mysql_to_s3_spark.operators.dedup import SHINGLE_K, shingles
-from mysql_to_s3_spark.session import conf_int
 
 log = logging.getLogger(__name__)
 
-# conf-key fallback for contamination_pairs(broadcast_max_shingles=...).
-# Bench sides at or under this many exploded shingles broadcast (the
-# fast path — eval suites are MBs); above it the join degrades to a
-# plain shuffle instead of OOMing every executor. 32M hashed shingles
+# default for contamination_pairs(broadcast_max_shingles=...). Bench
+# sides at or under this many exploded shingles broadcast (the fast
+# path — eval suites are MBs); above it the join degrades to a plain
+# shuffle instead of OOMing every executor. 32M hashed shingles
 # ≈ 256 MB of int64 keys — comfortably under a default 1 GiB executor
 # broadcast budget even with row overhead; string shingles are larger
 # per row, so the same count bound is the conservative one.
-BENCH_BROADCAST_CAP_CONF = "mysql_to_s3_spark.decontam.broadcastMaxShingles"
 DEFAULT_BENCH_BROADCAST_CAP = 32_000_000
 
 
@@ -56,7 +54,7 @@ def contamination_pairs(
     bench_id_col: str = "doc_id",
     text_col: str = "text",
     hashed: bool = False,
-    broadcast_max_shingles: int | None = None,
+    broadcast_max_shingles: int = DEFAULT_BENCH_BROADCAST_CAP,
     broadcast: bool | None = None,
 ) -> DataFrame:
     """(train_id, bench_id, overlap, overlap_frac) for every pair with
@@ -74,15 +72,14 @@ def contamination_pairs(
     screened pair — keep the exact string form only where results feed a
     value-equality parity check.
 
-    ``broadcast_max_shingles`` (or the ``BENCH_BROADCAST_CAP_CONF``
-    session conf) guards the bench-side broadcast: a bench side larger
-    than the cap falls back to a plain shuffle join (logged) instead of
-    broadcasting past executor memory — the valve for callers screening
-    corpus-vs-corpus through the ``hashed`` path. The size estimate is a
-    one-pass CHARACTER-length sum over the bench text — a true upper
-    bound on the exploded count, since ``shingles`` emits at most
-    length(text) distinct character k-grams per doc — NOT a second run
-    of the shingling; it is still one cheap Spark job at
+    ``broadcast_max_shingles`` guards the bench-side broadcast: a bench
+    side larger than the cap falls back to a plain shuffle join (logged)
+    instead of broadcasting past executor memory — the valve for callers
+    screening corpus-vs-corpus through the ``hashed`` path. The size
+    estimate is a one-pass CHARACTER-length sum over the bench text — a
+    true upper bound on the exploded count, since ``shingles`` emits at
+    most length(text) distinct character k-grams per doc — NOT a second
+    run of the shingling; it is still one cheap Spark job at
     DataFrame-construction time. Callers composing lazy pipelines who
     already know the answer can skip that job entirely with
     ``broadcast=True`` (bench is a fixed-size eval suite) or
@@ -103,10 +100,6 @@ def contamination_pairs(
     )
     bsh = bsets.select("bench_id", F.size("s").alias("n_bench"), F.explode("s").alias("shingle"))
     if broadcast is None:
-        if broadcast_max_shingles is None:
-            broadcast_max_shingles = conf_int(
-                train.sparkSession, BENCH_BROADCAST_CAP_CONF, DEFAULT_BENCH_BROADCAST_CAP
-            )
         # upper bound on the exploded shingle count WITHOUT shingling
         # twice: shingles() emits character k-grams, at most
         # length(text) distinct per doc (a word count would UNDERcount
@@ -150,7 +143,7 @@ def decontaminate(
     bench_id_col: str = "doc_id",
     text_col: str = "text",
     hashed: bool = False,
-    broadcast_max_shingles: int | None = None,
+    broadcast_max_shingles: int = DEFAULT_BENCH_BROADCAST_CAP,
     broadcast: bool | None = None,
 ) -> DataFrame:
     """Drop every contaminated doc from ``train`` — one left-anti join

@@ -49,16 +49,6 @@ class ExecutionError(ValueError):
     pass
 
 
-ALLOW_HAVING_CONF = "mysql_to_s3_spark.allowHaving"
-
-
-def _allow_having(spark: SparkSession | None) -> bool:
-    s = spark or SparkSession.getActiveSession()
-    if s is None:
-        return False
-    return str(s.conf.get(ALLOW_HAVING_CONF, "false")).lower() == "true"
-
-
 def run(
     query: dict | QueryOp,
     spark: SparkSession | None = None,
@@ -72,18 +62,13 @@ def run(
     temp view — the Spark analog of the reference's container registry
     (jx_base/container.py:22 type2container).
 
-    ``having`` (beyond-reference, conf-gated): with spark conf
-    ``mysql_to_s3_spark.allowHaving=true`` an aggregate query may carry
-    a ``having`` JX expression, compiled against the RESULT schema
+    ``having`` (beyond-reference): an aggregate query may carry a
+    ``having`` JX expression, compiled against the RESULT schema
     (select + edge names) and applied as a plain post-aggregate filter
     — the Spark plan is the same HashAggregate with a Filter on top, no
-    extra shuffle. Default stays reference-parity: QueryError.
+    extra shuffle.
     """
-    q = (
-        query
-        if isinstance(query, QueryOp)
-        else QueryOp.wrap(query, allow_having=_allow_having(spark))
-    )
+    q = query if isinstance(query, QueryOp) else QueryOp.wrap(query)
     df = _resolve_from(q.frum, spark, containers, sf_dir)
     schema = Schema.from_spark(df.schema)
 

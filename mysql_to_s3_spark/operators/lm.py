@@ -31,7 +31,7 @@ Scale design (100 TB):
   scoring is an Arrow ``pandas_udf`` over the text column — per-token
   lookups never touch a shuffle, and the plain column expression gates
   a streaming frame too. It collects the counts (one job) at
-  plan-build, behind the ``LM_COLLECT_CAP_CONF`` valve.
+  plan-build, behind the ``LM_COLLECT_CAP`` valve.
 
 Both forms compute the identical add-alpha model: with V = vocab rows
 and T = total token occurrences in ``counts``,
@@ -52,7 +52,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from mysql_to_s3_spark.operators.text import TOKEN_RE, tokens
-from mysql_to_s3_spark.session import conf_int
 
 
 class LmError(ValueError):
@@ -62,10 +61,9 @@ class LmError(ValueError):
 # Driver-OOM valve for the Arrow scorer: the broadcast-dict path COLLECTS
 # the model at plan-build, and an unbounded self-fit on a web-scale
 # corpus is an unbounded driver transfer. Same shape as decontam.py's
-# BENCH_BROADCAST_CAP_CONF — measure cheaply, refuse above a conf cap
-# instead of trusting a docstring.
-LM_COLLECT_CAP_CONF = "mysql_to_s3_spark.lm.collectCap"
-DEFAULT_LM_COLLECT_CAP = 2_000_000
+# broadcast cap — measure cheaply, refuse above a fixed cap instead of
+# trusting a docstring.
+LM_COLLECT_CAP = 2_000_000
 
 
 def _doc_tokens(text: Column) -> Column:
@@ -284,13 +282,12 @@ def unigram_scorer(counts, *, alpha: float = 1.0, spark=None):
         # the valve: fetch at most cap+1 rows (ONE job — LIMIT
         # short-circuits, and the driver transfer is bounded by the cap
         # even when the model is huge)
-        cap = conf_int(spark, LM_COLLECT_CAP_CONF, DEFAULT_LM_COLLECT_CAP, LmError)
-        rows = [(r.token, r.n) for r in counts.limit(cap + 1).collect()]
-        if len(rows) > cap:
+        rows = [(r.token, r.n) for r in counts.limit(LM_COLLECT_CAP + 1).collect()]
+        if len(rows) > LM_COLLECT_CAP:
             raise LmError(
-                f"unigram model exceeds {cap} rows; collecting it risks a driver "
-                f"OOM — cap it with unigram_counts(vocab_size=...), score with "
-                f"unigram_logprob (never collects), or raise {LM_COLLECT_CAP_CONF}"
+                f"unigram model exceeds {LM_COLLECT_CAP} rows; collecting it risks a "
+                "driver OOM — cap it with unigram_counts(vocab_size=...) or score "
+                "with unigram_logprob (never collects)"
             )
     else:
         rows = [(t, int(n)) for t, n in counts]

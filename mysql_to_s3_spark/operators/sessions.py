@@ -24,13 +24,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from mysql_to_s3_spark.session import conf_int
-
-# conf-key fallback for funnel_within(max_events_per_key=...) — the same
-# skew-valve contract as the snowflake child cap (snowflake.py:
-# CHILD_CAP_CONF). None/unset = unbounded (exact over every key).
-FUNNEL_EVENT_CAP_CONF = "mysql_to_s3_spark.funnel.eventCapPerKey"
-
 
 def sessionize(
     df: DataFrame,
@@ -146,14 +139,14 @@ def funnel_within(
     argument). O(n² · k) worst case per key inside whole-stage codegen;
     per-key memory is the event array — the same bound the trimmed-stats
     aggregate carries, and the practical one for per-user event counts.
-    ``max_events_per_key`` (or the ``FUNNEL_EVENT_CAP_CONF`` session
-    conf) is the skew valve for keys where that bound fails: keep the
-    first cap events per key (ts order, step-mask tiebreak) and report
-    the per-key ``n_dropped`` count — a capped key's result is computed
-    over its earliest cap events, the truncation is visible, and no
-    single task holds an unbounded array. Cross-checked against a
-    pure-Python reference implementation over randomized corpora
-    (hypothesis) in tests/test_sessions.py.
+    ``max_events_per_key`` (None = unbounded, exact over every key) is
+    the skew valve for keys where that bound fails: keep the first cap
+    events per key (ts order, step-mask tiebreak) and report the per-key
+    ``n_dropped`` count — a capped key's result is computed over its
+    earliest cap events, the truncation is visible, and no single task
+    holds an unbounded array. Cross-checked against a pure-Python
+    reference implementation over randomized corpora (hypothesis) in
+    tests/test_sessions.py.
     """
     if not by:
         raise ValueError("funnel_within requires at least one `by` key")
@@ -161,8 +154,6 @@ def funnel_within(
         raise ValueError("funnel_within requires at least one step predicate")
     k = len(steps)
     mask = F.array(*[F.coalesce(p.cast("boolean"), F.lit(False)) for p in steps])
-    if max_events_per_key is None:
-        max_events_per_key = conf_int(df.sparkSession, FUNNEL_EVENT_CAP_CONF)
     dropped = None
     if max_events_per_key is not None:
         # Skew valve (the snowflake child-cap contract): a bot/service key

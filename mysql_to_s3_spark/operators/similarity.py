@@ -23,8 +23,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.dedup import cosine
-from mysql_to_s3_spark.session import conf_int
 
+# default query_cap of knn_join / ivf_search_index_batch: the query side
+# collects to one driver/executor-resident float64 matrix, so it must be
+# bounded. 100k x 128-dim float64 = ~100 MB — the broadcast-budget ceiling.
+DEFAULT_KNN_QUERY_CAP = 100_000
 EMBED_DIM = 64
 N_HYPERPLANES = 8
 _SEED = 7
@@ -385,7 +388,7 @@ def ivf_search_index_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    query_cap: int | None = None,
+    query_cap: int = DEFAULT_KNN_QUERY_CAP,
 ) -> "DataFrame":
     """Batched multi-query search against a persisted IVF index: for
     every query vector, the top-``k`` (by cosine) among the vectors in
@@ -404,9 +407,8 @@ def ivf_search_index_batch(
     against its cell's query sub-matrix and emits <= k rows per
     (query, batch) under the final total order; ONE exchange on q_id
     ranks |Q| x k x n_batches rows, never the corpus. The query side
-    collects under the same cap/conf as `knn_join`
-    (``KNN_QUERY_CAP_CONF``) and raises ``KnnError`` past it — one
-    bounded matrix, never an executor OOM.
+    collects under the same ``query_cap`` as `knn_join` and raises
+    ``KnnError`` past it — one bounded matrix, never an executor OOM.
 
     ``round_to`` rounds cosines BEFORE ranking (engine-portable
     selection, the shared contract). Containment caveat: like every
@@ -419,16 +421,14 @@ def ivf_search_index_batch(
     if nprobe < 1:
         raise KnnError(f"nprobe must be >= 1, got {nprobe}")
     _require_integral_id(queries, q_id_col, "query")
-    if query_cap is None:
-        query_cap = conf_int(queries.sparkSession, KNN_QUERY_CAP_CONF, DEFAULT_KNN_QUERY_CAP, KnnError)
     qrows = queries.select(
         F.col(q_id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")
     ).limit(query_cap + 1).collect()
     if len(qrows) > query_cap:
         raise KnnError(
-            f"ivf_search_index_batch query side exceeds {query_cap} "
-            f"({KNN_QUERY_CAP_CONF}) — the query matrix rides the Arrow "
-            "kernel closure; raise the cap deliberately or run in blocks"
+            f"ivf_search_index_batch query side exceeds query_cap={query_cap} "
+            "— the query matrix rides the Arrow kernel closure; raise the "
+            "cap deliberately or run in blocks"
         )
     if not qrows:
         raise KnnError("ivf_search_index_batch query side is empty")
@@ -976,13 +976,6 @@ class KnnError(ValueError):
     pass
 
 
-# conf-key fallback for knn_join(query_cap=...): the query side collects
-# to one driver/executor-resident float64 matrix, so it must be bounded.
-# 100k x 128-dim float64 = ~100 MB — the broadcast-budget ceiling.
-KNN_QUERY_CAP_CONF = "mysql_to_s3_spark.similarity.knnQueryCap"
-DEFAULT_KNN_QUERY_CAP = 100_000
-
-
 def _require_integral_id(df: DataFrame, col: str, side: str) -> None:
     """The k-NN kernel carries ids as int64 through numpy/Arrow; a
     non-integral id would fail deep inside the UDF with an opaque cast
@@ -1008,7 +1001,7 @@ def knn_join(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    query_cap: int | None = None,
+    query_cap: int = DEFAULT_KNN_QUERY_CAP,
     max_query_blocks: int = 8,
 ) -> DataFrame:
     """EXACT multi-query top-k cosine join: for every query vector, the
@@ -1018,19 +1011,18 @@ def knn_join(
     columns must be integral (ids ride the Arrow kernel as int64;
     anything else raises ``KnnError`` up front).
 
-    Shape: the QUERY side collects to contiguous float64 matrices
-    riding the UDF closure, in BLOCKS of at most ``query_cap`` vectors
-    (``query_cap`` or ``KNN_QUERY_CAP_CONF``, default 100k — the
-    broadcast-budget ceiling per task). A query side larger than one
-    block runs one corpus pass per block and unions the per-block
-    candidates under ONE final window (blocks partition q_id, so the
-    union costs nothing extra there); above ``max_query_blocks`` blocks
-    it raises instead of scanning the corpus that many times — flip the
-    sides or use the LSH/IVF operators for corpus-vs-corpus work. The
-    CORPUS side never shuffles its vectors: each Arrow batch is ONE
-    numpy GEMM (Q x batch) per the dense-kernel discipline, and each
-    batch emits at most k rows per query, pruned under the SAME total
-    order the final ranking uses — so the per-query window ranks
+    Shape: the QUERY side collects to contiguous float64 matrices riding
+    the UDF closure, in BLOCKS of at most ``query_cap`` vectors (default
+    100k — the broadcast-budget ceiling per task). A query side larger
+    than one block runs one corpus pass per block and unions the
+    per-block candidates under ONE final window (blocks partition q_id,
+    so the union costs nothing extra there); above ``max_query_blocks``
+    blocks it raises instead of scanning the corpus that many times —
+    flip the sides or use the LSH/IVF operators for corpus-vs-corpus
+    work. The CORPUS side never shuffles its vectors: each Arrow batch
+    is ONE numpy GEMM (Q x batch) per the dense-kernel discipline, and
+    each batch emits at most k rows per query, pruned under the SAME
+    total order the final ranking uses — so the per-query window ranks
     |Q| x k x n_batches candidate rows, never the corpus. One exchange
     on q_id total.
 
@@ -1047,8 +1039,6 @@ def knn_join(
         raise KnnError(f"max_query_blocks must be >= 1, got {max_query_blocks}")
     _require_integral_id(queries, q_id_col, "query")
     _require_integral_id(corpus, id_col, "corpus")
-    if query_cap is None:
-        query_cap = conf_int(queries.sparkSession, KNN_QUERY_CAP_CONF, DEFAULT_KNN_QUERY_CAP, KnnError)
     hard_cap = query_cap * max_query_blocks
     qrows = queries.select(
         F.col(q_id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("v")
@@ -1058,7 +1048,7 @@ def knn_join(
             f"knn_join query side exceeds {query_cap} x {max_query_blocks} "
             "blocks; each block is one full corpus pass, so this would "
             f"scan the corpus > {max_query_blocks} times — raise "
-            f"{KNN_QUERY_CAP_CONF}/max_query_blocks deliberately, swap "
+            "query_cap/max_query_blocks deliberately, swap "
             "the sides, or use the LSH/IVF search operators for "
             "corpus-vs-corpus work"
         )

@@ -3,9 +3,8 @@
 Reimplements the backend-neutral normalization of the reference's
 ``QueryOp.wrap`` (vendor/jx_base/query.py:208-795): select/edges/groupby/
 window/sort normalization, DEFAULT_LIMIT/MAX_LIMIT caps, groupby-vs-edges
-exclusivity, ``having`` parsed-but-rejected by default (conf-gated
-post-aggregate filter extension behind ``allow_having=True`` /
-spark conf ``mysql_to_s3_spark.allowHaving``).
+exclusivity, and ``having`` as a post-aggregate filter (an extension:
+the reference parses it, then drops it).
 
 The normalized form:
 
@@ -112,10 +111,8 @@ class QueryOp:
     format: str = "list"
     destination: Any = None
     # post-aggregate filter over the RESULT schema (select/edge names).
-    # The reference parses `having` then drops it (query.py:244), so the
-    # default wrap keeps parity and REJECTS it; pass allow_having=True
-    # (the executor does when spark conf mysql_to_s3_spark.allowHaving
-    # is set) to accept — free in Spark: a filter after the aggregate.
+    # The reference parses `having` then drops it (query.py:244); here it
+    # is free: a filter after the aggregate.
     having: Any = None
     # scale switch (no reference analog): percentile/median via KLL sketch
     # (percentile_approx) and cardinality via HLL instead of the exact
@@ -124,19 +121,12 @@ class QueryOp:
     approx: bool = False
 
     @classmethod
-    def wrap(cls, query: dict, allow_having: bool = False) -> "QueryOp":
+    def wrap(cls, query: dict) -> "QueryOp":
         if not isinstance(query, dict):
             raise QueryError("JX query must be a JSON object")
         if query.get("groupby") is not None and query.get("edges") is not None:
             raise QueryError("groupby and edges are mutually exclusive (query.py:230)")
         having = query.get("having")
-        if having is not None and not allow_having:
-            # reference parses it then sets None (query.py:244); we keep parity
-            raise QueryError(
-                "having is not supported (unimplemented in reference); set "
-                "spark conf mysql_to_s3_spark.allowHaving=true to enable the "
-                "post-aggregate filter extension"
-            )
         if having is not None and (
             query.get("groupby") is None
             and query.get("edges") is None

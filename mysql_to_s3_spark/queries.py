@@ -647,39 +647,27 @@ def _groupby_bucket_spark(spark: SparkSession, sf_dir: str) -> dict:
         F.col("flag_a").cast("double").alias("key"),
         F.col("n").cast("bigint").alias("n"),
     )
-    # having leg (r10): the conf-gated post-aggregate filter — same
-    # bucket groupby gated on an AGGREGATE column (avg_price > 200000
-    # keeps ~half the buckets at every sf; the counts are uniform, so a
-    # count gate would be all-or-nothing), compiled against the result
-    # schema and planned as a Filter on top of the same HashAggregate
-    # (no extra shuffle — plan-asserted in test_executor.py). The
-    # default conf stays parity-reject; the leg scopes the flag to this
-    # one build.
-    from mysql_to_s3_spark.operators.executor import ALLOW_HAVING_CONF
-
-    old = spark.conf.get(ALLOW_HAVING_CONF, None)
-    spark.conf.set(ALLOW_HAVING_CONF, "true")
-    try:
-        having = _rounded({
-            "from": "orders",
-            "groupby": [{"name": "bucket", "value": {"floor": ["o_totalprice", 50000]}}],
-            "select": [
-                {"name": "n", "value": ".", "aggregate": "count"},
-                {"name": "avg_price", "value": "o_totalprice", "aggregate": "avg"},
-                {"name": "max_price", "value": "o_totalprice", "aggregate": "max"},
-            ],
-            "having": {"gt": ["avg_price", 200000]},
-        }, ["avg_price"])(spark, sf_dir).select(
-            F.col("bucket").cast("double").alias("key"),
-            F.col("n").cast("bigint").alias("n"),
-            "avg_price",
-            "max_price",
-        )
-    finally:
-        if old is None:
-            spark.conf.unset(ALLOW_HAVING_CONF)
-        else:
-            spark.conf.set(ALLOW_HAVING_CONF, old)
+    # having leg (r10): the post-aggregate filter — same bucket groupby
+    # gated on an AGGREGATE column (avg_price > 200000 keeps ~half the
+    # buckets at every sf; the counts are uniform, so a count gate would
+    # be all-or-nothing), compiled against the result schema and planned
+    # as a Filter on top of the same HashAggregate (no extra shuffle —
+    # plan-asserted in test_executor.py).
+    having = _rounded({
+        "from": "orders",
+        "groupby": [{"name": "bucket", "value": {"floor": ["o_totalprice", 50000]}}],
+        "select": [
+            {"name": "n", "value": ".", "aggregate": "count"},
+            {"name": "avg_price", "value": "o_totalprice", "aggregate": "avg"},
+            {"name": "max_price", "value": "o_totalprice", "aggregate": "max"},
+        ],
+        "having": {"gt": ["avg_price", 200000]},
+    }, ["avg_price"])(spark, sf_dir).select(
+        F.col("bucket").cast("double").alias("key"),
+        F.col("n").cast("bigint").alias("n"),
+        "avg_price",
+        "max_price",
+    )
     return {"bucket": bucket, "nullkey": nullkey, "having": having}
 
 
@@ -2477,7 +2465,7 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iteration, so 50 iterations over 32 micro-partitions are dominated
     # by scheduler overhead (measured 29.8 s -> 13.5 s at sf0.1 with
     # predictions IDENTICAL — gradient-sum order shifts stay far inside
-    # the wide separation margins). The count is conf/size-derived
+    # the wide separation margins). The count is size-derived
     # (classifier.fit_partitions, r11 — no local-scale literal): one
     # partition per 128 MB of the labeled projection, floor 4.
     # Training-frame-only; scoring stays wide.

@@ -21,8 +21,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Row
 
-from mysql_to_s3_spark.session import conf_int
-
 
 def scrub(value: Any) -> Any:
     """Drop null, empty string, empty dict/list; collapse 1-element lists
@@ -70,21 +68,19 @@ def etl_envelope(etl_id: Any, source: dict | None = None, timestamp: float | Non
     }
 
 
-def docs_from_rows(rows: list[Row], fact_name: str, etl: dict | None = None) -> list[dict]:
-    out = []
-    for r in rows:
-        doc = scrub(r[fact_name])
-        wrapped = {fact_name: doc} if doc is not None else {fact_name: {}}
-        if etl is not None:
-            wrapped["etl"] = etl
-        out.append(wrapped)
-    return out
+def wrap_doc(value: Any, fact_name: str, etl: dict | None = None) -> dict:
+    """One output document: the scrubbed fact (``{}`` when nothing is
+    left) under ``fact_name``, plus the ``etl`` envelope when given."""
+    doc = scrub(value)
+    wrapped = {fact_name: doc if doc is not None else {}}
+    if etl is not None:
+        wrapped["etl"] = etl
+    return wrapped
 
 
-# conf key bounding collect_docs (mirrors formats.py's bounded-result
+# row bound of collect_docs (mirrors formats.py's bounded-result
 # guarantee); write_json_lines is the unbounded/distributed path
-COLLECT_DOCS_MAX_ROWS_CONF = "mysql_to_s3_spark.sink.collectDocsMaxRows"
-COLLECT_DOCS_MAX_ROWS_DEFAULT = 100_000
+COLLECT_DOCS_MAX_ROWS = 100_000
 
 
 class SinkError(ValueError):
@@ -96,19 +92,17 @@ def collect_docs(df: DataFrame, fact_name: str, etl: dict | None = None) -> list
 
     CONTRACT: this is the test/pretty-file path (reference
     extract.py:240-242 parity) and refuses more than
-    ``mysql_to_s3_spark.sink.collectDocsMaxRows`` rows (default 100k;
-    set -1 to disable) — pointing it at a full table is a driver OOM at
-    scale. Production writes go through ``write_json_lines``, which
-    streams the identical scrubbed JSON through the file committer."""
-    limit = conf_int(df.sparkSession, COLLECT_DOCS_MAX_ROWS_CONF, COLLECT_DOCS_MAX_ROWS_DEFAULT, SinkError)
-    if limit >= 0 and df.limit(limit + 1).count() > limit:
+    ``COLLECT_DOCS_MAX_ROWS`` (100k) rows — pointing it at a full table
+    is a driver OOM at scale. Production writes go through
+    ``write_json_lines``, which streams the identical scrubbed JSON
+    through the file committer."""
+    if df.limit(COLLECT_DOCS_MAX_ROWS + 1).count() > COLLECT_DOCS_MAX_ROWS:
         raise SinkError(
             f"collect_docs is the bounded driver-side path and the input "
-            f"exceeds {limit} rows; use write_json_lines for large "
-            f"extracts, or raise/disable {COLLECT_DOCS_MAX_ROWS_CONF}"
+            f"exceeds {COLLECT_DOCS_MAX_ROWS} rows; use write_json_lines "
+            "for large extracts"
         )
-    rows = df.orderBy("__id__").collect()
-    return docs_from_rows(rows, fact_name, etl)
+    return [wrap_doc(r[fact_name], fact_name, etl) for r in df.orderBy("__id__").collect()]
 
 
 def write_json_lines(
@@ -124,19 +118,18 @@ def write_json_lines(
     committer. Use an s3a:// path for S3."""
     from pyspark.sql import types as T
 
-    etl_json = json.dumps(etl) if etl is not None else None
+    # the envelope as the JSON round-trip leaves it, parsed once here
+    # rather than once per document
+    etl = json.loads(json.dumps(etl)) if etl is not None else None
 
     def to_lines(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:  # noqa: F821
         import pandas as pd
 
         for pdf in batches:
-            lines = []
-            for rec in pdf.to_dict(orient="records"):
-                doc = scrub(rec[fact_name])
-                wrapped = {fact_name: doc if doc is not None else {}}
-                if etl_json is not None:
-                    wrapped["etl"] = json.loads(etl_json)
-                lines.append(json.dumps(wrapped, sort_keys=True, default=str))
+            lines = [
+                json.dumps(wrap_doc(rec[fact_name], fact_name, etl), sort_keys=True, default=str)
+                for rec in pdf.to_dict(orient="records")
+            ]
             yield pd.DataFrame({"value": lines})
 
     out = df.mapInPandas(to_lines, T.StructType([T.StructField("value", T.StringType())]))

@@ -25,8 +25,7 @@ Pipeline:
 Scale notes: dimension tables broadcast (they are small by definition of
 the snowflake shape); the child aggregation shuffles on the parent key
 once per nesting level. Skew from a fact row with millions of children is
-bounded by the CHILD CAP (``SnowflakeConfig.child_cap`` or the
-``mysql_to_s3_spark.snowflake.childCap`` conf): a per-parent
+bounded by the CHILD CAP (``SnowflakeConfig.child_cap``): a per-parent
 ``row_number() <= cap`` BEFORE the collect_list bounds the aggregation
 buffer, and the dropped-row count lands in a sibling
 ``<field>__overflow__`` column — see ``_prepare_child``. Unset = the
@@ -42,8 +41,6 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from mysql_to_s3_spark.session import conf_int
 
 
 class SnowflakeError(ValueError):
@@ -68,12 +65,6 @@ class TableMeta:
     id_columns: list[str]
 
 
-# conf-key fallback for SnowflakeConfig.child_cap (None/unset = unbounded)
-CHILD_CAP_CONF = "mysql_to_s3_spark.snowflake.childCap"
-# conf-key fallback for SnowflakeConfig.child_salt (None/unset/<=1 = off)
-CHILD_SALT_CONF = "mysql_to_s3_spark.snowflake.childSalt"
-
-
 @dataclass
 class SnowflakeConfig:
     fact_table: str
@@ -86,16 +77,16 @@ class SnowflakeConfig:
     # max children collected per parent per nesting level (the 100 TB skew
     # valve, SURVEY §7): a parent with more children keeps the FIRST cap in
     # sort_columns order and gains a sibling `<field>__overflow__` count of
-    # the dropped rows. None = read CHILD_CAP_CONF; both unset = unbounded
-    # (the reference contract, snowflake_schema.py:535-543).
+    # the dropped rows. None = unbounded (the reference contract,
+    # snowflake_schema.py:535-543).
     child_cap: int | None = None
     # salted two-phase child collect (SURVEY §7 "cap + salt"): with
     # n > 1, children are first collected per (fk, salt in 0..n-1) — n
     # parallel tasks per hot parent — then the n pre-sorted sub-arrays
     # merge in a second, tiny (n rows per parent) aggregation. Below the
     # cap this preserves every child byte-for-byte vs the unsalted path;
-    # the cap stays the final valve. None = read CHILD_SALT_CONF;
-    # both unset/<=1 = the single-phase collect.
+    # the cap stays the final valve. None or <= 1 = the single-phase
+    # collect.
     child_salt: int | None = None
 
 
@@ -143,9 +134,12 @@ def parse_add_relations(specs: list[str]) -> list[Relation]:
     """User-declared relations: "child.fk -> parent.key"."""
     out = []
     for i, s in enumerate(specs):
-        lhs, rhs = [x.strip() for x in s.split("->")]
-        t, c = lhs.rsplit(".", 1)
-        rt, rc = rhs.rsplit(".", 1)
+        sides = [x.strip().rsplit(".", 1) for x in s.split("->")]
+        if len(sides) != 2 or any(len(p) != 2 or not all(p) for p in sides):
+            raise SnowflakeError(
+                f"add_relations entry {s!r} is not of the form 'table.col -> table.col'"
+            )
+        (t, c), (rt, rc) = sides
         out.append(Relation(f"__added_{i}__", t, [c], rt, [rc]))
     return out
 
@@ -212,7 +206,18 @@ def build_plan(
     tmap = {t.name: t for t in tables}
     if cfg.fact_table not in tmap:
         raise SnowflakeError(f"unknown fact table {cfg.fact_table!r}")
-    relations = list(relations) + parse_add_relations(cfg.add_relations)
+    added = parse_add_relations(cfg.add_relations)
+    for spec, rel in zip(cfg.add_relations, added):
+        for t in (rel.table, rel.referenced_table):
+            if t not in tmap:
+                raise SnowflakeError(f"add_relations entry {spec!r} names unknown table {t!r}")
+    for name in ("child_cap", "child_salt"):
+        v = getattr(cfg, name)
+        if v is not None and (not isinstance(v, int) or v < 0):
+            raise SnowflakeError(
+                f"SnowflakeConfig.{name} must be a non-negative integer or None, got {v!r}"
+            )
+    relations = list(relations) + added
     cls = _Classifier(tmap, relations, cfg)
     exclude = set(cfg.exclude)
 
@@ -345,16 +350,7 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     """-> (frame keyed by renamed ref columns, key names, value column name).
 
     The value column is the dim's struct (or its inline scalar)."""
-    df = tables[d.table]
-    fields: list[tuple[str, any]] = [(out, F.col(c)) for c, out in d.out_columns]
-    for sub in d.dims:
-        sub_df, sub_keys, sub_v = _prepare_dim(tables, sub)
-        cond = None
-        for fk, k in zip(sub.fk_columns, sub_keys):
-            c = df[fk] == sub_df[k]
-            cond = c if cond is None else cond & c
-        df = df.join(F.broadcast(sub_df), cond, "left").drop(*sub_keys)
-        fields.append((sub.field, F.col(sub_v)))
+    df, fields = _element_fields(tables, d)
     if d.inline_column is not None:
         value = F.col(d.inline_column)
     else:
@@ -375,24 +371,11 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
     )
 
 
-def _resolved_child_cap(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
-    if cfg is not None and cfg.child_cap is not None:
-        return int(cfg.child_cap)
-    return conf_int(df.sparkSession, CHILD_CAP_CONF, error=SnowflakeError)
-
-
-def _resolved_child_salt(df: DataFrame, cfg: SnowflakeConfig | None) -> int | None:
-    if cfg is not None and cfg.child_salt is not None:
-        n = int(cfg.child_salt)
-    else:
-        n = conf_int(df.sparkSession, CHILD_SALT_CONF, 0, SnowflakeError)
-    return n if n > 1 else None
-
-
 def _element_fields(
     tables: dict[str, DataFrame], node, cfg: SnowflakeConfig | None = None
 ) -> tuple[DataFrame, list[tuple[str, any]]]:
-    """Shared dim/child field assembly for one table's rows."""
+    """Shared dim/child field assembly for one table's rows (``cfg``
+    carries the child valves; a dim has no children and needs none)."""
     df = tables[node.table]
     fields: list[tuple[str, any]] = [(out, F.col(c)) for c, out in node.out_columns]
     for sub in node.dims:
@@ -419,7 +402,7 @@ def _element_fields(
 
 
 def _prepare_child(
-    tables: dict[str, DataFrame], ch: ChildNode, cfg: SnowflakeConfig | None = None
+    tables: dict[str, DataFrame], ch: ChildNode, cfg: SnowflakeConfig
 ) -> tuple[DataFrame, list[str], str, str | None]:
     """-> (frame keyed by renamed FK columns, key names, array column name,
     overflow column name | None).
@@ -442,22 +425,21 @@ def _prepare_child(
     Salt valve (SURVEY §7 "cap + salt"; r8): the cap alone is LOSSY on a
     hot parent — everything past it truncates — and below the cap all of
     a hot parent's children still funnel through one task's window sort
-    + one aggregation buffer. With ``child_salt = n`` (or
-    CHILD_SALT_CONF) > 1, the collect runs in TWO phases: phase 1 groups
-    by (fk, xxhash64(sort_columns) % n) — a hot parent's children spread
-    over n tasks, each producing one pre-sorted sub-array (and, capped,
-    each keeping only its own top-cap: the global top-cap is a subset of
-    the per-salt top-caps, so nothing the final slice needs is dropped) —
-    and phase 2 re-groups by fk alone over n ROWS per parent, merging
-    with flatten + one array sort (+ slice(cap) and the summed overflow
-    count when capped). Same results as the single-phase path
-    element-for-element when sort keys are unique (ties: both paths pick
-    arbitrarily, like any engine's LIMIT under ties); the extra phase-2
-    shuffle moves n_parents × n rows of pre-serialized arrays, not
-    child rows."""
+    + one aggregation buffer. With ``child_salt = n`` > 1, the collect
+    runs in TWO phases: phase 1 groups by (fk, xxhash64(sort_columns) %
+    n) — a hot parent's children spread over n tasks, each producing one
+    pre-sorted sub-array (and, capped, each keeping only its own
+    top-cap: the global top-cap is a subset of the per-salt top-caps, so
+    nothing the final slice needs is dropped) — and phase 2 re-groups by
+    fk alone over n ROWS per parent, merging with flatten + one array
+    sort (+ slice(cap) and the summed overflow count when capped). Same
+    results as the single-phase path element-for-element when sort keys
+    are unique (ties: both paths pick arbitrarily, like any engine's
+    LIMIT under ties); the extra phase-2 shuffle moves n_parents × n
+    rows of pre-serialized arrays, not child rows."""
     df, fields = _element_fields(tables, ch, cfg)
-    cap = _resolved_child_cap(df, cfg)
-    n_salts = _resolved_child_salt(df, cfg)
+    cap = cfg.child_cap
+    n_salts = cfg.child_salt if (cfg.child_salt or 0) > 1 else None
     elem = F.struct(*[c.alias(n) for n, c in fields])
     sort_struct = F.struct(
         *[F.col(s).alias(f"__s{i}__") for i, s in enumerate(ch.sort_columns)],

@@ -196,21 +196,15 @@ def test_fit_determinism_contract(spark, labeled):
         assert abs(a - b) <= 1e-9
 
 
-def test_fit_partitions_conf_pin_and_floor(spark):
-    """r11: the training-frame narrowing is conf/size-derived, not a
-    local-scale literal. Conf pins it exactly; unpinned, a small frame
-    floors at 4 and the derivation scales with the size estimate."""
+def test_fit_partitions_floor_and_cap(spark):
+    """r11: the training-frame narrowing is size-derived, not a
+    local-scale literal: a small frame floors at 4 and the derivation
+    scales with the size estimate, up to the core count."""
     from mysql_to_s3_spark.operators.classifier import fit_partitions
 
     df = spark.range(100).selectExpr(
         "cast(id as string) as text", "'a' as label"
     )
-    key = "mysql_to_s3_spark.classifier.fitPartitions"
-    spark.conf.set(key, "7")
-    try:
-        assert fit_partitions(df) == 7
-    finally:
-        spark.conf.unset(key)
     # tiny frame: floors at 4 (the estimate is far below one
     # bytes_per_partition chunk)
     assert fit_partitions(df) == 4
@@ -219,19 +213,3 @@ def test_fit_partitions_conf_pin_and_floor(spark):
     # never gets more partitions than the cluster has slots
     par = spark.sparkContext.defaultParallelism
     assert fit_partitions(df, floor=1, bytes_per_partition=1) <= par
-
-
-def test_fit_partitions_rejects_bad_conf(spark):
-    """A non-integer or negative pin raises an error naming the conf key
-    (not a bare int() ValueError, not a silent fall back to derivation)."""
-    from mysql_to_s3_spark.operators.classifier import ClassifierError, fit_partitions
-
-    df = spark.range(10).selectExpr("cast(id as string) as text")
-    key = "mysql_to_s3_spark.classifier.fitPartitions"
-    for bad in ("four", "-2"):
-        spark.conf.set(key, bad)
-        try:
-            with pytest.raises(ClassifierError, match=f"{key}.*{bad}"):
-                fit_partitions(df)
-        finally:
-            spark.conf.unset(key)

@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from contextlib import contextmanager
 
+from mysql_to_s3_spark.operators import components
 from mysql_to_s3_spark.operators.components import (
-    SMALL_GRAPH_EDGES_CONF,
     ComponentsError,
     component_summary,
     connected_components,
@@ -19,14 +19,12 @@ from mysql_to_s3_spark.operators.components import (
 
 
 @contextmanager
-def force_distributed(spark):
+def force_distributed():
     """Pin the iterative pointer-jumping path (valve cap 0) so the tests
     that are ABOUT the distributed algorithm keep exercising it."""
-    spark.conf.set(SMALL_GRAPH_EDGES_CONF, "0")
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(components, "SMALL_GRAPH_EDGES", 0)
         yield
-    finally:
-        spark.conf.unset(SMALL_GRAPH_EDGES_CONF)
 
 
 def _union_find(pairs: list[tuple[int, int]]) -> dict[int, int]:
@@ -92,7 +90,7 @@ def test_driver_valve_matches_distributed(spark):
         r.doc_id: r.component for r in connected_components(df, stats=s_valve).collect()
     }
     assert s_valve["mode"] == "driver" and s_valve["rounds"] == 0
-    with force_distributed(spark):
+    with force_distributed():
         s_dist: dict = {}
         got_dist = {
             r.doc_id: r.component
@@ -124,7 +122,7 @@ def test_long_chain_and_wide_star_converge(spark):
     chain = [(i, i + 1) for i in range(1000, 1256)]
     star = [(5000, 5000 + i) for i in range(1, 2001)]
     df = spark.createDataFrame(chain + star, "a: long, b: long")
-    with force_distributed(spark):
+    with force_distributed():
         out = connected_components(df, max_iter=12).collect()
     comps = {r.doc_id: r.component for r in out}
     assert all(comps[i] == 1000 for i in range(1000, 1257))
@@ -133,7 +131,7 @@ def test_long_chain_and_wide_star_converge(spark):
 
 def test_nonconvergence_raises(spark):
     df = spark.createDataFrame([(1, 2), (2, 3)], "a: long, b: long")
-    with force_distributed(spark), pytest.raises(ComponentsError):
+    with force_distributed(), pytest.raises(ComponentsError):
         connected_components(df, max_iter=0)
 
 
@@ -159,7 +157,7 @@ def test_round_count_observability(spark, sf_dir):
     star = spark.createDataFrame(
         [(5000, 5000 + i) for i in range(1, 101)], "a: long, b: long"
     )
-    with force_distributed(spark):
+    with force_distributed():
         s: dict = {}
         connected_components(star, stats=s).collect()
         assert s["rounds"] <= 3

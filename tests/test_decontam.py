@@ -140,26 +140,3 @@ def test_broadcast_guard_fallback_same_result(spark, caplog):
         )
     assert got == want and len(got) == 2
     assert any("falling back to a shuffle join" in r.message for r in caplog.records)
-
-
-def test_broadcast_guard_conf_key(spark, caplog):
-    """BENCH_BROADCAST_CAP_CONF gates the broadcast exactly like the
-    explicit parameter."""
-    import logging
-
-    from mysql_to_s3_spark.operators.decontam import BENCH_BROADCAST_CAP_CONF
-
-    train, bench = _frames(spark)
-    spark.conf.set(BENCH_BROADCAST_CAP_CONF, "1")
-    try:
-        with caplog.at_level(
-            logging.WARNING, logger="mysql_to_s3_spark.operators.decontam"
-        ):
-            ids = {
-                r.train_id
-                for r in contamination_pairs(train, bench, threshold=0.9, k=8).collect()
-            }
-    finally:
-        spark.conf.unset(BENCH_BROADCAST_CAP_CONF)
-    assert ids == {1}
-    assert any("falling back" in r.message for r in caplog.records)

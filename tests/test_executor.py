@@ -497,24 +497,22 @@ def test_error_contract_probes(spark, sf_dir):
     with pytest.raises(QueryError):
         QueryOp.wrap({"from": "lineitem", "groupby": ["a"], "edges": ["b"]})
 
-    # having is parsed-then-rejected, parity with the unimplemented
-    # reference (query.py:244)
-    with pytest.raises(QueryError):
+    # having needs an aggregate context to filter
+    with pytest.raises(QueryError, match="requires groupby"):
         QueryOp.wrap({"from": "lineitem", "having": {"gt": {"n": 1}}})
 
     with pytest.raises(ExecutionError):
         run({"from": "no_such_table", "select": ["x"]}, spark=spark, sf_dir=sf_dir)
 
 
-def test_having_conf_gated(spark, sf_dir, duck):
-    """`having` is a conf-gated extension: default wrap rejects
-    (reference parity), the flag enables a post-aggregate filter on
-    the RESULT schema, and a having without an aggregate context is
-    rejected even when allowed. The plan stays one HashAggregate with
-    a Filter on top — no extra Exchange vs the unfiltered groupby."""
+def test_having_filters_the_aggregate_result(spark, sf_dir, duck):
+    """`having` is a post-aggregate filter on the RESULT schema, and a
+    having without an aggregate context is rejected. The plan stays one
+    HashAggregate with a Filter on top — no extra Exchange vs the
+    unfiltered groupby."""
     import pytest
 
-    from mysql_to_s3_spark.operators.executor import ALLOW_HAVING_CONF, run
+    from mysql_to_s3_spark.operators.executor import run
     from mysql_to_s3_spark.plans.normalize import QueryError, QueryOp
 
     q = {
@@ -526,44 +524,36 @@ def test_having_conf_gated(spark, sf_dir, duck):
         ],
         "having": {"gt": ["avg_price", 200000]},
     }
-    with pytest.raises(QueryError, match="allowHaving"):
+    got = {
+        r["bucket"]: r["n"]
+        for r in run(q, spark=spark, sf_dir=sf_dir).collect()
+    }
+    want = {
+        b: n
+        for b, n, _ in duck.execute(
+            "SELECT floor(o_totalprice / 50000) * 50000, count(*), avg(o_totalprice) "
+            "FROM orders GROUP BY 1 HAVING avg(o_totalprice) > 200000"
+        ).fetchall()
+    }
+    assert got == want and got  # non-empty and exact
+    # and the filter really cut something
+    alln = run({k: v for k, v in q.items() if k != "having"},
+               spark=spark, sf_dir=sf_dir).count()
+    assert len(got) < alln
+
+    # one aggregate exchange only: the having filter adds no shuffle
+    plan = (
         run(q, spark=spark, sf_dir=sf_dir)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("Exchange") == 1, plan
 
-    spark.conf.set(ALLOW_HAVING_CONF, "true")
-    try:
-        got = {
-            r["bucket"]: r["n"]
-            for r in run(q, spark=spark, sf_dir=sf_dir).collect()
-        }
-        want = {
-            b: n
-            for b, n, _ in duck.execute(
-                "SELECT floor(o_totalprice / 50000) * 50000, count(*), avg(o_totalprice) "
-                "FROM orders GROUP BY 1 HAVING avg(o_totalprice) > 200000"
-            ).fetchall()
-        }
-        assert got == want and got  # non-empty and exact
-        # and the filter really cut something
-        alln = run({k: v for k, v in q.items() if k != "having"},
-                   spark=spark, sf_dir=sf_dir).count()
-        assert len(got) < alln
-
-        # one aggregate exchange only: the having filter adds no shuffle
-        plan = (
-            run(q, spark=spark, sf_dir=sf_dir)
-            ._jdf.queryExecution().executedPlan().toString()
+    # rejected without an aggregate context
+    with pytest.raises(QueryError, match="requires groupby"):
+        QueryOp.wrap(
+            {"from": "orders", "select": ["o_orderkey"],
+             "having": {"gt": ["o_orderkey", 10]}},
         )
-        assert plan.count("Exchange") == 1, plan
-
-        # still rejected without an aggregate context, even when allowed
-        with pytest.raises(QueryError, match="requires groupby"):
-            QueryOp.wrap(
-                {"from": "orders", "select": ["o_orderkey"],
-                 "having": {"gt": ["o_orderkey", 10]}},
-                allow_having=True,
-            )
-    finally:
-        spark.conf.unset(ALLOW_HAVING_CONF)
 
 
 def test_edge_named_after_source_column_keeps_raw_values(spark, sf_dir, duck):

@@ -241,38 +241,18 @@ def test_child_cap_golden_100k_under_1k_cap(spark):
     assert rows[1]["first_seq"] == 0 and rows[1]["last_seq"] == 999
     assert rows[2]["n_items"] == 5 and rows[2]["overflow"] == 0
     assert rows[3]["n_items"] is None and rows[3]["overflow"] is None
-
-
-def test_child_cap_via_conf_and_unset_schema(spark):
-    """The conf key gates the cap when the config leaves it None; with
-    both unset the schema has NO overflow column (reference contract)."""
-    from mysql_to_s3_spark.sources.snowflake import CHILD_CAP_CONF
-
-    tables, meta, rels = _cap_fixture(spark)
+    # uncapped, the schema has NO overflow column (reference contract)
     cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
-    plan = build_plan(meta, rels, cfg)
-
-    uncapped = doc_frame(tables, plan, cfg)
+    uncapped = doc_frame(tables, build_plan(meta, rels, cfg), cfg)
     assert "child__overflow__" not in uncapped.schema["parent"].dataType.fieldNames()
-
-    spark.conf.set(CHILD_CAP_CONF, "10")
-    try:
-        capped = doc_frame(tables, plan, cfg)
-        assert "child__overflow__" in capped.schema["parent"].dataType.fieldNames()
-        from pyspark.sql import functions as F
-
-        r = {x["__id__"]: x for x in capped.select("__id__", F.size("parent.child").alias("n"), F.col("parent.child__overflow__").alias("ov")).collect()}
-        assert r[1]["n"] == 10 and r[1]["ov"] == 99_990
-        assert r[2]["n"] == 5 and r[2]["ov"] == 0
-    finally:
-        spark.conf.unset(CHILD_CAP_CONF)
 
 
 def test_child_salt_two_phase_matches_unsalted(spark):
     """r8 (SURVEY §7 "cap + salt"): the salted two-phase child collect
     assembles IDENTICAL docs to the single-phase path on the 100k-child
     skewed fixture — uncapped (every child preserved, exact order) and
-    capped (same kept top-cap set + same overflow counts)."""
+    capped (same kept top-cap set + same overflow counts). The salt
+    column shows in the salted path's optimized plan."""
     tables, meta, rels = _cap_fixture(spark)
     for cap in (None, 1000):
         plain_cfg = SnowflakeConfig(
@@ -285,52 +265,60 @@ def test_child_salt_two_phase_matches_unsalted(spark):
         plain = doc_frame(
             tables, build_plan(meta, rels, plain_cfg), plain_cfg
         ).orderBy("__id__").collect()
-        salted = doc_frame(
-            tables, build_plan(meta, rels, salted_cfg), salted_cfg
-        ).orderBy("__id__").collect()
+        salted_df = doc_frame(tables, build_plan(meta, rels, salted_cfg), salted_cfg)
+        assert "__salt" in salted_df._jdf.queryExecution().optimizedPlan().toString()
+        salted = salted_df.orderBy("__id__").collect()
         assert salted == plain, f"cap={cap}: salted path diverged"
 
 
-def test_child_salt_via_conf(spark):
-    """CHILD_SALT_CONF gates the two-phase collect when the config leaves
-    child_salt None; the salt column shows in the optimized plan and the
-    assembled docs are unchanged."""
-    from pyspark.sql import functions as F
+def _orders_meta():
+    from mysql_to_s3_spark.sources.snowflake import TableMeta
 
-    from mysql_to_s3_spark.sources.snowflake import CHILD_SALT_CONF
-
-    tables, meta, rels = _cap_fixture(spark)
-    cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
-    plan = build_plan(meta, rels, cfg)
-    spark.conf.set(CHILD_SALT_CONF, "4")
-    try:
-        docs = doc_frame(tables, plan, cfg)
-        assert "__salt" in docs._jdf.queryExecution().optimizedPlan().toString()
-        r = {
-            x["__id__"]: x
-            for x in docs.select(
-                "__id__", F.size("parent.child").alias("n")
-            ).collect()
-        }
-        assert r[1]["n"] == 100_000 and r[2]["n"] == 5
-    finally:
-        spark.conf.unset(CHILD_SALT_CONF)
+    return [
+        TableMeta("orders", ["o_orderkey", "o_custkey"], ["o_orderkey"]),
+        TableMeta("customer", ["c_custkey", "c_name"], ["c_custkey"]),
+    ]
 
 
-@pytest.mark.parametrize("conf", ["CHILD_CAP_CONF", "CHILD_SALT_CONF"])
-@pytest.mark.parametrize("raw", ["ten", "2.5", ""])
-def test_child_conf_not_an_integer_names_the_key(spark, conf, raw):
-    """A malformed child cap / salt conf fails loudly, naming its key,
-    instead of silently running uncapped or unsalted."""
-    from mysql_to_s3_spark.sources import snowflake
+@pytest.mark.parametrize("field", ["child_cap", "child_salt"])
+@pytest.mark.parametrize("raw", ["ten", "", 2.5, -1])
+def test_child_valve_not_an_integer_names_the_field(field, raw):
+    """A malformed or negative child cap / salt fails loudly at
+    ``build_plan``, naming its field, instead of failing deep in the
+    plan or silently running uncapped or unsalted."""
+    from mysql_to_s3_spark.sources.snowflake import SnowflakeError
 
-    key = getattr(snowflake, conf)
-    tables, meta, rels = _cap_fixture(spark)
-    cfg = SnowflakeConfig(fact_table="parent", show_foreign_keys=False)
-    plan = build_plan(meta, rels, cfg)
-    spark.conf.set(key, raw)
-    try:
-        with pytest.raises(snowflake.SnowflakeError, match=re.escape(key)):
-            doc_frame(tables, plan, cfg)
-    finally:
-        spark.conf.unset(key)
+    cfg = SnowflakeConfig(fact_table="orders", **{field: raw})
+    with pytest.raises(SnowflakeError, match=f"SnowflakeConfig.{field}"):
+        build_plan(_orders_meta(), [], cfg)
+
+
+@pytest.mark.parametrize(
+    "spec,message",
+    [
+        ("orders.o_custkey customer.c_custkey", "'table.col -> table.col'"),
+        ("o_custkey -> customer.c_custkey", "'table.col -> table.col'"),
+        ("orders.o_custkey -> nosuch.c_custkey", "unknown table 'nosuch'"),
+    ],
+    ids=["no_arrow", "no_table", "unknown_table"],
+)
+def test_add_relations_malformed_spec_names_it(spec, message):
+    """A malformed ``add_relations`` entry raises ``SnowflakeError``
+    naming the entry and what is wrong with it (the expected form or
+    the unknown table), not a bare unpacking or lookup error."""
+    from mysql_to_s3_spark.sources.snowflake import SnowflakeError
+
+    cfg = SnowflakeConfig(fact_table="orders", add_relations=[spec])
+    with pytest.raises(SnowflakeError, match=re.escape(repr(spec))) as err:
+        build_plan(_orders_meta(), [], cfg)
+    assert message in str(err.value)
+
+
+def test_add_relations_joins_the_declared_dim():
+    """A well-formed entry becomes a relation: the declared table is an
+    inner object of the fact."""
+    cfg = SnowflakeConfig(fact_table="orders", add_relations=["orders.o_custkey -> customer.c_custkey"])
+    plan = build_plan(_orders_meta(), [], cfg)
+    assert [(d.table, d.fk_columns, d.ref_columns) for d in plan.dims] == [
+        ("customer", ["o_custkey"], ["c_custkey"])
+    ]

@@ -304,50 +304,19 @@ def test_delete_rows(spark):
     assert [r["a"] for r in out.collect()] == [1]
 
 
-def test_collect_docs_refuses_unbounded_input(spark):
-    """collect_docs is the bounded driver-side path: above the conf bound
+def test_collect_docs_refuses_unbounded_input(spark, monkeypatch):
+    """collect_docs is the bounded driver-side path: above its row bound
     it raises instead of OOMing the driver."""
     import pytest
     from pyspark.sql import functions as F
 
-    from mysql_to_s3_spark.sinks.json_sink import (
-        COLLECT_DOCS_MAX_ROWS_CONF,
-        SinkError,
-        collect_docs,
-    )
+    from mysql_to_s3_spark.sinks import json_sink
+    from mysql_to_s3_spark.sinks.json_sink import SinkError, collect_docs
 
     df = spark.range(100).select(
         F.col("id").alias("__id__"), F.struct(F.col("id").alias("v")).alias("fact")
     )
-    spark.conf.set(COLLECT_DOCS_MAX_ROWS_CONF, "50")
-    try:
-        with pytest.raises(SinkError):
-            collect_docs(df, "fact")
-        assert len(collect_docs(df.limit(50), "fact")) == 50
-    finally:
-        spark.conf.unset(COLLECT_DOCS_MAX_ROWS_CONF)
-
-
-def test_collect_docs_conf_not_an_integer_names_the_key(spark):
-    """A malformed row bound fails loudly, naming its key, instead of
-    silently falling back to the default bound."""
-    import re
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from mysql_to_s3_spark.sinks.json_sink import (
-        COLLECT_DOCS_MAX_ROWS_CONF,
-        SinkError,
-        collect_docs,
-    )
-
-    df = spark.range(3).select(
-        F.col("id").alias("__id__"), F.struct(F.col("id").alias("v")).alias("fact")
-    )
-    spark.conf.set(COLLECT_DOCS_MAX_ROWS_CONF, "100k")
-    try:
-        with pytest.raises(SinkError, match=re.escape(COLLECT_DOCS_MAX_ROWS_CONF)):
-            collect_docs(df, "fact")
-    finally:
-        spark.conf.unset(COLLECT_DOCS_MAX_ROWS_CONF)
+    monkeypatch.setattr(json_sink, "COLLECT_DOCS_MAX_ROWS", 50)
+    with pytest.raises(SinkError):
+        collect_docs(df, "fact")
+    assert len(collect_docs(df.limit(50), "fact")) == 50

@@ -185,24 +185,18 @@ def test_having_hostile_result_names(spark, names):
     the RESULT schema, so a hostile AGG output name must resolve as a
     having variable (the compiler's exact-column-name-first rule), and
     a hostile KEY name must survive the post-aggregate filter."""
-    from mysql_to_s3_spark.operators.executor import ALLOW_HAVING_CONF
-
     kname, aname = names
-    spark.conf.set(ALLOW_HAVING_CONF, "true")
-    try:
-        rows = {
-            r[kname]: r[aname]
-            for r in run(
-                {
-                    "from": "t",
-                    "groupby": [{"name": kname, "value": "k"}],
-                    "select": [{"name": aname, "value": "v", "aggregate": "sum"}],
-                    "having": {"gte": [aname, 4]},
-                },
-                containers={"t": _container(spark)},
-            ).collect()
-        }
-    finally:
-        spark.conf.unset(ALLOW_HAVING_CONF)
+    rows = {
+        r[kname]: r[aname]
+        for r in run(
+            {
+                "from": "t",
+                "groupby": [{"name": kname, "value": "k"}],
+                "select": [{"name": aname, "value": "v", "aggregate": "sum"}],
+                "having": {"gte": [aname, 4]},
+            },
+            containers={"t": _container(spark)},
+        ).collect()
+    }
     # sums: a->3, b->3, None->4; only the null-key group passes >= 4
     assert rows == {None: 4}

@@ -197,27 +197,24 @@ def test_lm_join_mode_plan_is_broadcast(spark, sf_dir):
         assert "SortMergeJoin" not in plan, plan
 
 
-def test_arrow_collect_valve_unigram(spark, tiny):
-    """unigram_scorer's model collect is conf-capped: an oversized
-    self-fit model RAISES (the 'bound it first' contract is enforced,
-    not trusted); a vocab_size-capped model under the cap still builds;
+def test_arrow_collect_valve_unigram(spark, tiny, monkeypatch):
+    """unigram_scorer's model collect is capped: an oversized self-fit
+    model RAISES (the 'bound it first' contract is enforced, not
+    trusted); a vocab_size-capped model under the cap still builds;
     unigram_logprob never collects and is unaffected by the cap."""
-    from mysql_to_s3_spark.operators.lm import LM_COLLECT_CAP_CONF
+    from mysql_to_s3_spark.operators import lm
 
-    spark.conf.set(LM_COLLECT_CAP_CONF, "2")
-    try:
-        # tiny's vocabulary is 4 tokens (a b c !) > cap 2
-        with pytest.raises(LmError, match="exceeds 2 rows"):
-            unigram_scorer(unigram_counts(tiny))
-        got = _scored(tiny, unigram_counts(tiny, vocab_size=2))
-        assert set(got) == {1, 2, 3, 4}
-        # the join path builds lazily against the same oversized model
-        unigram_logprob(tiny)
-        # the plain-list path is the caller's own materialization — no valve
-        sc = unigram_scorer([("a", 2), ("b", 1), ("c", 1), ("!", 1)], spark=spark)
-        assert sc is not None
-    finally:
-        spark.conf.unset(LM_COLLECT_CAP_CONF)
+    monkeypatch.setattr(lm, "LM_COLLECT_CAP", 2)
+    # tiny's vocabulary is 4 tokens (a b c !) > cap 2
+    with pytest.raises(LmError, match="exceeds 2 rows"):
+        unigram_scorer(unigram_counts(tiny))
+    got = _scored(tiny, unigram_counts(tiny, vocab_size=2))
+    assert set(got) == {1, 2, 3, 4}
+    # the join path builds lazily against the same oversized model
+    unigram_logprob(tiny)
+    # the plain-list path is the caller's own materialization — no valve
+    sc = unigram_scorer([("a", 2), ("b", 1), ("c", 1), ("!", 1)], spark=spark)
+    assert sc is not None
 
 
 def test_perplexity_buckets_semantics(spark):

@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.operators.executor import run
-from mysql_to_s3_spark.sources.snowflake import CHILD_CAP_CONF, CHILD_SALT_CONF
 
 
 def plan_of(df) -> str:
@@ -163,10 +162,11 @@ _EXTRACT_IDS = {
 }
 
 
-def _written_batch(spark, sf_dir, tmp_path, monkeypatch, field, start):
+def _written_batch(spark, sf_dir, tmp_path, monkeypatch, field, start, **child):
     """The frame ``Extract.run`` hands the sink for the middle keyset batch
     of the sf orders extract (customer -> nation -> region dims, lineitem
-    children carrying part and supplier), and that batch."""
+    children carrying part and supplier), and that batch. ``child`` sets
+    the ``SnowflakeConfig`` child valves."""
     from mysql_to_s3_spark.sources import extract
     from mysql_to_s3_spark.sources.registry import load_table
     from mysql_to_s3_spark.sources.snowflake import (
@@ -185,7 +185,7 @@ def _written_batch(spark, sf_dir, tmp_path, monkeypatch, field, start):
         Relation("lineitem_supplier", "lineitem", ["l_suppkey"], "supplier", ["s_suppkey"]),
     ]
     tables = {t: load_table(spark, sf_dir, t) for t in _EXTRACT_IDS}
-    cfg = SnowflakeConfig(fact_table="orders")
+    cfg = SnowflakeConfig(fact_table="orders", **child)
     plan = build_plan([TableMeta(t, tables[t].columns, c) for t, c in _EXTRACT_IDS.items()], rels, cfg)
     ex = extract.Extract(tables, plan, cfg, extract.ExtractConfig(
         field=field, start=start, batch=1000, destination=str(tmp_path)
@@ -206,25 +206,19 @@ def _pushed(text: str, table: str) -> str:
 
 
 @pytest.mark.parametrize(
-    "child_conf", [None, CHILD_CAP_CONF, CHILD_SALT_CONF], ids=["plain", "childCap", "childSalt"]
+    "child", [{}, {"child_cap": 4}, {"child_salt": 4}], ids=["plain", "childCap", "childSalt"]
 )
-def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path, monkeypatch, child_conf):
+def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path, monkeypatch, child):
     """The frame ``Extract.run`` writes for one keyset batch reads its
     batch as a literal range: no Window and no SinglePartition exchange
     re-key the fact table, and the batch's bound reaches the orders scan
     and, through the left joins and the child collect (plain, capped or
     salted), the lineitem scan, so the child aggregation covers the
     batch, not the table."""
-    if child_conf:
-        spark.conf.set(child_conf, "4")
-    try:
-        docs, batch = _written_batch(spark, sf_dir, tmp_path, monkeypatch, "o_orderkey", 0)
-    finally:
-        if child_conf:
-            spark.conf.unset(child_conf)
+    docs, batch = _written_batch(spark, sf_dir, tmp_path, monkeypatch, "o_orderkey", 0, **child)
     text = plan_of(docs)
 
-    if child_conf == CHILD_CAP_CONF:
+    if "child_cap" in child:
         # the cap's per-order row numbering over lineitem is the only window
         keys = re.findall(r"windowspecdefinition\(([^,]+),", text)
         assert keys and all(k.startswith("l_orderkey#") for k in keys), text

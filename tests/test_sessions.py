@@ -317,32 +317,6 @@ def test_funnel_within_cap_no_truncation_matches_uncapped(spark, sf_dir):
     assert all(r.n_dropped == 0 for r in capped)
 
 
-def test_funnel_within_cap_via_conf(spark):
-    """FUNNEL_EVENT_CAP_CONF gates the valve exactly like the explicit
-    parameter (the snowflake CHILD_CAP_CONF contract)."""
-    import datetime as dt
-
-    from pyspark.sql import functions as F
-
-    from mysql_to_s3_spark.operators.sessions import (
-        FUNNEL_EVENT_CAP_CONF,
-        funnel_within,
-    )
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [("k", t0 + dt.timedelta(minutes=i), e) for i, e in enumerate("ABCXX")]
-    df = spark.createDataFrame(rows, "k string, ts timestamp, e string")
-    spark.conf.set(FUNNEL_EVENT_CAP_CONF, "3")
-    try:
-        r = funnel_within(
-            df, by=["k"], steps=[F.col("e") == s for s in ("A", "B", "C")],
-            within="1 hour",
-        ).first()
-    finally:
-        spark.conf.unset(FUNNEL_EVENT_CAP_CONF)
-    assert r.converted and r.n_dropped == 2
-
-
 def test_stream_funnel_completes_across_microbatches(spark, tmp_path):
     """Streaming greedy funnel: steps arriving in three separate
     micro-batches (one out of event-time order) complete once the
