@@ -14,8 +14,9 @@ Pipeline (matches jx.run order, jx.py:92-118):
     -> sort -> limit
 
 Scale notes:
-  - edges densification joins the (tiny) domain-parts DataFrame with
-    broadcast(), never a cross join against the data.
+  - edges densification left-joins the sparse aggregate onto a dense cube
+    computed from a one-partition spark.range, never a cross join against
+    the data; no Python worker runs for it.
   - multivalue edge values explode before groupBy (lists/aggs.py:73,87
     product(*coord) semantics) — a shuffle on the exploded key only.
   - nested-table addressing pushes the explode below the filter so
@@ -25,9 +26,11 @@ Scale notes:
 from __future__ import annotations
 
 import functools
+import json
 import operator as pyop
 from typing import Any, Mapping
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -155,9 +158,13 @@ def _load_container(name: str, spark, containers, sf_dir) -> DataFrame | None:
 
             return load_table(spark, sf_dir, name)
     if spark is not None:
+        # ask the catalog first: spark.table on an unknown dotted name
+        # ("fact.items") reads it as SQL-on-file and starts Spark's Python
+        # data-source lookup worker before it fails
         try:
-            return spark.table(name)
-        except Exception:
+            if spark.catalog.tableExists(name):
+                return spark.table(name)
+        except AnalysisException:  # a name the parser rejects, e.g. "a b"
             return None
     return None
 
@@ -345,9 +352,10 @@ def _groupby_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
 def _edges_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
     """edges: dimensional group-by with declared domains, DENSE output —
     every domain part appears even when empty, plus a null bucket when
-    allowNulls (lists/aggs.py:35-103). Densify = broadcast-join the tiny
-    domain-parts DataFrames onto the sparse aggregate; count-like aggregates
-    fill 0, others stay NULL (Matrix-of-accumulators semantics)."""
+    allowNulls (lists/aggs.py:35-103). Densify = left-join the sparse
+    aggregate onto the dense cube of domain parts (``_dense_cube``);
+    count-like aggregates fill 0, others stay NULL (Matrix-of-accumulators
+    semantics)."""
     spark = df.sparkSession
     _check_agg_selects(q, {e.value for e in q.edges if isinstance(e.value, str)})
     keys, df2 = _edge_keys(df, q.edges, schema, densify=True)
@@ -358,21 +366,18 @@ def _edges_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
         compile_domain(e.domain if e.range is None else {**e.domain, "type": e.domain.get("type", "range")})
         for e in q.edges
     ]
-    if any(dom.part_python_values() is None for dom in doms):
+    if any(dom.part_values is None for dom in doms):
         # a default domain's discovery collect reads sparse, and so does
         # the densify join: checkpoint so the scan+shuffle+agg runs once.
         # Spark frees the checkpoint with the frame; nothing outlives it.
         sparse = sparse.localCheckpoint(eager=False)
 
-    # Dense cube frame: the cross product of per-edge part lists, built
-    # DRIVER-side in one partition. Every domain is bounded (declared parts
-    # or capped discovery), so this is the same dense Matrix the reference
-    # materializes (lists/aggs.py:60) — a Spark-side crossJoin of tiny
-    # createDataFrame frames would multiply partition counts (32 x 32 ...)
-    # into hundreds of near-empty tasks of pure scheduling overhead.
-    part_lists: list[list] = []
+    # Dense cube frame: the cross product of per-edge part lists. Every
+    # domain is bounded (declared parts or capped discovery), so this is the
+    # same dense Matrix the reference materializes (lists/aggs.py:60).
+    cube_edges = []
     for e, key, dom in zip(q.edges, keys, doms):
-        vals = dom.part_python_values()
+        vals = dom.part_values
         if vals is None:
             # default domain: parts discovered from the data
             # (lists/aggs.py:40-46), capped by the edge/query limit and
@@ -391,63 +396,87 @@ def _edges_op(df: DataFrame, q: QueryOp, schema: Schema) -> DataFrame:
             ]
         if e.allowNulls:
             vals = list(vals) + [None]
-        part_lists.append(list(vals))
+        cube_edges.append((key, vals, sparse.schema[key].dataType, dom.is_time))
 
-    n_cells = functools.reduce(pyop.mul, [len(p) for p in part_lists], 1)
+    d = _dense_cube(spark, cube_edges).alias("__dense__")
+    sp = sparse.alias("__sparse__")
+    cond = functools.reduce(
+        pyop.and_, [F.col(f"__dense__.{k}").eqNullSafe(F.col(f"__sparse__.{k}")) for k in keys]
+    )
+    # No broadcast hint: the outer-preserved side is `dense`, and Spark's
+    # broadcast hash join cannot build the preserved side of a left-outer
+    # join, so hinting would either broadcast the data-derived `sparse`
+    # (unbounded at scale) or be ignored. AQE converts this to a broadcast
+    # join at runtime when the post-agg `sparse` is actually small.
+    result = d.join(sp, on=cond, how="left")
+
+    # empty cells: count-family fills 0 (accumulator start state).
+    # Folded into the select as coalesce — fillna() resolves dict
+    # keys by parsing, so a dotted select name would fail there
+    def _cell(s: SelectClause) -> Column:
+        c = F.col("__sparse__.`" + s.name.replace("`", "``") + "`")
+        if s.aggregate in ("count", "cardinality", "count_distinct", "s0"):
+            c = F.coalesce(c, F.lit(0))
+        return c.alias(s.name)
+
+    result = result.select(
+        *[F.col(f"__dense__.{k}").alias(k) for k in keys],
+        *[_cell(s) for s in sel_aggs],
+    )
+    # rows outside every domain part (bucket keys NULL but allowNulls
+    # False) were joined away; drop disallowed null buckets
+    for e, key in zip(q.edges, keys):
+        if not e.allowNulls:
+            result = result.filter(F.col(key).isNotNull())
+
+    return result.select(
+        *[F.col(k).alias(e.name) for k, e in zip(keys, q.edges)],
+        *[_qname(s.name) for s in sel_aggs],
+    )
+
+
+def _dense_cube(spark: SparkSession, edges: list[tuple[str, list, T.DataType, bool]]) -> DataFrame:
+    """One row per cell of ``itertools.product`` of the edges' part lists,
+    in that order, in one partition, computed in the JVM from
+    ``spark.range`` — a driver-built frame here would pickle every cell and
+    run a Python worker task.
+
+    ``edges`` holds ``(key, parts, key type, is_time)`` per edge; time
+    parts are epoch seconds. Cell ``id`` takes part
+    ``floor(id / stride) % len(parts)`` of each edge (row-major: the last
+    edge varies fastest) from one array literal per edge, so the plan grows
+    with the sum of the part counts, not with their product."""
+    n_cells = functools.reduce(pyop.mul, [len(parts) for _, parts, _, _ in edges], 1)
     if n_cells > 10_000_000:
         raise ExecutionError(
             f"dense cube would have {n_cells} cells; cap edge domains (format=cube is a dense output)"
         )
-    dense: DataFrame | None = None
-    if part_lists:
-        import itertools
+    cols: list[Column] = []
+    stride = n_cells
+    for key, parts, dtype, is_time in edges:
+        if not parts:
+            # an empty domain empties the cube; the column keeps its type
+            cols.append(F.lit(None).cast(dtype).alias(key))
+            continue
+        stride //= len(parts)
+        cell = _part_array(parts)[(F.floor(F.col("id") / F.lit(stride)) % F.lit(len(parts))).cast("int")]
+        if is_time:
+            cell = F.timestamp_seconds(cell)
+        cols.append(cell.cast(dtype).alias(key))
+    return spark.range(0, n_cells, 1, 1).select(*cols)
 
-        key_schema = T.StructType(
-            [T.StructField(k, sparse.schema[k].dataType, True) for k in keys]
-        )
-        # single partition up front: createDataFrame(list).coalesce(1) pays
-        # a ~4s locality wait merging the 32 parallelize slices; a 1-slice
-        # parallelize is free
-        cells = spark.sparkContext.parallelize(list(itertools.product(*part_lists)), 1)
-        dense = spark.createDataFrame(cells, key_schema)
 
-    if dense is not None:
-        d = dense.alias("__dense__")
-        sp = sparse.alias("__sparse__")
-        cond = functools.reduce(
-            pyop.and_, [F.col(f"__dense__.{k}").eqNullSafe(F.col(f"__sparse__.{k}")) for k in keys]
-        )
-        # No broadcast hint: the outer-preserved side is `dense`, and Spark's
-        # broadcast hash join cannot build the preserved side of a left-outer
-        # join, so hinting would either broadcast the data-derived `sparse`
-        # (unbounded at scale) or be ignored. AQE converts this to a broadcast
-        # join at runtime when the post-agg `sparse` is actually small.
-        result = d.join(sp, on=cond, how="left")
-
-        # empty cells: count-family fills 0 (accumulator start state).
-        # Folded into the select as coalesce — fillna() resolves dict
-        # keys by parsing, so a dotted select name would fail there
-        def _cell(s: SelectClause) -> Column:
-            c = F.col("__sparse__.`" + s.name.replace("`", "``") + "`")
-            if s.aggregate in ("count", "cardinality", "count_distinct", "s0"):
-                c = F.coalesce(c, F.lit(0))
-            return c.alias(s.name)
-
-        result = result.select(
-            *[F.col(f"__dense__.{k}").alias(k) for k in keys],
-            *[_cell(s) for s in sel_aggs],
-        )
-        # rows outside every domain part (bucket keys NULL but allowNulls
-        # False) were joined away; drop disallowed null buckets
-        for e, key in zip(q.edges, keys):
-            if not e.allowNulls:
-                result = result.filter(F.col(key).isNotNull())
-        sparse = result
-
-    return sparse.select(
-        *[F.col(k).alias(e.name) for k, e in zip(keys, q.edges)],
-        *[_qname(s.name) for s in sel_aggs],
-    )
+def _part_array(parts: list) -> Column:
+    """One edge's parts as an array literal. Strings, booleans and numbers
+    travel as one JSON string that Catalyst parses once and folds into a
+    literal, so a large domain costs a fixed number of py4j calls; other
+    values (dates, decimals from a discovered domain) take one ``lit``
+    each."""
+    kinds = {type(v) for v in parts} - {type(None)}
+    for allowed, elem in (({str}, "string"), ({bool}, "boolean"), ({int}, "bigint"), ({int, float}, "double")):
+        if kinds <= allowed:
+            return F.from_json(F.lit(json.dumps(parts)), f"array<{elem}>", {"mode": "FAILFAST"})
+    return F.array(*[F.lit(v) for v in parts])
 
 
 def _default_domain_cap(e: EdgeClause, q: QueryOp) -> int:

@@ -15,10 +15,11 @@ A domain declares the partition set of one cube dimension. The Spark mapping
 
 Each domain compiles to:
   bucket(col)  -> Column: the partition key for a row
-  parts(spark) -> small driver-side DataFrame of all partitions (for
-                  densification of the cube output); None for `default`
-All domains are bounded (explicit parts or [min,max)/interval), so `parts`
-is tiny and broadcast into the densify join.
+  part_values  -> all partition keys (time parts as epoch seconds), for
+                  densification of the cube output; None for `default`,
+                  whose parts the executor discovers from the data
+All domains are bounded (explicit parts or [min,max)/interval), so the dense
+cube the executor builds from them stays small.
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ import datetime as dt
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mysql_to_s3_spark.functions.dates import parse_date_literal, parse_duration, add_months
@@ -63,23 +64,6 @@ class CompiledDomain:
         if self.is_time:
             return [dt.datetime.utcfromtimestamp(v) for v in self.part_values]
         return list(self.part_values)
-
-    def parts_df(self, spark: SparkSession, name: str) -> DataFrame | None:
-        if self.part_values is None:
-            return None
-        if self.is_time:
-            rows = [(dt.datetime.utcfromtimestamp(v),) for v in self.part_values]
-            return spark.createDataFrame(rows, f"`{name}` timestamp")
-        first = next((v for v in self.part_values if v is not None), None)
-        if isinstance(first, str):
-            typ = "string"
-        elif isinstance(first, bool):
-            typ = "boolean"
-        elif isinstance(first, int):
-            typ = "bigint"
-        else:
-            typ = "double"
-        return spark.createDataFrame([(v,) for v in self.part_values], f"`{name}` {typ}")
 
 
 def compile_domain(domain: dict) -> CompiledDomain:

@@ -2,6 +2,8 @@
 (the same comparison the driver's CORRECTNESS gate performs).
 """
 
+import pytest
+
 from mysql_to_s3_spark.operators.executor import run
 from tests.conftest import assert_same_rows, duck_sorted
 
@@ -360,7 +362,7 @@ def test_setop_sort_by_unselected_column(spark, sf_dir, duck):
     assert_same_rows(got, want)
 
 
-def test_edge_named_after_source_column_keeps_raw_values(spark, sf_dir, duck):
+def test_edge_named_after_source_column_averages_raw_values(spark, sf_dir, duck):
     # edge name == source column + range domain: the aggregate must see RAW
     # values, not bucket floors
     q = {
@@ -479,6 +481,66 @@ def test_nested_table_from(spark, sf_dir):
     )
     want = lines.agg(F.sum("l_quantity")).collect()[0][0]
     assert abs(got.collect()[0]["total"] - want) < 1e-6
+
+
+# -- container resolution: containers dict, then parquet, then the catalog --
+
+
+@pytest.fixture
+def table_calls(spark, monkeypatch):
+    """Names handed to ``spark.table``, recorded; the call still runs."""
+    calls = []
+    real = type(spark).table
+
+    def spy(self, name):
+        calls.append(name)
+        return real(self, name)
+
+    monkeypatch.setattr(type(spark), "table", spy)
+    return calls
+
+
+def _nested(spark):
+    return spark.createDataFrame(
+        [(1, 10.0, [(1, 2.0), (2, 3.0)]), (2, 20.0, [(1, 5.0)]), (3, 30.0, None)],
+        "o_orderkey bigint, o_totalprice double, items array<struct<l_linenumber:int,l_quantity:double>>",
+    )
+
+
+_NESTED_SUM = {
+    "from": "fact.items",
+    "select": [{"name": "total", "value": "l_quantity", "aggregate": "sum"}],
+    "where": {"gt": {"o_totalprice": 15}},
+}
+
+
+def test_nested_from_skips_catalog_lookup_of_the_dotted_name(spark, sf_dir, table_calls):
+    # "fact.items" names no table: the catalog is asked, spark.table is not
+    # (it would start Spark's Python data-source lookup), then "fact" resolves
+    got = run(_NESTED_SUM, spark=spark, sf_dir=sf_dir, containers={"fact": _nested(spark)})
+    assert got.collect()[0]["total"] == 5.0
+    assert table_calls == []
+
+
+def test_temp_view_resolves_as_container(spark, table_calls):
+    _nested(spark).createOrReplaceTempView("jx_nested_view")
+    try:
+        got = run({**_NESTED_SUM, "from": "jx_nested_view.items"}, spark=spark)
+        assert got.collect()[0]["total"] == 5.0
+        flat = run({"from": "jx_nested_view", "select": ["o_orderkey"], "sort": ["o_orderkey"]}, spark=spark)
+        assert [r[0] for r in flat.collect()] == [1, 2, 3]
+    finally:
+        spark.catalog.dropTempView("jx_nested_view")
+    assert table_calls == ["jx_nested_view", "jx_nested_view"]
+
+
+def test_unknown_container_raises(spark, sf_dir, table_calls):
+    from mysql_to_s3_spark.operators.executor import ExecutionError
+
+    for name in ("no_such_table", "no_such.items", "fact.items", "a b", "a.b.c.d"):
+        with pytest.raises(ExecutionError, match="unknown container"):
+            run({"from": name, "select": ["x"]}, spark=spark, sf_dir=sf_dir)
+    assert table_calls == []
 
 
 def test_error_contract_probes(spark, sf_dir):
