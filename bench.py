@@ -13,36 +13,34 @@ import re
 import sys
 import time
 
+# Load-honesty gate (r9 lesson: a bench taken at load1 8.3 recorded a
+# 35% phantom regression vs the same-day solo run). Before the JVM
+# spins up, wait for a quiet window — up to LOAD_RETRIES sleeps of
+# LOAD_WAIT_S seconds while 1-min loadavg exceeds LOAD_MAX. If the host
+# never quiets, run anyway but stamp the artifact `noisy: true`, so the
+# next round's comparison auto-selects the solo/SCALE.md table instead
+# of chasing a regression.
+LOAD_MAX = 2.0
+LOAD_RETRIES = 5
+LOAD_WAIT_S = 60.0
+
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
-    # Load-honesty gate (r9 lesson: a bench taken at load1 8.3 recorded a
-    # 35% phantom regression vs the same-day solo run). Before the JVM
-    # spins up, wait for a quiet window — up to N sleeps of W seconds
-    # while 1-min loadavg exceeds the threshold. If the host never
-    # quiets, run anyway but stamp the artifact `noisy: true`, so the
-    # next round's comparison auto-selects the solo/SCALE.md table
-    # instead of chasing a regression. Knobs (env):
-    #   SPARK_GRAFT_BENCH_LOAD_MAX   quiet threshold   (default 2.0)
-    #   SPARK_GRAFT_BENCH_LOAD_RETRIES  max sleeps     (default 5)
-    #   SPARK_GRAFT_BENCH_LOAD_WAIT  seconds per sleep (default 60)
-    load_max = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_MAX", "2.0"))
-    retries = int(os.environ.get("SPARK_GRAFT_BENCH_LOAD_RETRIES", "5"))
-    wait_s = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT", "60"))
     waited = 0
-    while os.getloadavg()[0] > load_max and waited < retries:
+    while os.getloadavg()[0] > LOAD_MAX and waited < LOAD_RETRIES:
         print(
-            f"# load1 {os.getloadavg()[0]:.2f} > {load_max}: waiting {wait_s:.0f}s "
-            f"for a quiet window ({waited + 1}/{retries})",
+            f"# load1 {os.getloadavg()[0]:.2f} > {LOAD_MAX}: waiting {LOAD_WAIT_S:.0f}s "
+            f"for a quiet window ({waited + 1}/{LOAD_RETRIES})",
             file=sys.stderr,
             flush=True,
         )
-        time.sleep(wait_s)
+        time.sleep(LOAD_WAIT_S)
         waited += 1
     load1_start = round(os.getloadavg()[0], 2)
-    noisy = load1_start > load_max
+    noisy = load1_start > LOAD_MAX
 
     from mysql_to_s3_spark import queries as catalog
     from mysql_to_s3_spark.session import get_spark
@@ -60,30 +58,28 @@ def main() -> None:
     # per row — for result-heavy rows (counters at sf1 returns 2.5M rows)
     # the collect number is transfer-bound and the count number is the
     # engine's actual cost.
-    # r11 measurement-honesty fix (r10 verdict item 1): before EVERY
-    # timed action, drop the cross-action warm state (the catalog rows'
-    # own .cache() frames + the prep_plan composition memo) so min-of-2
-    # prices each operator's per-execution cost, not a warm cache read.
-    # Genuine one-time fits (classifier, IVF/PQ, BPE, bloom, lifecycle
-    # receipts, streaming-drain receipts) stay session-cached — the
-    # blessed convention since r6. Expect pipeline_prepare /
-    # text_decontaminate / dedup_cluster_components / temporal_events to
-    # read HIGHER than BENCH_r10 (which priced warm pools); the r10
-    # numbers are kept in BENCH_r10.json and OPTIMIZATION_r11.md.
+    # Before EVERY timed action, clear the session's CacheManager (the
+    # catalog rows' own .cache() frames) so min-of-2 prices each row's
+    # cold per-execution cost, not a warm cache read. No row keeps
+    # anything else between builds: every build re-runs its own fits
+    # (classifier, IVF/PQ, BPE, bloom), fixture and lifecycle writes and
+    # streaming drains, so each number includes them. BENCH_r11 and
+    # earlier cached those once per session, so their min-of-2 read
+    # lower for the rows that carry them.
     headline = catalog.headline()
     times: dict[str, float] = {}
     engine_counts: dict[str, float] = {}
     for name in headline:
         best = None
         for _ in range(2):
-            catalog.release_plan_memos(spark)
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
             df = catalog.build(name)(spark, sf_dir)
             df.collect()
             dt = time.perf_counter() - t0
             best = dt if best is None else min(best, dt)
         times[name] = round(best, 4)
-        catalog.release_plan_memos(spark)
+        spark.catalog.clearCache()
         t0 = time.perf_counter()
         catalog.build(name)(spark, sf_dir).count()
         engine_counts[name] = round(time.perf_counter() - t0, 4)
@@ -107,12 +103,11 @@ def main() -> None:
                 "row_tags": catalog.row_tags(),
                 "protocol": (
                     "per query: min-of-2 full collect() (headline line) + "
-                    "one engine-side count() (driver-transfer-free); since "
-                    "r11, cached frames + plan memos are cleared before "
-                    "every timed action (release_plan_memos), so each "
-                    "number is the operator's COLD per-execution cost — "
-                    "only one-time model/index fits and streaming-drain "
-                    "receipts stay session-cached. "
+                    "one engine-side count() (driver-transfer-free); "
+                    "cached frames are cleared before every timed action "
+                    "(spark.catalog.clearCache()), and every build re-runs "
+                    "its own fits, fixture writes and streaming drains, so "
+                    "each number is the row's COLD per-build cost. "
                     "row_tags marks rows whose time covers several co-hosted "
                     "operators (ops) and oracle-binding-only legs (verify) — "
                     "BASELINE rows price ONE operator. Host note: totals "

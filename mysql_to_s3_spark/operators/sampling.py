@@ -80,50 +80,6 @@ def _salted_bucket(col: Column, salt: str) -> Column:
     return hash_bucket(F.concat(col.cast("string"), F.lit("|" + salt)))
 
 
-def mixture_rates_from_counts(
-    counts: dict[str, int],
-    alpha: float = 0.5,
-    target_total: int | None = None,
-) -> dict[str, float]:
-    """Temperature-based mixture rates from per-stratum doc counts — the
-    standard alpha-sampling rule for multi-source training mixes (cf.
-    GPT-3 / PaLM data mixtures; multilingual alpha-sampling in mBERT/XLM):
-    a stratum's sampling WEIGHT is n_i^alpha / sum_j n_j^alpha, so
-    alpha=1 keeps natural proportions, alpha=0 equalizes strata, and
-    values between damp the dominance of huge sources.
-
-    Returns KEEP RATES for ``stratified_hash_sample`` (downsampling
-    only, each in [0, 1]):
-
-    - with ``target_total``: rate_i = min(1, weight_i * T / n_i) — the
-      expected surviving total approximates T with the alpha mix (it
-      lands under T when a small stratum saturates at 1.0; iterate or
-      raise alpha if exactness matters);
-    - without: raw weights n_i^(alpha-1) are scaled so the highest-rate
-      stratum keeps 100% (for alpha < 1 that is the SMALLEST stratum —
-      nothing scarce is discarded; big sources are damped toward it).
-
-    Driver-side pure arithmetic over the (tiny) per-stratum count dict;
-    pair with ``df.groupBy(strata_col).count()`` to obtain counts."""
-    if not counts:
-        return {}
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    if any(n <= 0 for n in counts.values()):
-        bad = {k: n for k, n in counts.items() if n <= 0}
-        raise ValueError(f"counts must be positive, got {bad}")
-    if target_total is not None:
-        if target_total <= 0:
-            raise ValueError(f"target_total must be positive, got {target_total}")
-        z = sum(n ** alpha for n in counts.values())
-        return {
-            k: min(1.0, (n ** alpha / z) * target_total / n)
-            for k, n in counts.items()
-        }
-    m = max(n ** (alpha - 1.0) for n in counts.values())
-    return {k: n ** (alpha - 1.0) / m for k, n in counts.items()}
-
-
 def stratified_hash_sample(
     df: DataFrame,
     rates: dict[str, float],

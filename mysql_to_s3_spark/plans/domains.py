@@ -57,12 +57,13 @@ class CompiledDomain:
 
     def part_python_values(self) -> list | None:
         """Partition keys as Python values typed like the bucket column
-        (time domains -> datetime, matching the timestamp bucket key);
-        None for runtime-discovered (default) domains."""
+        as PySpark collects it (time domains -> naive LOCAL datetime,
+        the convention of TimestampType.fromInternal); None for
+        runtime-discovered (default) domains."""
         if self.part_values is None:
             return None
         if self.is_time:
-            return [dt.datetime.utcfromtimestamp(v) for v in self.part_values]
+            return [dt.datetime.fromtimestamp(v) for v in self.part_values]
         return list(self.part_values)
 
 

@@ -795,27 +795,21 @@ def _trimmed_stats_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank-select) under the hard gate: per-returnflag p90 of
     # l_quantity must equal DuckDB quantile_cont exactly. The operator
     # is EAGER (its containment validation runs jobs at call time), so
-    # the result — three (flag, p90) rows — is _fit_cached per
-    # (session, sf) and re-injected as a literal frame: repeated row
-    # builds stay job-free like every other builder in this file.
+    # the result — three (flag, p90) rows — is collected once per build
+    # and re-injected as a literal frame.
     from mysql_to_s3_spark.operators.quantiles import exact_percentile_grouped
     from mysql_to_s3_spark.sources.registry import load_table
 
-    p90_rows = _fit_cached(
-        spark,
-        sf_dir,
-        "p90b",
-        lambda: [
-            (r["l_returnflag"], float(r["p90b"]))
-            for r in exact_percentile_grouped(
-                load_table(spark, sf_dir, "lineitem"),
-                ["l_returnflag"],
-                "l_quantity",
-                0.9,
-                out_col="p90b",
-            ).collect()
-        ],
-    )
+    p90_rows = [
+        (r["l_returnflag"], float(r["p90b"]))
+        for r in exact_percentile_grouped(
+            load_table(spark, sf_dir, "lineitem"),
+            ["l_returnflag"],
+            "l_quantity",
+            0.9,
+            out_col="p90b",
+        ).collect()
+    ]
     p90 = spark.createDataFrame(p90_rows, "l_returnflag string, p90b double")
     return out.join(F.broadcast(p90), "l_returnflag").select(
         "l_returnflag",
@@ -1872,19 +1866,14 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
 
     # r9s3 `bloomf` leg: the Bloom incremental-ingest screen under the
     # hard gate — bitmap built over the fps of the doc_id%3==0 third
-    # (bloom_build is eager, so _fit_cached per session x sf), then
-    # EVERY doc's might-contain decision rides the row hash. m=1024/k=3
+    # (bloom_build is eager: it runs at build time), then EVERY doc's
+    # might-contain decision rides the row hash. m=1024/k=3
     # at ~167 inserted fps gives a ~6% false-positive rate, so the leg
     # binds both directions: members always 1 (no false negatives) and
     # the specific collision pattern of the md5-prefix position spec.
     from mysql_to_s3_spark.operators.bloom import bloom_build, bloom_might_contain
 
-    bm = _fit_cached(
-        spark,
-        sf_dir,
-        "bloomf",
-        lambda: bloom_build(fpf.filter(d % 3 == 0).select("fp"), "fp", 1024, 3),
-    )
+    bm = bloom_build(fpf.filter(d % 3 == 0).select("fp"), "fp", 1024, 3)
     # fp read from the cached frame (computed once per action), so the
     # 3 bloom probes hash a materialized 16-char column, never the doc
     bloom_leg = fpf.select(
@@ -1893,7 +1882,7 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
         bloom_might_contain(F.col("fp"), bm, 1024, 3).cast("bigint").alias("n_dupes"),
     )
 
-    surv_ids = _fit_drained(spark, sf_dir, "dedup_stream", _run_stream_dedup)
+    surv_ids = _run_stream_dedup()
     surv = spark.createDataFrame([(i,) for i in surv_ids], "doc_id bigint")
     stream = (
         fpf.join(F.broadcast(surv), "doc_id", "left_semi")
@@ -1955,7 +1944,7 @@ def _dedup_exact_spark(spark: SparkSession, sf_dir: str) -> dict:
             int(r["doc_id"]) for r in spark.sql(f"SELECT doc_id FROM {name}").collect()
         )
 
-    surl_ids = _fit_drained(spark, sf_dir, "url_stream", _run_stream_url)
+    surl_ids = _run_stream_url()
     surl_surv = stream_in.join(
         F.broadcast(spark.createDataFrame([(i,) for i in surl_ids], "doc_id bigint")),
         "doc_id",
@@ -2095,7 +2084,7 @@ def _dedup_minhash_spark(spark: SparkSession, sf_dir: str) -> dict:
             }
         )
 
-    flagged = _fit_drained(spark, sf_dir, "neardup_stream", _run_stream_near)
+    flagged = _run_stream_near()
     sflag = spark.createDataFrame([(i,) for i in flagged], "a bigint")
     # ONE cached pair scan feeds both legs (split_leakage's pairs=
     # hook): the branches' exchange subtrees differ (project vs label
@@ -2314,8 +2303,8 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> dict:
     # r9 session 2 — crawl-ingest legs (same fixed 60-doc slice):
     #
     # - `warc`: REAL end-to-end WARC read. A .warc.gz fileset (one gzip
-    #   member per record, per the spec) is written once per
-    #   (session, sf) from the doc slice, then read back through
+    #   member per record, per the spec) is written per build from
+    #   the doc slice, then read back through
     #   sources/warc.read_warc — the distributed binaryFile +
     #   mapInPandas parser — binding record framing, multi-member gzip,
     #   HTTP status/header/body split, and charset decode to the
@@ -2361,7 +2350,7 @@ def _multimodal_spark(spark: SparkSession, sf_dir: str) -> dict:
                 fh.write(write_warc_gz(recs))
         return root
 
-    warc_dir = _fit_cached(spark, sf_dir, "warc_fixture", _write_warc_fixture)
+    warc_dir = _write_warc_fixture()
     from mysql_to_s3_spark.sources.warc import read_warc
 
     wdf = read_warc(spark, warc_dir)
@@ -2447,8 +2436,6 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     # flips are outside any float-drift radius — the determinism
     # contract in tests/test_classifier.py), so one wrong prediction
     # anywhere in tokenize -> hashTF -> fit -> score breaks the hash.
-    # The fit is _fit_cached per (session, sf): bench prices the
-    # zero-Exchange scoring transform, not LBFGS.
     from mysql_to_s3_spark.operators.classifier import classify, train_text_classifier
 
     # text coalesced to '' on BOTH the training and scoring frames (the
@@ -2472,12 +2459,9 @@ def _text_quality_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mysql_to_s3_spark.operators.classifier import fit_partitions
 
     _train = docs.select(txt.alias("text"), rule.alias("label"))
-    clf = _fit_cached(
-        spark, sf_dir, "clsgate",
-        lambda: train_text_classifier(
-            _train.coalesce(fit_partitions(_train)),
-            "label", n_features=1 << 14, max_iter=50,
-        ),
+    clf = train_text_classifier(
+        _train.coalesce(fit_partitions(_train)),
+        "label", n_features=1 << 14, max_iter=50,
     )
     cls = classify(
         docs.select("doc_id", txt.alias("text")), clf
@@ -3096,7 +3080,7 @@ def _decontam_spark(spark: SparkSession, sf_dir: str) -> dict:
             int(r["doc_id"]) for r in spark.sql(f"SELECT doc_id FROM {name}").collect()
         )
 
-    kept = _fit_drained(spark, sf_dir, "decontam_stream", _run_stream_decontam)
+    kept = _run_stream_decontam()
     sdec = spark.createDataFrame([(i,) for i in kept], "train_id bigint")
     return {"pair": pairs, "sdec": sdec}
 
@@ -3128,96 +3112,20 @@ _q(
 )
 
 
-# driver-side fit artifacts (KMeans centroids / PQ codebooks) cached per
-# (kind, session, sf_dir) so the bench min-of-2 and repeated driver checks
-# pay the distributed fit once
-_FIT_CACHE: dict[tuple, object] = {}
-
-
-def _session_key(spark: SparkSession) -> str:
-    return str(spark._jsparkSession.sessionUUID())
-
-
-def _fit_cached(spark: SparkSession, sf_dir: str, kind: str, fit):
-    key = (kind, _session_key(spark), sf_dir)
-    if key not in _FIT_CACHE:
-        _FIT_CACHE[key] = fit()
-    return _FIT_CACHE[key]
-
-
 def _drain_available_now(q, timeout_secs: int = 300) -> None:
     """Block until an availableNow drain TERMINATES, or fail loudly.
 
     ``awaitTermination(t)`` returns False on timeout without stopping
-    the query; ignoring that on a loaded host leaves a PARTIAL memory
-    sink that _fit_cached would then pin for the session and surface as
-    a baffling oracle hash mismatch. Stop the straggler and raise — a
-    retried leg beats a silently wrong one."""
+    the query; ignoring that on a loaded host would read a PARTIAL
+    memory sink into the leg and surface as a baffling oracle hash
+    mismatch. Stop the straggler and raise — a retried leg beats a
+    silently wrong one."""
     if not q.awaitTermination(timeout_secs):
         q.stop()
         raise TimeoutError(
             f"availableNow drain did not terminate within {timeout_secs}s; "
             "partial sink discarded — rerun the leg (loaded host?)"
         )
-
-
-from contextlib import contextmanager as _contextmanager
-
-
-@_contextmanager
-def _drain_conf(spark, partitions: str = "8"):
-    """Scope spark.sql.shuffle.partitions down for an availableNow drain.
-
-    A streaming query captures the conf at START; the drains' state
-    stores, Arrow exchanges, and Python workers all scale with the
-    partition count while the staged corpora are tiny — 32 state
-    partitions x 4 micro-batches x several drains is almost pure fixed
-    overhead. Results are partitioning-independent by design (the folds
-    sort by event time; the set-bound legs compare sets), so this is a
-    pure wall-clock knob. Restores the session value on exit — the
-    batch legs keep their 32."""
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key)
-    spark.conf.set(key, partitions)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
-def _fit_drained(spark: SparkSession, sf_dir: str, kind: str, fit):
-    """_fit_cached with the drain-scoped shuffle-partition conf applied
-    around the (once-per-session) fit body."""
-
-    def wrapped():
-        with _drain_conf(spark):
-            return fit()
-
-    return _fit_cached(spark, sf_dir, kind, wrapped)
-
-
-# _FIT_CACHE kinds that memoise a HEADLINE operator's own composition or
-# result (not a model/index fit, fixture write, or streaming-drain
-# receipt). release_plan_memos drops these so a repeat bench iteration
-# re-runs the operator's own compute; everything else in _FIT_CACHE is a
-# one-time fit the bench deliberately prices once per session (LBFGS
-# classifier, IVF/PQ codebooks, BPE merges, bloom build, the ext/shard
-# lifecycles, and every availableNow drain receipt).
-_PLAN_MEMO_KINDS = frozenset({"prep_plan"})
-
-
-def release_plan_memos(spark: SparkSession) -> None:
-    """Reset cross-action warm state that would let a repeat bench
-    iteration skip a headline operator's own compute (r10 verdict: the
-    bench's min-of-2 must price the PLAN, not a warm cache): clear the
-    session's CacheManager (the catalog rows' own ``.cache()`` frames)
-    and drop the _FIT_CACHE plan memos (_PLAN_MEMO_KINDS). A frame
-    consumed several times inside ONE execution is re-cached by that
-    execution itself — only reuse ACROSS driver actions is forfeited.
-    Correctness-unaffected: released frames recompute from lineage."""
-    spark.catalog.clearCache()
-    for key in [k for k in _FIT_CACHE if k[0] in _PLAN_MEMO_KINDS]:
-        _FIT_CACHE.pop(key, None)
 
 
 def _write_stream_chunks(pdf, pusher, prefix: str, n_chunks: int = 3) -> str:
@@ -3301,31 +3209,20 @@ def _similarity_ivf_spark(spark: SparkSession, sf_dir: str) -> dict:
     emb = load_table(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
     base = emb.filter(F.col("vec_id") != 0)
-    centroids = _fit_cached(spark, sf_dir, "ivf16", lambda: ivf_fit(emb, n_cells=16))
-    books = _fit_cached(
-        spark, sf_dir, "pq8x16", lambda: pq_fit(emb, m=8, k=16, max_iter=10)
-    )
+    centroids = ivf_fit(emb, n_cells=16)
+    books = pq_fit(emb, m=8, k=16, max_iter=10)
     ivf = ivf_topk(base, qv, centroids, k=10, nprobe=12).select("vec_id", "cos")
     pq = pq_topk(base, qv, books, k=10, shortlist=200).select("vec_id", "cos")
-    # persisted leg: write the index once per (session, sf) — the
-    # _FIT_CACHE contract the KMeans/codebook fits already follow — and
-    # run the search round-trip every invocation, so the bench's
-    # min-of-2 measures the doubly-pruned SEARCH path (the part that
-    # runs per query at scale) rather than re-paying the one-time index
-    # build 3x per row (measured: 10.8 s/row with per-call writes)
-    def _write():
-        import atexit
+    # persisted leg: write the index to a temp dir, then run the
+    # doubly-pruned search round-trip against it. mkdtemp dirs outlive
+    # the process, so the dir is registered for removal at exit — else
+    # every session leaves a full copy of the embeddings table in /tmp
+    import atexit
 
-        idx = tempfile.mkdtemp(prefix="ivfpq_idx_")
-        shutil.rmtree(idx, ignore_errors=True)
-        ivfpq_write_index(base, centroids, books, idx)
-        # _FIT_CACHE has no eviction hook and mkdtemp dirs outlive the
-        # process — without this, every bench/driver session leaves a
-        # full copy of the embeddings table under /tmp
-        atexit.register(shutil.rmtree, idx, ignore_errors=True)
-        return idx
-
-    idx = _fit_cached(spark, sf_dir, "ivfpq_idx", _write)
+    idx = tempfile.mkdtemp(prefix="ivfpq_idx_")
+    atexit.register(shutil.rmtree, idx, ignore_errors=True)
+    shutil.rmtree(idx, ignore_errors=True)
+    ivfpq_write_index(base, centroids, books, idx)
     ivfpq = ivfpq_search_index(
         spark, idx, qv, k=10, nprobe=12, shortlist=200
     ).select("vec_id", "cos")
@@ -3522,7 +3419,7 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
                 bounded-contract values — row count surviving the
                 unique check on a key that IS unique, and 1 iff the
                 deliberately duplicated frame raised. The eager checks
-                run once per (session, sf) via _fit_cached."""
+                run at build time."""
     import json as _json
     import os as _os
     import shutil as _shutil
@@ -3591,36 +3488,32 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
         ).alias("total_qty"),
     )
 
-    # the lifecycle runs once per (session, sf) — the _FIT_CACHE contract
-    # the KMeans/index fits follow — so bench min-of-2 measures the
-    # distributed read-back, not a repeated driver batch loop
-    def _run_extract():
-        import atexit
+    # the full Extract.run() lifecycle, into a temp dir removed at exit
+    import atexit
 
-        root = _tempfile.mkdtemp(prefix="extract_run_")
-        atexit.register(_shutil.rmtree, root, ignore_errors=True)
-        etabs = dict(tables)
-        etabs["orders"] = tables["orders"].filter(F.col("o_orderkey") < 100)
-        notes: list[dict] = []
-        ex = Extract(
-            etabs,
-            plan,
-            cfg,
-            ExtractConfig(
-                field="o_orderkey",
-                start=0,
-                batch=25,
-                destination=_os.path.join(root, "out"),
-                last=_os.path.join(root, "checkpoint.json"),
-                key_format="a.b",
-                source_name="orders",
-            ),
-        )
-        ex.run(notify=notes.append)
-        resumed = ex.run()  # checkpoint present: must write nothing
-        return _os.path.join(root, "out"), len(notes), len(resumed)
-
-    out_dir, n_notify, n_resumed = _fit_cached(spark, sf_dir, "extract_run", _run_extract)
+    root = _tempfile.mkdtemp(prefix="extract_run_")
+    atexit.register(_shutil.rmtree, root, ignore_errors=True)
+    out_dir = _os.path.join(root, "out")
+    etabs = dict(tables)
+    etabs["orders"] = tables["orders"].filter(F.col("o_orderkey") < 100)
+    notes: list[dict] = []
+    ex = Extract(
+        etabs,
+        plan,
+        cfg,
+        ExtractConfig(
+            field="o_orderkey",
+            start=0,
+            batch=25,
+            destination=out_dir,
+            last=_os.path.join(root, "checkpoint.json"),
+            key_format="a.b",
+            source_name="orders",
+        ),
+    )
+    ex.run(notify=notes.append)
+    n_notify = len(notes)
+    n_resumed = len(ex.run())  # checkpoint present: must write nothing
 
     def parse_ext(batches):
         import pandas as pd
@@ -3692,18 +3585,12 @@ def _snowflake_denorm_spark(spark: SparkSession, sf_dir: str) -> dict:
         F.round(F.col("l_quantity"), 6).cast("double").alias("total_qty"),
     )
 
-    def _uniq_gate():
-        n_ok = unique_index(tables["orders"], ["o_orderkey"]).count()
-        try:
-            unique_index(
-                tables["orders"].unionByName(tables["orders"]), ["o_orderkey"]
-            )
-            raised = 0
-        except IndexError_:
-            raised = 1
-        return n_ok, raised
-
-    n_uniq_ok, uniq_raised = _fit_cached(spark, sf_dir, "uniq_gate", _uniq_gate)
+    n_uniq_ok = unique_index(tables["orders"], ["o_orderkey"]).count()
+    try:
+        unique_index(tables["orders"].unionByName(tables["orders"]), ["o_orderkey"])
+        uniq_raised = 0
+    except IndexError_:
+        uniq_raised = 1
 
     summary = spark.createDataFrame(
         [
@@ -3984,9 +3871,7 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> dict:
       here) and coverage == 1.0 (max_words uncapped).
 
     The train (one word-count shuffle + a vocabulary-sized collect +
-    the driver merge loop) is _fit_cached per (session, sf) like the
-    ivfpq index build, so bench min-of-2 prices the distributed ENCODE,
-    not the fit."""
+    the driver merge loop) runs once per build."""
     from pyspark.sql import functions as F
 
     from mysql_to_s3_spark.operators.bpe import (
@@ -4002,9 +3887,7 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> dict:
 
     docs = spread(load_table(spark, sf_dir, "documents"))
 
-    model = _fit_cached(
-        spark, sf_dir, "bpe", lambda: bpe_train(docs, n_merges=_BPE_N_MERGES)
-    )
+    model = bpe_train(docs, n_merges=_BPE_N_MERGES)
     fixed = BpeModel(merges=_BPE_FIXED_MERGES, coverage=1.0)
     base = docs.select(
         "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
@@ -4039,16 +3922,11 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> dict:
         write_training_shards,
     )
 
-    # the write -> verify lifecycle runs once per (session, sf) like the
-    # BPE/extract fits — bench min-of-2 prices the receipt SCAN, not a
-    # repeated corpus write — and the temp dir is registered for cleanup
-    def _shard_lifecycle():
-        sdir = tempfile.mkdtemp(prefix="shard_receipt_")
-        atexit.register(shutil.rmtree, sdir, ignore_errors=True)
-        write_training_shards(docs, sdir, budget=2048, n_buckets=8, manifest=True)
-        return sdir, 0.0 if verify_shards(spark, sdir) else 1.0
-
-    sdir, ok = _fit_cached(spark, sf_dir, "shard_receipt", _shard_lifecycle)
+    # the temp dir is registered for cleanup at exit
+    sdir = tempfile.mkdtemp(prefix="shard_receipt_")
+    atexit.register(shutil.rmtree, sdir, ignore_errors=True)
+    write_training_shards(docs, sdir, budget=2048, n_buckets=8, manifest=True)
+    ok = 0.0 if verify_shards(spark, sdir) else 1.0
     shard = _shard_stats_frame(spark, sdir).select(
         F.col("bucket").cast("bigint").alias("key1"),
         F.col("n_seqs").cast("bigint").alias("key2"),
@@ -4109,7 +3987,7 @@ def _chunk_pack_spark(spark: SparkSession, sf_dir: str) -> dict:
                 )
         return rows
 
-    sshard_rows = _fit_drained(spark, sf_dir, "shard_stream", _run_stream_shards)
+    sshard_rows = _run_stream_shards()
     sshard = spark.createDataFrame(
         sshard_rows,
         "key1 bigint, key2 bigint, n_tokens bigint, n_items bigint, "
@@ -4388,18 +4266,10 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
     docs = spread(load_table(spark, sf_dir, "documents"))
     bench = docs.filter((F.col("doc_id") % 7 == 0) & (F.col("doc_id") < 3500))
     cfg = CorpusConfig(splits=_SPLIT_FRACTIONS, **_PIPE_CFG)
-    # r10 optimization: prepare_corpus is EAGER at build time — the
-    # near-dup connected-components rounds run driver-side actions
-    # before the row's plan even exists (6-10 s warm at sf0.1), and the
-    # bench's min-of-2 + engine-count protocol calls build() three
-    # times. Build the composition once per (session, sf) — the same
-    # _fit_cached convention as the snowflake 'ext' lifecycle and every
-    # stream drain: the bench prices the distributed plan, not a
-    # re-run of the driver-side iteration.
-    prep = _fit_cached(
-        spark, sf_dir, "prep_plan",
-        lambda: prepare_corpus(docs, cfg, bench=bench),
-    )
+    # prepare_corpus is EAGER at build time: the near-dup
+    # connected-components rounds run driver-side actions before the
+    # row's plan exists (6-10 s warm at sf0.1)
+    prep = prepare_corpus(docs, cfg, bench=bench)
     # cache the two expensive boundaries: without this, the near-dup
     # pair join + components run once per leg that contains them (kept +
     # 3 funnel counts) and decontam 3x. Spark's CacheManager substitutes
@@ -4463,7 +4333,7 @@ def _pipeline_prepare_spark(spark: SparkSession, sf_dir: str) -> dict:
             int(r["doc_id"]) for r in spark.sql(f"SELECT doc_id FROM {name}").collect()
         )
 
-    sprep_ids = _fit_drained(spark, sf_dir, "prep_stream", _run_stream_prep)
+    sprep_ids = _run_stream_prep()
     from mysql_to_s3_spark.operators.text import fingerprint as _fp
 
     sprep = (
@@ -4806,7 +4676,7 @@ def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> dict:
     binds each bucket's id, its per-bucket COUNT, and its MIN event time
     to the batch SQL — the first oracle-gated row for the streaming
     path (previously property-tested only). The drain runs once per
-    (session, sf) via _fit_cached, so bench prices the batch legs."""
+    build."""
     from pyspark.sql import functions as F
 
     from mysql_to_s3_spark.sources.registry import load_table
@@ -4892,7 +4762,7 @@ def _counters_batch_keys_spark(spark: SparkSession, sf_dir: str) -> dict:
         ).collect()
         return [(int(r["b0"]), int(r["ft"]), int(r["n"])) for r in rows]
 
-    srows = _fit_drained(spark, sf_dir, "stream_counts", _run_stream_counts)
+    srows = _run_stream_counts()
     stream_leg = spark.createDataFrame(srows, "batch0 bigint, batch1 bigint, batch2 bigint")
     return {"day": day, "month": month, "stream": stream_leg}
 
@@ -5291,8 +5161,7 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> dict:
     flush. That makes the drained output independent of within-batch
     arrival order (the property the operators' hypothesis suites check
     under random permutations — here it makes the oracle hash exact).
-    The drain is _fit_cached per (session, sf): bench iterations after
-    the first price the batch plan, the counters-leg convention.
+    The drain runs once per build.
 
     All batch legs read ONE cached scan of the events table instead of
     five parquet scans.
@@ -5620,9 +5489,7 @@ def _temporal_events_spark(spark: SparkSession, sf_dir: str) -> dict:
             sess_rows.append((uid, seq, s0, s1, n))
         return asof_rows, fun_rows, sess_rows, fwd_rows, near_rows, fwin_rows, range_rows
 
-    srows, frows, ssrows, fwrows, nrrows, fwinrows, rngrows = _fit_drained(
-        spark, sf_dir, "temporal_stream", _run_stream_temporal
-    )
+    srows, frows, ssrows, fwrows, nrrows, fwinrows, rngrows = _run_stream_temporal()
     leg_schema = "a bigint, b bigint, t1 timestamp_ntz, t2 timestamp_ntz, x double"
 
     import datetime as _dt

@@ -11,10 +11,10 @@ mapping:
   strictly-increasing   -> ``withWatermark`` lateness bound (the reference
   assertion                hard-rejects late rows, counter.py:69-70; a
                            zero watermark drops them)
-  BatchCounter          -> cross-micro-batch sub-batch numbering kept in
-                           ``applyInPandasWithState`` state (rows seen per
-                           duration bucket), SURVEY §2.8's stateful
-                           pandas path
+  BatchCounter          -> cross-micro-batch sub-batch numbering: the
+                           ``foreachBatch`` handler carries rows seen per
+                           duration bucket into the next epoch's
+                           ``counters.batch_key_columns(offsets=)``
   per-batch JSON file   -> ``foreachBatch`` -> sinks.json_sink
 
 100 TB story: counts/window aggs are partial-aggregated map-side per
@@ -36,7 +36,7 @@ from pyspark.sql import types as T
 
 from mysql_to_s3_spark.functions.dates import parse_duration
 from mysql_to_s3_spark.sinks.json_sink import write_json_lines
-from mysql_to_s3_spark.streaming.counters import _WEEK_OFFSET, batch_key_columns
+from mysql_to_s3_spark.streaming.counters import batch_key_columns
 
 
 class StreamError(ValueError):
@@ -114,69 +114,6 @@ def stream_batch_counts(
             F.max(ts_col).alias("last_ts"),
         )
         .select(F.col("bucket.start").alias("bucket_start"), "n", "first_ts", "last_ts")
-    )
-
-
-def _bucket_key(ts_col: Column, secs: int) -> Column:
-    """floor_duration as a Column: unix-grid floor, Sunday-anchored weeks."""
-    v = ts_col.cast("timestamp").cast("double")
-    off = _WEEK_OFFSET if secs % (7 * 86400) == 0 else 0
-    return (F.floor((v + F.lit(off)) / secs) * secs - F.lit(off)).cast("long")
-
-
-def stateful_subbatch_index(
-    sdf: DataFrame,
-    ts_col: str,
-    duration: str,
-    size: int,
-    id_col: str,
-) -> DataFrame:
-    """BatchCounter semantics across micro-batches: sub-batch index
-    continues where the previous micro-batch stopped, via per-bucket row
-    counts held in ``applyInPandasWithState`` state.
-
-    State is one integer per duration bucket — bounded by elapsed wall
-    time, not data volume."""
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    secs = _fixed_seconds(duration)
-    keyed = sdf.select(
-        _bucket_key(F.col(ts_col), secs).alias("__batch0__"),
-        F.col(ts_col).cast("timestamp").cast("double").alias("__ts__"),
-        F.col(id_col).cast("long").alias("__id__"),
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("__batch0__", T.LongType()),
-            T.StructField("__batch1__", T.LongType()),
-            T.StructField("__batch2__", T.LongType()),
-            T.StructField("__id__", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("seen", T.LongType())])
-
-    def assign(
-        key: tuple, pdfs: Iterator["pd.DataFrame"], state: GroupState  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        seen = state.get[0] if state.exists else 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values(["__ts__", "__id__"]).reset_index(drop=True)
-            rn = pdf.index.to_numpy() + seen
-            seen += len(pdf)
-            yield pd.DataFrame(
-                {
-                    "__batch0__": key[0],
-                    "__batch1__": rn // size,
-                    "__batch2__": rn % size,
-                    "__id__": pdf["__id__"],
-                }
-            )
-        state.update((seen,))
-
-    return keyed.groupBy("__batch0__").applyInPandasWithState(
-        assign, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
     )
 
 

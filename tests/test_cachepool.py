@@ -2,8 +2,7 @@
 call, and after collecting its result, the session's CacheManager holds
 nothing the operator registered, and an identical second call returns
 the same rows. Caching is the caller's explicit choice (the catalog
-rows' ``.cache()`` frames), and ``release_plan_memos`` clears exactly
-that plus the plan memos."""
+rows' ``.cache()`` frames, which ``spark.catalog.clearCache()`` drops)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,38 +10,6 @@ from pyspark.sql import functions as F
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
-def _corpus(spark, tag, n):
-    return spark.range(n).select(
-        F.col("id"), F.concat(F.lit(tag), F.col("id").cast("string")).alias("text")
-    )
-
-
-def test_release_plan_memos_scrubs_pools_and_plan_memos_only(spark):
-    """The bench-honesty hook: release_plan_memos must leave the
-    CacheManager empty (the catalog rows' own cached frames) AND drop the
-    plan-memo _FIT_CACHE kinds (prep_plan), while leaving genuine
-    model/index fits and drain receipts warm."""
-    from mysql_to_s3_spark import queries as cat
-
-    c = _corpus(spark, "pm", 9).cache()
-    c.count()
-    assert c.is_cached and not _cache_empty(spark)
-    skey = cat._session_key(spark)
-    cat._FIT_CACHE[("prep_plan", skey, "/fake/sf")] = "memoised composition"
-    cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] = "a model fit"
-    cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] = [1, 2, 3]
-    try:
-        cat.release_plan_memos(spark)
-        assert _cache_empty(spark)
-        assert ("prep_plan", skey, "/fake/sf") not in cat._FIT_CACHE
-        assert cat._FIT_CACHE[("clsgate", skey, "/fake/sf")] == "a model fit"
-        assert cat._FIT_CACHE[("prep_stream", skey, "/fake/sf")] == [1, 2, 3]
-    finally:
-        cat._FIT_CACHE.pop(("clsgate", skey, "/fake/sf"), None)
-        cat._FIT_CACHE.pop(("prep_stream", skey, "/fake/sf"), None)
-        cat._FIT_CACHE.pop(("prep_plan", skey, "/fake/sf"), None)
 
 
 def _edges(spark, sf_dir, docs, index):

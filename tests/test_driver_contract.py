@@ -85,3 +85,35 @@ def test_catalog_declares_its_legs():
         )
     with pytest.raises(ValueError, match="dedup_exact"):
         catalog._union_legs("dedup_exact", {"batch": None, ("stream", "surl"): None})
+
+
+# rows that compute fits, fixtures or streaming drains while they build:
+# nothing of one build is kept for the next, so a second build in the
+# same session must return the rows of the first
+REBUILT_ROWS = [
+    "agg_trimmed_stats",
+    "text_quality",
+    "dedup_exact",
+    "dedup_minhash_lsh",
+    "text_decontaminate",
+    "similarity_ivf",
+    "multimodal_features",
+    "snowflake_denormalize",
+    "text_chunk_pack",
+    "pipeline_prepare",
+    "counters_batch_keys",
+    "temporal_events",
+]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [pytest.param(n, marks=() if n == "agg_trimmed_stats" else pytest.mark.slow) for n in REBUILT_ROWS],
+)
+def test_rebuild_in_one_session_returns_equal_rows(spark, name):
+    build = catalog.build(name)
+    first, cols = _rows(build(spark, SF_DIR))
+    second, cols2 = _rows(build(spark, SF_DIR))
+    assert cols == cols2 and len(first) == len(second), name
+    for a, b in zip(sorted(first, key=repr), sorted(second, key=repr)):
+        assert _eq(a, b), f"{name}: {a} != {b}"

@@ -118,6 +118,55 @@ def test_format_cube_general_set_declaration_order(spark, sf_dir):
     assert parts[:3] == ["small", "big", "mid"]  # declaration order, not alphabetical
 
 
+def test_format_cube_time_edge_outside_utc(spark, sf_dir, duck):
+    """A time edge's declared parts use the convention PySpark collects
+    TimestampType in (naive LOCAL datetimes), so outside UTC the cube
+    lists exactly the declared parts and every count lands in its part."""
+    import datetime as dt
+    import os
+    import time
+
+    q = {
+        "from": "orders",
+        "edges": [
+            {
+                "name": "qtr",
+                "value": "o_orderdate",
+                "allowNulls": False,
+                "domain": {"type": "time", "min": "1995-01-01", "max": "1996-01-01", "interval": "3month"},
+            }
+        ],
+        "select": [{"name": "n", "value": ".", "aggregate": "count"}],
+        "format": "cube",
+    }
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        out = run_formatted(q, spark=spark, sf_dir=sf_dir)
+        starts = [
+            dt.datetime(1995, m, 1, tzinfo=dt.timezone.utc).timestamp() for m in (1, 4, 7, 10)
+        ]
+        declared = [dt.datetime.fromtimestamp(s) for s in starts]
+    finally:
+        if old_tz is None:
+            os.environ.pop("TZ", None)
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    parts = [p["value"] for p in out["edges"][0]["domain"]["partitions"]]
+    assert parts == declared
+    want = dict(
+        duck.execute(
+            """SELECT (month(o_orderdate) - 1) // 3, count(*) FROM orders
+               WHERE o_orderdate >= TIMESTAMP '1995-01-01'
+                 AND o_orderdate < TIMESTAMP '1996-01-01'
+               GROUP BY 1"""
+        ).fetchall()
+    )
+    assert out["data"]["n"] == [want.get(i, 0) for i in range(4)]
+
+
 def test_format_cube_two_edges_matrix(spark, sf_dir):
     q = {
         "from": "lineitem",

@@ -111,6 +111,19 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     assert full == exact
 
 
+def test_ivf_and_pq_refit_equal(spark, sf_dir):
+    """Two fits of the same frame give equal centroids and codebooks
+    (seeded KMeans over a fixed partitioning), at the catalog's
+    similarity_ivf parameters: a row that refits per build returns the
+    same rows on every build."""
+    from mysql_to_s3_spark.sources.registry import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    assert similarity.ivf_fit(emb, n_cells=16) == similarity.ivf_fit(emb, n_cells=16)
+    books = similarity.pq_fit(emb, m=8, k=16, max_iter=10)
+    assert books == similarity.pq_fit(emb, m=8, k=16, max_iter=10)
+
+
 def test_ivf_persisted_index_partition_pruned_search(spark, sf_dir, tmp_path):
     """ivf_write_index + ivf_search_index: same answer as the in-memory
     ivf_topk, and the probe is a PARTITION-pruned scan (the plan's

@@ -238,54 +238,6 @@ def test_epoch_shuffle_single_exchange(spark, sf_dir):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_mixture_rates_from_counts():
-    """Alpha-sampling rule: surviving counts proportional to n^alpha,
-    downsample-only rates, both normalizations."""
-    import pytest as _pytest
-
-    from mysql_to_s3_spark.operators.sampling import mixture_rates_from_counts
-
-    counts = {"web": 1_000_000, "books": 10_000, "code": 100_000}
-
-    # alpha=1: natural proportions — everything kept at 1.0 (no target)
-    assert mixture_rates_from_counts(counts, alpha=1.0) == {
-        k: 1.0 for k in counts
-    }
-
-    # alpha=0: equalize — every stratum's surviving count equals the
-    # smallest stratum's
-    r0 = mixture_rates_from_counts(counts, alpha=0.0)
-    surv = {k: r0[k] * counts[k] for k in counts}
-    assert r0["books"] == 1.0
-    assert all(abs(v - 10_000) < 1e-6 for v in surv.values())
-
-    # intermediate alpha: survivors proportional to n^alpha, max rate 1,
-    # all rates in (0, 1]
-    a = 0.5
-    ra = mixture_rates_from_counts(counts, alpha=a)
-    assert max(ra.values()) == 1.0 and all(0 < v <= 1.0 for v in ra.values())
-    sa = {k: ra[k] * counts[k] for k in counts}
-    ratio = {k: sa[k] / counts[k] ** a for k in counts}
-    base = ratio["web"]
-    assert all(abs(v / base - 1) < 1e-9 for v in ratio.values())
-
-    # target_total: expected survivors ~ T with the alpha mix
-    rt = mixture_rates_from_counts(counts, alpha=0.5, target_total=50_000)
-    st = sum(rt[k] * counts[k] for k in counts)
-    assert 40_000 <= st <= 50_000 + 1e-6
-    assert all(0 < v <= 1.0 for v in rt.values())
-
-    # plumbing: the rates slot straight into stratified_hash_sample's
-    # validation (all within [0, 1])
-    assert mixture_rates_from_counts({}) == {}
-    with _pytest.raises(ValueError, match="alpha"):
-        mixture_rates_from_counts(counts, alpha=-1)
-    with _pytest.raises(ValueError, match="positive"):
-        mixture_rates_from_counts({"x": 0})
-    with _pytest.raises(ValueError, match="target_total"):
-        mixture_rates_from_counts(counts, target_total=0)
-
-
 # ---------------------------------------------------------------- repeat_epochs
 
 

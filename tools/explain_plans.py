@@ -11,7 +11,7 @@ BatchEvalPython nodes) — capture them BEFORE and AFTER each change
 
 Notes:
 - Builds each row once and prints the FORMATTED plan of the returned
-  DataFrame. Rows that stage work at build time (fit-cached drains,
+  DataFrame. Rows that stage work at build time (fits, streaming drains,
   in-row writes) pay that once here; the captured plan is the final
   collected plan, which is what the bench times.
 - Runs at $SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS]
