@@ -11,6 +11,13 @@ table) ONCE per run and collects, per batch key, the first and last
 ``(field, *id_columns)`` position and the batch's min id.
 ``Extract.documents`` builds the document frame of the whole fact ONCE per
 run; it carries those positions raw (``doc_frame(positions=...)``).
+Once the run knows it has a batch to do, it builds each top-level
+dimension frame (``snowflake.dimension_frames``) once and freezes it with
+an eager ``localCheckpoint``; the document frame joins those frozen
+frames, so a batch plans, scans and broadcasts only small
+``Scan ExistingRDD`` dimension leaves, and no batch re-reads a dimension
+table. ``run`` releases the frozen blocks when it returns; nothing
+outlives the call, and a resume with nothing to do builds none.
 ``Extract.ids_for_batch`` turns one batch into a literal lexicographic
 range filter on the position columns, so a batch reads no window and
 builds no join: the separate ``field >= lo AND field <= hi`` conjunct
@@ -40,7 +47,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mysql_to_s3_spark.sinks.json_sink import etl_envelope, write_json_lines
-from mysql_to_s3_spark.sources.snowflake import FactPlan, SnowflakeConfig, doc_frame, position_column
+from mysql_to_s3_spark.sources.snowflake import (
+    FactPlan,
+    NodePath,
+    SnowflakeConfig,
+    dimension_frames,
+    doc_frame,
+    position_column,
+)
 from mysql_to_s3_spark.streaming.counters import batch_key_columns
 
 log = logging.getLogger(__name__)
@@ -134,6 +148,12 @@ def _literal(value: Any, dtype: T.DataType) -> Column:
     return F.lit(value).cast(dtype)
 
 
+def _release(frozen: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``ed frame now, not when the
+    JVM happens to collect it."""
+    frozen._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def _lexicographic(cols: list[Column], vals: list[Column], strict, last) -> Column:
     """``(c0, c1, ...) op (v0, v1, ...)`` as ``c0 strict v0 OR (c0 = v0 AND
     (c1 strict v1 OR ...))``, the innermost comparison being ``last``."""
@@ -193,13 +213,13 @@ class Extract:
         )
         return [Batch((r[0], r[1]), tuple(r["lo"]), tuple(r["hi"]), r["first"]) for r in rows]
 
-    def documents(self) -> DataFrame:
+    def documents(self, dims: dict[NodePath, DataFrame] | None = None) -> DataFrame:
         """The document frame of the whole fact, carrying the raw
         ``(field, *id_columns)`` positions in ``doc_frame``'s position
-        columns; ``run`` builds it once and writes each batch as an
-        ``ids_for_batch`` filter on it."""
+        columns; ``run`` builds it once, over its frozen ``dims``, and
+        writes each batch as an ``ids_for_batch`` filter on it."""
         names = [c for c, _ in self._positions()]
-        return doc_frame(self.tables, self.plan, self.snowflake, positions=names)
+        return doc_frame(self.tables, self.plan, self.snowflake, positions=names, dims=dims)
 
     def ids_for_batch(self, batch: Batch, docs: DataFrame) -> DataFrame:
         """The rows of ``docs`` (a ``documents`` frame) in ``batch``: a
@@ -225,7 +245,9 @@ class Extract:
     ) -> list[str]:
         """Extract every batch after the checkpoint; returns written paths.
         ``notify`` is the SQS-analog hook, called per batch with
-        {destination, key, timestamp} (extract.py:244-251)."""
+        {destination, key, timestamp} (extract.py:244-251). The top-level
+        dimension frames are built and frozen once, after the batches to
+        do are known, and released on return."""
         done_after: tuple | None = None
         if resume and self.extract.last:
             cp = read_checkpoint(self.extract.last)
@@ -235,7 +257,16 @@ class Extract:
         todo = [b for b in self.batches() if done_after is None or b.key > done_after]
         if not todo:
             return []
-        docs = self.documents()
+        dims: dict[NodePath, DataFrame] = {}
+        try:
+            for path, frame in dimension_frames(self.tables, self.plan, self.snowflake).items():
+                dims[path] = frame.localCheckpoint(eager=True)
+            return self._write(todo, self.documents(dims), notify)
+        finally:
+            for frame in dims.values():
+                _release(frame)
+
+    def _write(self, todo: list[Batch], docs: DataFrame, notify) -> list[str]:
         pos_cols = [position_column(i) for i in range(len(self._positions()))]
         written = []
         for batch in todo:

@@ -23,19 +23,29 @@ Pipeline:
      reference's ordered UNION-ALL + construct_docs merge pass entirely.
 
 Scale notes: dimension tables broadcast (they are small by definition of
-the snowflake shape); the child aggregation shuffles on the parent key
-once per nesting level. Skew from a fact row with millions of children is
-bounded by the CHILD CAP (``SnowflakeConfig.child_cap``): a per-parent
-``row_number() <= cap`` BEFORE the collect_list bounds the aggregation
-buffer, and the dropped-row count lands in a sibling
-``<field>__overflow__`` column — see ``_prepare_child``. Unset = the
-reference's unbounded contract.
+the snowflake shape, and do not change with an extract batch). A
+top-level dimension frame — one hung directly off the fact or off a
+child node, its own sub-dimensions joined in — is built by
+``dimension_frames``, and ``doc_frame(dims=...)`` joins frames the
+caller built: an extract builds each one once per run and freezes it,
+and each batch broadcasts only that frozen frame. The child aggregation
+shuffles on the parent key once per nesting level. Skew from a fact row
+with millions of children is bounded by the CHILD CAP
+(``SnowflakeConfig.child_cap``): a per-parent ``row_number() <= cap``
+BEFORE the collect_list bounds the aggregation buffer, and the
+dropped-row count lands in a sibling ``<field>__overflow__`` column —
+see ``_prepare_child``. Unset = the reference's unbounded contract.
+
+Internal column names (join keys, values, overflow counts, salts) are
+derived from the node's position in the ``FactPlan`` tree — the fact is
+``()``, its ``i``-th dim ``(i,)``, its ``j``-th child ``(len(dims) + j,)``
+and so on down — so ``doc_frame`` is a pure function of its inputs and a
+pre-built dimension frame carries the names of its join site.
 """
 
 from __future__ import annotations
 
-import itertools
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame
@@ -320,7 +330,19 @@ def build_plan(
 # join-DAG -> nested DataFrame
 
 
-_uid = itertools.count()
+NodePath = tuple[int, ...]
+
+
+def _tag(path: NodePath) -> str:
+    return "_".join(map(str, path))
+
+
+def _key_names(path: NodePath, n: int) -> list[str]:
+    return [f"__k{_tag(path)}_{i}__" for i in range(n)]
+
+
+def _value_name(path: NodePath) -> str:
+    return f"__v{_tag(path)}__"
 
 
 def position_column(i: int) -> str:
@@ -346,11 +368,11 @@ def _normalize_table(df: DataFrame, cfg: SnowflakeConfig, raw: Sequence[str] = (
     return df.select(*out)
 
 
-def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, list[str], str]:
-    """-> (frame keyed by renamed ref columns, key names, value column name).
-
-    The value column is the dim's struct (or its inline scalar)."""
-    df, fields = _element_fields(tables, d)
+def _prepare_dim(tables: dict[str, DataFrame], d: DimNode, path: NodePath) -> DataFrame:
+    """The dim at ``path`` as a frame of its ref columns renamed to
+    ``_key_names(path, ...)`` and its struct (or inline scalar) as
+    ``_value_name(path)``; its own sub-dims are joined in."""
+    df, fields = _element_fields(tables, d, path)
     if d.inline_column is not None:
         value = F.col(d.inline_column)
     else:
@@ -361,33 +383,39 @@ def _prepare_dim(tables: dict[str, DataFrame], d: DimNode) -> tuple[DataFrame, l
             e = c.isNotNull()
             any_set = e if any_set is None else any_set | e
         value = F.when(any_set if any_set is not None else F.lit(False), struct)
-    uid = next(_uid)
-    keys = [f"__k{uid}_{i}__" for i in range(len(d.ref_columns))]
-    vname = f"__v{uid}__"
-    return (
-        df.select(*[F.col(rc).alias(k) for rc, k in zip(d.ref_columns, keys)], value.alias(vname)),
-        keys,
-        vname,
+    keys = _key_names(path, len(d.ref_columns))
+    return df.select(
+        *[F.col(rc).alias(k) for rc, k in zip(d.ref_columns, keys)], value.alias(_value_name(path))
     )
 
 
 def _element_fields(
-    tables: dict[str, DataFrame], node, cfg: SnowflakeConfig | None = None
+    tables: dict[str, DataFrame],
+    node,
+    path: NodePath,
+    cfg: SnowflakeConfig | None = None,
+    dims: Mapping[NodePath, DataFrame] | None = None,
 ) -> tuple[DataFrame, list[tuple[str, any]]]:
-    """Shared dim/child field assembly for one table's rows (``cfg``
-    carries the child valves; a dim has no children and needs none)."""
+    """Shared dim/child field assembly for the rows of the node at
+    ``path``. ``cfg`` carries the child valves; ``dims`` holds the
+    node's top-level dimension frames by path (a fact or child node
+    passes them; a dim builds its own sub-dims and has no children)."""
     df = tables[node.table]
     fields: list[tuple[str, any]] = [(out, F.col(c)) for c, out in node.out_columns]
-    for sub in node.dims:
-        sub_df, sub_keys, sub_v = _prepare_dim(tables, sub)
+    for i, sub in enumerate(node.dims):
+        sub_path = path + (i,)
+        sub_df = dims[sub_path] if dims is not None else _prepare_dim(tables, sub, sub_path)
+        sub_keys, sub_v = _key_names(sub_path, len(sub.ref_columns)), _value_name(sub_path)
         cond = None
         for fk, k in zip(sub.fk_columns, sub_keys):
             c = df[fk] == sub_df[k]
             cond = c if cond is None else cond & c
         df = df.join(F.broadcast(sub_df), cond, "left").drop(*sub_keys)
         fields.append((sub.field, F.col(sub_v)))
-    for sub in getattr(node, "children", []) or []:
-        sub_df, sub_keys, sub_v, sub_ov = _prepare_child(tables, sub, cfg)
+    for j, sub in enumerate(getattr(node, "children", []) or []):
+        sub_df, sub_keys, sub_v, sub_ov = _prepare_child(
+            tables, sub, path + (len(node.dims) + j,), cfg, dims
+        )
         cond = None
         for pc, k in zip(sub.parent_columns, sub_keys):
             c = df[pc] == sub_df[k]
@@ -402,13 +430,18 @@ def _element_fields(
 
 
 def _prepare_child(
-    tables: dict[str, DataFrame], ch: ChildNode, cfg: SnowflakeConfig
+    tables: dict[str, DataFrame],
+    ch: ChildNode,
+    path: NodePath,
+    cfg: SnowflakeConfig,
+    dims: Mapping[NodePath, DataFrame],
 ) -> tuple[DataFrame, list[str], str, str | None]:
     """-> (frame keyed by renamed FK columns, key names, array column name,
     overflow column name | None).
 
     Children are ordered by their id columns via sort_array over a
-    (sort-key, payload) struct (snowflake_schema.py:535-543 ordering).
+    (sort-key, payload) struct (snowflake_schema.py:535-543 ordering);
+    the payloads are read back as the sorted array's ``__p__`` field.
 
     Skew valve (SURVEY §7): with a child cap configured, a per-parent
     row_number() ≤ cap runs BEFORE the collect_list, so the aggregation
@@ -437,7 +470,7 @@ def _prepare_child(
     are unique (ties: both paths pick arbitrarily, like any engine's
     LIMIT under ties); the extra phase-2 shuffle moves n_parents × n
     rows of pre-serialized arrays, not child rows."""
-    df, fields = _element_fields(tables, ch, cfg)
+    df, fields = _element_fields(tables, ch, path, cfg, dims)
     cap = cfg.child_cap
     n_salts = cfg.child_salt if (cfg.child_salt or 0) > 1 else None
     elem = F.struct(*[c.alias(n) for n, c in fields])
@@ -445,23 +478,22 @@ def _prepare_child(
         *[F.col(s).alias(f"__s{i}__") for i, s in enumerate(ch.sort_columns)],
         elem.alias("__p__"),
     )
-    uid = next(_uid)
-    keys = [f"__k{uid}_{i}__" for i in range(len(ch.fk_columns))]
-    vname = f"__v{uid}__"
+    keys = _key_names(path, len(ch.fk_columns))
+    vname = _value_name(path)
     if n_salts is not None:
         return _prepare_child_salted(
-            df, ch, cap, n_salts, sort_struct, keys, vname, uid
+            df, ch, cap, n_salts, sort_struct, keys, vname, _tag(path)
         )
     if cap is None:
         grouped = (
             df.groupBy(*[F.col(c).alias(k) for c, k in zip(ch.fk_columns, keys)])
             .agg(F.sort_array(F.collect_list(sort_struct)).alias("__raw__"))
-            .select(*keys, F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname))
+            .select(*keys, F.col("__raw__").getField("__p__").alias(vname))
         )
         return grouped, keys, vname, None
     from pyspark.sql import Window
 
-    oname = f"__ov{uid}__"
+    oname = f"__ov{_tag(path)}__"
     w_order = Window.partitionBy(*ch.fk_columns).orderBy(
         *[F.col(s) for s in ch.sort_columns]
     )
@@ -479,7 +511,7 @@ def _prepare_child(
         )
         .select(
             *keys,
-            F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname),
+            F.col("__raw__").getField("__p__").alias(vname),
             oname,
         )
     )
@@ -494,12 +526,12 @@ def _prepare_child_salted(
     sort_struct,
     keys: list[str],
     vname: str,
-    uid: int,
+    tag: str,
 ) -> tuple[DataFrame, list[str], str, str | None]:
     """Two-phase (salted) child collect — see ``_prepare_child``. Phase 1
     parallelizes a hot parent over ``n_salts`` tasks; phase 2 merges the
     pre-sorted sub-arrays (n_salts rows per parent)."""
-    sname = f"__salt{uid}__"
+    sname = f"__salt{tag}__"
     salted = df.withColumn(
         sname,
         F.pmod(F.xxhash64(*[F.col(s) for s in ch.sort_columns]), F.lit(n_salts)),
@@ -514,13 +546,13 @@ def _prepare_child_salted(
             .agg(F.sort_array(F.flatten(F.collect_list("__sub__"))).alias("__raw__"))
             .select(
                 *keys,
-                F.transform(F.col("__raw__"), lambda s: s["__p__"]).alias(vname),
+                F.col("__raw__").getField("__p__").alias(vname),
             )
         )
         return grouped, keys, vname, None
     from pyspark.sql import Window
 
-    oname = f"__ov{uid}__"
+    oname = f"__ov{tag}__"
     # per-(fk, salt) top-cap: the merged top-cap can only contain rows
     # that are top-cap within their own salt group, so pre-capping here
     # bounds every phase-1 buffer at cap without losing final elements
@@ -545,9 +577,7 @@ def _prepare_child_salted(
         )
         .select(
             *keys,
-            F.transform(F.slice(F.col("__m__"), 1, cap), lambda s: s["__p__"]).alias(
-                vname
-            ),
+            F.slice(F.col("__m__"), 1, cap).getField("__p__").alias(vname),
             F.greatest(F.col("__tot__") - F.lit(cap), F.lit(0))
             .cast("long")
             .alias(oname),
@@ -556,12 +586,42 @@ def _prepare_child_salted(
     return grouped, keys, vname, oname
 
 
+def _normalize_tables(
+    tables: dict[str, DataFrame], plan: FactPlan, cfg: SnowflakeConfig, positions: Sequence[str] = ()
+) -> dict[str, DataFrame]:
+    return {
+        name: _normalize_table(df, cfg, positions if name == plan.table else ())
+        for name, df in tables.items()
+    }
+
+
+def _top_level_dims(norm: dict[str, DataFrame], node, path: NodePath) -> dict[NodePath, DataFrame]:
+    """The dims hung directly off ``node`` and off each child below it,
+    built from the normalized tables, by path."""
+    out = {path + (i,): _prepare_dim(norm, d, path + (i,)) for i, d in enumerate(node.dims)}
+    for j, ch in enumerate(node.children):
+        out.update(_top_level_dims(norm, ch, path + (len(node.dims) + j,)))
+    return out
+
+
+def dimension_frames(
+    tables: dict[str, DataFrame], plan: FactPlan, cfg: SnowflakeConfig
+) -> dict[NodePath, DataFrame]:
+    """Every top-level dimension frame of ``plan`` — a dim hung directly
+    off the fact or off a child node, its own sub-dims joined in — by
+    its path in the plan tree: the ``dims`` a caller hands ``doc_frame``
+    when it builds them once and reuses them (``Extract.run`` freezes
+    them for the whole run)."""
+    return _top_level_dims(_normalize_tables(tables, plan, cfg), plan, ())
+
+
 def doc_frame(
     tables: dict[str, DataFrame],
     plan: FactPlan,
     cfg: SnowflakeConfig,
     ids: list | None = None,
     positions: Sequence[str] = (),
+    dims: Mapping[NodePath, DataFrame] | None = None,
 ) -> DataFrame:
     """One row per fact row: (__id__, <fact_table> struct) with dims inner
     and children nested arrays. ``ids`` (small list -> pushed-down isin)
@@ -569,17 +629,16 @@ def doc_frame(
     also carried raw as the top-level ``position_column(i)``: a keyset
     extract builds this frame once and selects each batch with a range
     filter on those columns, which Catalyst pushes through the joins to
-    the fact scan (``Extract.ids_for_batch``)."""
-    norm = {
-        name: _normalize_table(df, cfg, positions if name == plan.table else ())
-        for name, df in tables.items()
-    }
-    fact = norm[plan.table]
+    the fact scan (``Extract.ids_for_batch``). ``dims`` are
+    ``dimension_frames`` of the same tables and plan, built by the
+    caller; by default they are built here."""
+    norm = _normalize_tables(tables, plan, cfg, positions)
     id_col = plan.id_columns[0]
     if ids is not None:
-        fact = fact.filter(F.col(id_col).isin(list(ids)))
-    norm[plan.table] = fact
-    df, fields = _element_fields(norm, plan, cfg)
+        norm[plan.table] = norm[plan.table].filter(F.col(id_col).isin(list(ids)))
+    if dims is None:
+        dims = _top_level_dims(norm, plan, ())
+    df, fields = _element_fields(norm, plan, (), cfg, dims)
     return df.select(
         F.col(id_col).alias("__id__"),
         F.struct(*[c.alias(n) for n, c in fields]).alias(plan.table),

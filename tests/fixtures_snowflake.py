@@ -67,3 +67,37 @@ def build_tables(spark):
         "nested1": nested1,
         "nested2": nested2,
     }
+
+
+# The TPC-H orders extract: customer -> nation -> region dims, lineitem
+# children carrying part and supplier dims.
+ORDERS_IDS = {
+    "orders": ["o_orderkey"],
+    "customer": ["c_custkey"],
+    "nation": ["n_nationkey"],
+    "region": ["r_regionkey"],
+    "lineitem": ["l_orderkey", "l_linenumber"],
+    "part": ["p_partkey"],
+    "supplier": ["s_suppkey"],
+}
+
+ORDERS_RELATIONS = [
+    Relation("orders_customer", "orders", ["o_custkey"], "customer", ["c_custkey"]),
+    Relation("customer_nation", "customer", ["c_nationkey"], "nation", ["n_nationkey"]),
+    Relation("nation_region", "nation", ["n_regionkey"], "region", ["r_regionkey"]),
+    Relation("lineitem_orders", "lineitem", ["l_orderkey"], "orders", ["o_orderkey"]),
+    Relation("lineitem_part", "lineitem", ["l_partkey"], "part", ["p_partkey"]),
+    Relation("lineitem_supplier", "lineitem", ["l_suppkey"], "supplier", ["s_suppkey"]),
+]
+
+
+def orders_snowflake(spark, sf_dir, **cfg):
+    """(tables, plan, config) of the orders extract over the sf tables;
+    ``cfg`` sets ``SnowflakeConfig`` fields."""
+    from mysql_to_s3_spark.sources.registry import load_table
+    from mysql_to_s3_spark.sources.snowflake import SnowflakeConfig, build_plan
+
+    tables = {t: load_table(spark, sf_dir, t) for t in ORDERS_IDS}
+    config = SnowflakeConfig(fact_table="orders", **cfg)
+    meta = [TableMeta(t, tables[t].columns, c) for t, c in ORDERS_IDS.items()]
+    return tables, build_plan(meta, ORDERS_RELATIONS, config), config

@@ -75,27 +75,90 @@ def test_extract_run_writes_batches_and_checkpoint(spark, tmp_path):
     assert cp is not None and tuple(cp[0]) == (0, 2)
 
 
-def test_extract_resume_skips_done_batches(spark, tmp_path):
+def test_extract_resume_skips_done_batches(spark, tmp_path, monkeypatch):
     ex = _setup(spark, tmp_path)
     ex.run()
-    # a fresh run with the checkpoint present writes nothing new
+    # a fresh run with the checkpoint present writes nothing new, and
+    # builds neither the document frame nor a dimension frame
+    calls = []
+    monkeypatch.setattr(extract, "dimension_frames", lambda *a, **k: calls.append("dims"))
+    monkeypatch.setattr(Extract, "documents", lambda *a, **k: calls.append("docs"))
     again = ex.run()
     assert again == []
+    assert calls == []
 
 
 def test_extract_run_builds_the_document_frame_once(spark, tmp_path, monkeypatch):
-    """A 3-batch run plans the snowflake join once; each batch is a range
-    filter on that one frame."""
+    """A 3-batch run plans the snowflake join once, and builds its
+    dimension side once; each batch is a range filter on that one
+    frame."""
     calls = []
-    real = extract.doc_frame
 
-    def counting(*a, **k):
-        calls.append(1)
-        return real(*a, **k)
+    def counting(name):
+        real = getattr(extract, name)
 
-    monkeypatch.setattr(extract, "doc_frame", counting)
+        def count(*a, **k):
+            calls.append(name)
+            return real(*a, **k)
+
+        monkeypatch.setattr(extract, name, count)
+
+    counting("doc_frame")
+    counting("dimension_frames")
     assert len(_setup(spark, tmp_path).run()) == 3
-    assert len(calls) == 1
+    assert sorted(calls) == ["dimension_frames", "doc_frame"]
+
+
+def test_extract_run_releases_its_frozen_dimensions(spark, tmp_path):
+    """The dimension frames a run freezes are released when it returns:
+    no RDD the run persisted is left in the SparkContext."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert len(_setup(spark, tmp_path).run()) == 3
+    assert set(jsc.getPersistentRDDs().keySet()) <= before
+
+
+@pytest.mark.parametrize(
+    "cfg",
+    [
+        {},
+        {"reference_only": ["customer.c_name"], "show_foreign_keys": False},
+        {"null_values": ["BUILDING", "NATION_1", "AMERICA"]},
+        {"child_cap": 2},
+    ],
+    ids=["plain", "inlineDim", "nullDim", "childCap"],
+)
+def test_extract_run_writes_what_an_unfrozen_frame_writes(spark, sf_dir, tmp_path, cfg):
+    """Every batch ``Extract.run`` writes over its frozen dimension frames
+    holds, line for line, what the same batch of a document frame that
+    builds its dimensions in place writes: the plain orders extract, an
+    inline dimension column (``customer`` collapses to ``c_name``), null
+    sentinels in the customer, nation and region string columns, and a
+    child cap."""
+    from mysql_to_s3_spark.sinks.json_sink import etl_envelope, write_json_lines
+    from tests.fixtures_snowflake import orders_snowflake
+
+    tables, plan, config = orders_snowflake(spark, sf_dir, **cfg)
+    ex = Extract(tables, plan, config, ExtractConfig(
+        field="o_orderkey", batch=500, destination=str(tmp_path / "run")
+    ))
+    written = ex.run()
+    batches = ex.batches()
+    assert [os.path.basename(p) for p in written] == [extract.key_string(b.key) for b in batches]
+    assert len(batches) > 1
+
+    docs = ex.documents()
+    pos = [position_column(i) for i in range(len(ex._positions()))]
+
+    def lines(path):
+        return sorted(r["value"] for r in spark.read.text(path).collect())
+
+    for path, batch in zip(written, batches):
+        key = extract.key_string(batch.key)
+        want = str(tmp_path / "want" / key)
+        etl = etl_envelope(etl_id=key, source={"name": "orders"})
+        write_json_lines(ex.ids_for_batch(batch, docs).drop(*pos), want, "orders", etl=etl)
+        assert lines(path) == lines(want), key
 
 
 def test_extract_run_logs_each_batch(spark, tmp_path, caplog):

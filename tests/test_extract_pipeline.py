@@ -271,6 +271,24 @@ def test_child_salt_two_phase_matches_unsalted(spark):
         assert salted == plain, f"cap={cap}: salted path diverged"
 
 
+@pytest.mark.parametrize("valves", [{}, {"child_cap": 1, "child_salt": 3}], ids=["plain", "capSalt"])
+def test_doc_frame_plans_the_same_text_twice(spark, valves):
+    """Two builds of one document frame plan the same text, expression
+    and exchange ids aside: every internal column name comes from its node's place in
+    the plan tree, not from what was built before it in the process."""
+    tables = build_tables(spark)
+    cfg = SnowflakeConfig(fact_table="fact_table", null_values=["-", "unknown", ""], **valves)
+    plan = build_plan(TABLES_META, RELATIONS, cfg)
+
+    def text():
+        df = doc_frame(tables, plan, cfg)
+        plan_text = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        return re.sub(r"#\d+|plan_id=\d+", "", plan_text)
+
+    first, second = text(), text()
+    assert "__k" in first and first == second
+
+
 def _orders_meta():
     from mysql_to_s3_spark.sources.snowflake import TableMeta
 

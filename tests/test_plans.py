@@ -151,42 +151,15 @@ def test_temporal_events_legs_share_one_cached_scan(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 5, plan[:2000]
 
 
-_EXTRACT_IDS = {
-    "orders": ["o_orderkey"],
-    "customer": ["c_custkey"],
-    "nation": ["n_nationkey"],
-    "region": ["r_regionkey"],
-    "lineitem": ["l_orderkey", "l_linenumber"],
-    "part": ["p_partkey"],
-    "supplier": ["s_suppkey"],
-}
-
-
 def _written_batch(spark, sf_dir, tmp_path, monkeypatch, field, start, **child):
     """The frame ``Extract.run`` hands the sink for the middle keyset batch
     of the sf orders extract (customer -> nation -> region dims, lineitem
     children carrying part and supplier), and that batch. ``child`` sets
     the ``SnowflakeConfig`` child valves."""
     from mysql_to_s3_spark.sources import extract
-    from mysql_to_s3_spark.sources.registry import load_table
-    from mysql_to_s3_spark.sources.snowflake import (
-        Relation,
-        SnowflakeConfig,
-        TableMeta,
-        build_plan,
-    )
+    from tests.fixtures_snowflake import orders_snowflake
 
-    rels = [
-        Relation("orders_customer", "orders", ["o_custkey"], "customer", ["c_custkey"]),
-        Relation("customer_nation", "customer", ["c_nationkey"], "nation", ["n_nationkey"]),
-        Relation("nation_region", "nation", ["n_regionkey"], "region", ["r_regionkey"]),
-        Relation("lineitem_orders", "lineitem", ["l_orderkey"], "orders", ["o_orderkey"]),
-        Relation("lineitem_part", "lineitem", ["l_partkey"], "part", ["p_partkey"]),
-        Relation("lineitem_supplier", "lineitem", ["l_suppkey"], "supplier", ["s_suppkey"]),
-    ]
-    tables = {t: load_table(spark, sf_dir, t) for t in _EXTRACT_IDS}
-    cfg = SnowflakeConfig(fact_table="orders", **child)
-    plan = build_plan([TableMeta(t, tables[t].columns, c) for t, c in _EXTRACT_IDS.items()], rels, cfg)
+    tables, plan, cfg = orders_snowflake(spark, sf_dir, **child)
     ex = extract.Extract(tables, plan, cfg, extract.ExtractConfig(
         field=field, start=start, batch=1000, destination=str(tmp_path)
     ))
@@ -214,7 +187,7 @@ def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path, monkeypatc
     re-key the fact table, and the batch's bound reaches the orders scan
     and, through the left joins and the child collect (plain, capped or
     salted), the lineitem scan, so the child aggregation covers the
-    batch, not the table."""
+    batch, not the table. The batch reads no dimension table."""
     docs, batch = _written_batch(spark, sf_dir, tmp_path, monkeypatch, "o_orderkey", 0, **child)
     text = plan_of(docs)
 
@@ -230,6 +203,13 @@ def test_extract_batch_reads_a_literal_range(spark, sf_dir, tmp_path, monkeypatc
         pushed = _pushed(text, table)
         assert f"GreaterThanOrEqual({col},{lo})" in pushed, pushed
         assert f"LessThanOrEqual({col},{hi})" in pushed, pushed
+    # the dimension side was built and frozen once per run: the batch
+    # scans no dimension table, and broadcasts the three frozen frames
+    # (customer with nation and region, part, supplier)
+    scans = [b for b in text.split("\n\n") if re.match(r"\(\d+\) Scan parquet", b.strip())]
+    scanned = sorted(re.search(r"/(\w+)\.parquet\]", b).group(1) for b in scans)
+    assert scanned == ["lineitem", "orders"], text
+    assert len(re.findall(r"^\(\d+\) Scan ExistingRDD", text, re.M)) == 3, text
 
 
 def test_extract_timestamp_batch_pushes_raw_bound(spark, sf_dir, tmp_path, monkeypatch):
